@@ -64,7 +64,7 @@ object Bench {
       // in bench order was eating the whole driver-side multi-table
       // SQLite assembly (solo RunOne x3: scan_geopackage_points 3.7 s
       // cold incl. build vs 0.48 s warm — fixture first-touch, not scan
-      // cost; verdict recorded in tools/Profile.scala). Deployment
+      // cost). Deployment
       // steady state is scan-an-existing-file, so the build is setup.
       graft.zonal.Gpkg.pointsFixturePath(spark, sfDir)
       // r21 (VERDICT r20 next-#4, same gpkg precedent): the SQL-DML /

@@ -560,7 +560,7 @@ object Dedup {
       if (ckptDir.isDefined) df.checkpoint(true) else df.localCheckpoint(false)
     graft.core.SessionConf.scoped(session, partsKey -> loopParts) {
       val e = pin(edges.select(col("x"), col("y")))
-      // r22 (VERDICT r21 next-#2; CcProbe A/B on the real tau=0.3 near
+      // r22 (an A/B on the real tau=0.3 near
       // graph): one cheap count of the pinned edge table decides the
       // loop's join posture. When BOTH measured tables (edges, touched
       // labels) are broadcast-small, pin the per-round strategies
@@ -688,10 +688,6 @@ object Dedup {
         s"connectedComponents did not converge within $maxIter rounds — " +
           "raise maxIter; results were NOT returned because unconverged " +
           "labels are not components")
-      // r21 (VERDICT r20 next-#10): log the converged round count so the
-      // recurring "is the dedup_cluster figure still the same fixpoint?"
-      // bench audit is a constant-time stderr check, not a rerun
-      Console.err.println(s"[graft.cc] converged in $iter rounds")
       labels.union(isolated)
     }
   }

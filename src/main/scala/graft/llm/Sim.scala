@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables}
+import graft.core.{Fixture, Q, Tables}
 
 /** SURVEY.md §2.11 — similarity search over the embedding column
   * (`ArrayType(FloatType)`, dim 64).
@@ -357,7 +357,7 @@ object Sim {
   private[graft] def ivfCentroids(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     ivfCentCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     ivfCentCache.computeIfAbsent((s, d), { _ =>
-      diskCachedIndex(s, indexKey(d, "ivfcent")) {
+      annIndex(s, d, "ivfcent") {
         Tables.embeddings(s, d)
           .select(col("label").as("c_label"), posexplode(col("embedding")).as(Seq("pos", "v")))
           .groupBy(col("c_label"), col("pos"))
@@ -540,70 +540,25 @@ object Sim {
   /** Drop ALL memoized index artifacts — trained codebooks (plain AND
     * residual), coarse centroids, and the residual code table — so the
     * next consumer re-resolves them (Bench outlier-rerun honesty).
-    * The ON-DISK parquet artifacts (r17, [[diskCachedIndex]]) are NOT
-    * dropped: they are deployment-grade index files keyed by
-    * (data dir, training params) — a rerun re-READS them like a real
-    * cluster would, instead of re-TRAINING; [[clearAnnDiskCache]]
-    * exists for specs that need the true from-scratch path.
+    * The on-disk index tables ([[annIndex]]) stay: a rerun re-READS
+    * them like a real cluster would, instead of re-TRAINING.
     */
   def clearPqCodebookCache(): Unit = {
     pqCbCache.clear(); pqResCbCache.clear()
     ivfCentCache.clear(); pqResCodesCache.clear()
   }
 
-  /** Delete the on-disk ANN index artifacts too (specs only). */
-  def clearAnnDiskCache(): Unit =
-    graft.core.Fs.rmTree(s"${System.getProperty("java.io.tmpdir")}/graft_io/ann_index")
-
-  /** Persist a trained index artifact as parquet keyed by (data dir,
-    * training params) — r17, verdict item 10: Lloyd training is an
-    * INDEX BUILD, not a query cost; a deployment trains once, writes
-    * the codebook/code tables to storage, and every search session
-    * re-reads them. Write-once double-checked (temp dir + atomic
-    * rename, the fixture discipline); values are identical to a fresh
-    * training by construction, so every oracle is unchanged.
+  /** A trained index artifact as parquet in the fixture store, keyed by
+    * the training params and the embeddings table's fingerprint —
+    * Lloyd training is an INDEX BUILD, not a query cost: a deployment
+    * trains once, writes the table to storage, and every search session
+    * re-reads it. Values equal a fresh training by construction, so
+    * every oracle is unchanged.
     */
-  private def diskCachedIndex(s: org.apache.spark.sql.SparkSession,
-      name: String)(build: => DataFrame): DataFrame = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/ann_index/$name"
-    if (!new java.io.File(p).exists) synchronized {
-      if (!new java.io.File(p).exists) {
-        val tmp = s"$p.tmp_${ProcessHandle.current().pid()}"
-        build.write.mode("overwrite").parquet(tmp)
-        if (!new java.io.File(p).exists) {
-          if (!new java.io.File(tmp).renameTo(new java.io.File(p))) {
-            // cross-process race (r17 advice): two JVMs can both pass
-            // the inner existence check; the rename loser reads the
-            // winner's artifact instead of crashing the query, and only
-            // fails when the target is genuinely still absent
-            require(new java.io.File(p).exists,
-              s"ann index cache: rename $tmp -> $p failed with no winner present")
-            graft.core.Fs.rmTree(tmp)
-          }
-        } else graft.core.Fs.rmTree(tmp)
-      }
-    }
-    s.read.parquet(p)
-  }
-
-  /** Cache key: params + a digest of the data dir AND a content
-    * fingerprint of the embeddings table (total byte size + newest
-    * mtime — r17 advice: a dataset REGENERATED at the same path must
-    * not silently serve a stale trained index; two dirs never share an
-    * artifact; a params change invalidates by name).
-    */
-  private def indexKey(d: String, variant: String): String = {
-    val f = new java.io.File(s"$d/embeddings.parquet")
-    val (sz, mt) =
-      if (f.isDirectory) {
-        val kids = Option(f.listFiles).map(_.toSeq).getOrElse(Seq.empty)
-        (kids.map(_.length).sum, kids.map(_.lastModified).maxOption.getOrElse(0L))
-      } else (f.length, f.lastModified)
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|$sz|$mt".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${variant}_m${PqM}k${PqK}w${PqW}i${PqIters}_$h"
-  }
+  private def annIndex(s: org.apache.spark.sql.SparkSession, d: String,
+      variant: String)(build: => DataFrame): DataFrame =
+    s.read.parquet(Fixture.once(s"ann_${variant}_m${PqM}k${PqK}w${PqW}i$PqIters",
+      Seq(s"$d/embeddings.parquet"))(build.write.parquet(_)))
 
   /** Per-subspace Lloyd training over long-form sub-vectors `(vec_id,
     * m, sub)` → the ONE packed codebook row. Scale posture per
@@ -640,7 +595,7 @@ object Sim {
   private def pqCodebook(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     pqCbCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     pqCbCache.computeIfAbsent((s, d), { _ =>
-      diskCachedIndex(s, indexKey(d, "pqcb"))(trainCodebook(subVecs(s, d))) })
+      annIndex(s, d, "pqcb")(trainCodebook(subVecs(s, d))) })
   }
 
   // ---- residual PQ (round 7 — the FAISS IVFPQ recipe, the judge's
@@ -676,7 +631,7 @@ object Sim {
   private def pqResCodebook(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     pqResCbCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     pqResCbCache.computeIfAbsent((s, d), { _ =>
-      diskCachedIndex(s, indexKey(d, "pqrescb"))(trainCodebook(resSubVecs(s, d))) })
+      annIndex(s, d, "pqrescb")(trainCodebook(resSubVecs(s, d))) })
   }
 
   private val pqResCodesCache =
@@ -693,7 +648,7 @@ object Sim {
   private def pqResCodes(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     pqResCodesCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     pqResCodesCache.computeIfAbsent((s, d), { _ =>
-      diskCachedIndex(s, indexKey(d, "pqrescodes")) {
+      annIndex(s, d, "pqrescodes") {
         resVecs(s, d).crossJoin(broadcast(pqResCodebook(s, d)))
           .select(col("vec_id"), col("c_label"),
             expr(s"""transform(sequence(0, ${PqM - 1}), m ->

@@ -3,6 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import scala.util.control.NonFatal
 
 /** Harness for running a §2.10 operator as a REAL Structured Streaming
   * query inside a registry entry: file source over the scale-factor
@@ -46,7 +47,7 @@ object Runner {
       val p = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
       p.getFileSystem(s.sparkContext.hadoopConfiguration)
         .getContentSummary(p).getLength
-    } catch { case _: Throwable => Long.MaxValue } // unknown => session
+    } catch { case NonFatal(_) => Long.MaxValue } // unknown => session
     Some(math.max(1L, math.min(sessionParts.toLong,
       bytes / (32L << 20) + 1L)).toInt)
   }

@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Q
+import graft.core.{Fixture, Q}
 
 /** Grid auto-alignment between MISMATCHED lattices (round 10 — the
   * round-9 verdict's missing #2: every multi-raster op demands
@@ -61,7 +61,7 @@ object Align {
   def alnValue(x: Int, y: Int): Double = ((13 * x + 29 * y) % 991).toDouble
 
   def alnFixturePath(): String =
-    Raster.fixtureOnce(s"raster_align_${AlnW}x$AlnH.tif") { p =>
+    Fixture.once(s"raster_align_${AlnW}x$AlnH.tif") { p =>
       Raster.writeTiffOpts(p, AlnW, AlnH, 32, 32, Raster.WriteOpts(
         bits = 32, sampleFormat = 2,
         originX = AlnOX.toDouble, originY = AlnOY.toDouble,
@@ -226,7 +226,7 @@ object Align {
   def algValue(x: Int, y: Int): Double = ((11 * x + 23 * y) % 983).toDouble
 
   def algFixturePath(): String =
-    Raster.fixtureOnce(s"raster_align_gen_${AlgW}x$AlgH.tif") { p =>
+    Fixture.once(s"raster_align_gen_${AlgW}x$AlgH.tif") { p =>
       Raster.writeTiffOpts(p, AlgW, AlgH, 64, 64, Raster.WriteOpts(
         bits = 32, sampleFormat = 2,
         originX = AlgOX.toDouble, originY = AlgOY.toDouble,
@@ -246,7 +246,7 @@ object Align {
   def anisoValue(x: Int, y: Int): Double = ((17 * x + 19 * y) % 977).toDouble
 
   def anisoFixturePath(): String =
-    Raster.fixtureOnce(s"raster_align_aniso_${AnisoW}x$AnisoH.tif") { p =>
+    Fixture.once(s"raster_align_aniso_${AnisoW}x$AnisoH.tif") { p =>
       Raster.writeTiffOpts(p, AnisoW, AnisoH, 64, 64, Raster.WriteOpts(
         bits = 32, sampleFormat = 2,
         originX = AnisoOX.toDouble, originY = AnisoOY.toDouble,

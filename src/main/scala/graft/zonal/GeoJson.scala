@@ -2,6 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Fixture
 
 /** GeoJSON zone ingestion (round 5): the standard vector interchange
   * format, end-to-end into the WKB zonal pipeline — a user hands the
@@ -270,33 +271,13 @@ object GeoJson {
         min(col("y")).as("ymin"), max(col("y")).as("ymax"))
   }
 
-  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // fixture caches keyed on the data dir's CANONICAL path (round-7
-  // advice, same fix as Shapefile.fixturePath): content depends on the
-  // full dataset, so basename collisions must not reuse files
-
   /** Write-once per-sf MultiPolygon fixture of the MultiRings family. */
-  def multiFixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    fixtures.computeIfAbsent(s"${f.getCanonicalPath}/multi", { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/zones_multi.geojson"
-      writeFixture(s, d, Cube.MultiRings, path)
-      path
-    })
-  }
+  def multiFixturePath(s: SparkSession, d: String): String =
+    Fixture.once("zones_multi.geojson", Seq(d))(writeFixture(s, d, Cube.MultiRings, _))
 
   /** Write-once per-sf GeoJSON fixture of the NGonRings family. */
-  def fixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    fixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/zones_ngon.geojson"
-      writeFixture(s, d, Cube.NGonRings, path)
-      path
-    })
-  }
+  def fixturePath(s: SparkSession, d: String): String =
+    Fixture.once("zones_ngon.geojson", Seq(d))(writeFixture(s, d, Cube.NGonRings, _))
 
   // ---- point features (r16) ----
 
@@ -416,53 +397,19 @@ object GeoJson {
         element_at(col("col"), 1).cast("int").as("x"),
         element_at(col("col"), 2).cast("int").as("y"))
 
-  private val mptFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Write-once per-sf MultiPoint GeoJSON fixture of the stations. */
-  def multiPointsFixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    mptFixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/stations_multi.geojson"
-      writeMultiPointsFixture(s, d, path)
-      path
-    })
-  }
-
-  private val lnFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  def multiPointsFixturePath(s: SparkSession, d: String): String =
+    Fixture.once("stations_multi.geojson", Seq(d))(writeMultiPointsFixture(s, d, _))
 
   /** Write-once per-sf LineString GeoJSON fixture of the roads. */
-  def linesFixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    lnFixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/roads.geojson"
-      writeLinesFixture(s, d, path)
-      path
-    })
-  }
-
-  private val ptFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  def linesFixturePath(s: SparkSession, d: String): String =
+    Fixture.once("roads.geojson", Seq(d))(writeLinesFixture(s, d, _))
 
   /** Write-once per-sf Point GeoJSON fixture of the stations. */
-  def pointsFixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    ptFixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/stations.geojson"
-      writePointsFixture(s, d, path)
-      path
-    })
-  }
+  def pointsFixturePath(s: SparkSession, d: String): String =
+    Fixture.once("stations.geojson", Seq(d))(writePointsFixture(s, d, _))
 
   /** Write-once per-sf FLOAT-jittered fixture of the NGonRings family. */
-  def floatFixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    fixtures.computeIfAbsent(s"${f.getCanonicalPath}/float", { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/zones_float.geojson"
-      writeFixtureFloat(s, d, Cube.NGonRings, path)
-      path
-    })
-  }
+  def floatFixturePath(s: SparkSession, d: String): String =
+    Fixture.once("zones_float.geojson", Seq(d))(writeFixtureFloat(s, d, Cube.NGonRings, _))
 }

@@ -2,6 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Fixture
 
 /** GeoParquet-shaped vector I/O (r12 — the modern cloud-native vector
   * format: geometries as WKB BLOBs in ordinary parquet, so every
@@ -36,29 +37,23 @@ object GeoParquet {
       .write.mode("overwrite").parquet(path)
   }
 
-  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write-once zone fixture per (data dir) — the read-side ops
+  /** Write-once zone fixture per data dir — the read-side ops
     * (zonal_geoparquet, scan_geoparquet_window) consume this; the
     * write-side op (sink_geoparquet) writes fresh every run.
     */
-  def fixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    fixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/zones_geoparquet"
-      writeZones(s, d, path)
-      path
-    })
-  }
+  def fixturePath(s: SparkSession, d: String): String =
+    Fixture.once("zones_geoparquet", Seq(d))(writeZones(s, d, _))
 
   /** Zones straight from the parquet WKB column — already the engine's
-    * zone shape `(zone_id, geom, xmin, xmax, ymin, ymax)`.
+    * zone shape `(zone_id, geom, xmin, xmax, ymin, ymax)`. Registers the
+    * graft functions (`point_in_wkb`) its consumers filter with.
     */
-  def readZones(s: SparkSession, path: String): DataFrame =
+  def readZones(s: SparkSession, path: String): DataFrame = {
+    graft.ext.Ext.register(s)
     s.read.parquet(path)
       .select(col("zone_id"), col("geometry").as("geom"),
         col("xmin"), col("xmax"), col("ymin"), col("ymax"))
+  }
 
   /** WINDOW query over the bbox columns: a plain parquet FILTER, which
     * is the format's whole point — Spark pushes the bbox predicates to

@@ -2,6 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Fixture
 
 /** GeoPackage vector ingestion (round 11 — the r10 verdict's missing
   * #4: the third ubiquitous zone-table format after GeoJSON and
@@ -693,18 +694,9 @@ object Gpkg {
             gpkgBlobMultiLine(Seq(ms.take(2), ms.drop(1))))) })))
   }
 
-  private val ptFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Write-once per-sf stations GeoPackage fixture path. */
-  def pointsFixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    ptFixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/stations.gpkg"
-      writePointsFixture(s, d, path)
-      path
-    })
-  }
+  def pointsFixturePath(s: SparkSession, d: String): String =
+    Fixture.once("stations.gpkg", Seq(d))(writePointsFixture(s, d, _))
 
   // ---- rtree-pruned window read (r12 — the r11 verdict's missing #4
   // second half: consult `gpkg_rtree` when present, pruning LEAF PAGES
@@ -1349,11 +1341,8 @@ object Gpkg {
     * MultiRings family (r14): one WKB type-6 blob per zone, parts
     * preserved.
     */
-  def multiFixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    multiFixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/zones_multi.gpkg"
+  def multiFixturePath(s: SparkSession, d: String): String =
+    Fixture.once("zones_multi.gpkg", Seq(d)) { path =>
       val verts = Cube.verts(s, d, Cube.MultiRings)
         .select("zone_id", "part", "ring", "i", "vx", "vy")
         .collect()
@@ -1370,11 +1359,7 @@ object Gpkg {
       writeTable(path, "zones",
         "CREATE TABLE zones (id INTEGER PRIMARY KEY, zone_name TEXT, geom BLOB)",
         records)
-      path
-    })
-  }
-
-  private val multiFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Write-once per-sf GeoPackage fixture of the NGonRings family: the
     * `zones` feature table (id INTEGER PRIMARY KEY — rowid-aliased —
@@ -1383,17 +1368,8 @@ object Gpkg {
     * 512-byte pages force several leaves + an interior root, so the
     * page-parallel read path is genuinely exercised.
     */
-  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def fixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    fixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/zones.gpkg"
-      writeFixture(s, d, Cube.NGonRings, path)
-      path
-    })
-  }
+  def fixturePath(s: SparkSession, d: String): String =
+    Fixture.once("zones.gpkg", Seq(d))(writeFixture(s, d, Cube.NGonRings, _))
 
   def writeFixture(s: SparkSession, d: String, rings: Seq[Cube.RingSpec],
       path: String): Unit = {
@@ -1498,18 +1474,9 @@ object Gpkg {
       pageSize = 4096)
   }
 
-  private val fullFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Write-once full-GeoPackage fixture (metadata + rtree + zones). */
-  def fullFixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    fullFixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/zones_full.gpkg"
-      writeGeoPackage(s, d, path)
-      path
-    })
-  }
+  def fullFixturePath(s: SparkSession, d: String): String =
+    Fixture.once("zones_full.gpkg", Seq(d))(writeGeoPackage(s, d, _))
 
   /** Attribute face: every non-geometry column as a DataFrame row per
     * feature (rowid-aliased ids resolved), schema from the DDL —

@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables}
+import graft.core.{Fixture, Q, Tables}
 
 /** CF `grid_mapping` projections on the cube paths (r19 — VERDICT r18
   * next-#3): the NetCDF/HDF5/Zarr worlds georeference non-lat/lon grids
@@ -813,7 +813,7 @@ object GridMapping {
   val PoleLat = 39.25
   val PoleLon = -162.0
   def rotatedFixturePath(): String =
-    Raster.fixtureOnce(s"nc_rotated_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"nc_rotated_${GmW}x$GmH.nc") { p =>
       Netcdf.writeNetcdf(p, "tas", GmH, GmW, Netcdf.NcFloat,
         coordY = y => -3.0 + 0.125 * y, coordX = x => -4.0 + 0.125 * x,
         gridMapping = Some(("rotated_pole", Seq(
@@ -827,7 +827,7 @@ object GridMapping {
   // rotated longitude 10 — some CORDEX-style domains declare it
   val Npgl = 10.0
   def rotatedNpglFixturePath(): String =
-    Raster.fixtureOnce(s"nc_rotated_npgl_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"nc_rotated_npgl_${GmW}x$GmH.nc") { p =>
       Netcdf.writeNetcdf(p, "tas", GmH, GmW, Netcdf.NcFloat,
         coordY = y => -3.0 + 0.125 * y, coordX = x => -4.0 + 0.125 * x,
         gridMapping = Some(("rotated_pole", Seq(
@@ -845,7 +845,7 @@ object GridMapping {
   val LccLon0 = -97.0
   val LccRadius = 6370000.0
   def lccFixturePath(): String =
-    Raster.fixtureOnce(s"nc_lcc_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"nc_lcc_${GmW}x$GmH.nc") { p =>
       Netcdf.writeNetcdf(p, "tas", GmH, GmW, Netcdf.NcFloat,
         coordY = y => -75000.0 + 3000.0 * y, coordX = x => -90000.0 + 3000.0 * x,
         gridMapping = Some(("lcc", Seq(
@@ -862,7 +862,7 @@ object GridMapping {
     * parameters (numbers in JSON — the format's native attr shape).
     */
   def rotatedZarrDir(): String =
-    Raster.fixtureOnce(s"zarr_rotated_${GmW}x$GmH") { dir =>
+    Fixture.once(s"zarr_rotated_${GmW}x$GmH") { dir =>
       Zarr.writeZarr(s"$dir/tas", GmH, GmW, 32, 32)(gmValue)
       write(s"$dir/tas/.zattrs", """{"grid_mapping": "rotated_pole"}""")
       Zarr.writeZarrCoord(s"$dir/x", GmW, GmW)(x => -4.0 + 0.125 * x)
@@ -878,7 +878,7 @@ object GridMapping {
     * with the JSON array standard_parallel.
     */
   def lccZarrDir(): String =
-    Raster.fixtureOnce(s"zarr_lcc_${GmW}x$GmH") { dir =>
+    Fixture.once(s"zarr_lcc_${GmW}x$GmH") { dir =>
       Zarr.writeZarr(s"$dir/tas", GmH, GmW, 32, 32)(gmValue)
       write(s"$dir/tas/.zattrs", """{"grid_mapping": "lcc"}""")
       Zarr.writeZarrCoord(s"$dir/x", GmW, GmW)(x => -90000.0 + 3000.0 * x)
@@ -897,7 +897,7 @@ object GridMapping {
     * attribute messages.
     */
   def rotatedHdf5Path(): String =
-    Raster.fixtureOnce(s"h5_rotated_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"h5_rotated_${GmW}x$GmH.nc") { p =>
       Hdf5.writeHdf5Multi(p, Seq(
         ("tas", Seq(GmH, GmW), "<f8",
           Array.tabulate(GmH * GmW)(i => gmValue(i % GmW, i / GmW))),
@@ -916,7 +916,7 @@ object GridMapping {
     * rank-1 float64 attribute message (array attrs both directions).
     */
   def lccHdf5Path(): String =
-    Raster.fixtureOnce(s"h5_lcc_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"h5_lcc_${GmW}x$GmH.nc") { p =>
       Hdf5.writeHdf5Multi(p, Seq(
         ("tas", Seq(GmH, GmW), "<f8",
           Array.tabulate(GmH * GmW)(i => gmValue(i % GmW, i / GmW))),
@@ -940,7 +940,7 @@ object GridMapping {
   val PsLon0 = -45.0
   val PsRadius = 6370000.0
   def psFixturePath(): String =
-    Raster.fixtureOnce(s"nc_ps_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"nc_ps_${GmW}x$GmH.nc") { p =>
       Netcdf.writeNetcdf(p, "sic", GmH, GmW, Netcdf.NcFloat,
         coordY = y => -123000.0 + 5000.0 * y, coordX = x => -149000.0 + 5000.0 * x,
         gridMapping = Some(("ps", Seq(
@@ -959,7 +959,7 @@ object GridMapping {
   val PsEllA = 6378273.0
   val PsEllInvF = 298.279411123064
   def psEllFixturePath(): String =
-    Raster.fixtureOnce(s"nc_ps_ell_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"nc_ps_ell_${GmW}x$GmH.nc") { p =>
       Netcdf.writeNetcdf(p, "sic", GmH, GmW, Netcdf.NcFloat,
         coordY = y => -123000.0 + 5000.0 * y, coordX = x => -149000.0 + 5000.0 * x,
         gridMapping = Some(("ps", Seq(
@@ -982,7 +982,7 @@ object GridMapping {
   val LccEllA = 6378137.0
   val LccEllInvF = 298.257223563
   def lccEllFixturePath(): String =
-    Raster.fixtureOnce(s"nc_lcc_ell_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"nc_lcc_ell_${GmW}x$GmH.nc") { p =>
       Netcdf.writeNetcdf(p, "prcp", GmH, GmW, Netcdf.NcFloat,
         coordY = y => -75000.0 + 3000.0 * y, coordX = x => -90000.0 + 3000.0 * x,
         gridMapping = Some(("lcc", Seq(
@@ -1000,7 +1000,7 @@ object GridMapping {
     * through the Zarr attribute parser.
     */
   def psEllZarrDir(): String =
-    Raster.fixtureOnce(s"zarr_ps_ell_${GmW}x$GmH") { dir =>
+    Fixture.once(s"zarr_ps_ell_${GmW}x$GmH") { dir =>
       Zarr.writeZarr(s"$dir/sic", GmH, GmW, 32, 32)(gmValue)
       write(s"$dir/sic/.zattrs", """{"grid_mapping": "ps"}""")
       Zarr.writeZarrCoord(s"$dir/x", GmW, GmW)(x => -149000.0 + 5000.0 * x)
@@ -1021,7 +1021,7 @@ object GridMapping {
     * HDF5 attribute parser.
     */
   def lccEllHdf5Path(): String =
-    Raster.fixtureOnce(s"h5_lcc_ell_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"h5_lcc_ell_${GmW}x$GmH.nc") { p =>
       Hdf5.writeHdf5Multi(p, Seq(
         ("prcp", Seq(GmH, GmW), "<f8",
           Array.tabulate(GmH * GmW)(i => gmValue(i % GmW, i / GmW))),
@@ -1072,7 +1072,7 @@ object GridMapping {
   val SinuRadius = 6371007.181
   val SinuLon0 = 0.0
   def sinuFixturePath(): String =
-    Raster.fixtureOnce(s"nc_sinu_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"nc_sinu_${GmW}x$GmH.nc") { p =>
       Netcdf.writeNetcdf(p, "sur_refl", GmH, GmW, Netcdf.NcFloat,
         coordY = y => 3336000.0 + 1000.0 * y, coordX = x => -10007000.0 + 1000.0 * x,
         gridMapping = Some(("sinu", Seq(
@@ -1086,7 +1086,7 @@ object GridMapping {
     * products actually ship in.
     */
   def sinuHdf5Path(): String =
-    Raster.fixtureOnce(s"h5_sinu_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"h5_sinu_${GmW}x$GmH.nc") { p =>
       Hdf5.writeHdf5Multi(p, Seq(
         ("sur_refl", Seq(GmH, GmW), "<f8",
           Array.tabulate(GmH * GmW)(i => gmValue(i % GmW, i / GmW))),
@@ -1122,7 +1122,7 @@ object GridMapping {
   val AlbLon0 = -96.0
   val AlbRadius = 6370997.0
   def albersFixturePath(): String =
-    Raster.fixtureOnce(s"nc_albers_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"nc_albers_${GmW}x$GmH.nc") { p =>
       Netcdf.writeNetcdf(p, "landcov", GmH, GmW, Netcdf.NcFloat,
         coordY = y => 2280000.0 + 3000.0 * y, coordX = x => -120000.0 + 3000.0 * x,
         gridMapping = Some(("albers", Seq(
@@ -1157,7 +1157,7 @@ object GridMapping {
   val MercLon0 = -40.0
   val MercRadius = 6371000.0
   def mercFixturePath(): String =
-    Raster.fixtureOnce(s"nc_merc_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"nc_merc_${GmW}x$GmH.nc") { p =>
       Netcdf.writeNetcdf(p, "sst", GmH, GmW, Netcdf.NcFloat,
         coordY = y => 3000000.0 + 20000.0 * y, coordX = x => -500000.0 + 20000.0 * x,
         gridMapping = Some(("merc", Seq(
@@ -1185,7 +1185,7 @@ object GridMapping {
   // explicit latitude_longitude with 0..360 longitudes (the common CF
   // convention the wrap normalizes): lon 350..357.375 -> -10..-2.625
   def latLonFixturePath(): String =
-    Raster.fixtureOnce(s"nc_latlon_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"nc_latlon_${GmW}x$GmH.nc") { p =>
       Netcdf.writeNetcdf(p, "tas", GmH, GmW, Netcdf.NcFloat,
         coordY = y => -3.0 + 0.125 * y, coordX = x => 350.0 + 0.125 * x,
         gridMapping = Some(("crs", Seq(
@@ -1207,7 +1207,7 @@ object GridMapping {
   // UTM 18N — every parameter READ FROM THE FILE, none assumed
   val TmLon0 = -75.0
   def tmFixturePath(): String =
-    Raster.fixtureOnce(s"nc_tm_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"nc_tm_${GmW}x$GmH.nc") { p =>
       Netcdf.writeNetcdf(p, "dem", GmH, GmW, Netcdf.NcFloat,
         coordY = y => 4300000.0 + 2000.0 * y, coordX = x => 440000.0 + 2000.0 * x,
         gridMapping = Some(("tmerc", Seq(
@@ -1239,7 +1239,7 @@ object GridMapping {
   val GeosRpol = 6356752.31414
   val GeosLon0 = -75.0
   def geosFixturePath(): String =
-    Raster.fixtureOnce(s"nc_geos_${GmW}x$GmH.nc") { p =>
+    Fixture.once(s"nc_geos_${GmW}x$GmH.nc") { p =>
       Netcdf.writeNetcdf(p, "rad", GmH, GmW, Netcdf.NcFloat,
         coordY = y => -1000000.0 + 40000.0 * y, coordX = x => -1200000.0 + 40000.0 * x,
         gridMapping = Some(("goes_imager_projection", Seq(

@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Q
+import graft.core.{Fixture, Q}
 
 /** NetCDF-4 (HDF5 container) ingestion (round 12 — the r11 verdict's
   * missing #2: xarray's default `to_netcdf()` engine writes netCDF-4,
@@ -3550,71 +3550,44 @@ object Hdf5 {
   def h5Value2(x: Int, y: Int): Double = ((29 * x + 17 * y) % 911).toDouble
   private val H5Value2Sql = "CAST((29 * cell_x + 17 * cell_y) % 911 AS DOUBLE)"
 
-  private val fixtureDsLock = new Object
-  @volatile private var fixtureDsReady: String = null
-
   /** Multi-variable Dataset fixture (r17): TWO rank-2 data members
     * (`precip` on the first formula, `temp` on the second) next to a
     * rank-1 coordinate vector and a string station table — the member
     * mix a real xarray to_netcdf() Dataset carries, proving the walk
     * skips non-lattice members instead of tripping on them.
     */
-  def fixtureDatasetPath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5ds_fixture_${H5W}x$H5H.nc"
-    if (fixtureDsReady != p) fixtureDsLock.synchronized {
-      if (fixtureDsReady != p) {
-        writeHdf5Multi(p, Seq(
-          ("precip", Seq(H5H, H5W), "<f8",
-            Array.tabulate(H5H * H5W)(i => h5Value(i % H5W, i / H5W))),
-          ("temp", Seq(H5H, H5W), "<f8",
-            Array.tabulate(H5H * H5W)(i => h5Value2(i % H5W, i / H5W))),
-          ("x", Seq(H5W), "<f4",
-            Array.tabulate(H5W)(x => -120.0 + 0.25 * x))),
-          strVars = Seq(("station",
-            (0 until H5H).map(y => s"stn-${(y * 7) % 100}"))))
-        fixtureDsReady = p
-      }
+  def fixtureDatasetPath(): String =
+    Fixture.once(s"h5ds_fixture_${H5W}x$H5H.nc") { p =>
+      writeHdf5Multi(p, Seq(
+        ("precip", Seq(H5H, H5W), "<f8",
+          Array.tabulate(H5H * H5W)(i => h5Value(i % H5W, i / H5W))),
+        ("temp", Seq(H5H, H5W), "<f8",
+          Array.tabulate(H5H * H5W)(i => h5Value2(i % H5W, i / H5W))),
+        ("x", Seq(H5W), "<f4",
+          Array.tabulate(H5W)(x => -120.0 + 0.25 * x))),
+        strVars = Seq(("station",
+          (0 until H5H).map(y => s"stn-${(y * 7) % 100}"))))
     }
-    p
-  }
-
-  private val fixtureLock = new Object
-  @volatile private var fixtureReady: String = null
 
   /** Chunked + deflate + shuffle float32 fixture (the xarray
     * `encoding={'zlib': True, 'shuffle': True}` shape), 32×32 chunks
     * on the non-aligned 80×70 lattice so edge-pad clipping is hit in
     * both axes.
     */
-  def fixturePath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5_fixture_${H5W}x$H5H.nc"
-    if (fixtureReady != p) fixtureLock.synchronized {
-      if (fixtureReady != p) {
-        writeHdf5(p, "v", H5H, H5W, 32, 32, dtype = "<f4",
-          deflate = true, shuffle = true)(h5Value)
-        fixtureReady = p
-      }
+  def fixturePath(): String =
+    Fixture.once(s"h5_fixture_${H5W}x$H5H.nc") { p =>
+      writeHdf5(p, "v", H5H, H5W, 32, 32, dtype = "<f4",
+        deflate = true, shuffle = true)(h5Value)
     }
-    p
-  }
-
-  private val fixtureCLock = new Object
-  @volatile private var fixtureCReady: String = null
 
   /** Contiguous big-endian int16 fixture (the xarray no-compression
     * shape — row-stripe scanned).
     */
-  def fixtureContiguousPath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5c_fixture_${H5W}x$H5H.nc"
-    if (fixtureCReady != p) fixtureCLock.synchronized {
-      if (fixtureCReady != p) {
-        writeHdf5(p, "v", H5H, H5W, 0, 0, dtype = ">i2",
-          deflate = false, shuffle = false, contiguous = true)(h5Value)
-        fixtureCReady = p
-      }
+  def fixtureContiguousPath(): String =
+    Fixture.once(s"h5c_fixture_${H5W}x$H5H.nc") { p =>
+      writeHdf5(p, "v", H5H, H5W, 0, 0, dtype = ">i2",
+        deflate = false, shuffle = false, contiguous = true)(h5Value)
     }
-    p
-  }
 
   /** Rank-3 fixture formula over (x, y, t). */
   val H5T = 5
@@ -3627,11 +3600,10 @@ object Hdf5 {
        |CROSS JOIN range(0, $H5T) t""".stripMargin
 
   /** Rank-3 chunked + deflate fixture: 5×70×80 with 2×32×32 chunks —
-    * the 5 % 2 = 1 edge t-chunk exercises the t-pad clip. (r19: atomic
-    * stamped install via [[Raster.fixtureOnce]].)
+    * the 5 % 2 = 1 edge t-chunk exercises the t-pad clip.
     */
   def fixtureCubePath(): String =
-    Raster.fixtureOnce(s"h5cube_fixture_${H5T}x${H5H}x$H5W.nc") { p =>
+    Fixture.once(s"h5cube_fixture_${H5T}x${H5H}x$H5W.nc") { p =>
       writeHdf5Cube(p, "v", H5T, H5H, H5W, 2, 32, 32, dtype = "<f4",
         deflate = true, shuffle = false)(h5CubeValue)
     }
@@ -3640,44 +3612,31 @@ object Hdf5 {
   def h5CubeValue2(x: Int, y: Int, t: Int): Double =
     ((29 * x + 17 * y + 41 * t) % 983).toDouble
 
-  private val fixtureDs3Lock = new Object
-  @volatile private var fixtureDs3Ready: String = null
-
   /** Rank-3 Dataset fixture (r17): TWO aligned contiguous (t, y, x)
     * members next to a rank-1 coordinate the cube walk must skip.
     */
-  def fixtureDataset3dPath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5ds3_fixture_${H5T}x${H5H}x$H5W.nc"
-    if (fixtureDs3Ready != p) fixtureDs3Lock.synchronized {
-      if (fixtureDs3Ready != p) {
-        def cOrder(f: (Int, Int, Int) => Double): Array[Double] =
-          Array.tabulate(H5T * H5H * H5W)(i =>
-            f(i % H5W, i / H5W % H5H, i / (H5H * H5W)))
-        writeHdf5Multi(p, Seq(
-          ("pr", Seq(H5T, H5H, H5W), "<f8", cOrder(h5CubeValue)),
-          ("tas", Seq(H5T, H5H, H5W), "<f8", cOrder(h5CubeValue2)),
-          ("t", Seq(H5T), "<f8", Array.tabulate(H5T)(i => 7.0 * i + 3.0))))
-        fixtureDs3Ready = p
-      }
+  def fixtureDataset3dPath(): String =
+    Fixture.once(s"h5ds3_fixture_${H5T}x${H5H}x$H5W.nc") { p =>
+      def cOrder(f: (Int, Int, Int) => Double): Array[Double] =
+        Array.tabulate(H5T * H5H * H5W)(i =>
+          f(i % H5W, i / H5W % H5H, i / (H5H * H5W)))
+      writeHdf5Multi(p, Seq(
+        ("pr", Seq(H5T, H5H, H5W), "<f8", cOrder(h5CubeValue)),
+        ("tas", Seq(H5T, H5H, H5W), "<f8", cOrder(h5CubeValue2)),
+        ("t", Seq(H5T), "<f8", Array.tabulate(H5T)(i => 7.0 * i + 3.0))))
     }
-    p
-  }
 
   /** Landing-directory fixture (r17 — streaming ingest): one netCDF-4
     * file per epoch, each a chunked+deflate rank-2 grid of the
     * 3-factor formula.
     */
-  def streamFixtureDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5_stream_landing"
-    graft.zonal.Raster.fixtureOnce("h5_stream_landing_marker") { _ =>
-      graft.core.Fs.rmTree(dir)
+  def streamFixtureDir(): String =
+    Fixture.once("h5_stream_landing") { dir =>
       new java.io.File(dir).mkdirs()
       for (t <- 0 until H5T)
         writeHdf5(s"$dir/epoch_$t.nc", "v", H5H, H5W, 32, 32, dtype = "<f8",
           deflate = true)((x, y) => h5CubeValue(x, y, t))
     }
-    dir
-  }
 
   /** Decode ONE whole netCDF-4 landing blob to cells (r17 — the
     * executor-side step of `stream_netcdf4_ingest`): the blob lands
@@ -3698,37 +3657,28 @@ object Hdf5 {
     } finally java.nio.file.Files.deleteIfExists(tmp)
   }
 
-  private val fixtureTimeLock = new Object
-  @volatile private var fixtureTimeReady: String = null
-
   /** CF time fixture (r17): the rank-3 cube (contiguous f8) next to a
     * CHUNKED `t` coordinate whose v1 attribute messages carry the CF
     * `units` string — values 7i+3 hours since the shared base.
     */
   val H5TimeUnits = "hours since 2020-03-01 06:00:00"
-  def fixtureTimePath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5time_fixture_${H5T}x${H5H}x$H5W.nc"
-    if (fixtureTimeReady != p) fixtureTimeLock.synchronized {
-      if (fixtureTimeReady != p) {
-        writeHdf5Multi(p, Seq(
-          ("v", Seq(H5T, H5H, H5W), "<f8",
-            Array.tabulate(H5T * H5H * H5W)(i =>
-              h5CubeValue(i % H5W, i / H5W % H5H, i / (H5H * H5W))))),
-          chunkedCoords = Seq(("t", "<f8",
-            Array.tabulate(H5T)(i => 7.0 * i + 3.0), 2)),
-          memberStrAttrs = Map("t" ->
-            Seq(("units", H5TimeUnits), ("calendar", "standard"))))
-        fixtureTimeReady = p
-      }
+  def fixtureTimePath(): String =
+    Fixture.once(s"h5time_fixture_${H5T}x${H5H}x$H5W.nc") { p =>
+      writeHdf5Multi(p, Seq(
+        ("v", Seq(H5T, H5H, H5W), "<f8",
+          Array.tabulate(H5T * H5H * H5W)(i =>
+            h5CubeValue(i % H5W, i / H5W % H5H, i / (H5H * H5W))))),
+        chunkedCoords = Seq(("t", "<f8",
+          Array.tabulate(H5T)(i => 7.0 * i + 3.0), 2)),
+        memberStrAttrs = Map("t" ->
+          Seq(("units", H5TimeUnits), ("calendar", "standard"))))
     }
-    p
-  }
 
   /** Full-selection fixture (r19): the rank-3 cube next to x, y AND a
     * chunked CF t coordinate — sel(time=, x=, y=) on one DSv2 scan.
     */
   def fixtureSel3Path(): String =
-    Raster.fixtureOnce(s"h5sel3_fixture_${H5T}x${H5H}x$H5W.nc") { p =>
+    Fixture.once(s"h5sel3_fixture_${H5T}x${H5H}x$H5W.nc") { p =>
       writeHdf5Multi(p, Seq(
         ("v", Seq(H5T, H5H, H5W), "<f8",
           Array.tabulate(H5T * H5H * H5W)(i =>
@@ -3741,64 +3691,46 @@ object Hdf5 {
           Seq(("units", H5TimeUnits), ("calendar", "standard"))))
     }
 
-  private val fixtureMfLock = new Object
-  @volatile private var fixtureMfReady: String = null
-
   /** Multi-file concat fixture (r18): [[H5MfN]] "monthly" netCDF-4
     * members, each a CONTIGUOUS rank-3 (t=2, y, x) cube + its own
     * chunked CF `t` coordinate (days since 2000-01-01: member k carries
     * days 30k+5 and 30k+15), data keyed by the GLOBAL epoch 2k+j.
     */
   val H5MfN = 3
-  def fixtureMfDir(): String = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5_mf_fixture_${H5W}x$H5H"
-    if (fixtureMfReady != root) fixtureMfLock.synchronized {
-      if (fixtureMfReady != root) {
-        for (k <- 0 until H5MfN)
-          writeHdf5Multi(s"$root/month_$k.nc", Seq(
-            ("v", Seq(2, H5H, H5W), "<f8",
-              Array.tabulate(2 * H5H * H5W) { i =>
-                val x = i % H5W; val y = i / H5W % H5H; val j = i / (H5W * H5H)
-                h5CubeValue(x, y, 2 * k + j)
-              })),
-            chunkedCoords = Seq(("t", "<f8",
-              Array.tabulate(2)(j => (30 * k + 5 + 10 * j).toDouble), 2)),
-            memberStrAttrs = Map("t" ->
-              Seq(("units", "days since 2000-01-01"), ("calendar", "standard"))))
-        fixtureMfReady = root
-      }
+  def fixtureMfDir(): String =
+    Fixture.once(s"h5_mf_fixture_${H5W}x$H5H") { root =>
+      for (k <- 0 until H5MfN)
+        writeHdf5Multi(s"$root/month_$k.nc", Seq(
+          ("v", Seq(2, H5H, H5W), "<f8",
+            Array.tabulate(2 * H5H * H5W) { i =>
+              val x = i % H5W; val y = i / H5W % H5H; val j = i / (H5W * H5H)
+              h5CubeValue(x, y, 2 * k + j)
+            })),
+          chunkedCoords = Seq(("t", "<f8",
+            Array.tabulate(2)(j => (30 * k + 5 + 10 * j).toDouble), 2)),
+          memberStrAttrs = Map("t" ->
+            Seq(("units", "days since 2000-01-01"), ("calendar", "standard"))))
     }
-    root
-  }
-
-  private val fixtureTime4dLock = new Object
-  @volatile private var fixtureTime4dReady: String = null
 
   /** Rank-4 CF time fixture (r18): a CONTIGUOUS (t, level, y, x) cube
     * (the pressure-level shape) next to the same chunked CF `t`
     * coordinate as the rank-3 time fixture — writeHdf5Multi's rank
     * gate lifted to 4 for exactly this member.
     */
-  def fixtureTime4dPath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5time4d_fixture_${H54T}x${H54L}x${H5H}x$H5W.nc"
-    if (fixtureTime4dReady != p) fixtureTime4dLock.synchronized {
-      if (fixtureTime4dReady != p) {
-        writeHdf5Multi(p, Seq(
-          ("v", Seq(H54T, H54L, H5H, H5W), "<f8",
-            Array.tabulate(H54T * H54L * H5H * H5W) { i =>
-              val x = i % H5W; val y = i / H5W % H5H
-              val l = i / (H5W * H5H) % H54L; val t = i / (H5W * H5H * H54L)
-              h5Cube4dValue(x, y, l, t)
-            })),
-          chunkedCoords = Seq(("t", "<f8",
-            Array.tabulate(H54T)(i => 7.0 * i + 3.0), 2)),
-          memberStrAttrs = Map("t" ->
-            Seq(("units", H5TimeUnits), ("calendar", "standard"))))
-        fixtureTime4dReady = p
-      }
+  def fixtureTime4dPath(): String =
+    Fixture.once(s"h5time4d_fixture_${H54T}x${H54L}x${H5H}x$H5W.nc") { p =>
+      writeHdf5Multi(p, Seq(
+        ("v", Seq(H54T, H54L, H5H, H5W), "<f8",
+          Array.tabulate(H54T * H54L * H5H * H5W) { i =>
+            val x = i % H5W; val y = i / H5W % H5H
+            val l = i / (H5W * H5H) % H54L; val t = i / (H5W * H5H * H54L)
+            h5Cube4dValue(x, y, l, t)
+          })),
+        chunkedCoords = Seq(("t", "<f8",
+          Array.tabulate(H54T)(i => 7.0 * i + 3.0), 2)),
+        memberStrAttrs = Map("t" ->
+          Seq(("units", H5TimeUnits), ("calendar", "standard"))))
     }
-    p
-  }
 
   /** Rank-4 fixture formula over (x, y, l, t). */
   val H54T = 3
@@ -3811,179 +3743,104 @@ object Hdf5 {
        |FROM range(0, $H5W) x CROSS JOIN range(0, $H5H) y
        |CROSS JOIN range(0, $H54L) l CROSS JOIN range(0, $H54T) t""".stripMargin
 
-  private val fixture4Lock = new Object
-  @volatile private var fixture4Ready: String = null
-
   /** Rank-4 chunked + deflate fixture: 3×4×70×80 with 2×3×32×32
     * chunks — BOTH leading chunk grids have an edge chunk (3 % 2 = 1
     * along t, 4 % 3 = 1 along level) so the pad clip is exercised in
     * all four axes.
     */
-  def fixtureCube4dPath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5cube4d_fixture_${H54T}x${H54L}x${H5H}x$H5W.nc"
-    if (fixture4Ready != p) fixture4Lock.synchronized {
-      if (fixture4Ready != p) {
-        writeHdf5Cube4d(p, "v", H54T, H54L, H5H, H5W, 2, 3, 32, 32,
-          dtype = "<f4", deflate = true, shuffle = false)(h5Cube4dValue)
-        fixture4Ready = p
-      }
+  def fixtureCube4dPath(): String =
+    Fixture.once(s"h5cube4d_fixture_${H54T}x${H54L}x${H5H}x$H5W.nc") { p =>
+      writeHdf5Cube4d(p, "v", H54T, H54L, H5H, H5W, 2, 3, 32, 32,
+        dtype = "<f4", deflate = true, shuffle = false)(h5Cube4dValue)
     }
-    p
-  }
-
-  private val fixtureV2Lock = new Object
-  @volatile private var fixtureV2Ready: String = null
 
   /** libver-'latest' fixture: superblock v3 + OHDR + fixed-array chunk
     * index + deflate, same formula lattice.
     */
-  def fixtureV2Path(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5v2_fixture_${H5W}x$H5H.nc"
-    if (fixtureV2Ready != p) fixtureV2Lock.synchronized {
-      if (fixtureV2Ready != p) {
-        writeHdf5V2(p, "v", H5H, H5W, 32, 32, dtype = "<f8",
-          deflate = true)(h5Value)
-        fixtureV2Ready = p
-      }
+  def fixtureV2Path(): String =
+    Fixture.once(s"h5v2_fixture_${H5W}x$H5H.nc") { p =>
+      writeHdf5V2(p, "v", H5H, H5W, 32, 32, dtype = "<f8",
+        deflate = true)(h5Value)
     }
-    p
-  }
-
-  private val fixtureEaLock = new Object
-  @volatile private var fixtureEaReady: String = null
 
   /** Extensible-array fixture (r14): layout v4 index type 4 over the
     * same formula lattice — 9 chunks with small creation parameters so
     * elements land inline (4), in a full data block (4) AND in a
     * partially-used one (1 of 8, Undef tail).
     */
-  def fixtureEaPath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5ea_fixture_${H5W}x$H5H.nc"
-    if (fixtureEaReady != p) fixtureEaLock.synchronized {
-      if (fixtureEaReady != p) {
-        // 4x8 chunks -> 18x10 = 180 chunks: past the 64-chunk direct
-        // region into SUPER blocks (r15), incl. sblk5's PAGED data
-        // blocks (32 elements over 2^4-element pages)
-        writeHdf5V2Ea(p, "v", H5H, H5W, 4, 8, dtype = "<f8",
-          deflate = true, pageBits = 4)(h5Value)
-        fixtureEaReady = p
-      }
+  def fixtureEaPath(): String =
+    Fixture.once(s"h5ea_fixture_${H5W}x$H5H.nc") { p =>
+      // 4x8 chunks -> 18x10 = 180 chunks: past the 64-chunk direct
+      // region into SUPER blocks (r15), incl. sblk5's PAGED data
+      // blocks (32 elements over 2^4-element pages)
+      writeHdf5V2Ea(p, "v", H5H, H5W, 4, 8, dtype = "<f8",
+        deflate = true, pageBits = 4)(h5Value)
     }
-    p
-  }
-
-  private val fixturePkLock = new Object
-  @volatile private var fixturePkReady: String = null
 
   /** Packed int16 fixture (r14): raw formula samples + scale 0.25 /
     * add_offset 16 as f8 attributes (both exact in binary).
     */
-  def fixturePackedPath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5pk_fixture_${H5W}x$H5H.nc"
-    if (fixturePkReady != p) fixturePkLock.synchronized {
-      if (fixturePkReady != p) {
-        // no declared fill: raw 0 is a LIVE sample here (h5Value(0,0)=0);
-        // the packed+fill drop path is spec-gated separately
-        writeHdf5Cube(p, "v", 0, H5H, H5W, 1, 32, 32, dtype = "<i2",
-          deflate = true, fill = None,
-          attrs = Seq(("scale_factor", 0.25), ("add_offset", 16.0)))(
-          (x, y, _) => h5Value(x, y))
-        fixturePkReady = p
-      }
+  def fixturePackedPath(): String =
+    Fixture.once(s"h5pk_fixture_${H5W}x$H5H.nc") { p =>
+      // no declared fill: raw 0 is a LIVE sample here (h5Value(0,0)=0);
+      // the packed+fill drop path is spec-gated separately
+      writeHdf5Cube(p, "v", 0, H5H, H5W, 1, 32, 32, dtype = "<i2",
+        deflate = true, fill = None,
+        attrs = Seq(("scale_factor", 0.25), ("add_offset", 16.0)))(
+        (x, y, _) => h5Value(x, y))
     }
-    p
-  }
-
-  private val fixtureFlLock = new Object
-  @volatile private var fixtureFlReady: String = null
 
   /** fletcher32 fixture (r14 — netCDF-4's checksum option): the FULL
     * [fletcher32, shuffle, deflate] pipeline over the formula lattice.
     */
-  def fixtureFletcherPath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5fl_fixture_${H5W}x$H5H.nc"
-    if (fixtureFlReady != p) fixtureFlLock.synchronized {
-      if (fixtureFlReady != p) {
-        writeHdf5(p, "v", H5H, H5W, 32, 32, dtype = "<f4",
-          deflate = true, shuffle = true, fletcher = true)(h5Value)
-        fixtureFlReady = p
-      }
+  def fixtureFletcherPath(): String =
+    Fixture.once(s"h5fl_fixture_${H5W}x$H5H.nc") { p =>
+      writeHdf5(p, "v", H5H, H5W, 32, 32, dtype = "<f4",
+        deflate = true, shuffle = true, fletcher = true)(h5Value)
     }
-    p
-  }
-
-  private val fixtureCoordsLock = new Object
-  @volatile private var fixtureCoordsReady: String = null
 
   /** Coordinate-labelled fixture (r16): the 2-D formula variable as a
     * CONTIGUOUS dataset next to 1-D float32 x/y coordinate vectors on
     * quarter-degree steps (exact in binary) — three datasets in one
     * old-style group, the real netCDF-4 shape.
     */
-  def fixtureCoordsPath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5coords_fixture_${H5W}x$H5H.nc"
-    if (fixtureCoordsReady != p) fixtureCoordsLock.synchronized {
-      if (fixtureCoordsReady != p) {
-        writeHdf5Multi(p, Seq(
-          ("v", Seq(H5H, H5W), "<f8",
-            Array.tabulate(H5H * H5W)(i => h5Value(i % H5W, i / H5W))),
-          ("y", Seq(H5H), "<f4",
-            Array.tabulate(H5H)(y => 40.0 + 0.25 * y))),
-          // a STRING member rides along (r16): its slab participates
-          // in the address accounting the coords oracle gates, and
-          // scan_netcdf4_strings reads it back
-          strVars = Seq(("station",
-            (0 until H5H).map(y => s"stn-${(y * 7) % 100}"))),
-          // the x coordinate is CHUNKED (r17 — real writers sometimes
-          // chunk coordinate vectors; 32-wide chunks over 80 values =
-          // 3 chunks incl. one partial edge): the same coords oracle
-          // now gates the rank-1 chunked read path
-          chunkedCoords = Seq(("x", "<f4",
-            Array.tabulate(H5W)(x => -120.0 + 0.25 * x), 32)))
-        fixtureCoordsReady = p
-      }
+  def fixtureCoordsPath(): String =
+    Fixture.once(s"h5coords_fixture_${H5W}x$H5H.nc") { p =>
+      writeHdf5Multi(p, Seq(
+        ("v", Seq(H5H, H5W), "<f8",
+          Array.tabulate(H5H * H5W)(i => h5Value(i % H5W, i / H5W))),
+        ("y", Seq(H5H), "<f4",
+          Array.tabulate(H5H)(y => 40.0 + 0.25 * y))),
+        // a STRING member rides along (r16): its slab participates
+        // in the address accounting the coords oracle gates, and
+        // scan_netcdf4_strings reads it back
+        strVars = Seq(("station",
+          (0 until H5H).map(y => s"stn-${(y * 7) % 100}"))),
+        // the x coordinate is CHUNKED (r17 — real writers sometimes
+        // chunk coordinate vectors; 32-wide chunks over 80 values =
+        // 3 chunks incl. one partial edge): the same coords oracle
+        // now gates the rank-1 chunked read path
+        chunkedCoords = Seq(("x", "<f4",
+          Array.tabulate(H5W)(x => -120.0 + 0.25 * x), 32)))
     }
-    p
-  }
-
-  private val fixtureSoftLock = new Object
-  @volatile private var fixtureSoftReady: String = null
 
   /** Soft-link fixture (r14): the dataset lives at `data`; the scan
     * resolves the absolute soft alias `v → /data`.
     */
-  def fixtureSoftPath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5soft_fixture_${H5W}x$H5H.nc"
-    if (fixtureSoftReady != p) fixtureSoftLock.synchronized {
-      if (fixtureSoftReady != p) {
-        writeHdf5V2(p, "data", H5H, H5W, 32, 32, dtype = "<f8",
-          deflate = true, softAliases = Seq(("v", "/data")))(h5Value)
-        fixtureSoftReady = p
-      }
+  def fixtureSoftPath(): String =
+    Fixture.once(s"h5soft_fixture_${H5W}x$H5H.nc") { p =>
+      writeHdf5V2(p, "data", H5H, H5W, 32, 32, dtype = "<f8",
+        deflate = true, softAliases = Seq(("v", "/data")))(h5Value)
     }
-    p
-  }
-
-  private val fixtureBt2Lock = new Object
-  @volatile private var fixtureBt2Ready: String = null
 
   /** v2 B-tree chunk-index fixture (r14): layout v4 index type 5 over
     * the same formula lattice, filtered (deflate) records.
     */
-  def fixtureBt2Path(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5bt2_fixture_${H5W}x$H5H.nc"
-    if (fixtureBt2Ready != p) fixtureBt2Lock.synchronized {
-      if (fixtureBt2Ready != p) {
-        writeHdf5V2Bt2(p, "v", H5H, H5W, 32, 32, dtype = "<f8",
-          deflate = true)(h5Value)
-        fixtureBt2Ready = p
-      }
+  def fixtureBt2Path(): String =
+    Fixture.once(s"h5bt2_fixture_${H5W}x$H5H.nc") { p =>
+      writeHdf5V2Bt2(p, "v", H5H, H5W, 32, 32, dtype = "<f8",
+        deflate = true)(h5Value)
     }
-    p
-  }
-
-  private val fixtureDenseLock = new Object
-  @volatile private var fixtureDenseReady: String = null
 
   /** Dense-link fixture (r14; widened r16): the root group's 150
     * links live in a fractal heap + v2 B-tree name index — enough to
@@ -3992,52 +3849,28 @@ object Hdf5 {
     * every name aliases the one formula dataset, and resolving any
     * name parses all 150 records, so the scan exercises every block.
     */
-  def fixtureDensePath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5dense_fixture_${H5W}x$H5H.nc"
-    if (fixtureDenseReady != p) fixtureDenseLock.synchronized {
-      if (fixtureDenseReady != p) {
-        writeHdf5V2Dense(p, (0 until 150).map(i => f"v$i%03d"),
-          H5H, H5W, 32, 32, dtype = "<f8", deflate = true)(h5Value)
-        fixtureDenseReady = p
-      }
+  def fixtureDensePath(): String =
+    Fixture.once(s"h5dense_fixture_${H5W}x$H5H.nc") { p =>
+      writeHdf5V2Dense(p, (0 until 150).map(i => f"v$i%03d"),
+        H5H, H5W, 32, 32, dtype = "<f8", deflate = true)(h5Value)
     }
-    p
-  }
-
-  private val fixtureMaskLock = new Object
-  @volatile private var fixtureMaskReady: String = null
 
   /** Fill-mask fixture: chunk (1,1) OMITTED with fill 1234 (outside
     * the formula range), so the masked set is exactly that chunk's
     * coverage.
     */
-  def fixtureMaskPath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5m_fixture_${H5W}x$H5H.nc"
-    if (fixtureMaskReady != p) fixtureMaskLock.synchronized {
-      if (fixtureMaskReady != p) {
-        writeHdf5(p, "v", H5H, H5W, 32, 32, dtype = "<f8",
-          deflate = true, fill = Some(1234.0), omit = Set((1, 1)))(h5Value)
-        fixtureMaskReady = p
-      }
+  def fixtureMaskPath(): String =
+    Fixture.once(s"h5m_fixture_${H5W}x$H5H.nc") { p =>
+      writeHdf5(p, "v", H5H, H5W, 32, 32, dtype = "<f8",
+        deflate = true, fill = Some(1234.0), omit = Set((1, 1)))(h5Value)
     }
-    p
-  }
-
-  private val fixtureGrpLock = new Object
-  @volatile private var fixtureGrpReady: String = null
 
   /** Grouped fixture: the variable lives at `g/v` — netCDF-4 groups. */
-  def fixtureGroupPath(): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_io/h5g_fixture_${H5W}x$H5H.nc"
-    if (fixtureGrpReady != p) fixtureGrpLock.synchronized {
-      if (fixtureGrpReady != p) {
-        writeHdf5Cube(p, "g/v", 0, H5H, H5W, 1, 32, 32, dtype = "<f8",
-          deflate = true)((x, y, _) => h5Value(x, y))
-        fixtureGrpReady = p
-      }
+  def fixtureGroupPath(): String =
+    Fixture.once(s"h5g_fixture_${H5W}x$H5H.nc") { p =>
+      writeHdf5Cube(p, "g/v", 0, H5H, H5W, 1, 32, 32, dtype = "<f8",
+        deflate = true)((x, y, _) => h5Value(x, y))
     }
-    p
-  }
 
   def defs: Seq[(String, Q)] = Seq(
     // netCDF-4/HDF5 ingestion end-to-end (r12 — the r11 verdict's

@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Q
+import graft.core.{Fixture, Q}
 
 /** NetCDF-3 "classic" ingestion (round 11 — the second half of the r10
   * verdict's missing #1: "real datacubes arrive as chunked Zarr stores
@@ -1563,7 +1563,7 @@ object Netcdf {
        |FROM range(0, $NcW) x CROSS JOIN range(0, $NcH) y""".stripMargin
 
   def fixturePath(): String =
-    Raster.fixtureOnce(s"nc_fixture_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_fixture_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcDouble)((x, y, _) => ncValue(x, y))
     }
 
@@ -1573,7 +1573,7 @@ object Netcdf {
     * hash-gates against the identical arithmetic in DuckDB.
     */
   def coordsFixturePath(): String =
-    Raster.fixtureOnce(s"nc_coords_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_coords_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcDouble,
         coordY = y => 40.0 + 0.25 * y,
         coordX = x => -120.0 + 0.25 * x)((x, y, _) => ncValue(x, y))
@@ -1585,7 +1585,7 @@ object Netcdf {
     * numeric scan; requesting the char variable itself refuses by name.
     */
   def charFixturePath(): String =
-    Raster.fixtureOnce(s"nc_char_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_char_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcDouble,
         charVar = Some(("station_name",
           (0 until NcH).map(y => s"stn-$y"))))((x, y, _) => ncValue(x, y))
@@ -1605,7 +1605,7 @@ object Netcdf {
     * non-lattice members instead of tripping on them.
     */
   def datasetFixturePath(): String =
-    Raster.fixtureOnce(s"nc_dataset_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_dataset_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcDouble,
         charVar = Some(("station_name", (0 until NcH).map(y => s"stn-$y"))),
         extraVars = Seq(("swvl", NcDouble, (x, y) => ncValue2(x, y))))(
@@ -1620,7 +1620,7 @@ object Netcdf {
     * over the fixed time axis next to the rank-1 y/x/t coordinates.
     */
   def dataset3dFixturePath(): String =
-    Raster.fixtureOnce(s"nc_dataset3d_cal_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_dataset3d_cal_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcFloat,
         timeAxis = Some((NcTimeEpochs, i => 7.0 * i + 3.0, NcTimeUnits)),
         timeCalendar = Some("standard"),
@@ -1631,7 +1631,7 @@ object Netcdf {
   val NcFill = -999.0
   def ncFilled(x: Int, y: Int): Boolean = (7 * x + 11 * y) % 13 == 0
   def fillFixturePath(): String =
-    Raster.fixtureOnce(s"nc_fill_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_fill_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "lst", NcH, NcW, NcShort, fill = Some(NcFill))(
         (x, y, _) => if (ncFilled(x, y)) NcFill else ncValue(x, y))
     }
@@ -1644,7 +1644,7 @@ object Netcdf {
   val NcEpochs = 3
   def ncEpochValue(x: Int, y: Int, t: Int): Double = ((23 * x + 19 * y + 31 * t) % 983).toDouble
   def epochsFixturePath(): String =
-    Raster.fixtureOnce(s"nc_epochs_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_epochs_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcFloat, epochs = NcEpochs)(ncEpochValue)
     }
 
@@ -1656,7 +1656,7 @@ object Netcdf {
   val NcTimeEpochs = 5
   val NcTimeUnits = "hours since 2020-03-01 06:00:00"
   def timeFixturePath(): String =
-    Raster.fixtureOnce(s"nc_time_cal_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_time_cal_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcFloat,
         timeAxis = Some((NcTimeEpochs, i => 7.0 * i + 3.0, NcTimeUnits)),
         timeCalendar = Some("standard"))(
@@ -1671,7 +1671,7 @@ object Netcdf {
     */
   val MfFilesN = 4
   def mfFixtureDir(): String =
-    Raster.fixtureOnce(s"nc_mf_${NcW}x$NcH") { dir =>
+    Fixture.once(s"nc_mf_${NcW}x$NcH") { dir =>
       for (k <- 0 until MfFilesN)
         writeNetcdf(s"$dir/month_$k.nc", "t2m", NcH, NcW, NcFloat,
           timeAxis = Some((2, j => (30 * k + 5 + 10 * j).toDouble,
@@ -1686,7 +1686,7 @@ object Netcdf {
     */
   val StreamNcMembersN = 4
   def streamNcMembersDir(): String =
-    Raster.fixtureOnce(s"nc_stream_members_${StreamNcMembersN}x${NcH}x$NcW") { dir =>
+    Fixture.once(s"nc_stream_members_${StreamNcMembersN}x${NcH}x$NcW") { dir =>
       for (k <- 0 until StreamNcMembersN)
         writeNetcdf(f"$dir/part-$k%04d.nc", "t2m", NcH, NcW, NcFloat,
           coordVars = false)((x, y, _) => ncEpochValue(x, y, k))
@@ -1700,7 +1700,7 @@ object Netcdf {
     */
   val NcJulianVals = Seq(0, 13, 44, 378)
   def timeJulianFixturePath(): String =
-    Raster.fixtureOnce(s"nc_time_julian_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_time_julian_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcFloat,
         timeAxis = Some((NcJulianVals.length,
           i => NcJulianVals(i).toDouble, "days since 1969-12-19")),
@@ -1714,7 +1714,7 @@ object Netcdf {
     */
   val Nc360Vals = Seq(58, 59, 60, 360)
   def time360FixturePath(): String =
-    Raster.fixtureOnce(s"nc_time_360_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_time_360_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcFloat,
         timeAxis = Some((Nc360Vals.length,
           i => Nc360Vals(i).toDouble, "days since 2000-01-01")),
@@ -1730,7 +1730,7 @@ object Netcdf {
     */
   val NcAllLeapVals = Seq(58, 59, 60, 365, 366, 425)
   def timeAllLeapFixturePath(): String =
-    Raster.fixtureOnce(s"nc_time_allleap_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_time_allleap_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcFloat,
         timeAxis = Some((NcAllLeapVals.length,
           i => NcAllLeapVals(i).toDouble, "days since 2000-01-01")),
@@ -1747,7 +1747,7 @@ object Netcdf {
     */
   val NcNoleapVals = Seq(57, 58, 59, 364, 365, 423)
   def noleapFixturePath(): String =
-    Raster.fixtureOnce(s"nc_time_noleap_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_time_noleap_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcFloat,
         timeAxis = Some((NcNoleapVals.length,
           i => NcNoleapVals(i).toDouble, "days since 2000-01-01")),
@@ -1760,7 +1760,7 @@ object Netcdf {
     * bit-identical on both engines).
     */
   def packedFixturePath(): String =
-    Raster.fixtureOnce(s"nc_packed_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_packed_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcShort,
         pack = Some((0.25, 16.0)))((x, y, _) => ncValue(x, y))
     }
@@ -1768,17 +1768,13 @@ object Netcdf {
   /** Landing-directory fixture (r14 — streaming ingest): one .nc file
     * per epoch, each a rank-2 grid of the 3-factor formula.
     */
-  def streamFixtureDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/nc_stream_landing"
-    Raster.fixtureOnce("nc_stream_landing_marker") { _ =>
-      graft.core.Fs.rmTree(dir)
+  def streamFixtureDir(): String =
+    Fixture.once("nc_stream_landing") { dir =>
       new java.io.File(dir).mkdirs()
       for (t <- 0 until NcEpochs)
         writeNetcdf(s"$dir/epoch_$t.nc", "t2m", NcH, NcW, NcDouble,
           coordVars = false)((x, y, _) => ncEpochValue(x, y, t))
     }
-    dir
-  }
 
   /** Rank-4 fixture formula over (x, y, l, t) — float32-exact. */
   val Nc4T = 3
@@ -1787,7 +1783,7 @@ object Netcdf {
     ((23 * x + 19 * y + 29 * l + 31 * t) % 983).toDouble
 
   def cube4dFixturePath(): String =
-    Raster.fixtureOnce(s"nc_cube4d_${Nc4T}x${Nc4L}x${NcH}x$NcW.nc") { p =>
+    Fixture.once(s"nc_cube4d_${Nc4T}x${Nc4L}x${NcH}x$NcW.nc") { p =>
       writeNetcdf4d(p, "t2m", Nc4T, Nc4L, NcH, NcW, NcFloat)(nc4Value)
     }
 
@@ -1795,7 +1791,7 @@ object Netcdf {
     * attributes bracketing the formula's middle band.
     */
   def validFixturePath(): String =
-    Raster.fixtureOnce(s"nc_valid_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc_valid_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcDouble,
         extraAttrs = Seq(("valid_min", 100.0), ("valid_max", 800.0)))(
         (x, y, _) => ncValue(x, y))
@@ -1805,7 +1801,7 @@ object Netcdf {
     * the widened header, coordinate variables included.
     */
   def cdf5FixturePath(): String =
-    Raster.fixtureOnce(s"nc5_fixture_${NcW}x$NcH.nc") { p =>
+    Fixture.once(s"nc5_fixture_${NcW}x$NcH.nc") { p =>
       writeNetcdf(p, "t2m", NcH, NcW, NcDouble, version = 5)((x, y, _) => ncValue(x, y))
     }
 

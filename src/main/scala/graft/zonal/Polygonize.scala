@@ -182,10 +182,6 @@ object Polygonize {
       prevSig = s
       it += 1
     }
-    // round-count log (the CC-instrumentation discipline) — the
-    // polygonize cost is fixpoint-round-bound, so the audit check is
-    // constant-time on stderr instead of a rerun
-    Console.err.println(s"[graft.polygonize] ring fixpoint converged in $it rounds")
     val labeled = st.select(col("e"), col("m").as("ring"), col("dm"))
     val ranked = labeled
       .join(labeled.groupBy("ring").agg(count(lit(1)).as("len")), "ring")

@@ -1,6 +1,7 @@
 package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Fixture
 
 /** Raster ingestion (round 5 — the last unrepresented piece of the
   * reference's declared domain: "zonal statistics" over an actual
@@ -1279,11 +1280,9 @@ object Raster {
   def fixtureValue(x: Int, y: Int): Double = ((31 * x + 17 * y) % 997).toDouble
   val FixtureValueSql = "CAST((31 * cell_x + 17 * cell_y) % 997 AS DOUBLE)"
 
-  /** Write-once deterministic fixture; returns its path (r19: atomic
-    * stamped install via [[fixtureOnce]]).
-    */
+  /** Write-once deterministic fixture; returns its path. */
   def fixturePath(): String =
-    fixtureOnce(s"raster_fixture_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_fixture_${FixW}x$FixH.tif") { p =>
       writeTiff(p, FixW, FixH, 32, 32)(fixtureValue)
     }
 
@@ -1313,105 +1312,27 @@ object Raster {
     "CAST(CASE WHEN (cell_x + cell_y) % 3 = 0 THEN (31 * cell_x + 17 * cell_y) % 997 " +
       "ELSE (31 * cell_x + 17 * cell_y + cell_x + 1) % 997 END AS DOUBLE)"
 
-  private val fix2Lock = new Object
-  @volatile private var fix2Ready: String = null
-
-  def fixture2Path(): String = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_io/raster_fixture2_${FixW}x$FixH.tif"
-    if (fix2Ready != path) fix2Lock.synchronized {
-      if (fix2Ready != path) {
-        writeTiff(path, FixW, FixH, 32, 32)(fixture2Value)
-        fix2Ready = path
-      }
+  def fixture2Path(): String =
+    Fixture.once(s"raster_fixture2_${FixW}x$FixH.tif") { path =>
+      writeTiff(path, FixW, FixH, 32, 32)(fixture2Value)
     }
-    path
-  }
-
-  private val ovLock = new Object
-  @volatile private var ovReady: String = null
 
   /** 2-level overview fixture (same formula; level 1 = stride-2). */
-  def ovFixturePath(): String = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_io/raster_ov_${FixW}x$FixH.tif"
-    if (ovReady != path) ovLock.synchronized {
-      if (ovReady != path) {
-        writeTiffWithOverview(path, FixW, FixH, 32, 32)(fixtureValue)
-        ovReady = path
-      }
+  def ovFixturePath(): String =
+    Fixture.once(s"raster_ov_${FixW}x$FixH.tif") { path =>
+      writeTiffWithOverview(path, FixW, FixH, 32, 32)(fixtureValue)
     }
-    path
-  }
 
-  private val mbLock = new Object
-  @volatile private var mbReady: String = null
-
-  def mbFixturePath(): String = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_io/raster_mb_${MbW}x${MbH}x$MbBands.tif"
-    if (mbReady != path) mbLock.synchronized {
-      if (mbReady != path) {
-        writeTiffBands(path, MbW, MbH, 32, 32, MbBands)(mbValue)
-        mbReady = path
-      }
+  def mbFixturePath(): String =
+    Fixture.once(s"raster_mb_${MbW}x${MbH}x$MbBands.tif") { path =>
+      writeTiffBands(path, MbW, MbH, 32, 32, MbBands)(mbValue)
     }
-    path
-  }
-
-  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Fixture generation stamp (r19): bump whenever ANY fixture formula
-    * or writer layout changes, so a file left on /tmp by an OLDER build
-    * is rebuilt instead of silently reused (the r18
-    * `scan_source_limit_prune` nondeterminism class).
-    */
-  private[graft] val FixtureStamp = "r19b" // bumped: nc_gm_unknown content changed
-
-  private def rmrf(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(rmrf)
-    f.delete(); ()
-  }
-
-  /** Write-once keyed fixture; computeIfAbsent blocks concurrent callers
-    * until the write completes (the Bucketed.ensure lesson from r3).
-    *
-    * r19 hardening against CONCURRENT-JVM races (a Verify JVM reading a
-    * fixture while an overlapping sbt/Bench JVM rewrites it can tear the
-    * read — BASELINE.md r16 note): the fixture is built into a
-    * process-private temp name and atomically renamed into place, and a
-    * sibling stamp file records [[FixtureStamp]] so an already-built
-    * current-generation fixture is NEVER rewritten — steady state is
-    * zero writes, hence zero cross-JVM write/read races.
-    */
-  private[graft] def fixtureOnce(file: String)(write: String => Unit): String =
-    fixtures.computeIfAbsent(file, { f =>
-      val root = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_io")
-      root.mkdirs()
-      val dst = new java.io.File(root, f)
-      val stamp = new java.io.File(root, s".fp_${FixtureStamp}_$f")
-      if (!(dst.exists() && stamp.exists())) {
-        val tmp = new java.io.File(root,
-          s".build_${ProcessHandle.current().pid()}_${System.nanoTime()}_$f")
-        write(tmp.getPath)
-        try {
-          if (dst.exists()) rmrf(dst)
-          java.nio.file.Files.move(tmp.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        } catch {
-          // another JVM won the install race — its fixture is
-          // byte-identical (pure formula), keep theirs, drop ours
-          case _: java.nio.file.FileAlreadyExistsException => rmrf(tmp)
-          case _: java.nio.file.FileSystemException => rmrf(tmp)
-        }
-        stamp.createNewFile()
-      }
-      dst.getPath
-    })
 
   /** Landing directory of per-epoch single-band scenes for the
     * streaming DSv2 face — name order IS epoch order.
     */
   def streamSceneDir(): String =
-    fixtureOnce("tiff_stream_landing") { p =>
+    Fixture.once("tiff_stream_landing") { p =>
       val d = new java.io.File(p); d.mkdirs()
       for (t <- 0 until 3)
         writeTiff(s"$p/scene_$t.tif", FixW, FixH, 32, 32)(
@@ -1423,20 +1344,20 @@ object Raster {
     * pins to its axis.
     */
   def deflateFixturePath(): String =
-    fixtureOnce(s"raster_deflate_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_deflate_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32, WriteOpts(compression = 8))(fixtureValue)
     }
   def lzwFixturePath(): String =
-    fixtureOnce(s"raster_lzw_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_lzw_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32, WriteOpts(compression = 5))(fixtureValue)
     }
   def stripedFixturePath(): String =
-    fixtureOnce(s"raster_striped_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_striped_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32,
         WriteOpts(striped = true, rowsPerStrip = 16))(fixtureValue)
     }
   def predictorFixturePath(): String =
-    fixtureOnce(s"raster_pred_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_pred_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32,
         WriteOpts(bits = 32, sampleFormat = 2, compression = 8, predictor = 2))(fixtureValue)
     }
@@ -1462,7 +1383,7 @@ object Raster {
   val WorldScale = 30L
 
   def worldFixturePath(): String =
-    fixtureOnce(s"raster_world_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_world_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32, WriteOpts(
         originX = WorldOX.toDouble, originY = WorldOY.toDouble,
         scaleX = WorldScale.toDouble, scaleY = WorldScale.toDouble))(fixtureValue)
@@ -1474,7 +1395,7 @@ object Raster {
     * UTM/NAD83 ops must refuse the contradiction.
     */
   def crs3857FixturePath(): String =
-    fixtureOnce(s"raster_crs3857_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_crs3857_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32, WriteOpts(
         originX = WorldOX.toDouble, originY = WorldOY.toDouble,
         scaleX = WorldScale.toDouble, scaleY = WorldScale.toDouble,
@@ -1661,7 +1582,7 @@ object Raster {
   val DegScale = 2L // 0.25° in eighths
 
   def degreeFixturePath(): String =
-    fixtureOnce(s"raster_degree_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_degree_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32, WriteOpts(
         originX = DegOX / DegDen.toDouble, originY = DegOY / DegDen.toDouble,
         scaleX = DegScale / DegDen.toDouble,
@@ -1755,19 +1676,19 @@ object Raster {
   }
 
   def pyramidFixturePath(): String =
-    fixtureOnce(s"raster_pyramid_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_pyramid_${FixW}x$FixH.tif") { p =>
       writeTiffPyramid(p, FixW, FixH, 32, 32)(fixtureValue)
       ()
     }
 
   def avgPyramidFixturePath(): String =
-    fixtureOnce(s"raster_pyramid_avg_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_pyramid_avg_${FixW}x$FixH.tif") { p =>
       writeTiffPyramid(p, FixW, FixH, 32, 32, resample = "average")(fixtureValue)
       ()
     }
 
   def predictorFloatFixturePath(): String =
-    fixtureOnce(s"raster_pred3_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_pred3_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32,
         WriteOpts(compression = 8, predictor = 3))(floatFixtureValue)
     }
@@ -1775,7 +1696,7 @@ object Raster {
     * (`COMPRESS=ZSTD PREDICTOR=3`), round 7.
     */
   def zstdFixturePath(): String =
-    fixtureOnce(s"raster_zstd_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_zstd_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32,
         WriteOpts(compression = 50000, predictor = 3))(floatFixtureValue)
     }
@@ -1787,7 +1708,7 @@ object Raster {
   def uint8FixtureValue(x: Int, y: Int): Double = ((31 * x + 17 * y) % 251).toDouble
 
   def uint8FixturePath(): String =
-    fixtureOnce(s"raster_uint8_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_uint8_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32,
         WriteOpts(bits = 8, sampleFormat = 1, compression = 8,
           predictor = 2))(uint8FixtureValue)
@@ -1801,7 +1722,7 @@ object Raster {
     (((x / 5) * 7 + (y / 3) * 13) % 251).toDouble
 
   def packBitsFixturePath(): String =
-    fixtureOnce(s"raster_packbits_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_packbits_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32,
         WriteOpts(bits = 8, sampleFormat = 1, compression = 32773))(packBitsFixtureValue)
     }
@@ -1823,7 +1744,7 @@ object Raster {
     ((17 * (x / 8) + 29 * (y / 8) + 3) % 251).toDouble
 
   def jpegFixturePath(): String =
-    fixtureOnce(s"raster_jpeg_${JpegW}x$JpegH.tif") { p =>
+    Fixture.once(s"raster_jpeg_${JpegW}x$JpegH.tif") { p =>
       writeTiffOpts(p, JpegW, JpegH, 32, 32,
         WriteOpts(bits = 8, sampleFormat = 1, compression = 7))(jpegFixtureValue)
     }
@@ -1834,7 +1755,7 @@ object Raster {
     * predictor resets.
     */
   def jpegRstFixturePath(): String =
-    fixtureOnce(s"raster_jpeg_rst_${JpegW}x$JpegH.tif") { p =>
+    Fixture.once(s"raster_jpeg_rst_${JpegW}x$JpegH.tif") { p =>
       writeTiffOpts(p, JpegW, JpegH, 32, 32,
         WriteOpts(bits = 8, sampleFormat = 1, compression = 7,
           jpegRestart = 3))(jpegFixtureValue)
@@ -1862,7 +1783,7 @@ object Raster {
   }
 
   def jpegRgbFixturePath(): String =
-    fixtureOnce(s"raster_jpeg_rgb_${JpegRgbW}x$JpegRgbH.tif") { p =>
+    Fixture.once(s"raster_jpeg_rgb_${JpegRgbW}x$JpegRgbH.tif") { p =>
       writeTiffBandsOpts(p, JpegRgbW, JpegRgbH, 32, 32,
         WriteOpts(bits = 8, sampleFormat = 1, bands = 3,
           compression = 7))(jpegRgbFixtureValue)
@@ -1874,17 +1795,17 @@ object Raster {
   def int16FixtureValue(x: Int, y: Int): Double = ((31 * x + 17 * y) % 997 - 498).toDouble
 
   def int16FixturePath(): String =
-    fixtureOnce(s"raster_int16_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_int16_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32,
         WriteOpts(bits = 16, sampleFormat = 2, compression = 5,
           predictor = 2))(int16FixtureValue)
     }
   def bigTiffFixturePath(): String =
-    fixtureOnce(s"raster_bigtiff_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_bigtiff_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32, WriteOpts(bigTiff = true))(fixtureValue)
     }
   def nodataFixturePath(): String =
-    fixtureOnce(s"raster_nodata_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_nodata_${FixW}x$FixH.tif") { p =>
       writeTiffOpts(p, FixW, FixH, 32, 32,
         WriteOpts(compression = 8, nodata = Some(0.0)))(fixtureValue)
     }
@@ -1896,7 +1817,7 @@ object Raster {
   val Fixture3ValueSql = "CAST((33 * cell_x + 23 * cell_y + 2) % 997 AS DOUBLE)"
 
   def fixture3Path(): String =
-    fixtureOnce(s"raster_fixture3_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_fixture3_${FixW}x$FixH.tif") { p =>
       writeTiff(p, FixW, FixH, 32, 32)(fixture3Value)
     }
 
@@ -1910,7 +1831,7 @@ object Raster {
   def floatFixtureValue(x: Int, y: Int): Double = fixtureValue(x, y) / 4.0
 
   def floatFixturePath(): String =
-    fixtureOnce(s"raster_float_${FixW}x$FixH.tif") { p =>
+    Fixture.once(s"raster_float_${FixW}x$FixH.tif") { p =>
       writeTiff(p, FixW, FixH, 32, 32)(floatFixtureValue)
     }
 
@@ -1919,7 +1840,7 @@ object Raster {
     * back as one member of the multi-band mosaic.
     */
   def mbDeflateFixturePath(): String =
-    fixtureOnce(s"raster_mb_deflate_${MbW}x${MbH}x$MbBands.tif") { p =>
+    Fixture.once(s"raster_mb_deflate_${MbW}x${MbH}x$MbBands.tif") { p =>
       writeTiffBandsOpts(p, MbW, MbH, 32, 32,
         WriteOpts(compression = 8, bands = MbBands))(mbValue)
     }
@@ -1929,7 +1850,7 @@ object Raster {
     * the stacked-band combination GDAL emits with `INTERLEAVE=BAND`.
     */
   def planarFixturePath(): String =
-    fixtureOnce(s"raster_planar_${MbW}x${MbH}x$MbBands.tif") { p =>
+    Fixture.once(s"raster_planar_${MbW}x${MbH}x$MbBands.tif") { p =>
       writeTiffBandsOpts(p, MbW, MbH, 32, 32,
         WriteOpts(compression = 8, predictor = 3, bands = MbBands,
           planar = true))(mbValue)
@@ -2007,7 +1928,7 @@ object Raster {
     * its exact min/max recorded in the sidecar — monotone values give
     * the stats real pruning power.
     */
-  def gradTilesDir(): String = fixtureOnce("raster_grad_tiles") { dir =>
+  def gradTilesDir(): String = Fixture.once("raster_grad_tiles") { dir =>
     val (tw, th) = (30, 35)
     val stats = for (tx <- 0 until 3; ty <- 0 until 2) yield {
       val (ox, oy) = (tx * tw, ty * th)
@@ -2919,8 +2840,6 @@ object Raster {
         // PRE-scoping one, so a cluster's fan-out is reachable — r22)
         s.conf.set(partsKey, math.max(1L,
           math.min(sessionParts.toLong, n / 65536L + 1L)).toString)
-        Console.err.println(s"[graft.flowacc] adaptive fan-out " +
-          s"${s.conf.get(partsKey)} (jump table $n rows, session cap $sessionParts)")
         var rounds = 0
         while (n > 0 && rounds < 20) { // 20 ⇒ paths up to 2^20 cells
           // (u, w) at distance 2^k ≤ d < 2^{k+1}: hop u's jump pointer,
@@ -2937,8 +2856,6 @@ object Raster {
           rounds += 1
         }
         require(n == 0, s"flow paths exceed 2^20 cells after $rounds rounds")
-        // round-count log (the CC-instrumentation discipline)
-        Console.err.println(s"[graft.flowacc] path doubling converged in $rounds rounds")
         paths.groupBy(col("wx").as("cell_x"), col("wy").as("cell_y"))
           .agg(count(lit(1)).as("acc"))
           .orderBy("cell_x", "cell_y")

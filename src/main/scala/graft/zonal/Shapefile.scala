@@ -2,6 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Fixture
 
 /** ESRI Shapefile zone ingestion (round 6) — the other ubiquitous vector
   * interchange format next to GeoJSON, from the published ESRI shapefile
@@ -385,62 +386,34 @@ object Shapefile {
     }.toDF("road_id", "part", "i", "x", "y")
   }
 
-  private val lnFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Write-once per-sf fixture directory holding the shapefile `file`
+    * (with its `.shx`, and any sidecars `write` adds); returns the
+    * `.shp` path.
+    */
+  private def shpFixture(d: String, file: String)(write: String => Unit): String =
+    Fixture.once(s"shp_${file.stripSuffix(".shp")}", Seq(d))(dir => write(s"$dir/$file")) +
+      s"/$file"
 
   /** Write-once per-sf PolyLine shapefile fixture of the roads. */
-  def linesFixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    lnFixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/roads.shp"
-      writeLinesFixture(s, d, path)
-      path
-    })
-  }
-
-  private val ptFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val mptFixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  def linesFixturePath(s: SparkSession, d: String): String =
+    shpFixture(d, "roads.shp")(writeLinesFixture(s, d, _))
 
   /** Write-once per-sf Point shapefile fixture of the stations. */
-  def pointsFixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    ptFixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/stations_pt.shp"
-      writePointsFixture(s, d, path)
-      path
-    })
-  }
+  def pointsFixturePath(s: SparkSession, d: String): String =
+    shpFixture(d, "stations_pt.shp")(writePointsFixture(s, d, _))
 
   /** Write-once per-sf MultiPoint shapefile fixture. */
-  def multiPointFixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    mptFixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/stations_mpt.shp"
-      writeMultiPointFixture(s, d, path)
-      path
-    })
-  }
-
-  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  def multiPointFixturePath(s: SparkSession, d: String): String =
+    shpFixture(d, "stations_mpt.shp")(writeMultiPointFixture(s, d, _))
 
   /** Write-once per-sf shapefile fixture of the NGonRings family (.shp +
-    * .shx + .dbf). Cache key is the data dir's CANONICAL path — the
-    * fixture content depends on the full dataset, so two dirs sharing a
-    * basename must not reuse each other's files (round-6 advice); the
-    * basename only names the tmp subdirectory.
+    * .shx + .dbf).
     */
-  def fixturePath(s: SparkSession, d: String): String = {
-    val f = new java.io.File(d)
-    fixtures.computeIfAbsent(f.getCanonicalPath, { _ =>
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/${f.getName}/zones_ngon.shp"
+  def fixturePath(s: SparkSession, d: String): String =
+    shpFixture(d, "zones_ngon.shp") { path =>
       writeFixture(s, d, Cube.NGonRings, path)
       writeDbfFixture(s, d, path.stripSuffix(".shp") + ".dbf")
-      path
-    })
-  }
+    }
 
   /** The `.dbf` sidecar path for [[fixturePath]]. */
   def dbfFixturePath(s: SparkSession, d: String): String =

@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Q
+import graft.core.{Fixture, Q}
 
 /** Zarr v2 store ingestion (round 11 — the reference's native cube
   * format: a Dask/xarray datacube arrives as a chunked Zarr store, not
@@ -2751,20 +2751,11 @@ object Zarr {
     s"""SELECT x.range AS cell_x, y.range AS cell_y, $ZarrValueSql AS value
        |FROM range(0, $ZarrW) x CROSS JOIN range(0, $ZarrH) y""".stripMargin
 
-  private val fixtureLock = new Object
-  @volatile private var fixtureReady: String = null
-
   /** Write-once deterministic fixture store; returns its directory. */
-  def fixtureDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_fixture_${ZarrW}x$ZarrH"
-    if (fixtureReady != dir) fixtureLock.synchronized {
-      if (fixtureReady != dir) {
-        writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "zlib")(zarrValue)
-        fixtureReady = dir
-      }
+  def fixtureDir(): String =
+    Fixture.once(s"zarr_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "zlib")(zarrValue)
     }
-    dir
-  }
 
   /** Second epoch on the SAME lattice: identical where (x+y)%3 = 0,
     * shifted elsewhere (the change-detection shape the TIFF pair uses).
@@ -2775,37 +2766,19 @@ object Zarr {
     "CAST(CASE WHEN (cell_x + cell_y) % 3 = 0 THEN (29 * cell_x + 13 * cell_y) % 991 " +
       "ELSE (29 * cell_x + 13 * cell_y + cell_x + 1) % 991 END AS DOUBLE)"
 
-  private val fixture2Lock = new Object
-  @volatile private var fixture2Ready: String = null
-
-  def fixture2Dir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_fixture2_${ZarrW}x$ZarrH"
-    if (fixture2Ready != dir) fixture2Lock.synchronized {
-      if (fixture2Ready != dir) {
-        writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "zstd")(zarrValue2)
-        fixture2Ready = dir
-      }
+  def fixture2Dir(): String =
+    Fixture.once(s"zarr_fixture2_${ZarrW}x$ZarrH") { dir =>
+      writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "zstd")(zarrValue2)
     }
-    dir
-  }
-
-  private val fixture3Lock = new Object
-  @volatile private var fixture3Ready: String = null
 
   /** v3 fixture: SAME formula lattice, written as a Zarr v3 store —
     * big-endian int32 + gzip, default `c/ci/cj` chunk keys — so the
     * v3 metadata/key/codec path is gated by the identical oracle.
     */
-  def fixture3Dir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr3_fixture_${ZarrW}x$ZarrH"
-    if (fixture3Ready != dir) fixture3Lock.synchronized {
-      if (fixture3Ready != dir) {
-        writeZarrV3(dir, ZarrH, ZarrW, 32, 32, compressor = "gzip", dtype = ">i4")(zarrValue)
-        fixture3Ready = dir
-      }
+  def fixture3Dir(): String =
+    Fixture.once(s"zarr3_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarrV3(dir, ZarrH, ZarrW, 32, 32, compressor = "gzip", dtype = ">i4")(zarrValue)
     }
-    dir
-  }
 
   /** Third formula for the blosc epoch (distinct from both existing
     * lattices so a cross-wired epoch read cannot cancel out).
@@ -2813,113 +2786,59 @@ object Zarr {
   def zarrValue3(x: Int, y: Int): Double = ((31 * x + 17 * y) % 997).toDouble
   private val Zarr3ValueSql = "CAST((31 * cell_x + 17 * cell_y) % 997 AS DOUBLE)"
 
-  private val fixtureBloscLock = new Object
-  @volatile private var fixtureBloscReady: String = null
-
   /** v2 BLOSC fixture (r12 — the zarr-python default compressor):
     * lz4 inner + byte shuffle over float64, which takes the SPLIT
     * stream path (typesize 8 ≤ 16) through [[Blosc]].
     */
-  def fixtureBloscDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarrb_fixture_${ZarrW}x$ZarrH"
-    if (fixtureBloscReady != dir) fixtureBloscLock.synchronized {
-      if (fixtureBloscReady != dir) {
-        writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "blosc")(zarrValue3)
-        fixtureBloscReady = dir
-      }
+  def fixtureBloscDir(): String =
+    Fixture.once(s"zarrb_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "blosc")(zarrValue3)
     }
-    dir
-  }
-
-  private val fixtureBlzLock = new Object
-  @volatile private var fixtureBlzReady: String = null
 
   /** v2 blosclz fixture (r14 — c-blosc's own default inner codec):
     * blosclz inner + byte shuffle over int16, the split path at
     * typesize 2 with the hand-rolled FastLZ-derived token decoder.
     */
-  def fixtureBlosclzDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarrblz_fixture_${ZarrW}x$ZarrH"
-    if (fixtureBlzReady != dir) fixtureBlzLock.synchronized {
-      if (fixtureBlzReady != dir) {
-        writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "blosc-blosclz",
-          dtype = "<i2")(zarrValue)
-        fixtureBlzReady = dir
-      }
+  def fixtureBlosclzDir(): String =
+    Fixture.once(s"zarrblz_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "blosc-blosclz",
+        dtype = "<i2")(zarrValue)
     }
-    dir
-  }
-
-  private val fixtureBitLock = new Object
-  @volatile private var fixtureBitReady: String = null
 
   /** v2 BITSHUFFLE fixture (r14 — numcodecs shuffle=2, the HPC-world
     * default for float cubes): lz4 inner + bitshuffle over float32.
     */
-  def fixtureBitshuffleDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarrbit_fixture_${ZarrW}x$ZarrH"
-    if (fixtureBitReady != dir) fixtureBitLock.synchronized {
-      if (fixtureBitReady != dir) {
-        writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "blosc-bitshuffle",
-          dtype = "<f4")(zarrValue)
-        fixtureBitReady = dir
-      }
+  def fixtureBitshuffleDir(): String =
+    Fixture.once(s"zarrbit_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "blosc-bitshuffle",
+        dtype = "<f4")(zarrValue)
     }
-    dir
-  }
-
-  private val fixtureSnLock = new Object
-  @volatile private var fixtureSnReady: String = null
 
   /** v2 SNAPPY-inner fixture (r14 — the last c-blosc inner codec):
     * snappy + byte shuffle over int32, the split path at typesize 4.
     */
-  def fixtureSnappyDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarrsn_fixture_${ZarrW}x$ZarrH"
-    if (fixtureSnReady != dir) fixtureSnLock.synchronized {
-      if (fixtureSnReady != dir) {
-        writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "blosc-snappy",
-          dtype = "<i4")(zarrValue)
-        fixtureSnReady = dir
-      }
+  def fixtureSnappyDir(): String =
+    Fixture.once(s"zarrsn_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "blosc-snappy",
+        dtype = "<i4")(zarrValue)
     }
-    dir
-  }
-
-  private val fixtureBlosc3Lock = new Object
-  @volatile private var fixtureBlosc3Ready: String = null
 
   /** v3 blosc fixture: [bytes(le), blosc(zlib-inner)] over int32 —
     * the dont_split frame path (zlib never splits).
     */
-  def fixtureBloscV3Dir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarrb3_fixture_${ZarrW}x$ZarrH"
-    if (fixtureBlosc3Ready != dir) fixtureBlosc3Lock.synchronized {
-      if (fixtureBlosc3Ready != dir) {
-        writeZarrV3(dir, ZarrH, ZarrW, 32, 32, compressor = "blosc-zlib", dtype = "<i4")(zarrValue)
-        fixtureBlosc3Ready = dir
-      }
+  def fixtureBloscV3Dir(): String =
+    Fixture.once(s"zarrb3_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarrV3(dir, ZarrH, ZarrW, 32, 32, compressor = "blosc-zlib", dtype = "<i4")(zarrValue)
     }
-    dir
-  }
-
-  private val fixtureTrLock = new Object
-  @volatile private var fixtureTrReady: String = null
 
   /** v3 TRANSPOSE fixture: [transpose([1,0]), bytes, gzip] over int16
     * — chunks stored column-major, undone by the index remap.
     */
-  def fixtureTransposeDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarrt_fixture_${ZarrW}x$ZarrH"
-    if (fixtureTrReady != dir) fixtureTrLock.synchronized {
-      if (fixtureTrReady != dir) {
-        writeZarrV3(dir, ZarrH, ZarrW, 32, 32, compressor = "gzip",
-          dtype = "<i2", transposed = true)(zarrValue)
-        fixtureTrReady = dir
-      }
+  def fixtureTransposeDir(): String =
+    Fixture.once(s"zarrt_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarrV3(dir, ZarrH, ZarrW, 32, 32, compressor = "gzip",
+        dtype = "<i2", transposed = true)(zarrValue)
     }
-    dir
-  }
 
   /** Rank-3 fixture formula over (x, y, t). */
   val Zarr3T = 5
@@ -2947,41 +2866,23 @@ object Zarr {
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  private val fixtureFLock = new Object
-  @volatile private var fixtureFReady: String = null
-
   /** F-order fixture: same formula, chunks stored column-major. */
-  def fixtureFDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarrf_fixture_${ZarrW}x$ZarrH"
-    if (fixtureFReady != dir) fixtureFLock.synchronized {
-      if (fixtureFReady != dir) {
-        writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "zlib",
-          fOrder = true)(zarrValue)
-        fixtureFReady = dir
-      }
+  def fixtureFDir(): String =
+    Fixture.once(s"zarrf_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarr(dir, ZarrH, ZarrW, 32, 32, compressor = "zlib",
+        fOrder = true)(zarrValue)
     }
-    dir
-  }
-
-  private val fixtureDsLock = new Object
-  @volatile private var fixtureDsReady: String = null
 
   /** Consolidated-hierarchy fixture: two aligned arrays ("precip" on
     * the main formula, "temp" on the second), `.zmetadata` at the
     * root.
     */
-  def fixtureDatasetDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_ds_fixture_${ZarrW}x$ZarrH"
-    if (fixtureDsReady != dir) fixtureDsLock.synchronized {
-      if (fixtureDsReady != dir) {
-        writeZarr(s"$dir/precip", ZarrH, ZarrW, 32, 32, compressor = "zlib")(zarrValue)
-        writeZarr(s"$dir/temp", ZarrH, ZarrW, 32, 32, compressor = "zstd")(zarrValue2)
-        consolidateMetadata(dir, Seq("precip", "temp"))
-        fixtureDsReady = dir
-      }
+  def fixtureDatasetDir(): String =
+    Fixture.once(s"zarr_ds_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarr(s"$dir/precip", ZarrH, ZarrW, 32, 32, compressor = "zlib")(zarrValue)
+      writeZarr(s"$dir/temp", ZarrH, ZarrW, 32, 32, compressor = "zstd")(zarrValue2)
+      consolidateMetadata(dir, Seq("precip", "temp"))
     }
-    dir
-  }
 
   /** Second rank-3 member formula (r17): coprime factors vs
     * [[zarr3dValue]] so a member/axis swap hash-mismatches.
@@ -2989,147 +2890,90 @@ object Zarr {
   def zarr3dValue2(x: Int, y: Int, t: Int): Double =
     ((31 * x + 19 * y + 43 * t) % 1013).toDouble
 
-  private val fixtureGrp3dLock = new Object
-  @volatile private var fixtureGrp3dReady: String = null
-
   /** Rank-3 Dataset fixture (r17): TWO aligned (t, y, x) members next
     * to a rank-1 `t` coordinate the cube walk must skip.
     */
-  def fixtureGroup3dDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_grp3d_fixture_${Zarr3T}x${ZarrH}x$ZarrW"
-    if (fixtureGrp3dReady != dir) fixtureGrp3dLock.synchronized {
-      if (fixtureGrp3dReady != dir) {
-        new java.io.File(dir).mkdirs()
-        java.nio.file.Files.write(
-          new java.io.File(dir, ".zgroup").toPath,
-          """{"zarr_format": 2}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        writeZarr3d(s"$dir/pr", Zarr3T, ZarrH, ZarrW, 2, 32, 32,
-          compressor = "zlib")(zarr3dValue)
-        writeZarr3d(s"$dir/tas", Zarr3T, ZarrH, ZarrW, 3, 48, 48,
-          compressor = "zstd")(zarr3dValue2)
-        writeZarrCoord(s"$dir/t", Zarr3T, Zarr3T)(i => 7.0 * i + 3.0)
-        fixtureGrp3dReady = dir
-      }
+  def fixtureGroup3dDir(): String =
+    Fixture.once(s"zarr_grp3d_fixture_${Zarr3T}x${ZarrH}x$ZarrW") { dir =>
+      new java.io.File(dir).mkdirs()
+      java.nio.file.Files.write(
+        new java.io.File(dir, ".zgroup").toPath,
+        """{"zarr_format": 2}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      writeZarr3d(s"$dir/pr", Zarr3T, ZarrH, ZarrW, 2, 32, 32,
+        compressor = "zlib")(zarr3dValue)
+      writeZarr3d(s"$dir/tas", Zarr3T, ZarrH, ZarrW, 3, 48, 48,
+        compressor = "zstd")(zarr3dValue2)
+      writeZarrCoord(s"$dir/t", Zarr3T, Zarr3T)(i => 7.0 * i + 3.0)
     }
-    dir
-  }
-
-  private val fixtureV3G3Lock = new Object
-  @volatile private var fixtureV3G3Ready: String = null
 
   /** v3 rank-3 GROUP fixture (r17): root group document, two aligned
     * (t, y, x) members on the shared formulas, a rank-1 coordinate
     * the cube walk must skip.
     */
-  def fixtureV3Group3dDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_v3g3_fixture_${Zarr3T}x${ZarrH}x$ZarrW"
-    if (fixtureV3G3Ready != dir) fixtureV3G3Lock.synchronized {
-      if (fixtureV3G3Ready != dir) {
-        new java.io.File(dir).mkdirs()
-        java.nio.file.Files.write(
-          new java.io.File(dir, "zarr.json").toPath,
-          """{"zarr_format": 3, "node_type": "group"}"""
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        writeZarr3dV3(s"$dir/pr", Zarr3T, ZarrH, ZarrW, 2, 32, 32,
-          compressor = "gzip")(zarr3dValue)
-        writeZarr3dV3(s"$dir/tas", Zarr3T, ZarrH, ZarrW, 3, 48, 48,
-          compressor = "zstd")(zarr3dValue2)
-        writeZarrV3Coord(s"$dir/t", Zarr3T, Zarr3T)(i => 7.0 * i + 3.0)
-        fixtureV3G3Ready = dir
-      }
+  def fixtureV3Group3dDir(): String =
+    Fixture.once(s"zarr_v3g3_fixture_${Zarr3T}x${ZarrH}x$ZarrW") { dir =>
+      new java.io.File(dir).mkdirs()
+      java.nio.file.Files.write(
+        new java.io.File(dir, "zarr.json").toPath,
+        """{"zarr_format": 3, "node_type": "group"}"""
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      writeZarr3dV3(s"$dir/pr", Zarr3T, ZarrH, ZarrW, 2, 32, 32,
+        compressor = "gzip")(zarr3dValue)
+      writeZarr3dV3(s"$dir/tas", Zarr3T, ZarrH, ZarrW, 3, 48, 48,
+        compressor = "zstd")(zarr3dValue2)
+      writeZarrV3Coord(s"$dir/t", Zarr3T, Zarr3T)(i => 7.0 * i + 3.0)
     }
-    dir
-  }
-
-  private val fixtureV3CoLock = new Object
-  @volatile private var fixtureV3CoReady: String = null
 
   /** v3 coordinate-labelled hierarchy fixture (r17): the 2-D formula
     * member next to v3 rank-1 x/y coordinate nodes on quarter-degree
     * steps, two chunks along x.
     */
-  def fixtureV3CoordsDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_v3coords_fixture_${ZarrW}x$ZarrH"
-    if (fixtureV3CoReady != dir) fixtureV3CoLock.synchronized {
-      if (fixtureV3CoReady != dir) {
-        writeZarrV3(s"$dir/precip", ZarrH, ZarrW, 32, 32, compressor = "gzip")(zarrValue)
-        writeZarrV3Coord(s"$dir/x", ZarrW, 48)(x => -120.0 + 0.25 * x)
-        writeZarrV3Coord(s"$dir/y", ZarrH, ZarrH, compressor = "zstd",
-          dtype = "<f4")(y => 40.0 + 0.25 * y)
-        fixtureV3CoReady = dir
-      }
+  def fixtureV3CoordsDir(): String =
+    Fixture.once(s"zarr_v3coords_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarrV3(s"$dir/precip", ZarrH, ZarrW, 32, 32, compressor = "gzip")(zarrValue)
+      writeZarrV3Coord(s"$dir/x", ZarrW, 48)(x => -120.0 + 0.25 * x)
+      writeZarrV3Coord(s"$dir/y", ZarrH, ZarrH, compressor = "zstd",
+        dtype = "<f4")(y => 40.0 + 0.25 * y)
     }
-    dir
-  }
-
-  private val fixtureV3TimeLock = new Object
-  @volatile private var fixtureV3TimeReady: String = null
 
   /** v3 CF time fixture (r17): rank-3 v3 cube next to a v3 `t`
     * coordinate whose INLINE zarr.json attributes carry the units.
     */
-  def fixtureV3TimeDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_v3time_fixture_${Zarr3T}x${ZarrH}x$ZarrW"
-    if (fixtureV3TimeReady != dir) fixtureV3TimeLock.synchronized {
-      if (fixtureV3TimeReady != dir) {
-        writeZarr3dV3(s"$dir/v", Zarr3T, ZarrH, ZarrW, 2, 32, 32,
-          compressor = "gzip")(zarr3dValue)
-        writeZarrV3Coord(s"$dir/t", Zarr3T, 2,
-          attrs = Seq(("units", ZarrTimeUnits), ("calendar", "standard")))(
-          i => 7.0 * i + 3.0)
-        fixtureV3TimeReady = dir
-      }
+  def fixtureV3TimeDir(): String =
+    Fixture.once(s"zarr_v3time_fixture_${Zarr3T}x${ZarrH}x$ZarrW") { dir =>
+      writeZarr3dV3(s"$dir/v", Zarr3T, ZarrH, ZarrW, 2, 32, 32,
+        compressor = "gzip")(zarr3dValue)
+      writeZarrV3Coord(s"$dir/t", Zarr3T, 2,
+        attrs = Seq(("units", ZarrTimeUnits), ("calendar", "standard")))(
+        i => 7.0 * i + 3.0)
     }
-    dir
-  }
-
-  private val fixtureV2GrpLock = new Object
-  @volatile private var fixtureV2GrpReady: String = null
 
   /** UN-consolidated v2 group fixture (r17): `.zgroup` + two aligned
     * 2-D members + a 1-D coordinate member the walk must SKIP — the
     * plain `to_zarr()` layout, NO `.zmetadata`.
     */
-  def fixtureV2GroupDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_v2grp_fixture_${ZarrW}x$ZarrH"
-    if (fixtureV2GrpReady != dir) fixtureV2GrpLock.synchronized {
-      if (fixtureV2GrpReady != dir) {
-        new java.io.File(dir).mkdirs()
-        java.nio.file.Files.write(
-          new java.io.File(dir, ".zgroup").toPath,
-          """{"zarr_format": 2}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        writeZarr(s"$dir/precip", ZarrH, ZarrW, 32, 32, compressor = "zlib")(zarrValue)
-        writeZarr(s"$dir/temp", ZarrH, ZarrW, 32, 32, compressor = "zstd")(zarrValue2)
-        writeZarrCoord(s"$dir/x", ZarrW, 48)(x => -120.0 + 0.25 * x)
-        fixtureV2GrpReady = dir
-      }
+  def fixtureV2GroupDir(): String =
+    Fixture.once(s"zarr_v2grp_fixture_${ZarrW}x$ZarrH") { dir =>
+      new java.io.File(dir).mkdirs()
+      java.nio.file.Files.write(
+        new java.io.File(dir, ".zgroup").toPath,
+        """{"zarr_format": 2}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      writeZarr(s"$dir/precip", ZarrH, ZarrW, 32, 32, compressor = "zlib")(zarrValue)
+      writeZarr(s"$dir/temp", ZarrH, ZarrW, 32, 32, compressor = "zstd")(zarrValue2)
+      writeZarrCoord(s"$dir/x", ZarrW, 48)(x => -120.0 + 0.25 * x)
     }
-    dir
-  }
-
-  private val fixtureCoordsLock = new Object
-  @volatile private var fixtureCoordsReady: String = null
 
   /** Coordinate-labelled hierarchy fixture (r16): the 2-D formula
     * member next to 1-D x/y coordinate members on quarter-degree steps
     * (exact in binary), two chunks along x to prove the multi-chunk
     * coordinate path.
     */
-  def fixtureCoordsDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_coords_fixture_${ZarrW}x$ZarrH"
-    if (fixtureCoordsReady != dir) fixtureCoordsLock.synchronized {
-      if (fixtureCoordsReady != dir) {
-        writeZarr(s"$dir/precip", ZarrH, ZarrW, 32, 32, compressor = "zlib")(zarrValue)
-        writeZarrCoord(s"$dir/x", ZarrW, 48)(x => -120.0 + 0.25 * x)
-        writeZarrCoord(s"$dir/y", ZarrH, ZarrH)(y => 40.0 + 0.25 * y)
-        fixtureCoordsReady = dir
-      }
+  def fixtureCoordsDir(): String =
+    Fixture.once(s"zarr_coords_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarr(s"$dir/precip", ZarrH, ZarrW, 32, 32, compressor = "zlib")(zarrValue)
+      writeZarrCoord(s"$dir/x", ZarrW, 48)(x => -120.0 + 0.25 * x)
+      writeZarrCoord(s"$dir/y", ZarrH, ZarrH)(y => 40.0 + 0.25 * y)
     }
-    dir
-  }
-
-  private val fixtureTimeLock = new Object
-  @volatile private var fixtureTimeReady: String = null
 
   /** CF time fixture (r17): the rank-3 cube next to a `t` coordinate
     * member whose `.zattrs` carries the CF `units` string — values
@@ -3137,29 +2981,23 @@ object Zarr {
     * grammar so the decode discipline is format-independent.
     */
   val ZarrTimeUnits = "hours since 2020-03-01 06:00:00"
-  def fixtureTimeDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_time_fixture_${Zarr3T}x${ZarrH}x$ZarrW"
-    if (fixtureTimeReady != dir) fixtureTimeLock.synchronized {
-      if (fixtureTimeReady != dir) {
-        writeZarr3d(s"$dir/v", Zarr3T, ZarrH, ZarrW, 2, 32, 32,
-          compressor = "zlib")(zarr3dValue)
-        writeZarrCoord(s"$dir/t", Zarr3T, 2)(i => 7.0 * i + 3.0)
-        java.nio.file.Files.write(
-          new java.io.File(s"$dir/t", ".zattrs").toPath,
-          s"""{"units": "$ZarrTimeUnits", "calendar": "standard"}"""
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        fixtureTimeReady = dir
-      }
+  def fixtureTimeDir(): String =
+    Fixture.once(s"zarr_time_fixture_${Zarr3T}x${ZarrH}x$ZarrW") { dir =>
+      writeZarr3d(s"$dir/v", Zarr3T, ZarrH, ZarrW, 2, 32, 32,
+        compressor = "zlib")(zarr3dValue)
+      writeZarrCoord(s"$dir/t", Zarr3T, 2)(i => 7.0 * i + 3.0)
+      java.nio.file.Files.write(
+        new java.io.File(s"$dir/t", ".zattrs").toPath,
+        s"""{"units": "$ZarrTimeUnits", "calendar": "standard"}"""
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    dir
-  }
 
   /** Full-selection fixture (r19): the rank-3 cube next to x, y AND t
     * coordinate members — the xarray `ds.sel(time=slice, x=slice,
     * y=slice)` hierarchy, exercised through ONE DSv2 scan.
     */
   def fixtureSel3Dir(): String =
-    Raster.fixtureOnce(s"zarr_sel3_fixture_${Zarr3T}x${ZarrH}x$ZarrW") { dir =>
+    Fixture.once(s"zarr_sel3_fixture_${Zarr3T}x${ZarrH}x$ZarrW") { dir =>
       writeZarr3d(s"$dir/v", Zarr3T, ZarrH, ZarrW, 2, 32, 32,
         compressor = "zlib")(zarr3dValue)
       writeZarrCoord(s"$dir/x", ZarrW, 48)(x => -120.0 + 0.25 * x)
@@ -3171,27 +3009,18 @@ object Zarr {
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
 
-  private val fixtureV3DsLock = new Object
-  @volatile private var fixtureV3DsReady: String = null
-
   /** V3 GROUP fixture (r16): root group document (NO consolidated
     * metadata — the zarr-python-3 default), two aligned 2-D member
     * arrays on the shared formulas, and a 1-D coordinate member the
     * walk must SKIP, not refuse.
     */
-  def fixtureV3DatasetDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_v3ds_fixture_${ZarrW}x$ZarrH"
-    if (fixtureV3DsReady != dir) fixtureV3DsLock.synchronized {
-      if (fixtureV3DsReady != dir) {
-        writeZarrV3(s"$dir/precip", ZarrH, ZarrW, 32, 32, compressor = "gzip")(zarrValue)
-        writeZarrV3(s"$dir/temp", ZarrH, ZarrW, 32, 32, compressor = "zstd")(zarrValue2)
-        writeV3GroupDoc(dir)
-        writeV3Coord(s"$dir/x", ZarrW)
-        fixtureV3DsReady = dir
-      }
+  def fixtureV3DatasetDir(): String =
+    Fixture.once(s"zarr_v3ds_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarrV3(s"$dir/precip", ZarrH, ZarrW, 32, 32, compressor = "gzip")(zarrValue)
+      writeZarrV3(s"$dir/temp", ZarrH, ZarrW, 32, 32, compressor = "zstd")(zarrValue2)
+      writeV3GroupDoc(dir)
+      writeV3Coord(s"$dir/x", ZarrW)
     }
-    dir
-  }
 
   /** Emit a v3 root GROUP document. */
   def writeV3GroupDoc(dir: String): Unit = {
@@ -3228,11 +3057,10 @@ object Zarr {
 
   /** Rank-3 v2 fixture: 5×70×80 with 2×32×32 chunks — the t-chunk
     * grid has an edge chunk (5 % 2 = 1) so the t-pad clip path is
-    * exercised alongside both spatial pads. (r19: atomic stamped
-    * install via [[Raster.fixtureOnce]].)
+    * exercised alongside both spatial pads.
     */
   def fixture3dDir(): String =
-    Raster.fixtureOnce(s"zarr3d_fixture_${Zarr3T}x${ZarrH}x$ZarrW") { dir =>
+    Fixture.once(s"zarr3d_fixture_${Zarr3T}x${ZarrH}x$ZarrW") { dir =>
       writeZarr3d(dir, Zarr3T, ZarrH, ZarrW, 2, 32, 32, compressor = "zlib")(zarr3dValue)
     }
 
@@ -3249,114 +3077,66 @@ object Zarr {
        |FROM range(0, $ZarrW) x CROSS JOIN range(0, $ZarrH) y
        |CROSS JOIN range(0, $Zarr4L) l CROSS JOIN range(0, $Zarr4T) t""".stripMargin
 
-  private val fixtureMfLock = new Object
-  @volatile private var fixtureMfReady: String = null
-
   /** Multi-hierarchy concat fixture (r18): [[ZarrMfN]] "monthly" member
     * hierarchies, each a rank-3 (t=2, y, x) cube + its OWN CF time
     * axis (days since 2000-01-01: member k carries days 30k+5 and
     * 30k+15), data keyed by the GLOBAL epoch 2k+j.
     */
   val ZarrMfN = 3
-  def fixtureMfDir(): String = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_mf_fixture_${ZarrW}x$ZarrH"
-    if (fixtureMfReady != root) fixtureMfLock.synchronized {
-      if (fixtureMfReady != root) {
-        for (k <- 0 until ZarrMfN) {
-          val d = s"$root/month_$k"
-          writeZarr3d(s"$d/v", 2, ZarrH, ZarrW, 2, 32, 32,
-            compressor = "zlib")((x, y, t) => zarr3dValue(x, y, 2 * k + t))
-          writeZarrCoord(s"$d/t", 2, 2)(j => (30 * k + 5 + 10 * j).toDouble)
-          java.nio.file.Files.write(
-            new java.io.File(s"$d/t", ".zattrs").toPath,
-            """{"units": "days since 2000-01-01", "calendar": "standard"}"""
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        }
-        fixtureMfReady = root
+  def fixtureMfDir(): String =
+    Fixture.once(s"zarr_mf_fixture_${ZarrW}x$ZarrH") { root =>
+      for (k <- 0 until ZarrMfN) {
+        val d = s"$root/month_$k"
+        writeZarr3d(s"$d/v", 2, ZarrH, ZarrW, 2, 32, 32,
+          compressor = "zlib")((x, y, t) => zarr3dValue(x, y, 2 * k + t))
+        writeZarrCoord(s"$d/t", 2, 2)(j => (30 * k + 5 + 10 * j).toDouble)
+        java.nio.file.Files.write(
+          new java.io.File(s"$d/t", ".zattrs").toPath,
+          """{"units": "days since 2000-01-01", "calendar": "standard"}"""
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
     }
-    root
-  }
-
-  private val fixtureTime4dLock = new Object
-  @volatile private var fixtureTime4dReady: String = null
 
   /** Rank-4 CF time fixture (r18): the (t, level, y, x) v2 cube next
     * to a `t` coordinate member with CF `units` + `calendar` — the
     * Zarr twin of [[Hdf5.fixtureTime4dPath]].
     */
-  def fixtureTime4dDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_time4d_fixture_${Zarr4T}x${Zarr4L}x${ZarrH}x$ZarrW"
-    if (fixtureTime4dReady != dir) fixtureTime4dLock.synchronized {
-      if (fixtureTime4dReady != dir) {
-        writeZarr4d(s"$dir/v", Zarr4T, Zarr4L, ZarrH, ZarrW, 2, 3, 32, 32,
-          compressor = "zlib")(zarr4dValue)
-        writeZarrCoord(s"$dir/t", Zarr4T, 2)(i => 7.0 * i + 3.0)
-        java.nio.file.Files.write(
-          new java.io.File(s"$dir/t", ".zattrs").toPath,
-          s"""{"units": "$ZarrTimeUnits", "calendar": "standard"}"""
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        fixtureTime4dReady = dir
-      }
+  def fixtureTime4dDir(): String =
+    Fixture.once(s"zarr_time4d_fixture_${Zarr4T}x${Zarr4L}x${ZarrH}x$ZarrW") { dir =>
+      writeZarr4d(s"$dir/v", Zarr4T, Zarr4L, ZarrH, ZarrW, 2, 3, 32, 32,
+        compressor = "zlib")(zarr4dValue)
+      writeZarrCoord(s"$dir/t", Zarr4T, 2)(i => 7.0 * i + 3.0)
+      java.nio.file.Files.write(
+        new java.io.File(s"$dir/t", ".zattrs").toPath,
+        s"""{"units": "$ZarrTimeUnits", "calendar": "standard"}"""
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    dir
-  }
-
-  private val fixture4dLock = new Object
-  @volatile private var fixture4dReady: String = null
 
   /** Rank-4 v2 fixture: 3×4×70×80 with 2×3×32×32 chunks — BOTH leading
     * chunk grids have an edge chunk (3 % 2 = 1 along t, 4 % 3 = 1
     * along level) so the pad clip is exercised in all four axes.
     */
-  def fixture4dDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr4d_fixture_${Zarr4T}x${Zarr4L}x${ZarrH}x$ZarrW"
-    if (fixture4dReady != dir) fixture4dLock.synchronized {
-      if (fixture4dReady != dir) {
-        writeZarr4d(dir, Zarr4T, Zarr4L, ZarrH, ZarrW, 2, 3, 32, 32,
-          compressor = "zlib")(zarr4dValue)
-        fixture4dReady = dir
-      }
+  def fixture4dDir(): String =
+    Fixture.once(s"zarr4d_fixture_${Zarr4T}x${Zarr4L}x${ZarrH}x$ZarrW") { dir =>
+      writeZarr4d(dir, Zarr4T, Zarr4L, ZarrH, ZarrW, 2, 3, 32, 32,
+        compressor = "zlib")(zarr4dValue)
     }
-    dir
-  }
-
-  private val fixtureShLock = new Object
-  @volatile private var fixtureShReady: String = null
 
   /** Sharded v3 fixture: same formula, 32x32 shards of 16x16 gzip
     * inner chunks, crc32c index at the shard end.
     */
-  def fixtureShardedDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr3s_fixture_${ZarrW}x$ZarrH"
-    if (fixtureShReady != dir) fixtureShLock.synchronized {
-      if (fixtureShReady != dir) {
-        writeZarrV3Sharded(dir, ZarrH, ZarrW, 32, 32, 16, 16)(zarrValue)
-        fixtureShReady = dir
-      }
+  def fixtureShardedDir(): String =
+    Fixture.once(s"zarr3s_fixture_${ZarrW}x$ZarrH") { dir =>
+      writeZarrV3Sharded(dir, ZarrH, ZarrW, 32, 32, 16, 16)(zarrValue)
     }
-    dir
-  }
-
-  private val fixtureSh3Lock = new Object
-  @volatile private var fixtureSh3Ready: String = null
 
   /** Sharded RANK-3 v3 fixture (r14): 5×70×80 as 2×32×32 shards of
     * 1×16×16 gzip inner chunks — edge shards in all three axes.
     */
-  def fixtureSharded3dDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr3ds_fixture_${Zarr3T}x${ZarrH}x$ZarrW"
-    if (fixtureSh3Ready != dir) fixtureSh3Lock.synchronized {
-      if (fixtureSh3Ready != dir) {
-        writeZarr3dSharded(dir, Zarr3T, ZarrH, ZarrW, 2, 32, 32, 1, 16, 16)(zarr3dValue)
-        fixtureSh3Ready = dir
-      }
+  def fixtureSharded3dDir(): String =
+    Fixture.once(s"zarr3ds_fixture_${Zarr3T}x${ZarrH}x$ZarrW") { dir =>
+      writeZarr3dSharded(dir, Zarr3T, ZarrH, ZarrW, 2, 32, 32, 1, 16, 16)(zarr3dValue)
     }
-    dir
-  }
-
-  private val streamMembersLock = new Object
-  @volatile private var streamMembersReady: String = null
 
   /** Member LANDING directory for the streaming DSv2 face (r18):
     * [[StreamMembersN]] per-epoch 2-D stores with zero-padded names —
@@ -3364,70 +3144,37 @@ object Zarr {
     * GLOBAL member ordinal so an epoch-order bug hash-mismatches.
     */
   val StreamMembersN = 4
-  def streamMembersDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr_stream_members_${StreamMembersN}x${ZarrH}x$ZarrW"
-    if (streamMembersReady != dir) streamMembersLock.synchronized {
-      if (streamMembersReady != dir) {
-        for (k <- 0 until StreamMembersN)
-          writeZarr(f"$dir/part-$k%04d", ZarrH, ZarrW, 32, 32,
-            compressor = "zlib")((x, y) => zarr3dValue(x, y, k))
-        streamMembersReady = dir
-      }
+  def streamMembersDir(): String =
+    Fixture.once(s"zarr_stream_members_${StreamMembersN}x${ZarrH}x$ZarrW") { dir =>
+      for (k <- 0 until StreamMembersN)
+        writeZarr(f"$dir/part-$k%04d", ZarrH, ZarrW, 32, 32,
+          compressor = "zlib")((x, y) => zarr3dValue(x, y, k))
     }
-    dir
-  }
-
-  private val fixtureF3Lock = new Object
-  @volatile private var fixtureF3Ready: String = null
 
   /** F-ORDER rank-3 fixture (r14): the same cube column-major. */
-  def fixtureForder3dDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr3f_fixture_${Zarr3T}x${ZarrH}x$ZarrW"
-    if (fixtureF3Ready != dir) fixtureF3Lock.synchronized {
-      if (fixtureF3Ready != dir) {
-        writeZarr3d(dir, Zarr3T, ZarrH, ZarrW, 2, 32, 32, compressor = "zlib",
-          fOrder = true)(zarr3dValue)
-        fixtureF3Ready = dir
-      }
+  def fixtureForder3dDir(): String =
+    Fixture.once(s"zarr3f_fixture_${Zarr3T}x${ZarrH}x$ZarrW") { dir =>
+      writeZarr3d(dir, Zarr3T, ZarrH, ZarrW, 2, 32, 32, compressor = "zlib",
+        fOrder = true)(zarr3dValue)
     }
-    dir
-  }
-
-  private val fixtureF4Lock = new Object
-  @volatile private var fixtureF4Ready: String = null
 
   /** F-order RANK-4 v2 fixture (r16): same lattice as the C-order
     * rank-4 fixture, column-major chunk buffers.
     */
-  def fixtureForder4dDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr4f_fixture_${Zarr4T}x${Zarr4L}x${ZarrH}x$ZarrW"
-    if (fixtureF4Ready != dir) fixtureF4Lock.synchronized {
-      if (fixtureF4Ready != dir) {
-        writeZarr4d(dir, Zarr4T, Zarr4L, ZarrH, ZarrW, 2, 3, 32, 32,
-          compressor = "zlib", fOrder = true)(zarr4dValue)
-        fixtureF4Ready = dir
-      }
+  def fixtureForder4dDir(): String =
+    Fixture.once(s"zarr4f_fixture_${Zarr4T}x${Zarr4L}x${ZarrH}x$ZarrW") { dir =>
+      writeZarr4d(dir, Zarr4T, Zarr4L, ZarrH, ZarrW, 2, 3, 32, 32,
+        compressor = "zlib", fOrder = true)(zarr4dValue)
     }
-    dir
-  }
-
-  private val fixtureSh4Lock = new Object
-  @volatile private var fixtureSh4Ready: String = null
 
   /** Sharded RANK-4 v3 fixture (r14): 3×4×70×80 as 2×3×32×32 shards of
     * 1×1×16×16 gzip inner chunks — edge shards in all four axes.
     */
-  def fixtureSharded4dDir(): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io/zarr4ds_fixture_${Zarr4T}x${Zarr4L}x${ZarrH}x$ZarrW"
-    if (fixtureSh4Ready != dir) fixtureSh4Lock.synchronized {
-      if (fixtureSh4Ready != dir) {
-        writeZarr4dSharded(dir, Zarr4T, Zarr4L, ZarrH, ZarrW,
-          2, 3, 32, 32, 1, 1, 16, 16)(zarr4dValue)
-        fixtureSh4Ready = dir
-      }
+  def fixtureSharded4dDir(): String =
+    Fixture.once(s"zarr4ds_fixture_${Zarr4T}x${Zarr4L}x${ZarrH}x$ZarrW") { dir =>
+      writeZarr4dSharded(dir, Zarr4T, Zarr4L, ZarrH, ZarrW,
+        2, 3, 32, 32, 1, 1, 16, 16)(zarr4dValue)
     }
-    dir
-  }
 
   def defs: Seq[(String, Q)] = Seq(
     // Zarr ingestion end-to-end: write the deterministic store (once),

@@ -3,7 +3,7 @@ package graft.zonal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.core.{Q, Tables}
+import graft.core.{Fixture, Q, Tables}
 import graft.core.Det.{dsum, dsumSql}
 
 /** SURVEY.md §2.9 — the zonal-statistics operator surface (the
@@ -358,6 +358,11 @@ object Zonal {
     * reaches the output. Cells are scanned twice (histogram + resolve):
     * the price of exactness at any distinct-value cardinality, and still
     * two linear passes with no per-zone sort at 100 TB.
+    *
+    * Single-action contract: calling this runs no Spark job. It returns
+    * one lazy plan, and the caller's one action runs the whole
+    * computation (both paths, the histogram and the resolve) as that
+    * action's jobs, with no driver round trip in between.
     */
   def exactQuantilesByBucket(cells: DataFrame,
       qs: Seq[(Double, String)], nb: Int = 256): DataFrame = {
@@ -460,27 +465,18 @@ object Zonal {
       s"(cell_x $idiv $p) % 2 * $q + (cell_y $idiv $p) % 2 * ${2 * q}"
     }.mkString("(", " + ", ")")
 
-  /** Write-once-per-(JVM, sf) Z-ordered cube store backing the
-    * scan-side partition-pruning query (the sink op rewrites its own
-    * copy every call; the scan wants a stable store).
+  /** Write-once-per-sf Z-ordered cube store backing the scan-side
+    * partition-pruning query (the sink op rewrites its own copy every
+    * call; the scan wants a stable store).
     */
-  private val zStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ensureZStore(s: org.apache.spark.sql.SparkSession, d: String): String =
-    zStores.computeIfAbsent(new java.io.File(d).getCanonicalPath, { canon =>
-      // key the output dir on the CANONICAL path (basename + a hash of
-      // the full path), not the basename alone — two data dirs sharing a
-      // basename must not clobber each other's store while the first
-      // memo entry still points at the overwritten path (round-7 advice;
-      // same basename-collision class the r7 fixture caches fixed)
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_io/" +
-        s"${new java.io.File(d).getName}_${Integer.toHexString(canon.hashCode)}/zorder_store"
+    Fixture.once("zorder_store", Seq(d)) { out =>
       Cube.cells(s, d)
         .withColumn("z", expr(zMortonSql("div")))
         .withColumn("zbucket", expr(s"${zMortonSql("div")} div 256"))
         .select("cell_x", "cell_y", "value", "z", "zbucket")
         .write.mode("overwrite").partitionBy("zbucket").parquet(out)
-      out
-    })
+    }
 
   def defs: Seq[(String, Q)] = Seq(
     "scan_cells" -> Q(
@@ -518,8 +514,8 @@ object Zonal {
            |        ${zMortonSql("//")} // 256 AS zbucket
            |      FROM cells)
            |GROUP BY zbucket ORDER BY zbucket""".stripMargin)) { (s, d) =>
-      // canonical-path-hashed dir, same basename-collision fix as
-      // ensureZStore (round-7 advice)
+      // canonical-path-hashed dir: two data dirs sharing a basename
+      // must not clobber each other's output
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_io/" +
         s"${new java.io.File(d).getName}_${Integer.toHexString(
           new java.io.File(d).getCanonicalPath.hashCode)}/sink_zorder"

@@ -3,6 +3,7 @@ package graft.zonal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Det.dsum
+import graft.core.Fixture
 
 /** Tile-partitioned cube storage + tile-pruned zonal scans — the one
   * genuinely bespoke zonal optimization (SURVEY.md §4 "Tile-pruning"):
@@ -18,24 +19,12 @@ import graft.core.Det.dsum
   */
 object ZonalStore {
 
-  /** Write (once) the tiled cube for a scale-factor dir; returns path.
-    * The output is stamped with a source fingerprint (lineitem file
-    * size + mtime) so a tiled cube left by a previous run against
-    * DIFFERENT source data is rebuilt, not silently reused.
-    */
-  def ensureTiled(s: SparkSession, d: String): String = {
-    val sfName = new java.io.File(d).getName
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_io/$sfName/cells_tiled"
-    val src = new java.io.File(d, "lineitem.parquet")
-    val fp = s"${src.length()}_${src.lastModified()}"
-    val stamp = new java.io.File(path, s"_FINGERPRINT_$fp")
-    if (!new java.io.File(path, "_SUCCESS").exists() || !stamp.exists()) {
+  /** Write (once) the tiled cube for a scale-factor dir; returns path. */
+  def ensureTiled(s: SparkSession, d: String): String =
+    Fixture.once("cells_tiled", Seq(d)) { path =>
       Cube.withTiles(Cube.cells(s, d))
         .write.mode("overwrite").partitionBy("tile_x", "tile_y").parquet(path)
-      stamp.createNewFile()
     }
-    path
-  }
 
   /** Disjunction over the tile pairs covered by `zonesDf` — a predicate
     * on the partition columns, so it statically prunes the tiled store.

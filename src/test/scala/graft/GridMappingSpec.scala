@@ -109,7 +109,7 @@ class GridMappingSpec extends SparkSuite {
   }
 
   test("lcc with ONE standard parallel: n = sin(sp) and the origin still lands on (lon0, lat0)") {
-    val p = Raster.fixtureOnce("nc_lcc1_8x8.nc") { f =>
+    val p = graft.core.Fixture.once("nc_lcc1_8x8.nc") { f =>
       Netcdf.writeNetcdf(f, "tas", 8, 8, Netcdf.NcFloat,
         coordY = y => -12000.0 + 3000.0 * y, coordX = x => -12000.0 + 3000.0 * x,
         gridMapping = Some(("lcc", Seq(
@@ -126,7 +126,7 @@ class GridMappingSpec extends SparkSuite {
 
   test("refusals: unknown mapping name, third rotation, ellipsoidal LCC, no mapping") {
     def gmFile(tag: String, gm: Option[(String, Seq[(String, Either[Seq[Double], String])])]): String =
-      Raster.fixtureOnce(s"nc_gm_$tag.nc") { f =>
+      graft.core.Fixture.once(s"nc_gm_$tag.nc") { f =>
         Netcdf.writeNetcdf(f, "tas", 4, 4, Netcdf.NcFloat,
           gridMapping = gm)((x, y, _) => (x + y).toDouble)
       }
@@ -178,14 +178,14 @@ class GridMappingSpec extends SparkSuite {
 
   test("zarr attribute-path refusals: dangling member and undeclared mapping") {
     import graft.zonal.{GridMapping => GM, Zarr, Raster}
-    val dangling = Raster.fixtureOnce("zarr_gm_dangling") { dir =>
+    val dangling = graft.core.Fixture.once("zarr_gm_dangling") { dir =>
       Zarr.writeZarr(s"$dir/tas", 8, 8, 8, 8)((x, y) => (x + y).toDouble)
       java.nio.file.Files.write(new java.io.File(s"$dir/tas/.zattrs").toPath,
         """{"grid_mapping": "ghost"}""".getBytes("UTF-8"))
     }
     val e1 = intercept[Throwable](GM.cellsLonLatZarr(spark, s"$dangling/tas"))
     assert(msgs(e1).contains("ghost"), msgs(e1))
-    val none = Raster.fixtureOnce("zarr_gm_none") { dir =>
+    val none = graft.core.Fixture.once("zarr_gm_none") { dir =>
       Zarr.writeZarr(s"$dir/tas", 8, 8, 8, 8)((x, y) => (x + y).toDouble)
     }
     val e2 = intercept[Throwable](GM.cellsLonLatZarr(spark, s"$none/tas"))

@@ -66,9 +66,7 @@ class RelSpec extends SparkSuite {
 
   test("scan_parquet_bloom: footer carries a bloom for l_partkey and only l_partkey") {
     q("scan_parquet_bloom").count() // triggers the write
-    val sfName = new java.io.File(sf).getName
-    val dir = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_io/$sfName/scan_parquet_bloom")
+    val dir = new java.io.File(graft.rel.Scans.bloomWrite(spark, sf))
     val part = dir.listFiles().filter(_.getName.endsWith(".parquet")).head
     val conf = new org.apache.hadoop.conf.Configuration()
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
