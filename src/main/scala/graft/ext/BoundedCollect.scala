@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.Collect
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftbridge.BoundedCollectOverflow
 import org.apache.spark.sql.types.DataType
 
 /** `collect_list` with a hard per-group element bound, enforced DURING
@@ -27,7 +28,8 @@ import org.apache.spark.sql.types.DataType
   *  - `errMsg == Some(...)`: the (cap+1)-th element THROWS the named
   *    error — the task dies on the first overflowing element, exactly
   *    when the old in-plan raise_error would have fired, megabytes not
-  *    gigabytes in;
+  *    gigabytes in. The error is a [[BoundedCollectOverflow]] (a
+  *    `SparkRuntimeException`) carrying the cap and the size seen;
   *  - `errMsg == None` (drop mode, the `dedup_containment` df-bound):
   *    overflowing groups evaluate to NULL so a downstream filter
   *    excludes them by definition — boilerplate grams carry no identity
@@ -70,31 +72,32 @@ case class BoundedCollectList(
   private def overflowed(buffer: mutable.ArrayBuffer[Any]): Boolean =
     buffer.length > cap
 
-  private def raiseIfGuarded(): Unit =
-    errMsg.foreach(m => throw new IllegalStateException(m))
+  private def raiseIfGuarded(seen: Int): Unit =
+    errMsg.foreach(m => throw new BoundedCollectOverflow(m, cap, seen))
 
   override def update(buffer: mutable.ArrayBuffer[Any],
       input: InternalRow): mutable.ArrayBuffer[Any] = {
     val v = child.eval(input)
     if (v != null && !overflowed(buffer)) {
       buffer += convertToBufferElement(v)
-      if (overflowed(buffer)) raiseIfGuarded()
+      if (overflowed(buffer)) raiseIfGuarded(buffer.length)
     }
     buffer
   }
 
   override def merge(buffer: mutable.ArrayBuffer[Any],
       other: mutable.ArrayBuffer[Any]): mutable.ArrayBuffer[Any] = {
+    val seen = buffer.length + other.length
     val it = other.iterator
     while (it.hasNext && !overflowed(buffer)) {
       buffer += it.next()
-      if (overflowed(buffer)) raiseIfGuarded()
+      if (overflowed(buffer)) raiseIfGuarded(seen)
     }
     buffer
   }
 
   override def eval(buffer: mutable.ArrayBuffer[Any]): Any =
-    if (overflowed(buffer)) { raiseIfGuarded(); null }
+    if (overflowed(buffer)) { raiseIfGuarded(buffer.length); null }
     else new GenericArrayData(buffer.toArray)
 
   override def prettyName: String = "bounded_collect_list"

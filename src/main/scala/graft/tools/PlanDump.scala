@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Dev tool (not part of the driver contract): dump the formatted
   * physical plan of each named registry query to its own file, one
@@ -12,8 +13,16 @@ import org.apache.spark.sql.SparkSession
   * arg "exec", runs the query (noop-sink count) FIRST so the dumped
   * AdaptiveSparkPlan is the FINAL one (isFinalPlan=true) — the only
   * form that shows runtime exchange/stage reuse under AQE.
+  *
+  * Each `[plandump]` line also gives the optimized plan's expression
+  * node count ([[exprNodes]]): a plan that re-inlines a projection
+  * chain into a filter shows there as thousands of nodes.
   */
 object PlanDump {
+  /** Expression nodes over every operator of `plan`. */
+  def exprNodes(plan: LogicalPlan): Int =
+    plan.collect { case n => n.expressions.map(_.collect { case e => e }.size).sum }.sum
+
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
@@ -46,7 +55,9 @@ object PlanDump {
       val scans = "FileScan|Scan parquet|Scan ExistingRDD".r
         .findAllIn(plan).size
       val exch = "Exchange".r.findAllIn(plan).size
-      println(s"[plandump] $nm: $scans scans, $exch Exchange (pre-AQE), -> $outDir/${nm}_$suffix.txt")
+      val nodes = exprNodes(df.queryExecution.optimizedPlan)
+      println(s"[plandump] $nm: $scans scans, $exch Exchange (pre-AQE), " +
+        s"$nodes expression nodes, -> $outDir/${nm}_$suffix.txt")
     }
     spark.stop()
   }

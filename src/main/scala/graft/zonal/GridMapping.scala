@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Fixture, Q, Tables}
+import graft.core.{Fixture, Q}
 
 /** CF `grid_mapping` projections on the cube paths (r19 — VERDICT r18
   * next-#3): the NetCDF/HDF5/Zarr worlds georeference non-lat/lon grids
@@ -40,7 +40,12 @@ import graft.core.{Fixture, Q, Tables}
   * Both are pure per-cell closed-form projections: codegen'd math over
   * the stripe scan, no shuffle added; zone assignment stays a broadcast
   * interval join in degree space — at 100 TB the cell side never
-  * shuffles (the zonal_raster_utm posture). Outputs round at 6 decimals
+  * shuffles (the zonal_raster_utm posture). Every mapping is a level
+  * list run by [[LevelChain]]: the oracle nests the levels as SELECTs,
+  * and the Spark chain adds only a non-null declaration of `lon`/`lat`,
+  * so the zone join infers no `isnotnull` filter that would inline the
+  * levels back into it (the geostationary and TM plans grew to 3,000+
+  * expression nodes that way). Outputs round at 6 decimals
   * per the transcendental discipline; the pole/cone constants embed as
   * shortest-repr double literals so Spark and DuckDB evaluate the
   * IDENTICAL expression tree.
@@ -701,17 +706,6 @@ object GridMapping {
           "WHEN lon_raw <= -180 THEN lon_raw + 360 ELSE lon_raw END, 6) AS lon"))
   }
 
-  def exprsSql(cellsSql: String, levels: Seq[Seq[String]], tag: String): String = {
-    val nested = levels.zipWithIndex.foldLeft(s"($cellsSql) ${tag}_l0") {
-      case (from, (exprs, i)) =>
-        s"(SELECT ${exprs.mkString(",\n    ")}\n  FROM $from) ${tag}_l${i + 1}"
-    }
-    s"SELECT * FROM $nested"
-  }
-
-  private def applyExprs(df: DataFrame, levels: Seq[Seq[String]]): DataFrame =
-    levels.foldLeft(df)((d, exprs) => d.selectExpr(exprs: _*))
-
   /** Per-cell lon/lat of a grid-mapped classic-NetCDF cube, dispatching
     * on the FILE's declared grid_mapping_name (the zonal_raster_crs_auto
     * posture): a pure map-side projection over the stripe scan.
@@ -722,7 +716,7 @@ object GridMapping {
       s"$path: $varName declares no grid_mapping — refusing to assume a projection"))
     val name = gm.attrs.find(_.name == "grid_mapping_name").map(_.text.trim)
       .getOrElse(sys.error(s"$path: ${gm.name} has no grid_mapping_name"))
-    applyExprs(Netcdf.scanNetcdfCoords(s, path, varName),
+    LevelChain(Netcdf.scanNetcdfCoords(s, path, varName),
       levelsFor(gmAttrsOf(path, gm)))
   }
 
@@ -771,7 +765,7 @@ object GridMapping {
     require(gs.nonEmpty || gn.nonEmpty,
       s"$arrayDir: grid_mapping '$gmName' names no attributed sibling member — " +
         "refusing to guess a projection")
-    applyExprs(
+    LevelChain(
       s.read.format("graft.zonal.ZarrSource").option("coords", "x,y").load(arrayDir),
       levelsFor(GmAttrs(gmDir, gs, gn)))
   }
@@ -791,7 +785,7 @@ object GridMapping {
       catch { case e: Exception => sys.error(
         s"$path: $varName declares grid_mapping '$gmName' but no such dataset " +
           s"exists — refusing to guess a projection (${e.getMessage})") }
-    applyExprs(
+    LevelChain(
       s.read.format("graft.zonal.Hdf5Source")
         .option("var", varName).option("coords", "x,y").load(path),
       levelsFor(GmAttrs(s"$path:$gmName", gm.strAttrs, gm.numAttrs)))
@@ -1044,7 +1038,7 @@ object GridMapping {
   private def oraclePsEllSql: String = {
     val f = 1.0 / PsEllInvF; val e = math.sqrt(2 * f - f * f)
     val tc = math.toRadians(PsSp)
-    exprsSql(PsCoordsSql,
+    LevelChain.sql(PsCoordsSql,
       psEllExprs(PsEll(PsEllA * snyderM(tc, e) / snyderT(tc, e), PsLon0,
         south = false, 0.0, 0.0, chiSeriesOf(e * e))), "pse")
   }
@@ -1055,7 +1049,7 @@ object GridMapping {
       (math.log(snyderT(p1, e)) - math.log(snyderT(p2, e)))
     val aF = LccEllA * snyderM(p1, e) / (n * math.pow(snyderT(p1, e), n))
     val rho0 = aF * math.pow(snyderT(math.toRadians(LccEllLat0), e), n)
-    exprsSql(LccCoordsSql,
+    LevelChain.sql(LccCoordsSql,
       lccEllExprs(LccEll(n, aF, rho0, LccEllLon0, 0.0, 0.0,
         chiSeriesOf(e * e))), "lce")
   }
@@ -1108,7 +1102,7 @@ object GridMapping {
        |FROM ($GmCellsSql) gm_raw""".stripMargin
 
   private def oracleSinuSql: String =
-    exprsSql(SinuCoordsSql,
+    LevelChain.sql(SinuCoordsSql,
       sinuExprs(Sinu(SinuRadius, SinuLon0, 0.0, 0.0)), "sinu")
 
   // sinusoidal extent: lon -104.39..-103.31, lat 30.00..30.44
@@ -1145,7 +1139,7 @@ object GridMapping {
     val n = (math.sin(p1) + math.sin(p2)) / 2
     val c = math.cos(p1) * math.cos(p1) + 2 * n * math.sin(p1)
     val rho0 = AlbRadius * math.sqrt(c - 2 * n * math.sin(math.toRadians(AlbLat0))) / n
-    exprsSql(AlbCoordsSql,
+    LevelChain.sql(AlbCoordsSql,
       albersExprs(Albers(n, c, AlbRadius, rho0, AlbLon0, 0.0, 0.0)), "alb")
   }
 
@@ -1175,7 +1169,7 @@ object GridMapping {
        |FROM ($GmCellsSql) gm_raw""".stripMargin
 
   private def oracleMercSql: String =
-    exprsSql(MercCoordsSql,
+    LevelChain.sql(MercCoordsSql,
       mercExprs(Merc(MercRadius * math.cos(math.toRadians(MercSp)),
         MercLon0, 0.0, 0.0)), "merc")
 
@@ -1201,7 +1195,7 @@ object GridMapping {
        |FROM ($GmCellsSql) gm_raw""".stripMargin
 
   private def oracleLatLonSql: String =
-    exprsSql(LatLonCoordsSql, latLonExprs, "ll")
+    LevelChain.sql(LatLonCoordsSql, latLonExprs, "ll")
 
   // CF-declared transverse Mercator on the WGS84 ellipsoid shaped like
   // UTM 18N — every parameter READ FROM THE FILE, none assumed
@@ -1228,7 +1222,7 @@ object GridMapping {
        |FROM ($GmCellsSql) gm_raw""".stripMargin
 
   private def oracleTmSql: String =
-    exprsSql(TmCoordsSql,
+    LevelChain.sql(TmCoordsSql,
       Utm.tmLevelExprs(6378137.0, 1.0 / 298.257223563, 0.9996,
         TmLon0, 500000.0, 0.0), "tm")
 
@@ -1259,7 +1253,7 @@ object GridMapping {
        |FROM ($GmCellsSql) gm_raw""".stripMargin
 
   private def oracleGeosSql: String =
-    exprsSql(GeosCoordsSql,
+    LevelChain.sql(GeosCoordsSql,
       geosExprs(Geos(GeosH, GeosReq, GeosRpol, GeosLon0, 0.0, 0.0)), "geo")
 
   // geos extent: lon -86.05..-64.32, lat -9.13..8.76
@@ -1275,7 +1269,7 @@ object GridMapping {
 
   private def oraclePsSql: String = {
     val twoRk0 = 2.0 * PsRadius * (1.0 + math.sin(math.toRadians(PsSp))) / 2.0
-    exprsSql(PsCoordsSql,
+    LevelChain.sql(PsCoordsSql,
       psExprs(PolarStereo(twoRk0, PsLon0, south = false, 0.0, 0.0)), "ps")
   }
 
@@ -1302,16 +1296,16 @@ object GridMapping {
   // builds its SQL from these, the ENGINE re-derives them from the
   // file's attributes, so a parameter misread hash-fails
   private def oracleRotatedSql: String =
-    exprsSql(RotCoordsSql, rotatedExprs(Rotated(PoleLat, PoleLon)), "rot")
+    LevelChain.sql(RotCoordsSql, rotatedExprs(Rotated(PoleLat, PoleLon)), "rot")
   private def oracleRotatedNpglSql: String =
-    exprsSql(RotCoordsSql, rotatedExprs(Rotated(PoleLat, PoleLon, Npgl)), "rotn")
+    LevelChain.sql(RotCoordsSql, rotatedExprs(Rotated(PoleLat, PoleLon, Npgl)), "rotn")
   private def oracleLccSql: String = {
     val p1 = math.toRadians(LccSp1); val p2 = math.toRadians(LccSp2)
     val n = math.log(math.cos(p1) / math.cos(p2)) /
       math.log(math.tan(math.Pi / 4 + p2 / 2) / math.tan(math.Pi / 4 + p1 / 2))
     val rf = LccRadius * math.cos(p1) * math.pow(math.tan(math.Pi / 4 + p1 / 2), n) / n
     val rho0 = rf / math.pow(math.tan(math.Pi / 4 + math.toRadians(LccLat0) / 2), n)
-    exprsSql(LccCoordsSql, lccExprs(Lcc(n, rf, rho0, LccLon0, 0.0, 0.0)), "lcc")
+    LevelChain.sql(LccCoordsSql, lccExprs(Lcc(n, rf, rho0, LccLon0, 0.0, 0.0)), "lcc")
   }
 
   /** Degree-space zone envelopes inside an extent, keyed off nation. */
@@ -1331,35 +1325,7 @@ object GridMapping {
   // lcc extent: lon -98.2..-95.8, lat 44.3..45.7
   private val LccZonesSql = zonesSql(-98.0, 0.035, 0.08, 44.4, 0.02, 0.05)
 
-  private def zones(s: SparkSession, d: String, sql: String): DataFrame = {
-    Tables.nation(s, d).createOrReplaceTempView("nation")
-    s.sql(sql)
-  }
-
-  private def zonalSql(cellsSql: String, zonesSqlText: String): String =
-    s"""WITH zones AS (
-       |$zonesSqlText
-       |), cells AS (
-       |$cellsSql
-       |)
-       |SELECT zone_id, count(*) AS n_cells,
-       |  CAST(sum(CAST(value AS BIGINT)) AS BIGINT) AS sum_v,
-       |  min(lon) AS lon_min, max(lon) AS lon_max,
-       |  min(lat) AS lat_min, max(lat) AS lat_max
-       |FROM cells JOIN zones
-       |  ON lon BETWEEN lonmin AND lonmax AND lat BETWEEN latmin AND latmax
-       |GROUP BY zone_id ORDER BY zone_id""".stripMargin
-
-  private def zonalStats(cells: DataFrame, zs: DataFrame): DataFrame =
-    cells.join(broadcast(zs),
-        col("lon").between(col("lonmin"), col("lonmax"))
-          && col("lat").between(col("latmin"), col("latmax")))
-      .groupBy("zone_id")
-      .agg(count(lit(1)).as("n_cells"),
-        sum(col("value").cast("long")).as("sum_v"),
-        min(col("lon")).as("lon_min"), max(col("lon")).as("lon_max"),
-        min(col("lat")).as("lat_min"), max(col("lat")).as("lat_max"))
-      .orderBy("zone_id")
+  import Reproject.{zonalSql, zonalStats, zones}
 
   def defs: Seq[(String, Q)] = Seq(
     // the unrotation primitive: every cell of the CORDEX-style fixture

@@ -104,10 +104,40 @@ object Reproject {
       |  38.484 + (n_nationkey * 3 % 56) * 0.0002 + 0.0004 AS latmax
       |FROM nation""".stripMargin
 
-  def wgs84Zones(s: SparkSession, d: String): DataFrame = {
+  /** Zone envelopes from their SQL over the nation table. */
+  def zones(s: SparkSession, d: String, sql: String): DataFrame = {
     Tables.nation(s, d).createOrReplaceTempView("nation")
-    s.sql(Wgs84ZonesSql)
+    s.sql(sql)
   }
+
+  /** Degree-space zonal statistics over reprojected cells: the oracle
+    * text over a `cells` SQL providing `(value, lon, lat)`, and its
+    * Spark twin, a broadcast interval join plus one hash aggregate.
+    */
+  def zonalSql(cellsSql: String, zonesSqlText: String): String =
+    s"""WITH zones AS (
+       |$zonesSqlText
+       |), cells AS (
+       |$cellsSql
+       |)
+       |SELECT zone_id, count(*) AS n_cells,
+       |  CAST(sum(CAST(value AS BIGINT)) AS BIGINT) AS sum_v,
+       |  min(lon) AS lon_min, max(lon) AS lon_max,
+       |  min(lat) AS lat_min, max(lat) AS lat_max
+       |FROM cells JOIN zones
+       |  ON lon BETWEEN lonmin AND lonmax AND lat BETWEEN latmin AND latmax
+       |GROUP BY zone_id ORDER BY zone_id""".stripMargin
+
+  def zonalStats(cells: DataFrame, zs: DataFrame): DataFrame =
+    cells.join(broadcast(zs),
+        col("lon").between(col("lonmin"), col("lonmax"))
+          && col("lat").between(col("latmin"), col("latmax")))
+      .groupBy("zone_id")
+      .agg(count(lit(1)).as("n_cells"),
+        sum(col("value").cast("long")).as("sum_v"),
+        min(col("lon")).as("lon_min"), max(col("lon")).as("lon_max"),
+        min(col("lat")).as("lat_min"), max(col("lat")).as("lat_max"))
+      .orderBy("zone_id")
 
   import Raster.{FixtureCellsSql, WorldOX, WorldOY, WorldScale}
 
@@ -146,16 +176,7 @@ object Reproject {
          |FROM cells JOIN zones
          |  ON lon BETWEEN lonmin AND lonmax AND lat BETWEEN latmin AND latmax
          |GROUP BY zone_id ORDER BY zone_id""".stripMargin) { (s, d) =>
-      val cells = cellsLonLat(s, Raster.worldFixturePath())
-      cells.join(broadcast(wgs84Zones(s, d)),
-          col("lon").between(col("lonmin"), col("lonmax"))
-            && col("lat").between(col("latmin"), col("latmax")))
-        .groupBy("zone_id")
-        .agg(count(lit(1)).as("n_cells"),
-          sum(col("value").cast("long")).as("sum_v"),
-          min(col("lon")).as("lon_min"), max(col("lon")).as("lon_max"),
-          min(col("lat")).as("lat_min"), max(col("lat")).as("lat_max"))
-        .orderBy("zone_id")
+      zonalStats(cellsLonLat(s, Raster.worldFixturePath()), zones(s, d, Wgs84ZonesSql))
     },
 
     // CRS auto-dispatch end-use (r18): same zonal query as
@@ -182,16 +203,7 @@ object Reproject {
          |FROM cells JOIN zones
          |  ON lon BETWEEN lonmin AND lonmax AND lat BETWEEN latmin AND latmax
          |GROUP BY zone_id ORDER BY zone_id""".stripMargin) { (s, d) =>
-      val cells = cellsLonLatAuto(s, Raster.crs3857FixturePath())
-      cells.join(broadcast(wgs84Zones(s, d)),
-          col("lon").between(col("lonmin"), col("lonmax"))
-            && col("lat").between(col("latmin"), col("latmax")))
-        .groupBy("zone_id")
-        .agg(count(lit(1)).as("n_cells"),
-          sum(col("value").cast("long")).as("sum_v"),
-          min(col("lon")).as("lon_min"), max(col("lon")).as("lon_max"),
-          min(col("lat")).as("lat_min"), max(col("lat")).as("lat_max"))
-        .orderBy("zone_id")
+      zonalStats(cellsLonLatAuto(s, Raster.crs3857FixturePath()), zones(s, d, Wgs84ZonesSql))
     },
 
     // haversine great-circle distance (km) — THE geospatial scalar:
@@ -217,7 +229,7 @@ object Reproject {
       val lam = radians((col("lonmin").cast("double") + col("lonmax").cast("double")) / 2)
       val phi0 = radians(lit(38.49))
       val lam0 = radians(lit(4.59))
-      wgs84Zones(s, d)
+      zones(s, d, Wgs84ZonesSql)
         .select(col("zone_id"), phi.as("phi"), lam.as("lam"))
         .select(col("zone_id"),
           round(lit(2) * lit(6371.0088) * asin(sqrt(
@@ -243,7 +255,7 @@ object Reproject {
          |        * (sin(radians(CAST(latmax AS DOUBLE))) - sin(radians(CAST(latmin AS DOUBLE))))
          |        / CAST(1000000.0 AS DOUBLE), 6) AS area_km2
          |FROM zones ORDER BY zone_id""".stripMargin) { (s, d) =>
-      wgs84Zones(s, d)
+      zones(s, d, Wgs84ZonesSql)
         .select(col("zone_id"),
           round(lit(6371008.8) * lit(6371008.8)
             * radians(col("lonmax").cast("double") - col("lonmin").cast("double"))

@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables}
+import graft.core.Q
 
 /** Ellipsoidal CRS reprojection, UTM → WGS84 (round 11 — the remaining
   * half of the r10 verdict's missing #2: Web Mercator is spherical and
@@ -31,7 +31,10 @@ import graft.core.{Q, Tables}
   * Scale posture (same as [[Reproject]]): the inverse is a pure
   * per-cell PROJECTION over the tile scan — codegen'd math, no shuffle
   * added; zone assignment stays a broadcast interval join in degree
-  * space. The cell side never shuffles.
+  * space. The cell side never shuffles. The Spark chain
+  * ([[LevelChain]]) adds only a non-null declaration of `lon`/`lat`,
+  * so the zone join infers no `isnotnull` filter to push back through
+  * the series levels (which would inline the series into the filter).
   */
 object Utm {
 
@@ -177,7 +180,7 @@ object Utm {
   /** The Krüger inverse as per-level projection expression lists —
     * the SINGLE source of the arithmetic, consumed both by
     * [[inverseSql]] (the nested-SELECT oracle text) and by
-    * [[applyInverse]] (the view-free Spark `selectExpr` chain). The
+    * [[LevelChain.apply]] (the view-free Spark `selectExpr` chain). The
     * strings are identical, so both engines parse the exact same
     * expression trees. `fn` = false northing (0 north / 1e7 south).
     */
@@ -207,23 +210,11 @@ object Utm {
   /** The Krüger inverse as one shared SQL text over a derived table
     * `cellsSql` providing `(cell_x, cell_y, value, e_utm, n_utm)` —
     * easting/northing cell centers as DOUBLE. The oracle runs this
-    * exact string; the Spark side runs [[applyInverse]] built from the
+    * exact string; the Spark side runs [[LevelChain.apply]] over the
     * SAME expression strings.
     */
-  def inverseSql(cellsSql: String, lon0Deg: Int, fn: Long = 0L): String = {
-    val nested = levelExprs(lon0Deg, fn).zipWithIndex.foldLeft(s"($cellsSql) utm_l0") {
-      case (from, (exprs, i)) =>
-        s"(SELECT ${exprs.mkString(",\n    ")}\n  FROM $from) utm_l${i + 1}"
-    }
-    s"SELECT * FROM $nested"
-  }
-
-  /** View-free Spark twin of [[inverseSql]]: one `selectExpr` stage per
-    * level over the tile scan — a pure map-side projection, no view,
-    * no shuffle.
-    */
-  def applyInverse(cells: DataFrame, lon0Deg: Int, fn: Long = 0L): DataFrame =
-    levelExprs(lon0Deg, fn).foldLeft(cells)((df, exprs) => df.selectExpr(exprs: _*))
+  def inverseSql(cellsSql: String, lon0Deg: Int, fn: Long = 0L): String =
+    LevelChain.sql(cellsSql, levelExprs(lon0Deg, fn), "utm")
 
   /** Cell-center easting/northing projection over a derived table of
     * raw `(cell_x, cell_y, value)` — exact integer arithmetic under the
@@ -258,9 +249,9 @@ object Utm {
     require(sx % 2 == 0 && sy % 2 == 0,
       s"$path: odd pixel scale ($sx, $sy) — centers leave the integer lattice")
     val fn = if (southern) SouthFalseNorthing.toLong else 0L
-    applyInverse(
+    LevelChain(
       Raster.scanTiff(s, path, m).selectExpr(centerExprs(ox, oy, sx, sy): _*),
-      lon0Deg, fn)
+      levelExprs(lon0Deg, fn))
   }
 
   /** Deterministic WGS84-degree zone envelopes inside the UTM (zone
@@ -275,11 +266,6 @@ object Utm {
       |  41.9835 + (n_nationkey * 3 % 56) * 0.0003 AS latmin,
       |  41.9835 + (n_nationkey * 3 % 56) * 0.0003 + 0.0006 AS latmax
       |FROM nation""".stripMargin
-
-  def utmZones(s: SparkSession, d: String): DataFrame = {
-    Tables.nation(s, d).createOrReplaceTempView("nation")
-    s.sql(UtmZonesSql)
-  }
 
   import Raster.{FixtureCellsSql, WorldOX, WorldOY, WorldScale}
 
@@ -312,28 +298,9 @@ object Utm {
     // used to refuse; per-cell ellipsoidal inverse INSIDE the plan,
     // broadcast interval join in degree space, one hash agg
     "zonal_raster_utm" -> Q(
-      s"""WITH zones AS (
-         |$UtmZonesSql
-         |), cells AS (
-         |${inverseSql(oracleCells, Lon0)}
-         |)
-         |SELECT zone_id, count(*) AS n_cells,
-         |  CAST(sum(CAST(value AS BIGINT)) AS BIGINT) AS sum_v,
-         |  min(lon) AS lon_min, max(lon) AS lon_max,
-         |  min(lat) AS lat_min, max(lat) AS lat_max
-         |FROM cells JOIN zones
-         |  ON lon BETWEEN lonmin AND lonmax AND lat BETWEEN latmin AND latmax
-         |GROUP BY zone_id ORDER BY zone_id""".stripMargin) { (s, d) =>
-      val cells = cellsLonLat(s, Raster.worldFixturePath(), Lon0)
-      cells.join(broadcast(utmZones(s, d)),
-          col("lon").between(col("lonmin"), col("lonmax"))
-            && col("lat").between(col("latmin"), col("latmax")))
-        .groupBy("zone_id")
-        .agg(count(lit(1)).as("n_cells"),
-          sum(col("value").cast("long")).as("sum_v"),
-          min(col("lon")).as("lon_min"), max(col("lon")).as("lon_max"),
-          min(col("lat")).as("lat_min"), max(col("lat")).as("lat_max"))
-        .orderBy("zone_id")
+      Reproject.zonalSql(inverseSql(oracleCells, Lon0), UtmZonesSql)) { (s, d) =>
+      Reproject.zonalStats(cellsLonLat(s, Raster.worldFixturePath(), Lon0),
+        Reproject.zones(s, d, UtmZonesSql))
     }
   )
 }

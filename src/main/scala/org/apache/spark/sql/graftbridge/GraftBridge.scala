@@ -58,3 +58,14 @@ object GraftBridge {
       cs.experimental.extraOptimizations = cs.experimental.extraOptimizations :+ r
   }
 }
+
+/** The raise-mode refusal of [[graft.ext.BoundedCollectList]]: a
+  * `SparkRuntimeException` (a `private[spark]` class, hence
+  * this package) of Spark's user-raised error class, SQLSTATE P0001,
+  * with the caller's mega-bucket wording. `cap` is the bound and `size`
+  * the group size seen when it tripped, a lower bound on the full group
+  * because counting stops at the cap.
+  */
+final class BoundedCollectOverflow(msg: String, val cap: Int, val size: Int)
+  extends org.apache.spark.SparkRuntimeException("USER_RAISED_EXCEPTION",
+    Map("errorMessage" -> s"$msg (cap $cap, group size at least $size)"))

@@ -375,6 +375,17 @@ class ExtSpec extends SparkSuite {
     def msgs(t: Throwable): String =
       if (t == null) "" else t.getMessage + "\n" + msgs(t.getCause)
     assert(msgs(e).contains("mega-bucket test refusal"), s"wanted the bound refusal, got: ${msgs(e)}")
+    // the refusal is typed: a SparkRuntimeException with a stable error
+    // class, carrying the cap and the group size seen (11..15 here:
+    // every key holds 14 or 15 values)
+    import org.apache.spark.sql.graftbridge.BoundedCollectOverflow
+    def chain(t: Throwable): List[Throwable] = if (t == null) Nil else t :: chain(t.getCause)
+    val ov = chain(e).collectFirst { case o: BoundedCollectOverflow => o }
+      .getOrElse(fail(s"no BoundedCollectOverflow in: ${msgs(e)}"))
+    assert(Class.forName("org.apache.spark.SparkRuntimeException").isInstance(ov))
+    assert(ov.getCondition == "USER_RAISED_EXCEPTION" && ov.getSqlState == "P0001")
+    assert(ov.cap == 10 && ov.size > 10 && ov.size <= 15, s"cap ${ov.cap} size ${ov.size}")
+    assert(ov.getMessage.contains("cap 10"), ov.getMessage)
     // drop mode (the dedup_containment df bound): over-cap keys are
     // dropped, under-cap keys keep their full sorted lists
     val mixed = ((1L to 100L).map(i => ("hot", i)) ++ Seq(("cold", 1L), ("cold", 2L)))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * rotation, ellipsoidal LCC, no mapping at all).
   */
 class GridMappingSpec extends SparkSuite {
-  import graft.zonal.{GridMapping => GM, Netcdf, Raster}
+  import graft.zonal.{GridMapping => GM, LevelChain, Netcdf, Raster}
 
   private def msgs(t: Throwable): String =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
@@ -39,7 +39,7 @@ class GridMappingSpec extends SparkSuite {
   test("rotated pole third rotation (npgl): the defining property and matrix-derived points") {
     import graft.zonal.{GridMapping => GM}
     def at(rlat: Double, rlon: Double): (Double, Double) = {
-      val sql = GM.exprsSql(
+      val sql = LevelChain.sql(
         s"""SELECT 0 AS cell_x, 0 AS cell_y, 0.0 AS value,
            |  CAST($rlon AS DOUBLE) AS x_coord,
            |  CAST($rlat AS DOUBLE) AS y_coord""".stripMargin,
@@ -73,7 +73,7 @@ class GridMappingSpec extends SparkSuite {
     // rotated (rlat -23.375, rlon -28.375) under pole (39.25, -162)
     // must land at ~(21.99 N, 10.06 W) — the EUR-11 domain's published
     // south-west corner; the r19 mirrored formula put it at 46.06 E
-    val sql = GM.exprsSql(
+    val sql = LevelChain.sql(
       """SELECT 0 AS cell_x, 0 AS cell_y, 0.0 AS value,
         |  CAST(-28.375 AS DOUBLE) AS x_coord,
         |  CAST(-23.375 AS DOUBLE) AS y_coord""".stripMargin,
@@ -364,7 +364,7 @@ class GridMappingSpec extends SparkSuite {
     import graft.zonal.{GridMapping => GM}
     val geos = GM.Geos(GM.GeosH, GM.GeosReq, GM.GeosRpol, GM.GeosLon0, 0.0, 0.0)
     def ll(xAng: Double, yAng: Double): (Double, Double) = {
-      val sql = GM.exprsSql(
+      val sql = LevelChain.sql(
         s"""SELECT 0 AS cell_x, 0 AS cell_y, 0.0 AS value,
            |  CAST($xAng * ${GM.GeosH} AS DOUBLE) AS x_coord,
            |  CAST($yAng * ${GM.GeosH} AS DOUBLE) AS y_coord""".stripMargin,
@@ -411,7 +411,7 @@ class GridMappingSpec extends SparkSuite {
         "semi_major_axis" -> Seq(6378137.0),
         "inverse_flattening" -> Seq(298.257223563))))
     def at(p: GM.PsEll, x: Double, y: Double): (Double, Double) = {
-      val sql = GM.exprsSql(
+      val sql = LevelChain.sql(
         s"""SELECT 0 AS cell_x, 0 AS cell_y, 0.0 AS value,
            |  CAST($x AS DOUBLE) AS x_coord, CAST($y AS DOUBLE) AS y_coord""".stripMargin,
         GM.psEllExprs(p), "pse")
@@ -489,9 +489,9 @@ class GridMappingSpec extends SparkSuite {
         |  CAST(-123000.0 + 30000.0 * y.id AS DOUBLE) AS y_coord
         |FROM range(0, 10) x CROSS JOIN range(0, 9) y""".stripMargin
     val zeroChi = GM.chiSeriesOf(0.0)
-    val psSph = spark.sql(GM.exprsSql(grid,
+    val psSph = spark.sql(LevelChain.sql(grid,
       GM.psExprs(GM.PolarStereo(2.0 * 6370000.0 * 0.97, -45.0, south = false, 0.0, 0.0)), "a"))
-    val psDeg = spark.sql(GM.exprsSql(grid,
+    val psDeg = spark.sql(LevelChain.sql(grid,
       GM.psEllExprs(GM.PsEll(2.0 * 6370000.0 * 0.97, -45.0, south = false, 0.0, 0.0, zeroChi)), "b"))
     assert(psSph.select("cell_x", "cell_y", "lon", "lat")
       .exceptAll(psDeg.select("cell_x", "cell_y", "lon", "lat")).count() == 0,
@@ -509,8 +509,8 @@ class GridMappingSpec extends SparkSuite {
         "latitude_of_projection_origin" -> Seq(45.0),
         "semi_major_axis" -> Seq(6370000.0),
         "inverse_flattening" -> Seq(1e15))))
-    val lccSph = spark.sql(GM.exprsSql(grid, GM.lccExprs(sphLcc), "c"))
-    val lccDeg = spark.sql(GM.exprsSql(grid, GM.lccEllExprs(ellLcc0), "d"))
+    val lccSph = spark.sql(LevelChain.sql(grid, GM.lccExprs(sphLcc), "c"))
+    val lccDeg = spark.sql(LevelChain.sql(grid, GM.lccEllExprs(ellLcc0), "d"))
     assert(lccSph.select("cell_x", "cell_y", "lon", "lat")
       .exceptAll(lccDeg.select("cell_x", "cell_y", "lon", "lat")).count() == 0,
       "f->0 LCC ellipsoidal must equal spherical")

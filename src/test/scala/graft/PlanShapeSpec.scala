@@ -1216,6 +1216,25 @@ class PlanShapeSpec extends SparkSuite {
     }
   }
 
+  test("reprojection chains: small optimized plans, whole-stage codegen compiles without fallback") {
+    // the zone join's inferred isnotnull(lon/lat) filter used to inline
+    // every level of the Helmert/Krüger/grid-mapping chains back into
+    // itself (6,869 expression nodes for zonal_raster_nad83, past
+    // Janino's 64 KB method limit); LevelChain.apply declares lon/lat
+    // non-null so nothing is inferred. Each id must stay small and run
+    // in a session of its own where a codegen fallback is an error.
+    import graft.zonal.{GridMapping, Helmert, Reproject, Utm}
+    val ids = Seq(Helmert.defs, Utm.defs, GridMapping.defs, Reproject.defs).flatten.map(_._1)
+    assert(ids.size == 37, ids)
+    val strict = spark.newSession()
+    strict.conf.set("spark.sql.codegen.fallback", "false")
+    ids.foreach { id =>
+      val nodes = graft.tools.PlanDump.exprNodes(q(id).queryExecution.optimizedPlan)
+      assert(nodes <= 1000, s"$id: optimized plan has $nodes expression nodes")
+      SparkEntry.queries(id)(strict, sf).write.format("noop").mode("overwrite").save()
+    }
+  }
+
   test("z-ordered store: the spatial window's bucket list reaches PartitionFilters") {
     q("sink_zorder").collect() // ensure a store exists
     val w = q("scan_zorder_window")
