@@ -4,17 +4,75 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md:13-15,
   * schemas in FIXTURES.md). One parquet file per table under the
-  * scale-factor directory; Spark's vectorized columnar reader picks the
-  * schema up from the Parquet footers.
+  * scale-factor directory; [[parquet]] resolves each schema from one
+  * footer read on the driver.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Memoized per (session, dir): re-resolving a table re-lists its files
-  // and re-reads Parquet footers — measurable when a bench session runs
-  // 100+ queries against the same ten tables. The DataFrame (logical
+  /** A parquet read whose schema comes from one footer read on the
+    * driver. A schema-less `s.read.parquet(path)` runs a one-task Spark
+    * job to read the same footer (`ParquetFileFormat.mergeSchemasInParallel`
+    * parallelizes even a single file), once per session and table. The
+    * file is the one Spark's inference would pick: the path itself, or
+    * the first visible data file under it in path order (`_*` and `.*`
+    * names skipped, subdirectories such as `k=v` partitions descended).
+    * Conversion is Spark's own, under the session conf, so `nanosAsLong`,
+    * NTZ inference and the Spark row metadata behave as in the inferring
+    * read. Falls back to Spark's read when the path holds no data file
+    * (its error is the caller's) or the session asks to merge schemas.
+    * Stateless: changed data is read fresh on every call.
+    */
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = s.sessionState.conf
+    (if (conf.isParquetSchemaMergingEnabled) None else footer(s, path))
+      .fold(s.read.parquet(path)) { f =>
+        s.read.schema(ParquetFileFormat.readSchemaFromFooter(
+          f, new ParquetToSparkSchemaConverter(conf))).parquet(path)
+      }
+  }
+
+  private def footer(s: SparkSession, path: String): Option[org.apache.parquet.hadoop.Footer] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+    val conf = s.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def visible(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    }
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(visible).flatMap(leaves)
+      else Seq(st)
+    val first = if (fs.exists(root)) leaves(fs.getFileStatus(root)).minByOption(_.getPath.toString)
+      else None
+    first.map(st => new Footer(st.getPath,
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf), SKIP_ROW_GROUPS)))
+  }
+
+  /** Whether the file's footer has an INT64 `TIMESTAMP(NANOS)` column,
+    * which Spark reads only under `spark.sql.legacy.parquet.nanosAsLong`.
+    */
+  private def hasNanosTimestamp(s: SparkSession, path: String): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import scala.jdk.CollectionConverters._
+    footer(s, path).exists(_.getParquetMetadata.getFileMetaData.getSchema.getColumns.asScala
+      .exists(_.getPrimitiveType.getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _ => false
+      }))
+  }
+
+  // Memoized per (session, dir): saves the file listing and footer read
+  // when a session runs 100+ queries against the same ten tables. Across
+  // sessions `parquet` keeps resolution job-free. The DataFrame (logical
   // plan) is immutable, so sharing it across queries is safe.
   private val loaded =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
@@ -23,8 +81,7 @@ object Tables {
     // evict entries for stopped sessions so the static map never retains
     // plans (or session references) past the session's lifetime
     loaded.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    loaded.computeIfAbsent((spark, dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
+    loaded.computeIfAbsent((spark, dir, name), _ => parquet(spark, s"$dir/$name.parquet"))
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
@@ -38,8 +95,8 @@ object Tables {
     * generations, so the loader branches on the dtype Spark actually read:
     *
     *  - `timestamp[ns]`: Spark 4 rejects ns unless read as raw Long
-    *    (`nanosAsLong`, runtime-settable — set below, harmless for µs
-    *    files). Convert to a microsecond Timestamp with integer `div` —
+    *    (`nanosAsLong`, runtime-settable — see [[rawEvents]]). Convert
+    *    to a microsecond Timestamp with integer `div` —
     *    `/` would round-trip through Double and lose precision above
     *    2^53 ns (~1970+104 days).
     *  - `timestamp[us]` (current fixtures): arrives as TIMESTAMP_NTZ
@@ -50,9 +107,16 @@ object Tables {
     * DuckDB reads both encodings natively, so oracles compare at µs or
     * coarser — see SURVEY.md §1.2.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventsTs(load(s, d, "events"))
+  def events(s: SparkSession, d: String): DataFrame = normalizeEventsTs(rawEvents(s, d))
+
+  /** The events table before the dtype branch. Sets `nanosAsLong` on the
+    * session only when the footer has a `TIMESTAMP(NANOS)` column: the
+    * setting is session-wide, and µs fixtures leave the session as it was.
+    */
+  def rawEvents(s: SparkSession, d: String): DataFrame = {
+    if (hasNanosTimestamp(s, s"$d/events.parquet"))
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    load(s, d, "events")
   }
 
   /** The dtype branch alone, shared with the streaming reader

@@ -557,7 +557,7 @@ object Sim {
     */
   private def annIndex(s: org.apache.spark.sql.SparkSession, d: String,
       variant: String)(build: => DataFrame): DataFrame =
-    s.read.parquet(Fixture.once(s"ann_${variant}_m${PqM}k${PqK}w${PqW}i$PqIters",
+    Tables.parquet(s, Fixture.once(s"ann_${variant}_m${PqM}k${PqK}w${PqW}i$PqIters",
       Seq(s"$d/embeddings.parquet"))(build.write.parquet(_)))
 
   /** Per-subspace Lloyd training over long-form sub-vectors `(vec_id,

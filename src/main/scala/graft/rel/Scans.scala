@@ -22,7 +22,7 @@ object Scans {
   def parquetRoundTrip(s: SparkSession, d: String): DataFrame = {
     val out = tmpDir(d, "sink_parquet")
     Tables.nation(s, d).write.mode("overwrite").parquet(out)
-    s.read.parquet(out)
+    Tables.parquet(s, out)
   }
 
   /** Partitioned write (`partitionBy`) — read-back of one partition must
@@ -102,7 +102,7 @@ object Scans {
     "sink_partitioned" -> Q(
       "SELECT * FROM orders WHERE o_orderstatus = 'F' ORDER BY o_orderkey") { (s, d) =>
       val out = partitionedWrite(s, d)
-      s.read.parquet(out).filter(org.apache.spark.sql.functions.col("o_orderstatus") === "F")
+      Tables.parquet(s, out).filter(org.apache.spark.sql.functions.col("o_orderstatus") === "F")
         .orderBy("o_orderkey")
     },
 
@@ -122,7 +122,7 @@ object Scans {
         |FROM lineitem WHERE l_partkey = 100
         |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, d) =>
       val out = bloomWrite(s, d)
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .filter(org.apache.spark.sql.functions.col("l_partkey") === 100)
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity")
         .orderBy("l_orderkey", "l_linenumber")
@@ -169,8 +169,8 @@ object Scans {
       val frag = tmpDir(d, "compact_in")
       val out = tmpDir(d, "compact_out")
       Tables.customer(s, d).repartition(16).write.mode("overwrite").parquet(frag)
-      s.read.parquet(frag).coalesce(2).write.mode("overwrite").parquet(out)
-      s.read.parquet(out).orderBy("c_custkey")
+      Tables.parquet(s, frag).coalesce(2).write.mode("overwrite").parquet(out)
+      Tables.parquet(s, out).orderBy("c_custkey")
     },
 
     // MERGE INTO apply (the lakehouse CDC upsert): WHEN MATCHED UPDATE,
@@ -205,7 +205,7 @@ object Scans {
         base.join(changes.select("k"), Seq("k"), "left_anti"))
       val out = tmpDir(d, "sink_upsert")
       merged.write.mode("overwrite").parquet(out)
-      s.read.parquet(out).orderBy("k")
+      Tables.parquet(s, out).orderBy("k")
     }
   )
 }

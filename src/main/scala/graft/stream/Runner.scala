@@ -21,8 +21,7 @@ object Runner {
     * file, no staging copy.
     */
   def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = s.read.parquet(s"$d/events.parquet").schema
+    val rawSchema = graft.core.Tables.rawEvents(s, d).schema
     graft.core.Tables.normalizeEventsTs(
       s.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(d))

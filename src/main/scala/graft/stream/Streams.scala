@@ -376,7 +376,7 @@ object Streams {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(s"$base/out")
+      Tables.parquet(s, s"$base/out")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_v"))
         .orderBy("event_type")
@@ -401,7 +401,7 @@ object Streams {
       graft.core.Fs.rmTree(base)
       Tables.events(s, d).repartition(4).write.parquet(s"$base/in")
       val store = s"$base/store"
-      val q = s.readStream.schema(s.read.parquet(s"$base/in").schema)
+      val q = s.readStream.schema(Tables.parquet(s, s"$base/in").schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -419,7 +419,7 @@ object Streams {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(store)
+      Tables.parquet(s, store)
         .groupBy("user_id")
         .agg(sum(col("n_part")).as("n_events"),
           sum(col("sum_part")).cast("double").as("sum_v"))

@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Fixture
+import graft.core.{Fixture, Tables}
 
 /** GeoParquet-shaped vector I/O (r12 — the modern cloud-native vector
   * format: geometries as WKB BLOBs in ordinary parquet, so every
@@ -50,7 +50,7 @@ object GeoParquet {
     */
   def readZones(s: SparkSession, path: String): DataFrame = {
     graft.ext.Ext.register(s)
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .select(col("zone_id"), col("geometry").as("geom"),
         col("xmin"), col("xmax"), col("ymin"), col("ymax"))
   }
@@ -72,7 +72,7 @@ object GeoParquet {
     */
   def readVerts(s: SparkSession, path: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .select(col("zone_id").cast("int"), col("geometry"))
       .as[(Int, Array[Byte])]
       .flatMap { case (zid, wkb) =>

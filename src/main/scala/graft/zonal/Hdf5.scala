@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Fixture, Q}
+import graft.core.{Fixture, Q, Tables}
 
 /** NetCDF-4 (HDF5 container) ingestion (round 12 — the r11 verdict's
   * missing #2: xarray's default `to_netcdf()` engine writes netCDF-4,
@@ -4287,7 +4287,7 @@ object Hdf5 {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(s"$base/out")
+      Tables.parquet(s, s"$base/out")
         .groupBy("epoch")
         .agg(count(lit(1)).as("n_cells"),
           sum(col("value").cast("long")).as("sum_v"))
@@ -4334,7 +4334,7 @@ object Hdf5 {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(s"$base/out")
+      Tables.parquet(s, s"$base/out")
         .groupBy(col("epoch").cast("long").as("epoch"))
         .agg(count(lit(1)).as("n_cells"),
           sum(col("value").cast("long")).as("sum_v"))

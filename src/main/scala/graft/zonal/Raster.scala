@@ -1,7 +1,7 @@
 package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.Fixture
+import graft.core.{Fixture, Tables}
 
 /** Raster ingestion (round 5 — the last unrepresented piece of the
   * reference's declared domain: "zonal statistics" over an actual
@@ -2290,7 +2290,7 @@ object Raster {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(s"$base/out")
+      Tables.parquet(s, s"$base/out")
         .groupBy("epoch")
         .agg(count(lit(1)).as("n_cells"),
           sum(col("value").cast("long")).as("sum_v"))
@@ -2412,7 +2412,7 @@ object Raster {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(s"$base/out")
+      Tables.parquet(s, s"$base/out")
         .groupBy(col("epoch").cast("int").as("epoch"))
         .agg(count(lit(1)).as("n_cells"),
           sum(col("value").cast("long")).as("sum_v"))

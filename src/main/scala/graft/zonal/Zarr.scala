@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Fixture, Q}
+import graft.core.{Fixture, Q, Tables}
 
 /** Zarr v2 store ingestion (round 11 — the reference's native cube
   * format: a Dask/xarray datacube arrives as a chunked Zarr store, not
@@ -4674,7 +4674,7 @@ object Zarr {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(s"$base/out")
+      Tables.parquet(s, s"$base/out")
         .groupBy("epoch")
         .agg(count(lit(1)).as("n_cells"),
           sum(col("value").cast("long")).as("sum_v"))
@@ -4720,7 +4720,7 @@ object Zarr {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(s"$base/out")
+      Tables.parquet(s, s"$base/out")
         .groupBy(expr("CAST(cell_x div 32 AS BIGINT)").as("chunk_x"),
           expr("CAST(cell_y div 32 AS BIGINT)").as("chunk_y"))
         .agg(count(lit(1)).as("n_cells"),

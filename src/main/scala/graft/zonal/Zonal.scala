@@ -524,7 +524,7 @@ object Zonal {
         .withColumn("zbucket", expr(s"${zMortonSql("div")} div 256"))
         .select("cell_x", "cell_y", "value", "z", "zbucket")
         .write.mode("overwrite").partitionBy("zbucket").parquet(out)
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .groupBy(col("zbucket").cast("long").as("zbucket"))
         .agg(count(lit(1)).as("n"),
           min("z").as("zmin"), max("z").as("zmax"),
@@ -551,7 +551,7 @@ object Zonal {
         cx <- x0 / 16 to x1 / 16
         cy <- y0 / 16 to y1 / 16
       } yield (cx & 1) | ((cy & 1) << 1) | (((cx >> 1) & 1) << 2) | (((cy >> 1) & 1) << 3)
-      s.read.parquet(ensureZStore(s, d))
+      Tables.parquet(s, ensureZStore(s, d))
         .filter(col("zbucket").isin(buckets.distinct: _*))
         .filter(col("cell_x").between(x0, x1) && col("cell_y").between(y0, y1))
         .select("cell_x", "cell_y", "value")

@@ -3,7 +3,7 @@ package graft.zonal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Det.dsum
-import graft.core.Fixture
+import graft.core.{Fixture, Tables}
 
 /** Tile-partitioned cube storage + tile-pruned zonal scans — the one
   * genuinely bespoke zonal optimization (SURVEY.md §4 "Tile-pruning"):
@@ -50,7 +50,7 @@ object ZonalStore {
     * (one tiny job) and pushed as a literal partition predicate.
     */
   def prunedStats(s: SparkSession, path: String, zonesDf: DataFrame): DataFrame = {
-    val cells = s.read.parquet(path).filter(tilePredicate(zonesDf))
+    val cells = Tables.parquet(s, path).filter(tilePredicate(zonesDf))
     cells.join(broadcast(zonesDf),
         col("cell_x").between(col("xmin"), col("xmax"))
           && col("cell_y").between(col("ymin"), col("ymax")))
@@ -67,7 +67,7 @@ object ZonalStore {
     * plan, and the envelope refinement runs on pruned tiles only.
     */
   def prunedStatsDynamic(s: SparkSession, path: String, zonesDf: DataFrame): DataFrame =
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .join(broadcast(Cube.zoneTiles(zonesDf)), Seq("tile_x", "tile_y"))
       .filter(col("cell_x").between(col("xmin"), col("xmax"))
         && col("cell_y").between(col("ymin"), col("ymax")))
