@@ -228,36 +228,7 @@ object Sim {
   /** Spark twin of [[nearSql]]: candidates joined back to their vectors,
     * exact cosine verify. Output (id1, id2, label, cos).
     */
-  // memoized per (session, dir, tau): the verified near-pair table is an
-  // INDEX-style artifact shared by three registered consumers
-  // (dedup_embedding, dedup_cluster at τ=0.3; sim_pairs_threshold at
-  // τ=0.35) — the LSH candidate join + exact-cosine verify must not
-  // recompute per consumer, exactly the textClusters / PQ-codebook rule.
-  // Eager localCheckpoint materializes once (the survivor table is
-  // pair-scale, far below the corpus); Bench invalidates through
-  // clearNearPairsCache before re-timing a memoized entry.
-  // IMMUTABLE-FIXTURE ASSUMPTION (like every index artifact here): the
-  // key is (session, dir, tau), NOT a data fingerprint — if the parquet
-  // under `dir` is rewritten within a session, call clearNearPairsCache()
-  // or the three consumers serve stale pairs. Fingerprinting the data
-  // would cost a full read per lookup, defeating the memo; the driver
-  // contract reads fixed per-SF dirs, so the assumption holds there.
-  // Stopped-session entries are evicted on the next call (removeIf below)
-  // — a checkpoint of a stopped session holds no executor memory, so lazy
-  // eviction only delays freeing the tiny driver-side plan object.
-  private val nearPairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Double), DataFrame]()
-
-  /** Drop the memoized near-pair tables (Bench outlier-rerun honesty). */
-  def clearNearPairsCache(): Unit = nearPairsCache.clear()
-
-  /** The UNPINNED near-pair plan — what actually executes when the memo
-    * is cold; PlanShapeSpec asserts the banded equi-join shape on this
-    * (the memoized face below publishes a checkpoint scan, which hides
-    * the candidate join from the consumers' executed plans).
-    */
-  private[graft] def nearPairsPlan(s: org.apache.spark.sql.SparkSession,
-      d: String, tau: Double): DataFrame = {
+  def nearPairs(s: org.apache.spark.sql.SparkSession, d: String, tau: Double): DataFrame = {
     graft.ext.Ext.register(s)
     val emb = Tables.embeddings(s, d)
     signCandidates(s, d)
@@ -266,12 +237,6 @@ object Sim {
       .withColumn("cos", cosine("e1", "e2"))
       .filter(col("cos") >= tau)
       .select(col("id1"), col("id2"), col("label"), col("cos"))
-  }
-
-  def nearPairs(s: org.apache.spark.sql.SparkSession, d: String, tau: Double): DataFrame = {
-    nearPairsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    nearPairsCache.computeIfAbsent((s, d, tau),
-      _ => nearPairsPlan(s, d, tau).localCheckpoint(true))
   }
 
   /** Per-group top-k + dense rank recomputation over the ≤k survivors.
@@ -346,27 +311,21 @@ object Sim {
     * crossJoin+window argmax, which shuffled corpus×nlist rows).
     */
   /** Per-label mean centroids, long form (c_label, centroid) — a MODEL
-    * artifact (nlist tiny rows), memoized per (session, dir) with an
-    * eager localCheckpoint: the IVF-PQ search plan otherwise recomputes
-    * this full-corpus aggregation three times in one query (probe
-    * assignment + ivfAssigned + the residual join — round-7 verdict
-    * item 8). Bench invalidates through [[clearPqCodebookCache]].
+    * artifact (nlist tiny rows) kept in the fixture store ([[annIndex]]):
+    * the IVF-PQ search plan reads it three times in one query (probe
+    * assignment + ivfAssigned + the residual join), each a scan of the
+    * stored table rather than the full-corpus aggregation (round-7
+    * verdict item 8).
     */
-  private val ivfCentCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
-  private[graft] def ivfCentroids(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    ivfCentCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    ivfCentCache.computeIfAbsent((s, d), { _ =>
-      annIndex(s, d, "ivfcent") {
-        Tables.embeddings(s, d)
-          .select(col("label").as("c_label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-          .groupBy(col("c_label"), col("pos"))
-          .agg(avg(col("v").cast("double")).as("c"))
-          .groupBy(col("c_label"))
-          .agg(expr("transform(sort_array(collect_list(struct(pos, c))), s -> s.c)").as("centroid"))
-      }
-    })
-  }
+  private[graft] def ivfCentroids(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    annIndex(s, d, "ivfcent") {
+      Tables.embeddings(s, d)
+        .select(col("label").as("c_label"), posexplode(col("embedding")).as(Seq("pos", "v")))
+        .groupBy(col("c_label"), col("pos"))
+        .agg(avg(col("v").cast("double")).as("c"))
+        .groupBy(col("c_label"))
+        .agg(expr("transform(sort_array(collect_list(struct(pos, c))), s -> s.c)").as("centroid"))
+    }
 
   private[graft] def ivfAssigned(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     graft.ext.Ext.register(s)
@@ -528,26 +487,6 @@ object Sim {
            | training — positional codes would shift; reseed or lower PqK') END""".stripMargin)
         .as("cbs"))
 
-  // memoized per (session, dir): the trained codebook is a MODEL
-  // artifact (one row, PqM×PqK centroids) built once and shared by all
-  // four PQ consumers — exactly how a deployment holds it. The eager
-  // localCheckpoint materializes the training once; Bench invalidates
-  // through clearPqCodebookCache before re-timing a memoized entry (the
-  // dedup_text_cluster honesty rule). Stopped sessions are evicted.
-  private val pqCbCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
-
-  /** Drop ALL memoized index artifacts — trained codebooks (plain AND
-    * residual), coarse centroids, and the residual code table — so the
-    * next consumer re-resolves them (Bench outlier-rerun honesty).
-    * The on-disk index tables ([[annIndex]]) stay: a rerun re-READS
-    * them like a real cluster would, instead of re-TRAINING.
-    */
-  def clearPqCodebookCache(): Unit = {
-    pqCbCache.clear(); pqResCbCache.clear()
-    ivfCentCache.clear(); pqResCodesCache.clear()
-  }
-
   /** A trained index artifact as parquet in the fixture store, keyed by
     * the training params and the embeddings table's fingerprint —
     * Lloyd training is an INDEX BUILD, not a query cost: a deployment
@@ -590,13 +529,12 @@ object Sim {
   }
 
   /** One broadcast row: `cbs[m][k]` = TRAINED codebook entry k of
-    * subspace m, over the raw vectors.
+    * subspace m, over the raw vectors — trained once per embeddings
+    * table and kept in the fixture store, shared by all four PQ
+    * consumers, exactly how a deployment holds it.
     */
-  private def pqCodebook(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    pqCbCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    pqCbCache.computeIfAbsent((s, d), { _ =>
-      annIndex(s, d, "pqcb")(trainCodebook(subVecs(s, d))) })
-  }
+  private def pqCodebook(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    annIndex(s, d, "pqcb")(trainCodebook(subVecs(s, d)))
 
   // ---- residual PQ (round 7 — the FAISS IVFPQ recipe, the judge's
   // missing #5): codes encode `vec − coarse_centroid` instead of the
@@ -622,43 +560,28 @@ object Sim {
         s"slice(vec, m * $PqW + 1, $PqW) AS sub))")).as("s"))
       .select(col("vec_id"), col("s.m").as("m"), col("s.sub").as("sub"))
 
-  private val pqResCbCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
-
   /** The RESIDUAL codebook — [[trainCodebook]] over residual
-    * sub-vectors, memoized like the plain one.
+    * sub-vectors, stored like the plain one.
     */
-  private def pqResCodebook(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    pqResCbCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    pqResCbCache.computeIfAbsent((s, d), { _ =>
-      annIndex(s, d, "pqrescb")(trainCodebook(resSubVecs(s, d))) })
-  }
-
-  private val pqResCodesCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private def pqResCodebook(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    annIndex(s, d, "pqrescb")(trainCodebook(resSubVecs(s, d)))
 
   /** (vec_id, c_label, code[PqM]) over the residual codebook — the
     * FAISS "inverted lists": PqM small ints per vector, built once at
-    * index time and reused by every search. Memoized with an eager
-    * localCheckpoint like the codebooks (the search plan otherwise
-    * re-encodes the whole corpus per query); Bench invalidates through
-    * [[clearPqCodebookCache]]. At cluster scale this is the table a
+    * index time and reused by every search (the search plan otherwise
+    * re-encodes the whole corpus per query). This is the table a
     * deployment writes to storage, not a per-query recompute.
     */
-  private def pqResCodes(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    pqResCodesCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    pqResCodesCache.computeIfAbsent((s, d), { _ =>
-      annIndex(s, d, "pqrescodes") {
-        resVecs(s, d).crossJoin(broadcast(pqResCodebook(s, d)))
-          .select(col("vec_id"), col("c_label"),
-            expr(s"""transform(sequence(0, ${PqM - 1}), m ->
-              |  array_min(transform(sequence(1, $PqK), k ->
-              |    struct(${l2Expr(s"slice(vec, m * $PqW + 1, $PqW)",
-                   "element_at(element_at(cbs, m + 1), k)")} AS d, k AS k))).k)""".stripMargin)
-              .as("code"))
-      }
-    })
-  }
+  private def pqResCodes(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    annIndex(s, d, "pqrescodes") {
+      resVecs(s, d).crossJoin(broadcast(pqResCodebook(s, d)))
+        .select(col("vec_id"), col("c_label"),
+          expr(s"""transform(sequence(0, ${PqM - 1}), m ->
+            |  array_min(transform(sequence(1, $PqK), k ->
+            |    struct(${l2Expr(s"slice(vec, m * $PqW + 1, $PqW)",
+                 "element_at(element_at(cbs, m + 1), k)")} AS d, k AS k))).k)""".stripMargin)
+            .as("code"))
+    }
 
   /** (vec_id, code[PqM]) — 1-based codebook indices; argmin by
     * (round-6 distance, k) via array_min over orderable structs.

@@ -200,57 +200,21 @@ object Polygonize {
       .select(col("region"), col("ring"), col("rank"), col("sx"), col("sy"))
   }
 
-  // The fixture pipeline (two CC fixpoints + the rank fixpoint) is an
-  // INDEX-style artifact shared verbatim by both registered ops —
-  // memoized per session with eager localCheckpoints, like the PQ
-  // codebooks: the second op must not pay the fixpoints again.
-  private val pipeCache = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, (DataFrame, DataFrame)]()
-  /** Drop the memoized pipeline so the next consumer pays the full
-    * fixpoint cost (Bench outlier-rerun honesty, the PQ-codebook rule).
+  /** The fixture pipeline (two CC fixpoints + the rank fixpoint) →
+    * (kept vertices, per-region cell counts). `cells` feeds both outputs,
+    * so it and `kept` are checkpointed once per query.
     */
-  def clearCache(): Unit = pipeCache.clear()
-
-  /** Optionally scope the polygonize pipeline's shuffle fan-out to the
-    * boundary/ring scale via `spark.graft.polygonize.partitions` (r21):
-    * every stage after the mask scan operates on mask cells, boundary
-    * edges, or ring vertices — perimeter-scale tables orders of
-    * magnitude below the raster — so a cluster-scale fan-out is pure
-    * task-scheduling overhead there. Default: the session setting,
-    * UNCHANGED — an r21 A/B at sf0.1/local[32] measured 8-way vs 32-way
-    * fan-out as identical (5.0-6.2 s either way: the pipeline cost is
-    * its ~13 serial fixpoint/checkpoint actions, not task count), and a
-    * silently shrunken default would under-parallelize a continental
-    * boundary on a real cluster. The knob exists for deployments that
-    * KNOW their perimeter scale.
-    */
-  private def scopedParts[A](s: SparkSession)(f: => A): A =
-    s.conf.getOption("spark.graft.polygonize.partitions") match {
-      case Some(p) => graft.core.SessionConf.scoped(s,
-        "spark.sql.shuffle.partitions" -> p.toInt.toString)(f)
-      case None => f
-    }
-
   private def fixturePipeline(s: SparkSession): (DataFrame, DataFrame) = {
-    pipeCache.keySet.removeIf(k => k.sparkContext.isStopped)
-    pipeCache.computeIfAbsent(s, { _ =>
-      scopedParts(s) {
-        val cells = labeled(fixtureMask(s), W1).localCheckpoint(true)
-        val kept = keptVerticesOf(cells, W1).localCheckpoint(true)
-        val nCells = cells.groupBy("region").agg(count(lit(1)).as("n_cells"))
-        (kept, nCells)
-      }
-    })
+    val cells = labeled(fixtureMask(s), W1).localCheckpoint(true)
+    val kept = keptVerticesOf(cells, W1).localCheckpoint(true)
+    val nCells = cells.groupBy("region").agg(count(lit(1)).as("n_cells"))
+    (kept, nCells)
   }
 
   /** Full polygonize over an arbitrary mask `(cx, cy)` — the op body
     * AND the spec entry point for hand-built donut/pinch masks.
     */
   def polygonizeMask(m0: DataFrame, w: Long): DataFrame = {
-    // (no scopedParts here: this face returns a LAZY frame — the conf
-    // scope would be restored before any action plans the shuffles. The
-    // CC calls inside `labeled` scope themselves; spec callers drive
-    // hand-built masks where fan-out is irrelevant.)
     val cells = labeled(m0, w)
     val kept = keptVerticesOf(cells, w)
     val nCells = cells.groupBy("region").agg(count(lit(1)).as("n_cells"))
@@ -280,7 +244,7 @@ object Polygonize {
       .orderBy("region", "ring_seq")
   }
 
-  /** The registered op: the memoized fixture pipeline, summarized. */
+  /** The registered op: the fixture pipeline, summarized. */
   def polygonize(s: SparkSession): DataFrame = {
     val (kept, nCells) = fixturePipeline(s)
     summarize(kept, nCells)

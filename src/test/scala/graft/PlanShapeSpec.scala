@@ -235,30 +235,17 @@ class PlanShapeSpec extends SparkSuite {
         s"$name still contains a non-equi join:\n${p.take(3000)}")
       p
     }
-    // the near-pair table is memoized behind a checkpoint (r10), so its
-    // consumers' executed plans start at a checkpoint scan — assert the
-    // no-NLJ property there, and the banded equi-join shape on the
-    // UNPINNED plan that executes when the memo is cold (both taus)
-    Seq("dedup_embedding", "sim_pairs_threshold").foreach(joins)
-    for (tau <- Seq(0.3, 0.35)) {
-      val edges = graft.llm.Sim.nearPairsPlan(spark, sf, tau)
-      edges.collect()
-      val ep = edges.queryExecution.executedPlan.toString
-      assert(!ep.contains("BroadcastNestedLoopJoin") && !ep.contains("CartesianProduct")
-        && ep.contains("sig#") && ep.contains("band#"),
-        s"near-pair generation (tau=$tau) is not the banded equi-join:\n${ep.take(3000)}")
+    // the near-pair consumers (dedup_embedding at tau 0.3,
+    // sim_pairs_threshold at 0.35): the candidate join is keyed by the
+    // sign-band signature
+    for (name <- Seq("dedup_embedding", "sim_pairs_threshold")) {
+      val p = joins(name)
+      assert(p.contains("sig#") && p.contains("band#"),
+        s"$name near-pair generation is not the banded equi-join:\n${p.take(3000)}")
     }
-    // ngram path: the registry entry rides the candidate-table memo
-    // (a checkpoint scan — no-NLJ asserted via joins); the banded
-    // bucket-aggregation shape is asserted on the UNPINNED plan that
-    // executes when the memo is cold, like the near-pair family above
-    joins("dedup_ngram_jaccard")
-    val cand = graft.llm.Dedup.arithCandJaccardPlan(spark, sf)
-    cand.collect()
-    val p = cand.queryExecution.executedPlan.toString
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct")
-      && p.contains("bh#"),
-      s"ngram candidates not keyed by minhash band:\n${p.take(3000)}")
+    // ngram path: candidates come from the minhash band buckets
+    val p = joins("dedup_ngram_jaccard")
+    assert(p.contains("bh#"), s"ngram candidates not keyed by minhash band:\n${p.take(3000)}")
     // band join: |x−y| ≤ δ planned as a bucket equi-join, not NLJ
     val pb = joins("join_band")
     assert(pb.contains("bucket#"), s"band join not keyed by the δ-bucket:\n${pb.take(3000)}")
