@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Fixture
+import graft.core.{Fixture, Fs}
 
 /** GeoJSON zone ingestion (round 5): the standard vector interchange
   * format, end-to-end into the WKB zonal pipeline — a user hands the
@@ -62,7 +62,7 @@ object GeoJson {
     val json = features.mkString(
       """{"type": "FeatureCollection", "features": [""", ",\n", "]}")
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val out = fs.create(p, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
@@ -214,7 +214,7 @@ object GeoJson {
     val json = features.mkString(
       """{"type": "FeatureCollection", "features": [""", ",\n", "]}")
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val out = fs.create(p, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
@@ -294,7 +294,7 @@ object GeoJson {
     val json = features.mkString(
       """{"type": "FeatureCollection", "features": [""", ",\n", "]}")
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val out = fs.create(p, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
@@ -331,7 +331,7 @@ object GeoJson {
     val json = features.mkString(
       """{"type": "FeatureCollection", "features": [""", ",\n", "]}")
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val out = fs.create(p, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
@@ -372,7 +372,7 @@ object GeoJson {
     val json = features.mkString(
       """{"type": "FeatureCollection", "features": [""", ",\n", "]}")
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val out = fs.create(p, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }

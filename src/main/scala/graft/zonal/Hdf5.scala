@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Fixture, Q, Tables}
+import graft.core.{Fixture, Fs, Q, Tables}
 
 /** NetCDF-4 (HDF5 container) ingestion (round 12 — the r11 verdict's
   * missing #2: xarray's default `to_netcdf()` engine writes netCDF-4,
@@ -98,13 +98,10 @@ object Hdf5 {
       // the CF two-value standard_parallel; scalars appear as 1-seqs
       numAttrs: Map[String, Seq[Double]] = Map.empty)
 
-  private def hadoopFs(p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-
   /** Targeted range reads — the driver never loads the file body. */
   private final class RangeReader(path: String) extends AutoCloseable {
     private val p = new org.apache.hadoop.fs.Path(path)
-    private val fs = hadoopFs(p)
+    private val fs = Fs.fs(p)
     val fileLen: Long = fs.getFileStatus(p).getLen
     private val in = fs.open(p)
     def bytes(pos: Long, len: Int): Array[Byte] = {
@@ -1352,7 +1349,7 @@ object Hdf5 {
       return inBounds.map { case (_, _, _, _, x, y, l, t) => (x, y, l, t, r.fill) }
     }
     val p = new org.apache.hadoop.fs.Path(r.path)
-    val fs = hadoopFs(p)
+    val fs = Fs.fs(p)
     val in = fs.open(p)
     val stored = try {
       val b = new Array[Byte](r.size.toInt)
@@ -1634,7 +1631,7 @@ object Hdf5 {
       window: Option[(java.sql.Timestamp, java.sql.Timestamp)] = None): DataFrame = {
     import s.implicits._
     val rp = new org.apache.hadoop.fs.Path(root)
-    val rfs = rp.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val rfs = Fs.fs(rp)
     val files = rfs.listStatus(rp).filter(!_.isDirectory)
       .map(_.getPath.toString).filter(_.endsWith(".nc")).sorted.toSeq
     require(files.nonEmpty, s"$root: no .nc members to concatenate")
@@ -1775,7 +1772,7 @@ object Hdf5 {
     s.createDataset(Seq((path, dataAddr, n, strLen, padClass)))
       .flatMap { case (p, addr, n2, l, pc) =>
         val hp = new org.apache.hadoop.fs.Path(p)
-        val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val fs = Fs.fs(hp)
         val in = fs.open(hp)
         val bytes = try {
           val b = new Array[Byte](n2 * l); in.readFully(addr, b); b

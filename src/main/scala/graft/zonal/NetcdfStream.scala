@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.core.Fs
 
 /** STREAMING DSv2 face, classic-NetCDF twin of [[ZarrMembersTable]]
   * (r18): a LANDING DIRECTORY of per-epoch `.nc` FILES — the
@@ -49,7 +50,7 @@ object NetcdfMembersTable {
     */
   private[zonal] def members(path: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     if (!fs.getFileStatus(p).isDirectory) Seq.empty
     else fs.listStatus(p).filter(_.isFile).sortBy(_.getPath.getName)
       .filter { st =>
@@ -70,7 +71,7 @@ object NetcdfMembersTable {
 
   private[zonal] def isMemberDir(path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     fs.exists(p) && fs.getFileStatus(p).isDirectory && members(path).nonEmpty
   }
 

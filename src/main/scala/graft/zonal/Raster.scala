@@ -1,7 +1,7 @@
 package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.{Fixture, Tables}
+import graft.core.{Fixture, Fs, Tables}
 
 /** Raster ingestion (round 5 — the last unrepresented piece of the
   * reference's declared domain: "zonal statistics" over an actual
@@ -163,7 +163,7 @@ object Raster {
     headerReads.increment()
     if (org.apache.spark.TaskContext.get() != null) headerReadsInTask.increment()
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val in = fs.open(p)
     try {
       def readAt(off: Long, n: Int): java.nio.ByteBuffer = {
@@ -575,7 +575,7 @@ object Raster {
         s.sparkContext.defaultParallelism)))
       .flatMap { t =>
         val p = new org.apache.hadoop.fs.Path(t.path)
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val fs = Fs.fs(p)
         val in = fs.open(p)
         try {
           val bytes = new Array[Byte](t.count.toInt)
@@ -642,7 +642,7 @@ object Raster {
         s.sparkContext.defaultParallelism)))
       .flatMap { case (e, t) =>
         val p = new org.apache.hadoop.fs.Path(t.path)
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val fs = Fs.fs(p)
         val in = fs.open(p)
         try {
           val bytes = new Array[Byte](t.count.toInt)
@@ -674,7 +674,7 @@ object Raster {
         s.sparkContext.defaultParallelism)))
       .flatMap { t =>
         val p = new org.apache.hadoop.fs.Path(t.path)
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val fs = Fs.fs(p)
         val in = fs.open(p)
         try {
           val bytes = new Array[Byte](t.count.toInt)
@@ -867,7 +867,7 @@ object Raster {
       i += 1
     }
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val out = fs.create(p, true)
     try out.write(buf.array()) finally out.close()
   }
@@ -1113,7 +1113,7 @@ object Raster {
       buf.position(blockOffs(i).toInt); buf.put(b)
     }
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val out = fs.create(p, true)
     try out.write(buf.array()) finally out.close()
   }
@@ -1263,7 +1263,7 @@ object Raster {
     buf.putDouble(0.0).putDouble(0.0).putDouble(0.0)
     buf.putDouble(0.0).putDouble(0.0).putDouble(0.0)
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val out = fs.create(p, true)
     try out.write(buf.array()) finally out.close()
     nL
@@ -1870,7 +1870,7 @@ object Raster {
     */
   def writeStatsManifest(dir: String, stats: Seq[TileStats]): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/_tile_stats")
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val out = fs.create(p, true)
     try out.write(stats.map(t => s"${t.ox},${t.oy},${t.vmin},${t.vmax},${t.path}")
       .mkString("", "\n", "\n").getBytes("UTF-8"))
@@ -1879,7 +1879,7 @@ object Raster {
 
   def readStatsManifest(dir: String): Seq[TileStats] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/_tile_stats")
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val in = fs.open(p)
     try {
       val len = fs.getFileStatus(p).getLen.toInt

@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Fixture
+import graft.core.{Fixture, Fs}
 
 /** ESRI Shapefile zone ingestion (round 6) — the other ubiquitous vector
   * interchange format next to GeoJSON, from the published ESRI shapefile
@@ -119,7 +119,7 @@ object Shapefile {
 
     def writeAll(p: String, bytes: Array[Byte]): Unit = {
       val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val fs = Fs.fs(hp)
       val out = fs.create(hp, true)
       try out.write(bytes) finally out.close()
     }
@@ -175,7 +175,7 @@ object Shapefile {
   def readIndex(shpPath: String, wantType: Int = TypePolygon): Seq[ShpRef] = {
     val ix = shpPath.stripSuffix(".shp") + ".shx"
     val p = new org.apache.hadoop.fs.Path(ix)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val len = fs.getFileStatus(p).getLen.toInt
     require(len >= 100 && (len - 100) % 8 == 0, s"$ix: not a .shx (length $len)")
     val raw = new Array[Byte](len)
@@ -245,10 +245,9 @@ object Shapefile {
       .repartition(math.max(1, math.min(refs.size,
         s.sparkContext.defaultParallelism)))
       .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration()
         it.toArray.groupBy(_.path).iterator.flatMap { case (p, rs) =>
           val hp = new org.apache.hadoop.fs.Path(p)
-          val in = hp.getFileSystem(conf).open(hp)
+          val in = Fs.fs(hp).open(hp)
           try rs.toSeq.flatMap { ref =>
             val raw = new Array[Byte](ref.contentBytes)
             in.readFully(ref.offset, raw)
@@ -448,7 +447,7 @@ object Shapefile {
     */
   def readDbfHeader(dbfPath: String): DbfHeader = {
     val p = new org.apache.hadoop.fs.Path(dbfPath)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val fileLen = fs.getFileStatus(p).getLen
     val in = fs.open(p)
     try {
@@ -505,7 +504,7 @@ object Shapefile {
       .repartition(math.max(1, slices.size))
       .flatMap { sl =>
         val p = new org.apache.hadoop.fs.Path(sl.path)
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val fs = Fs.fs(p)
         val in = fs.open(p)
         try {
           val bytes = new Array[Byte](sl.numRecs * sl.recordSize)
@@ -609,7 +608,7 @@ object Shapefile {
     }
     out.put(0x1A.toByte)
     val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(hp)
     val os = fs.create(hp, true)
     try os.write(out.array()) finally os.close()
   }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.core.Fs
 
 /** DataSource V2 face of the GeoTIFF reader (round 5): the
   * Spark-idiomatic architecture for a raster scan, where the ad-hoc
@@ -95,7 +96,7 @@ object TiffMosaic {
     if (path == null || path.isEmpty) false
     else {
       val p = new org.apache.hadoop.fs.Path(path, "_tile_stats")
-      try p.getFileSystem(new org.apache.hadoop.conf.Configuration()).exists(p)
+      try Fs.fs(p).exists(p)
       catch { case _: Exception => false }
     }
   }
@@ -449,7 +450,7 @@ final class TiffPartitionReader(t: Raster.TileRef, cols: Array[String])
   private var i = -1 // (pixel, band)-major index over the block's cells
   private lazy val values: Iterator[(Int, Int, Int, Double)] = {
     val p = new org.apache.hadoop.fs.Path(t.path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     val in = fs.open(p)
     try {
       val bytes = new Array[Byte](t.count.toInt)

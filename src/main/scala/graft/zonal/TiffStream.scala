@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.core.Fs
 
 /** STREAMING DSv2 face, GeoTIFF twin of [[NetcdfMembersTable]],
   * [[ZarrMembersTable]] and [[Hdf5MembersTable]] (r19 — completing the
@@ -62,7 +63,7 @@ object TiffMembersTable {
     */
   private[zonal] def members(path: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     if (!fs.getFileStatus(p).isDirectory) Seq.empty
     else fs.listStatus(p).filter(_.isFile).sortBy(_.getPath.getName)
       .filter { st =>
@@ -87,7 +88,7 @@ object TiffMembersTable {
     if (path == null || path.isEmpty) false
     else {
       val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val fs = Fs.fs(p)
       fs.exists(p) && fs.getFileStatus(p).isDirectory &&
         !TiffSource.isMosaic(path) && members(path).nonEmpty
     }

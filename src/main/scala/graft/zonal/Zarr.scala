@@ -2,7 +2,7 @@ package graft.zonal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Fixture, Q, Tables}
+import graft.core.{Fixture, Fs, Q, Tables}
 
 /** Zarr v2 store ingestion (round 11 — the reference's native cube
   * format: a Dask/xarray datacube arrives as a chunked Zarr store, not
@@ -394,16 +394,13 @@ object Zarr {
         indexCrc = indexCrc, indexAtEnd = indexAtEnd, transposed = transposed)
   }
 
-  private def hadoopFs(p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-
   /** Driver-side metadata read: `.zarray` (v2) or `zarr.json` (v3) —
     * a few hundred bytes either way.
     */
   def readMeta(dir: String): ZarrMeta = {
     val p2 = new org.apache.hadoop.fs.Path(dir, ".zarray")
     val p3 = new org.apache.hadoop.fs.Path(dir, "zarr.json")
-    val fs = hadoopFs(p2)
+    val fs = Fs.fs(p2)
     def slurp(p: org.apache.hadoop.fs.Path): String = {
       val in = fs.open(p)
       try {
@@ -429,7 +426,7 @@ object Zarr {
   def readZMetadata(dir: String): Map[String, ZarrMeta] = {
     import org.json4s._
     val p = new org.apache.hadoop.fs.Path(dir, ".zmetadata")
-    val fs = hadoopFs(p)
+    val fs = Fs.fs(p)
     require(fs.exists(p), s"$dir: no .zmetadata — not a consolidated " +
       "hierarchy (zarr.consolidate_metadata writes it)")
     val in = fs.open(p)
@@ -512,7 +509,7 @@ object Zarr {
   private[graft] def readV3Group(dir: String): Map[String, ZarrMeta] = {
     import org.json4s._
     val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = hadoopFs(base)
+    val fs = Fs.fs(base)
     def readJson(p: org.apache.hadoop.fs.Path): JValue = {
       val len = fs.getFileStatus(p).getLen.toInt
       val raw = new Array[Byte](len)
@@ -603,7 +600,7 @@ object Zarr {
   private[graft] def readV2Group(dir: String): Map[String, ZarrMeta] = {
     import org.json4s._
     val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = hadoopFs(base)
+    val fs = Fs.fs(base)
     def readText(p: org.apache.hadoop.fs.Path): String = {
       val len = fs.getFileStatus(p).getLen.toInt
       val raw = new Array[Byte](len)
@@ -724,7 +721,7 @@ object Zarr {
   private[graft] def coordMeta(dir: String): CoordMeta = {
     import org.json4s._
     val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = hadoopFs(base)
+    val fs = Fs.fs(base)
     val mp = new org.apache.hadoop.fs.Path(base, ".zarray")
     require(fs.exists(mp), s"$dir: no .zarray — not a Zarr v2 array")
     val text = {
@@ -774,7 +771,7 @@ object Zarr {
   private[graft] def readCoordChunk(m: CoordMeta, ci: Int): Iterator[(Int, Double)] = {
     val p = s"${m.dir}/$ci"
     val hp = new org.apache.hadoop.fs.Path(p)
-    val cfs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val cfs = Fs.fs(hp)
     require(cfs.exists(hp), s"$p: absent coordinate chunk")
     val len = cfs.getFileStatus(hp).getLen.toInt
     val raw = new Array[Byte](len)
@@ -832,7 +829,7 @@ object Zarr {
   private[graft] def v3CoordMeta(dir: String): (CoordMeta, Map[String, String]) = {
     import org.json4s._
     val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = hadoopFs(base)
+    val fs = Fs.fs(base)
     val mp = new org.apache.hadoop.fs.Path(base, "zarr.json")
     require(fs.exists(mp), s"$dir: no zarr.json — not a Zarr v3 array")
     val text = {
@@ -932,7 +929,7 @@ object Zarr {
       : (Map[String, String], Map[String, Seq[Double]]) = {
     import org.json4s._
     val p = new org.apache.hadoop.fs.Path(dir, ".zattrs")
-    val fs = hadoopFs(p)
+    val fs = Fs.fs(p)
     if (!fs.exists(p)) return (Map.empty, Map.empty)
     val len = fs.getFileStatus(p).getLen.toInt
     val raw = new Array[Byte](len)
@@ -1071,7 +1068,7 @@ object Zarr {
       window: Option[(java.sql.Timestamp, java.sql.Timestamp)] = None): DataFrame = {
     import s.implicits._
     val rp = new org.apache.hadoop.fs.Path(root)
-    val rfs = hadoopFs(rp)
+    val rfs = Fs.fs(rp)
     val dirs = rfs.listStatus(rp).filter(_.isDirectory)
       .map(_.getPath.toString).sorted.toSeq
     require(dirs.nonEmpty, s"$root: no member hierarchies to concatenate")
@@ -1257,7 +1254,7 @@ object Zarr {
     require(!m.rank4,
       s"$dir: rank-4 (t, level, y, x) store — scan it with scanZarr4d, not the 2-D path")
     val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = hadoopFs(base)
+    val fs = Fs.fs(base)
     def listing(p: org.apache.hadoop.fs.Path): Map[String, Long] =
       if (!fs.exists(p)) Map.empty
       else fs.listStatus(p).map(st => st.getPath.getName -> st.getLen).toMap
@@ -1429,7 +1426,7 @@ object Zarr {
       } yield (x, y, r.fill)
     } else {
       val p = new org.apache.hadoop.fs.Path(r.path)
-      val fs = hadoopFs(p)
+      val fs = Fs.fs(p)
       val in = fs.open(p)
       val bytes = try {
         val b = new Array[Byte](r.len.toInt)
@@ -1549,7 +1546,7 @@ object Zarr {
     require(m.rank3, s"$dir: not a rank-3 store" +
       (if (m.rank4) " (rank-4 — scan it with scanZarr4d)" else ""))
     val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = hadoopFs(base)
+    val fs = Fs.fs(base)
     def listing(p: org.apache.hadoop.fs.Path): Map[String, Long] =
       if (!fs.exists(p)) Map.empty
       else fs.listStatus(p).map(st => st.getPath.getName -> st.getLen).toMap
@@ -1706,7 +1703,7 @@ object Zarr {
       inBounds3(r).map { case (_, _, _, x, y, t) => (x, y, t, r.fill) }
     } else {
       val p = new org.apache.hadoop.fs.Path(r.path)
-      val fs = hadoopFs(p)
+      val fs = Fs.fs(p)
       val in = fs.open(p)
       val bytes = try {
         val b = new Array[Byte](r.len.toInt)
@@ -1789,7 +1786,7 @@ object Zarr {
   private[graft] def chunkRefs4(m: ZarrMeta, dir: String): Seq[ChunkRef4] = {
     require(m.rank4, s"$dir: not a rank-4 store")
     val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = hadoopFs(base)
+    val fs = Fs.fs(base)
     def listing(p: org.apache.hadoop.fs.Path): Map[String, Long] =
       if (!fs.exists(p)) Map.empty
       else fs.listStatus(p).map(st => st.getPath.getName -> st.getLen).toMap
@@ -1954,7 +1951,7 @@ object Zarr {
       inBounds4(r).map { case (_, _, _, _, x, y, l, t) => (x, y, l, t, r.fill) }
     } else {
       val p = new org.apache.hadoop.fs.Path(r.path)
-      val fs = hadoopFs(p)
+      val fs = Fs.fs(p)
       val in = fs.open(p)
       val bytes = try {
         val b = new Array[Byte](r.len.toInt)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.core.Fs
 
 /** STREAMING DSv2 face (r18): a LANDING DIRECTORY of per-epoch 2-D
   * Zarr member stores — the one-store-per-period layout real ingest
@@ -56,7 +57,7 @@ object ZarrMembersTable {
     */
   private[zonal] def members(path: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).sorted
       .filter { n =>
         // positive-only memo (a store stays a member once its array
@@ -73,7 +74,7 @@ object ZarrMembersTable {
     */
   private[zonal] def isMemberDir(path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = Fs.fs(p)
     !fs.exists(new org.apache.hadoop.fs.Path(p, ".zarray")) &&
     !fs.exists(new org.apache.hadoop.fs.Path(p, "zarr.json")) &&
     members(path).nonEmpty
