@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -132,7 +133,7 @@ object Bench {
         // warmup is setup, never a result: a failure here must not kill
         // the bench (the affected queries just pay their own first-touch,
         // exactly the pre-r21 behavior) — but it must be LOUD on stderr
-        case e: Throwable =>
+        case NonFatal(e) =>
           Console.err.println(s"[bench] cube warmup block failed (continuing): $e")
       }
       locally {
@@ -160,7 +161,7 @@ object Bench {
         q.build(spark, sfDir).count()
         Right((System.nanoTime() - t0) / 1e9)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}")
       }
     }

@@ -57,7 +57,7 @@ object SparkEntry {
     stream.Streams.defs
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map { case (n, q) => n -> q.build }.toMap
+    registry.map { case (n, q) => n -> ((s: SparkSession, d: String) => q.build(s, d)) }.toMap
 
   def oracleSql: Map[String, String] =
     registry.collect { case (n, Q(_, Some(sql))) => n -> sql }.toMap

@@ -70,19 +70,12 @@ object Tables {
       }))
   }
 
-  // Memoized per (session, dir): saves the file listing and footer read
-  // when a session runs 100+ queries against the same ten tables. Across
-  // sessions `parquet` keeps resolution job-free. The DataFrame (logical
-  // plan) is immutable, so sharing it across queries is safe.
-  private val loaded =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // evict entries for stopped sessions so the static map never retains
-    // plans (or session references) past the session's lifetime
-    loaded.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    loaded.computeIfAbsent((spark, dir, name), _ => parquet(spark, s"$dir/$name.parquet"))
-  }
+  /** Table `name` under `dir`: a fresh [[parquet]] read on every call
+    * (one driver-side footer read, no Spark job), so two calls give two
+    * frames with distinct column ids.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -2,6 +2,7 @@ package graft.rel
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.GraftBridge
 import graft.core.Tables
 
 /** Bucketed-table support for the co-located join path (`join_bucketed`,
@@ -13,7 +14,9 @@ import graft.core.Tables
   * join shuffle-free forever after.
   *
   * Written at most once per (session, sfDir) per JVM; `overwrite` mode
-  * clobbers any stale layout from a previous run.
+  * clobbers any stale layout from a previous run. Keyed by the session's
+  * UUID, not the session: `newSession()`s share one context, so a map
+  * keyed by the session would keep every session it saw reachable.
   */
 object Bucketed {
 
@@ -23,7 +26,7 @@ object Bucketed {
   // same (session, dir) until the build completes — a thread can never
   // observe table names before the files exist
   private val done =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, String)]()
 
   private def warehousePath(s: SparkSession, t: String): java.io.File =
     new java.io.File(new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath, t)
@@ -40,7 +43,7 @@ object Bucketed {
     * across sessions. A stale/fingerprint-mismatched layout is rebuilt.
     */
   def ensure(s: SparkSession, d: String): (String, String) =
-    done.computeIfAbsent((s, d), { _ =>
+    done.computeIfAbsent((GraftBridge.sessionUUID(s), d), { _ =>
       val sf = new java.io.File(d).getName.replaceAll("[^A-Za-z0-9]", "_")
       val to = s"graft_orders_bucketed_$sf"
       val tc = s"graft_customer_bucketed_$sf"

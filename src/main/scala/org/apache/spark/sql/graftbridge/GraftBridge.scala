@@ -42,6 +42,12 @@ object GraftBridge {
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** The session's UUID (`private[sql]`): a key that, unlike the
+    * session itself, keeps nothing reachable.
+    */
+  def sessionUUID(spark: SparkSession): String =
+    spark.asInstanceOf[classic.SparkSession].sessionUUID
+
   /** Idempotently add a planner strategy to a live session. */
   def ensureStrategy(spark: SparkSession, s: SparkStrategy): Unit = {
     val cs = spark.asInstanceOf[classic.SparkSession]
