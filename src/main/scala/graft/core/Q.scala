@@ -18,8 +18,16 @@ final case class Q(
     private val body: (SparkSession, String) => DataFrame,
     oracle: Option[String] = None) {
 
-  /** Builds the entry's DataFrame in `s`, first declaring `s`
-    * artifact-free: [[Q.ArtifactIsolationKey]] is set to `false` unless
+  /** Builds the entry's DataFrame in `s` after two declarations on `s`:
+    * it is artifact-free, and graft's Catalyst extensions are installed.
+    *
+    * The install is [[graft.ext.Ext.register]]: the `graft.ext` functions,
+    * the TopK strategy and the TopK rewrite rule, each added only if the
+    * session lacks it. Builders and the helpers they call install nothing
+    * themselves, so every entry plans the same way whatever ran before it
+    * in the session.
+    *
+    * Artifact-free: [[Q.ArtifactIsolationKey]] is set to `false` unless
     * the caller set it.
     *
     * Nothing in the registry adds a jar or an artifact to a session. With
@@ -39,6 +47,7 @@ final case class Q(
   def build(s: SparkSession, sfDir: String): DataFrame = {
     if (!s.conf.getAll.contains(Q.ArtifactIsolationKey))
       s.conf.set(Q.ArtifactIsolationKey, "false")
+    graft.ext.Ext.register(s)
     body(s, sfDir)
   }
 }

@@ -3,15 +3,24 @@ package graft.ext
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.graftbridge.GraftBridge
 
-/** Registration for the Catalyst extensions.
+import graft.plans.{TopKRewriteRule, TopKStrategy}
+
+/** Installation of graft's Catalyst extensions: the functions in
+  * [[Ext.functions]], the planner strategy [[graft.plans.TopKStrategy]] and
+  * the optimizer rule [[graft.plans.TopKRewriteRule]].
   *
-  * Two front doors:
-  *   - [[Ext.register]]: runtime registration into an existing session's
-  *     FunctionRegistry (what the query builders use — the driver owns
-  *     session construction, SURVEY.md §0 [DRV]).
-  *   - [[GraftExtensions]]: `SparkSessionExtensions` injection for
-  *     production sessions built with
+  * Two front doors, the same three lists:
+  *   - [[Ext.register]]: installs all three into a live session. `Q.build`
+  *     calls it on every session it builds in, so registry entries and
+  *     the helpers they call never install anything themselves. A caller
+  *     that uses a helper outside `Q.build` calls it once per session.
+  *   - [[GraftExtensions]]: injects the same three at session
+  *     construction, through
   *     `SparkSession.builder().withExtensions(new GraftExtensions)` or
   *     `spark.sql.extensions=graft.ext.GraftExtensions`.
   */
@@ -32,17 +41,31 @@ object Ext {
     "wkb_stats" -> (es => WkbStats(es.head)),
     "wkb_geojson" -> (es => WkbGeoJson(es.head)))
 
-  def register(spark: SparkSession): Unit =
+  val strategies: Seq[SparkStrategy] = Seq(TopKStrategy)
+  val rules: Seq[Rule[LogicalPlan]] = Seq(TopKRewriteRule)
+
+  /** Idempotent: adds only the functions, strategies and rules the session
+    * lacks, so a second call, or a call on a session built with
+    * [[GraftExtensions]], changes nothing and logs nothing.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+    strategies.foreach(GraftBridge.ensureStrategy(spark, _))
+    rules.foreach(GraftBridge.ensureOptimization(spark, _))
+  }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     Ext.functions.foreach { case (name, builder) =>
       e.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.ext", name), builder))
     }
+    Ext.strategies.foreach(s => e.injectPlannerStrategy(_ => s))
+    Ext.rules.foreach(r => e.injectOptimizerRule(_ => r))
+  }
 }

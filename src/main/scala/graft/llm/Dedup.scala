@@ -55,7 +55,6 @@ object Dedup {
     * BIGINT (m·HashMod + m' < 2^60).
     */
   def minhash(docs: DataFrame): DataFrame = {
-    graft.ext.Ext.register(docs.sparkSession)
     val shingled = docs
       .withColumn("t", split(lower(col("text")), " "))
       .filter(size(col("t")) >= 3)
@@ -185,7 +184,6 @@ object Dedup {
     * the oracle hash-matches it (r10 verdict item 5).
     */
   def simhash(docs: DataFrame): DataFrame = {
-    graft.ext.Ext.register(docs.sparkSession)
     // branch-free bit sums inside the aggregate (the mm_near_dup r11
     // form); the strict majority — sum(±1) > 0 ⇔ 2·ones > n — resolves
     // in a post-agg projection over ndocs rows
@@ -380,7 +378,6 @@ object Dedup {
     * (doc_id1, doc_id2, jaccard).
     */
   def arithCandJaccard(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.ext.Ext.register(s)
     val docs = Tables.documents(s, d)
     val cand = bucketPairs(
       arithMinhash(docs).selectExpr("doc_id", ArithBandStackExpr), bucketCap(s))
@@ -411,7 +408,6 @@ object Dedup {
     * exact verify on candidates only.
     */
   def minhashIncremental(docs: DataFrame, cap: Int): DataFrame = {
-    graft.ext.Ext.register(docs.sparkSession)
     val sigs = arithMinhash(docs).selectExpr("doc_id", ArithBandStackExpr)
     // r21 (guide §2.4 — remove shuffles outright): the pre-r21 spelling
     // (counts = sigs⋈agg(sigs), guarded self-joined batch×history) put
@@ -710,7 +706,6 @@ object Dedup {
     *     the only window function, bounded by document length.
     */
   def substringSpans(docs: DataFrame, n: Int = 50): DataFrame = {
-    graft.ext.Ext.register(docs.sparkSession)
     val base = docs.filter(length(col("text")) >= n)
       .select(col("doc_id"), col("text"))
     // ROLLING hash (r17 perf: O(len) total vs O(len·n) for per-window
@@ -1047,7 +1042,6 @@ object Dedup {
          |SELECT comp_id, count(*) AS n_members,
          |  string_agg(CAST(node AS VARCHAR), ',' ORDER BY node) AS members
          |FROM comp GROUP BY comp_id ORDER BY comp_id""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       val emb = Tables.embeddings(s, d)
       val labels = connectedComponents(emb.select(col("vec_id").as("node")),
         bothWays(Sim.nearPairs(s, d, 0.3), col("id1"), col("id2")))
@@ -1208,7 +1202,6 @@ object Dedup {
          |    AS shared_frac
          |FROM chunks JOIN df USING (fp)
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       val chunks = cdcChunks(Tables.documents(s, d))
       val df = chunks.groupBy("fp").agg(countDistinct(col("doc_id")).as("n_docs"))
       chunks.join(df, "fp")

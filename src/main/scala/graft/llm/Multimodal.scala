@@ -285,7 +285,6 @@ object Multimodal {
       // the "decode" step: graft.ext.ByteStats (custom Catalyst
       // expression, binary → feature struct); ASCII text makes the byte
       // features reproducible in the oracle via ord()
-      graft.ext.Ext.register(s)
       Tables.documents(s, d)
         .withColumn("f", expr("byte_stats(CAST(text AS BINARY))"))
         .select(col("doc_id"), col("f.n_bytes").as("n_bytes"),
@@ -416,7 +415,6 @@ object Multimodal {
     * divergence flagged in round-7 advice).
     */
   def mmNearDupPairs(docs: org.apache.spark.sql.DataFrame, cap: Int): org.apache.spark.sql.DataFrame = {
-    graft.ext.Ext.register(docs.sparkSession)
     // the 4 avalanche-mixed hash views are computed ONCE in the
     // projection below the aggregate — referencing them inside all 64
     // conditional sums would evaluate the mix 64× per shingle (no CSE

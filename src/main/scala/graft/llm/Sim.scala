@@ -29,7 +29,7 @@ object Sim {
     * runs the identical left fold in one fused loop — bit-identical to
     * the composed zip_with/aggregate form and to the DuckDB oracle
     * spelling, but ~an order of magnitude cheaper per pair (no lambda
-    * dispatch or boxing). Callers must Ext.register the session first.
+    * dispatch or boxing).
     */
   def cosine(a: String, b: String): Column = expr(s"cosine_sim($a, $b)")
 
@@ -229,7 +229,6 @@ object Sim {
     * exact cosine verify. Output (id1, id2, label, cos).
     */
   def nearPairs(s: org.apache.spark.sql.SparkSession, d: String, tau: Double): DataFrame = {
-    graft.ext.Ext.register(s)
     val emb = Tables.embeddings(s, d)
     signCandidates(s, d)
       .join(emb.select(col("vec_id").as("id1"), col("embedding").as("e1")), "id1")
@@ -260,7 +259,6 @@ object Sim {
 
   /** User API: brute-force cosine top-k of `corpus` for each probe row. */
   def topK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    graft.ext.Ext.register(probes.sparkSession)
     val joined = corpus.as("b").crossJoin(broadcast(probes.as("a")))
       .select(col("a.vec_id").as("probe_id"), col("b.vec_id").as("vec_id"),
         round(cosine("a.embedding", "b.embedding"), 6).as("cos_r"))
@@ -277,7 +275,6 @@ object Sim {
     * posexplode+join+agg spelling (ExtSpec asserts).
     */
   def lshBuckets(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.ext.Ext.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), expr("lsh_bucket(embedding)").as("bucket"))
   }
@@ -328,7 +325,6 @@ object Sim {
     }
 
   private[graft] def ivfAssigned(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.ext.Ext.register(s)
     val packed = ivfCentroids(s, d)
       .agg(expr("sort_array(collect_list(struct(c_label, centroid)))").as("cs"))
       .select(expr("transform(cs, s -> s.c_label)").as("c_labels"),
@@ -362,7 +358,6 @@ object Sim {
   val KmeansIters = 3
 
   private[graft] def kmeansAssigned(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    graft.ext.Ext.register(s)
     val emb = Tables.embeddings(s, d)
     var cent = emb.filter(col("vec_id") < KmeansK)
       .select(col("vec_id").cast("int").as("cid"),
@@ -738,7 +733,6 @@ object Sim {
          |  FROM scored)
          |SELECT probe_id, rk, vec_id AS nbr_id, cos_r
          |FROM ranked WHERE rk <= 3 ORDER BY probe_id, rk""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       val emb = Tables.embeddings(s, d)
       val cand = signCandidates(s, d).select(col("id1"), col("id2"))
       val und = cand.union(cand.select(col("id2").as("id1"), col("id1").as("id2")))
@@ -805,7 +799,6 @@ object Sim {
          |  SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY cos_r DESC, vec_id) AS rk
          |  FROM sims) WHERE rk <= 3
          |ORDER BY probe_id, rk""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       val emb = Tables.embeddings(s, d)
       val bk = lshBuckets(s, d).select(col("vec_id"), col("bucket"))
       val withB = emb.join(bk, "vec_id")
@@ -899,7 +892,6 @@ object Sim {
          |  SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY cos_r DESC, vec_id) AS rk
          |  FROM sims) WHERE rk <= 3
          |ORDER BY probe_id, rk""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       val probes = Tables.embeddings(s, d).filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
         .crossJoin(broadcast(ivfCentroids(s, d)))
@@ -1019,7 +1011,6 @@ object Sim {
          |  SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY dist_r, vec_id) AS rk
          |  FROM ref) WHERE rk <= 5
          |ORDER BY probe_id, rk""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       // probe → its 2 nearest clusters (same round-6-cosine ranking as
       // the oracle's assign CTE), residual vs EACH probed centroid →
       // one ADC table per (probe, probed cluster)
@@ -1081,7 +1072,6 @@ object Sim {
          |           JOIN embeddings e2 ON id2 = e2.vec_id
          |WHERE round(${cosineSql("e1.embedding", "e2.embedding")}, 6) >= 0.3
          |ORDER BY id1, id2""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       val ck = pqCodes(s, d).select(col("vec_id"),
         concat_ws(",", expr("transform(code, c -> CAST(c AS STRING))")).as("ckey"))
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))

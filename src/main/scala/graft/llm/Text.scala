@@ -239,7 +239,6 @@ object Text {
          |SELECT doc_id, count(*) AS n_feats,
          |  round(1.0 / (1.0 + exp(-10.0 * (CAST(sum(wnum) AS DOUBLE) / count(*) / 1000003.0 - 0.5))), 6) AS score
          |FROM feats GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       Tables.documents(s, d)
         .withColumn("t", split(lower(col("text")), " "))
         .filter(size(col("t")) >= 2)
@@ -465,7 +464,6 @@ object Text {
          |      FROM (SELECT doc_id, ${graft.llm.Dedup.polyHashSql("ds")} % 100 AS b
          |            FROM (SELECT doc_id, CAST(doc_id AS VARCHAR) AS ds FROM documents)))
          |GROUP BY split ORDER BY split""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       Tables.documents(s, d)
         .withColumn("b", expr("poly_hash(cast(doc_id AS string)) % 100"))
         .withColumn("split",
@@ -527,7 +525,6 @@ object Text {
          |          FROM (SELECT *, CAST(doc_id AS VARCHAR) AS ds FROM documents))))
          |GROUP BY lang, source, split
          |ORDER BY lang, source, split""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       import org.apache.spark.sql.expressions.Window
       val byStratum = Window.partitionBy("lang", "source")
       Tables.documents(s, d)
@@ -558,7 +555,6 @@ object Text {
          |  SELECT doc_id, lang, source, ${graft.llm.Dedup.polyHashSql("ds")} AS ph
          |  FROM (SELECT *, CAST(doc_id AS VARCHAR) AS ds FROM documents))
          |ORDER BY ph, doc_id LIMIT 25""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       val hashed = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"),
           expr("poly_hash(cast(doc_id AS string))").as("ph"))
@@ -758,7 +754,6 @@ object Text {
         .replace("CAST(tc AS DOUBLE)", "CAST(coalesce(tc, 0) AS DOUBLE)")
         .replace("CAST(rc AS DOUBLE)", "CAST(coalesce(rc, 0) AS DOUBLE)")
     }) { (s, d) =>
-      graft.ext.Ext.register(s)
       val docs = Tables.documents(s, d)
       val grams = docs
         .withColumn("t", split(lower(col("text")), " "))
@@ -809,7 +804,6 @@ object Text {
          |FROM k JOIN ranked r ON k.lang = r.lang AND r.rk <= k.k_target
          |GROUP BY k.lang, k.n, k.k_target
          |ORDER BY k.lang""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       import org.apache.spark.sql.expressions.Window
       val sz = Tables.documents(s, d).groupBy("lang").agg(count(lit(1)).as("n"))
       val w = sz.withColumn("s",

@@ -229,8 +229,8 @@ object TopK {
 
   /** Top-k rows per group under `orderSpec` ((column, ascending) pairs —
     * make the order total or results are tie-dependent), planned through
-    * [[TopKStrategy]]. `groupCols` may be empty (global top-k). Strategy
-    * injection is idempotent and per-session.
+    * [[TopKStrategy]], which [[graft.ext.Ext.register]] installs.
+    * `groupCols` may be empty (global top-k).
     */
   def topKPerGroup(
       df: DataFrame,
@@ -238,7 +238,6 @@ object TopK {
       orderSpec: Seq[(String, Boolean)],
       k: Int): DataFrame = {
     val spark = df.sparkSession
-    GraftBridge.ensureStrategy(spark, TopKStrategy)
     val lp = GraftBridge.analyzed(df)
     val byName = lp.output.map(a => a.name -> a).toMap
     val g = groupCols.map(byName)

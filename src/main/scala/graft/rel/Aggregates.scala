@@ -64,7 +64,6 @@ object Aggregates {
          |   FROM lineitem))
          |SELECT count(*) AS n_rows,
          |  CAST(SUM(h) % 1000000007 AS BIGINT) AS checksum FROM r""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       Tables.lineitem(s, d)
         .select(concat_ws("|", col("l_orderkey"), col("l_partkey"),
           col("l_suppkey"), col("l_linenumber")).as("rs"))

@@ -90,8 +90,6 @@ object SortSet {
         |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rk
         |  FROM orders) WHERE rk <= 3
         |ORDER BY o_custkey, o_orderkey""".stripMargin) { (s, d) =>
-      org.apache.spark.sql.graftbridge.GraftBridge.ensureStrategy(s, graft.plans.TopKStrategy)
-      org.apache.spark.sql.graftbridge.GraftBridge.ensureOptimization(s, graft.plans.TopKRewriteRule)
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       Tables.orders(s, d)

@@ -18,7 +18,6 @@ object Udfs {
         |  least(greatest(c_acctbal, 0.0), 5000.0) AS clamped
         |FROM customer ORDER BY c_custkey""".stripMargin) { (s, d) =>
       val clamp = udf((x: Double, lo: Double, hi: Double) => math.min(math.max(x, lo), hi))
-      s.udf.register("clamp", clamp)
       Tables.customer(s, d)
         .select(col("c_custkey"), col("c_acctbal"),
           clamp(col("c_acctbal"), lit(0.0), lit(5000.0)).as("clamped"))

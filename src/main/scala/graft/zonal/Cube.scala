@@ -159,9 +159,9 @@ object Cube {
     s"(($crossings) % 2 = 1)"
   }
 
-  /** Spark-side pip: the codegen'd [[graft.ext.PointInQuad]] expression
-    * (callers Ext.register first). Same semantics as [[pipSql]] — which
-    * stays the DuckDB oracle spelling — but compiles to one call into a
+  /** Spark-side pip: the codegen'd [[graft.ext.PointInQuad]] expression.
+    * Same semantics as [[pipSql]] — which stays the DuckDB oracle
+    * spelling — but compiles to one call into a
     * tight static loop instead of a composed expression tree whose
     * generated method would blow past the JIT's huge-method limit
     * (ExtSpec asserts the two spellings agree on every grid point).
@@ -353,7 +353,6 @@ object Cube {
     * geometry's bbox for the tile equi-join.
     */
   def wkbZones(s: SparkSession, d: String, rings: Seq[RingSpec]): DataFrame = {
-    graft.ext.Ext.register(s)
     verts(s, d, rings)
       .groupBy(col("zone_id"))
       .agg(expr("make_wkb(sort_array(collect_list(struct(part, ring, i, vx, vy))))")

@@ -120,7 +120,6 @@ object GeoJson {
   }
 
   private def zonesFromFeatures(s: SparkSession, feats: DataFrame): DataFrame = {
-    graft.ext.Ext.register(s)
     val intOrFail = (v: String) =>
       s"CASE WHEN $v = CAST($v AS INT) THEN CAST($v AS INT) " +
         s"ELSE CAST(raise_error('geojson: fractional coordinate, align to the lattice') AS INT) END"
@@ -153,7 +152,6 @@ object GeoJson {
     * schema inference is per-file).
     */
   def readZonesMulti(s: SparkSession, path: String): DataFrame = {
-    graft.ext.Ext.register(s)
     val intOrFail = (v: String) =>
       s"CASE WHEN $v = CAST($v AS INT) THEN CAST($v AS INT) " +
         s"ELSE CAST(raise_error('geojson: fractional coordinate, align to the lattice') AS INT) END"
@@ -231,7 +229,6 @@ object GeoJson {
     * explicit, caller-chosen step.
     */
   def readZonesSnap(s: SparkSession, path: String, scale: Long = 1L): DataFrame = {
-    graft.ext.Ext.register(s)
     require(scale >= 1, s"snap scale $scale must be >= 1")
     val snap = (v: String) =>
       s"CAST(floor($v * CAST($scale AS DOUBLE) + 0.5D) AS INT)"

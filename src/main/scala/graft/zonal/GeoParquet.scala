@@ -28,7 +28,6 @@ object GeoParquet {
     * containers.
     */
   def writeZones(s: SparkSession, d: String, path: String): Unit = {
-    graft.ext.Ext.register(s)
     Cube.verts(s, d, Cube.NGonRings)
       .groupBy(col("zone_id"))
       .agg(expr("make_wkb(sort_array(collect_list(struct(part, ring, i, vx, vy))))").as("geometry"),
@@ -45,11 +44,9 @@ object GeoParquet {
     Fixture.once("zones_geoparquet", Seq(d))(writeZones(s, d, _))
 
   /** Zones straight from the parquet WKB column — already the engine's
-    * zone shape `(zone_id, geom, xmin, xmax, ymin, ymax)`. Registers the
-    * graft functions (`point_in_wkb`) its consumers filter with.
+    * zone shape `(zone_id, geom, xmin, xmax, ymin, ymax)`.
     */
   def readZones(s: SparkSession, path: String): DataFrame = {
-    graft.ext.Ext.register(s)
     Tables.parquet(s, path)
       .select(col("zone_id"), col("geometry").as("geom"),
         col("xmin"), col("xmax"), col("ymin"), col("ymax"))

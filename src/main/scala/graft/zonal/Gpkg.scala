@@ -523,7 +523,6 @@ object Gpkg {
     * to [[Shapefile.readZones]], so the even-odd oracle gates it.
     */
   def readZones(s: SparkSession, path: String, table: String): DataFrame = {
-    graft.ext.Ext.register(s)
     readVerts(s, path, table)
       .groupBy(col("zone_id"))
       .agg(expr("make_wkb(sort_array(collect_list(struct(part, ring, i, x, y))))").as("geom"),

@@ -261,7 +261,6 @@ object Polygonize {
     * sink `sink_geojson` writes. String-exact oracle.
     */
   def polygonizeGeoJson(s: SparkSession): DataFrame = {
-    graft.ext.Ext.register(s)
     val kept = fixturePipeline(s)._1
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("region").orderBy("ring")

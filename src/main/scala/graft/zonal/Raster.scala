@@ -3342,7 +3342,6 @@ object Raster {
     // zone envelope ±1 pixel via the same Raptor tile equi-join, exact
     // parity refine on candidates only.
     "zonal_raster_world_poly" -> Q(WorldPolyOracleSql) { (s, d) =>
-      graft.ext.Ext.register(s)
       val p = worldFixturePath()
       val m = readMeta(p)
       require(m.originX == WorldOX.toDouble && m.originY == WorldOY.toDouble

@@ -277,7 +277,6 @@ object Shapefile {
     * into [[Cube.rasterize]] + `point_in_wkb`.
     */
   def readZones(s: SparkSession, shpPath: String): DataFrame = {
-    graft.ext.Ext.register(s)
     readVerts(s, shpPath)
       .groupBy(col("zone_id"))
       .agg(expr("make_wkb(sort_array(collect_list(struct(part, ring, i, x, y))))").as("geom"),

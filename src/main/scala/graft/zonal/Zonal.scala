@@ -323,7 +323,6 @@ object Zonal {
     */
   private def geomStats(s: SparkSession, d: String,
       rings: Seq[Cube.RingSpec]): DataFrame = {
-    graft.ext.Ext.register(s)
     Cube.wkbZones(s, d, rings)
       .select(col("zone_id"), expr("wkb_stats(geom)").as("g"))
       .select(col("zone_id"),
@@ -816,7 +815,6 @@ object Zonal {
            |  ON cell_x BETWEEN xmin AND xmax AND cell_y BETWEEN ymin AND ymax
            |WHERE ${Cube.pipSql("cell_x", "cell_y")}
            |GROUP BY zone_id ORDER BY zone_id""".stripMargin)) { (s, d) =>
-      graft.ext.Ext.register(s)
       Cube.rasterize(Cube.cells(s, d), Cube.polyZones(s, d))
         .filter(expr(Cube.pipExpr("cell_x", "cell_y")))
         .groupBy(col("zone_id"))
@@ -836,7 +834,6 @@ object Zonal {
            |  ON cell_x BETWEEN xmin AND xmax AND cell_y BETWEEN ymin AND ymax
            |WHERE ${Cube.pipSql("cell_x", "cell_y")}
            |GROUP BY zone_id ORDER BY zone_id""".stripMargin)) { (s, d) =>
-      graft.ext.Ext.register(s)
       Cube.withTiles(Cube.cells(s, d)).createOrReplaceTempView("g_cells")
       Cube.zoneTiles(Cube.polyZones(s, d)).createOrReplaceTempView("g_zone_tiles")
       s.sql(
@@ -885,7 +882,6 @@ object Zonal {
            |WHERE (${Cube.pipSql("cell_x", "cell_y")})
            |  <> (${Cube.pipSql("cell_x", "cell_y", 1, "h")})
            |GROUP BY zone_id ORDER BY zone_id""".stripMargin)) { (s, d) =>
-      graft.ext.Ext.register(s)
       Cube.rasterize(Cube.cells(s, d), Cube.polyZonesHole(s, d))
         .filter(expr(s"(${Cube.pipExpr("cell_x", "cell_y")}) " +
           s"<> (${Cube.pipExpr("cell_x", "cell_y", 1, "h")})"))
@@ -903,7 +899,6 @@ object Zonal {
     // unnested vertex table — parity across all rings, so the hole
     // subtracts with no containment bookkeeping.
     "zonal_stats_polygon_n" -> Q(eoOracleSql(Cube.NGonRings)) { (s, d) =>
-      graft.ext.Ext.register(s)
       Cube.rasterize(Cube.cells(s, d), Cube.wkbZones(s, d, Cube.NGonRings))
         .filter(expr("point_in_wkb(cell_x, cell_y, geom)"))
         .groupBy(col("zone_id"))
@@ -914,7 +909,6 @@ object Zonal {
     // MultiPolygon WKB: two x-disjoint parts per zone, vertex counts
     // varying independently — even-odd parity across parts is the union.
     "zonal_stats_multipolygon" -> Q(eoOracleSql(Cube.MultiRings)) { (s, d) =>
-      graft.ext.Ext.register(s)
       Cube.rasterize(Cube.cells(s, d), Cube.wkbZones(s, d, Cube.MultiRings))
         .filter(expr("point_in_wkb(cell_x, cell_y, geom)"))
         .groupBy(col("zone_id"))
@@ -1555,7 +1549,6 @@ object Zonal {
          |  '{"type":"Feature","properties":{"zone_id":' || zone_id
          |    || '},"geometry":{"type":"Polygon","coordinates":' || coords || '}}' AS feature
          |FROM polys ORDER BY zone_id""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       val sfName = new java.io.File(d).getName
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_io/$sfName/sink_geojson"
       graft.core.Fs.rmTree(out)
@@ -1593,7 +1586,6 @@ object Zonal {
          |FROM verts v JOIN zones z ON v.zone_id = z.zone_id
          |GROUP BY v.zone_id, z.zone_id, z.zone_name
          |ORDER BY v.zone_id""".stripMargin) { (s, d) =>
-      graft.ext.Ext.register(s)
       val f = new java.io.File(d)
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_io/" +
         s"${f.getName}_${Integer.toHexString(f.getCanonicalPath.hashCode)}" +
@@ -1647,7 +1639,6 @@ object Zonal {
            |CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS k) ss
            |WHERE ${Cube.pipSql("8 * cell_x + 2 * (k % 4) + 1", "8 * cell_y + 2 * (k // 4) + 1", 8)}
            |GROUP BY zone_id ORDER BY zone_id""".stripMargin)) { (s, d) =>
-      graft.ext.Ext.register(s)
       Cube.rasterize(Cube.cells(s, d), Cube.polyZones(s, d))
         .withColumn("k", explode(sequence(lit(0), lit(15))))
         .filter(expr(Cube.pipExpr(
@@ -1671,7 +1662,6 @@ object Zonal {
     // (broadcast tile equi-join) + one map-side expression + two-phase
     // hash agg — nothing here changes at 100 TB.
     "zonal_stats_coverage_exact" -> Q(CoverExactSql) { (s, d) =>
-      graft.ext.Ext.register(s)
       Cube.rasterize(Cube.cells(s, d), Cube.polyZones(s, d))
         .withColumn("num", expr(
           "cell_cover(cell_x, cell_y, vx0, vy0, vx1, vy1, vx2, vy2, vx3, vy3)"))
@@ -1693,7 +1683,6 @@ object Zonal {
     // interior −). Runs on the x-disjoint multipolygon family — the
     // OGC-valid one, where the signed ring sum IS the even-odd area.
     "zonal_stats_coverage_wkb" -> Q(CoverWkbSql) { (s, d) =>
-      graft.ext.Ext.register(s)
       Cube.rasterize(Cube.cells(s, d), Cube.wkbZones(s, d, Cube.MultiRings))
         .withColumn("num", expr("cell_cover_wkb(cell_x, cell_y, geom)"))
         .withColumn("v100", (col("value").cast(DecimalType(18, 2)) * 100).cast("long"))
@@ -1713,7 +1702,6 @@ object Zonal {
     // clipped coverage weights. Raster values are integral, so the
     // weighting is pure BIGINT until one final IEEE divide.
     "zonal_raster_coverage" -> Q(RasterCoverSql) { (s, d) =>
-      graft.ext.Ext.register(s)
       Cube.rasterize(Raster.scanTiff(s, Raster.fixturePath()),
           Cube.wkbZones(s, d, Cube.MultiRings))
         .withColumn("num", expr("cell_cover_wkb(cell_x, cell_y, geom)"))

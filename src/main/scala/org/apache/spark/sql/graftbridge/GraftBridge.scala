@@ -48,19 +48,26 @@ object GraftBridge {
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID
 
-  /** Idempotently add a planner strategy to a live session. */
+  /** Idempotently add a planner strategy to a live session: a no-op when
+    * the session's planner already holds it, from an earlier call or from
+    * the session's `SparkSessionExtensions`.
+    */
   def ensureStrategy(spark: SparkSession, s: SparkStrategy): Unit = {
     val cs = spark.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraStrategies.contains(s))
+    if (!cs.sessionState.planner.strategies.contains(s))
       cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ s
   }
 
-  /** Idempotently add an optimizer rule to a live session. */
+  /** Idempotently add an optimizer rule to a live session: a no-op when the
+    * session already runs it, from an earlier call or from the session's
+    * `SparkSessionExtensions`.
+    */
   def ensureOptimization(
       spark: SparkSession,
       r: org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]): Unit = {
     val cs = spark.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraOptimizations.contains(r))
+    if (!cs.experimental.extraOptimizations.contains(r) &&
+        !cs.sessionState.optimizer.extendedOperatorOptimizationRules.contains(r))
       cs.experimental.extraOptimizations = cs.experimental.extraOptimizations :+ r
   }
 }

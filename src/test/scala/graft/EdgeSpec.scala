@@ -85,7 +85,6 @@ class EdgeSpec extends SparkSuite {
   }
 
   test("point_in_wkb fails loudly on fractional WKB coordinates, never truncates") {
-    graft.ext.Ext.register(spark)
     // hand-built little-endian WKB Polygon, one ring
     def wkbSquare(x0: Double, y0: Double, side: Double): Array[Byte] = {
       val pts = Seq((x0, y0), (x0 + side, y0), (x0 + side, y0 + side), (x0, y0 + side), (x0, y0))
@@ -114,7 +113,6 @@ class EdgeSpec extends SparkSuite {
   }
 
   test("cosine_sim of a vector with itself is 1; orthogonal vectors 0") {
-    graft.ext.Ext.register(spark)
     val df = Seq(
       (Array(1f, 0f), Array(1f, 0f)),
       (Array(1f, 0f), Array(0f, 1f))).toDF("a", "b")

@@ -11,7 +11,6 @@ class ExtSpec extends SparkSuite {
   import spark.implicits._
 
   test("cosine_sim expression is bit-identical to the composed zip_with/aggregate fold") {
-    Ext.register(spark)
     val emb = graft.core.Tables.embeddings(spark, sf).limit(50)
     val composed =
       """(aggregate(zip_with(a.embedding, b.embedding, (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)
@@ -25,7 +24,6 @@ class ExtSpec extends SparkSuite {
   }
 
   test("sorted_intersect_count equals size(array_intersect) on sorted distinct arrays") {
-    Ext.register(spark)
     val docs = graft.core.Tables.documents(spark, sf).limit(40)
       .withColumn("bg", sort_array(array_distinct(split(lower(col("text")), " "))))
       .select("doc_id", "bg")
@@ -41,7 +39,6 @@ class ExtSpec extends SparkSuite {
     // 'ab cd' → ((((0·31+97)·31+98)·31+32)·31+99)·31+100 mod 1e9+7 =
     // 92534976 — the same value DuckDB's list_reduce twin returns
     // (verified against duckdb 1.x during development)
-    graft.ext.Ext.register(spark)
     val got = Seq("ab cd", "", "a").toDF("s")
       .selectExpr("poly_hash(s)").collect().map(_.getLong(0))
     assert(got.toSeq == Seq(92534976L, 0L, 97L))
@@ -52,7 +49,6 @@ class ExtSpec extends SparkSuite {
 
   test("poly_hash_shingles: rolling hash equals per-window poly_hash, edge cases") {
     import spark.implicits._
-    graft.ext.Ext.register(spark)
     // random-ish deterministic text incl. repeats and non-ASCII BMP
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog the quick brown fox",
@@ -72,7 +68,6 @@ class ExtSpec extends SparkSuite {
   }
 
   test("point_in_quad expression ≡ the composed pipSql predicate on every grid point") {
-    graft.ext.Ext.register(spark)
     // all zones × all 64×64 grid points, both spellings side by side
     val pts = spark.range(64).selectExpr("CAST(id AS INT) AS gx")
       .crossJoin(spark.range(64).selectExpr("CAST(id AS INT) AS gy"))
@@ -166,7 +161,6 @@ class ExtSpec extends SparkSuite {
   }
 
   test("byte_stats matches hand-computed values") {
-    Ext.register(spark)
     val r = Seq("abc").toDF("s")
       .select(expr("byte_stats(CAST(s AS BINARY))").as("f"))
       .select("f.n_bytes", "f.mean_byte", "f.min_byte", "f.max_byte")
@@ -237,7 +231,6 @@ class ExtSpec extends SparkSuite {
   }
 
   test("lsh_bucket ≡ the legacy relational spelling (posexplode + plane join + two aggs)") {
-    Ext.register(spark)
     val emb = graft.core.Tables.embeddings(spark, sf)
     // plane components: driver-side derivation vs the portable SQL
     // universal-hash spelling (r14 — the same expression the DuckDB
@@ -275,7 +268,6 @@ class ExtSpec extends SparkSuite {
 
   test("argmax_cosine ≡ the window-argmax centroid assignment") {
     import org.apache.spark.sql.expressions.Window
-    Ext.register(spark)
     val emb = graft.core.Tables.embeddings(spark, sf)
     val centroids = emb
       .select(col("label").as("c_label"), posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -410,5 +402,61 @@ class ExtSpec extends SparkSuite {
     // charlie delta echo" (df=10000 > 64) and the two grams ending in
     // unique$i (df=1): no pair survives
     assert(out.isEmpty, s"stop-gram must pair nothing, got ${out.length} rows")
+  }
+
+  test("Q.build installs the functions, the TopK strategy and the TopK rule once per session") {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import graft.plans.{TopKRewriteRule, TopKStrategy}
+    val replaced = new java.util.concurrent.atomic.AtomicInteger
+    val app = new AbstractAppender("ext-spec-replaced", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("replaced a previously registered function"))
+          replaced.incrementAndGet()
+    }
+    app.start()
+    val registryLog = LoggerContext.getContext(false)
+      .getLogger("org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry")
+      .asInstanceOf[CoreLogger]
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    SparkEntry.queries("topk_rewrite")(fresh, sf)
+    registryLog.addAppender(app)
+    try {
+      SparkEntry.queries("topk_rewrite")(fresh, sf)
+      assert(replaced.get == 0, s"the second build replaced ${replaced.get} functions")
+      // the appender does see a replacement when one happens
+      registry.createOrReplaceTempFunction("cosine_sim", Ext.functions.head._2, "built-in")
+      assert(replaced.get == 1)
+    } finally {
+      registryLog.removeAppender(app)
+      app.stop()
+    }
+    val missing = Ext.functions.map(_._1).filterNot(n => registry.functionExists(FunctionIdentifier(n)))
+    assert(Ext.functions.size == 14 && missing.isEmpty, s"missing: $missing")
+    assert(fresh.experimental.extraStrategies.count(_ == TopKStrategy) == 1)
+    assert(fresh.experimental.extraOptimizations.count(_ == TopKRewriteRule) == 1)
+  }
+
+  test("source guard: only Q.build installs extensions in src/main") {
+    val call = """\b(Ext\.register|ensureStrategy|ensureOptimization)\(""".r
+    val allowed = Set("graft/core/Q.scala", "graft/ext/Ext.scala",
+      "org/apache/spark/sql/graftbridge/GraftBridge.scala")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
+    import scala.jdk.CollectionConverters._
+    val hits = java.nio.file.Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val rel = root.relativize(f).toString
+      if (allowed(rel)) Nil
+      else java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if call.findFirstIn(line).isDefined &&
+            !line.trim.startsWith("*") && !line.trim.startsWith("//") =>
+          s"src/main/scala/$rel:${i + 1}: ${line.trim}"
+      }
+    }.toList
+    assert(hits.isEmpty, hits.mkString(
+      "extension install outside Q.build (graft.ext.Ext.register is the one installer):\n", "\n", ""))
   }
 }

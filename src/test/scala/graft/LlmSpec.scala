@@ -40,7 +40,6 @@ class LlmSpec extends SparkSuite {
   }
 
   test("sign-band LSH: candidates are a strict subdivision of label blocks, recall measured vs brute force") {
-    graft.ext.Ext.register(spark)
     val emb = graft.core.Tables.embeddings(spark, sf)
     val n = emb.count()
     val cand = Sim.signCandidates(spark, sf)
@@ -75,7 +74,6 @@ class LlmSpec extends SparkSuite {
     // the judge-recorded default-config recall (94.6%), so widening the
     // bands provably does NOT cost recall when the count follows the
     // 1-(1-p^w)^B identity sigConfigFor encodes.
-    graft.ext.Ext.register(spark)
     val sf01 = "/root/testdata/sf0.01"
     val emb = graft.core.Tables.embeddings(spark, sf01)
     val n = emb.count()
@@ -193,7 +191,6 @@ class LlmSpec extends SparkSuite {
   }
 
   test("arith minhash: exact dups collide on every band; candidates stay sparse on the corpus") {
-    graft.ext.Ext.register(spark)
     // identical docs → identical poly-hash minhash signature → all bands
     val sig = Dedup.arithMinhash(docs).collect()
       .map(r => r.getLong(0) -> r.toSeq.tail).toMap
@@ -252,7 +249,6 @@ class LlmSpec extends SparkSuite {
   }
 
   test("CDC chunking: an insertion perturbs at most two chunks, the rest resync") {
-    graft.ext.Ext.register(spark)
     // 200 varied tokens -> ~25 content-defined boundaries; doc 2 inserts
     // one token mid-stream. Boundaries depend only on token content, so
     // every chunk strictly before the insertion is identical, the chunk

@@ -142,6 +142,14 @@ class PlanShapeSpec extends SparkSuite {
     assert(df.exceptAll(viaWindow).isEmpty && viaWindow.exceptAll(df).isEmpty)
   }
 
+  test("the rewrite rule is part of every graft session, not of the ids that ran before") {
+    // built first in a fresh session: no topk id has run in it
+    val opt = SparkEntry.queries("pipeline_dedup_keep_best")(spark.newSession(), sf)
+      .queryExecution.optimizedPlan
+    assert(opt.collect { case t: graft.plans.TopKPerGroupPlan => t }.nonEmpty,
+      s"rewrite rule did not fire in a fresh session:\n$opt")
+  }
+
   test("TopKPerGroup edges: k ≥ group size and null order values match the window form") {
     import spark.implicits._
     val data = Seq((1, Option(5)), (1, Option.empty[Int]), (1, Option(3)),
@@ -158,9 +166,6 @@ class PlanShapeSpec extends SparkSuite {
   }
 
   test("TopKRewriteRule guards: rank kept → no rewrite; rk=1 and rk<=0 handled") {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.ensureStrategy(spark, graft.plans.TopKStrategy)
-    GraftBridge.ensureOptimization(spark, graft.plans.TopKRewriteRule)
     import spark.implicits._
     val data = Seq((1, 10), (1, 20), (1, 30), (2, 5)).toDF("g", "v")
     val w = Window.partitionBy("g").orderBy(col("v").desc, col("g"))
@@ -185,9 +190,6 @@ class PlanShapeSpec extends SparkSuite {
   }
 
   test("TopK global (no group keys): AllTuples plan, native and rewrite match sort+limit") {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.ensureStrategy(spark, graft.plans.TopKStrategy)
-    GraftBridge.ensureOptimization(spark, graft.plans.TopKRewriteRule)
     import spark.implicits._
     val data = Seq((1, 10), (2, 40), (3, 20), (4, 30), (5, 25)).toDF("id", "v")
     val expected = data.orderBy(col("v").desc, col("id")).limit(2)

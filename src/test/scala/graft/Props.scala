@@ -12,11 +12,16 @@ object Props extends Properties("graft") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.fallback", "false")
+      .getOrCreate()
+    graft.ext.Ext.register(s)
+    s
+  }
 
   import scala.jdk.CollectionConverters._
   private def df(rows: List[(Int, Int)]) = {
@@ -115,7 +120,6 @@ object Props extends Properties("graft") {
     forAll(Gen.listOfN(8, asciiGen)) { strs =>
       val s = spark
       import s.implicits._
-      graft.ext.Ext.register(s)
       def ref(str: String): Long =
         str.codePoints().toArray.foldLeft(0L)((h, c) => (31L * h + c) % 1000000007L)
       val got = strs.toDF("s").selectExpr("poly_hash(s)").collect().map(_.getLong(0))

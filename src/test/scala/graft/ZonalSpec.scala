@@ -95,7 +95,6 @@ class ZonalSpec extends SparkSuite {
   }
 
   test("WKB zones: valid structure (Polygon/MultiPolygon headers, closed rings, hole count)") {
-    graft.ext.Ext.register(spark)
     def firstGeom(rings: Seq[Cube.RingSpec], zid: Int): Array[Byte] =
       Cube.wkbZones(spark, sf, rings).filter(col("zone_id") === zid)
         .select("geom").head.getAs[Array[Byte]](0)
@@ -117,7 +116,6 @@ class ZonalSpec extends SparkSuite {
   }
 
   test("point_in_wkb ≡ crossing parity over the unnested vertex table (both families)") {
-    graft.ext.Ext.register(spark)
     val pts = spark.range(64).selectExpr("CAST(id AS INT) AS gx")
       .crossJoin(spark.range(64).selectExpr("CAST(id AS INT) AS gy"))
     Seq(Cube.NGonRings, Cube.MultiRings).foreach { rings =>
@@ -157,7 +155,6 @@ class ZonalSpec extends SparkSuite {
     val (e, g) = (j.agg(sum("env_n")).head.getLong(0), j.agg(sum("ngon_n")).head.getLong(0))
     assert(g > 0 && g < e, s"n-gon refinement did not bite: ngon=$g env=$e")
     // multipolygon counts = sum of the two parts measured separately
-    graft.ext.Ext.register(spark)
     def partCount(part: Int) = {
       val one = Cube.MultiRings.filter(_.part == part).map(_.copy(part = 0))
       Cube.rasterize(Cube.cells(spark, sf), Cube.wkbZones(spark, sf, one))
