@@ -462,8 +462,6 @@ object Gpkg {
       implicit enc: org.apache.spark.sql.Encoder[T]): org.apache.spark.sql.Dataset[T] = {
     import s.implicits._
     s.createDataset(refs)
-      .repartition(math.max(1, math.min(refs.size,
-        s.sparkContext.defaultParallelism)))
       .mapPartitions { it =>
         it.toArray.groupBy(_.path).iterator.flatMap { case (p, rs) =>
           val hp = new org.apache.hadoop.fs.Path(p)
@@ -847,8 +845,6 @@ object Gpkg {
     val cands = rtreeCandidates(db, table, geomCol, wx0, wx1, wy0, wy1)
     val refs = windowLeafRefs(db, path, ti, cands)
     s.createDataset(refs)
-      .repartition(math.max(1, math.min(math.max(1, refs.size),
-        s.sparkContext.defaultParallelism)))
       .flatMap { ref =>
         val rdb = DbMeta(ref.path, ref.pageSize, ref.reserved)
         leafRecords(rdb, ref.page).flatMap { case (rowid, payload) =>

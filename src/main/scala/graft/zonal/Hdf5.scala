@@ -1408,24 +1408,7 @@ object Hdf5 {
   private def scanRefs(s: SparkSession, refs: Seq[H5ChunkRef]) = {
     import s.implicits._
     s.createDataset(refs)
-      .repartition(math.max(1, math.min(math.max(1, refs.size),
-        s.sparkContext.defaultParallelism)))
       .flatMap(readChunk _)
-  }
-
-  /** Chunk-parallel scan of one 2-D netCDF-4/HDF5 variable → long-form
-    * `(cell_x, cell_y, value)` cells, the layout the zonal family
-    * consumes.
-    */
-  def scanNetcdf4(s: SparkSession, path: String, varName: String): DataFrame = {
-    import s.implicits._
-    val m = readMeta(path, varName)
-    require(m.epochs == 0,
-      s"$path: '$varName' is rank-${if (m.levels > 0) "4" else "3"} — " +
-        "scan it with " +
-        (if (m.levels > 0) "scanNetcdf4Cube4d" else "scanNetcdf4Epochs"))
-    scanRefs(s, chunkRefs(path, m)).map { case (x, y, _, _, v) => (x, y, v) }
-      .toDF("cell_x", "cell_y", "value")
   }
 
   /** Scan a 1-D COORDINATE dataset (r16 — the axis-label vectors a
@@ -1436,25 +1419,9 @@ object Hdf5 {
     val m = readMeta(path, name)
     require(m.height == 1 && m.epochs == 0,
       s"$path: '$name' is ${m.height}×${m.width} — not a 1-D coordinate vector")
-    scanNetcdf4(s, path, name)
-      .select(col("cell_x").as("idx"), col("value").as("coord"))
-  }
-
-  /** Cube scan WITH axis labels (r16 — the netCDF-4 twin of
-    * [[Netcdf.scanNetcdfCoords]], completing the coordinate story
-    * across all three cube formats): two BROADCAST hash joins on the
-    * integer index, the chunk plan untouched at any file size.
-    */
-  def scanNetcdf4Coords(s: SparkSession, path: String, varName: String,
-      xCoord: String = "x", yCoord: String = "y"): DataFrame = {
-    val cube = scanNetcdf4(s, path, varName)
-    val xs = scanNetcdf4Coord(s, path, xCoord)
-      .select(col("idx").as("cell_x"), col("coord").as("x_coord"))
-    val ys = scanNetcdf4Coord(s, path, yCoord)
-      .select(col("idx").as("cell_y"), col("coord").as("y_coord"))
-    cube.join(broadcast(xs), Seq("cell_x")).join(broadcast(ys), Seq("cell_y"))
-      .select(col("cell_x"), col("cell_y"),
-        col("x_coord"), col("y_coord"), col("value"))
+    import s.implicits._
+    scanRefs(s, chunkRefs(path, m)).map { case (x, _, _, _, v) => (x, v) }
+      .toDF("idx", "coord")
   }
 
   /** Enumerate every RANK-2 NUMERIC dataset under the root group
@@ -1521,8 +1488,6 @@ object Hdf5 {
       chunkRefs(path, readMeta(path, n)).map(n -> _)
     }
     s.createDataset(refs)
-      .repartition(math.max(1, math.min(refs.size,
-        s.sparkContext.defaultParallelism)))
       .flatMap { case (n, cr) =>
         readChunk(cr).map { case (x, y, _, _, v) => (x, y, n, v) } }
       .toDF("cell_x", "cell_y", "var_name", "value")
@@ -1540,12 +1505,10 @@ object Hdf5 {
     require(names.nonEmpty, s"$path: no rank-3 numeric datasets in the file")
     val refs: Seq[(String, H5ChunkRef)] = names.flatMap { n =>
       val m = readMeta(path, n)
-      require(m.levels == 0, s"$path: '$n' is rank-4 — scan with scanNetcdf4Cube4d")
+      require(m.levels == 0, s"$path: '$n' is rank-4 — scan it through graft.zonal.Hdf5Source")
       chunkRefs(path, m).map(n -> _)
     }
     s.createDataset(refs)
-      .repartition(math.max(1, math.min(refs.size,
-        s.sparkContext.defaultParallelism)))
       .flatMap { case (n, cr) =>
         readChunk(cr).map { case (x, y, _, t, v) => (x, y, t, n, v) } }
       .toDF("cell_x", "cell_y", "epoch", "var_name", "value")
@@ -1583,29 +1546,6 @@ object Hdf5 {
     val scale = Netcdf.cfTimeScale(units, tm.strAttrs.get("calendar"),
       s"$path:$timeVar")
     (h5CoordAxis(path, timeVar), scale)
-  }
-
-  def scanNetcdf4Time(s: SparkSession, path: String, varName: String,
-      timeVar: String = "t",
-      window: Option[(java.sql.Timestamp, java.sql.Timestamp)] = None): DataFrame = {
-    import s.implicits._
-    val (raw, scale) = h5TimeAxis(path, timeVar)
-    val m = readMeta(path, varName)
-    require(m.epochs > 0 && m.levels == 0,
-      s"$path: '$varName' is not a rank-3 (t, y, x) cube" +
-        (if (m.levels > 0) " — use scanNetcdf4Time4d" else ""))
-    require(m.epochs == raw.length,
-      s"$path: time axis has ${raw.length} values but $varName has ${m.epochs} epochs")
-    val kept = Netcdf.cfEpochLabels(raw, scale, window, s"$path:$timeVar")
-    val labels = kept.map { case (i, u) => (i, Netcdf.microsTimestamp(u)) }
-      .toDF("epoch", "t_ts")
-    val keep = kept.map(_._1).toSet
-    val refs = chunkRefs(path, m).filter(r =>
-      (r.ot until math.min(r.ot + r.chunkT, m.epochs)).exists(keep))
-    scanRefs(s, refs).map { case (x, y, _, t, v) => (x, y, t, v) }
-      .toDF("cell_x", "cell_y", "epoch", "value")
-      .join(broadcast(labels), Seq("epoch"))
-      .select(col("epoch"), col("t_ts"), col("cell_x"), col("cell_y"), col("value"))
   }
 
   /** One member of a multi-file concat (r18): decoded axis labels +
@@ -1686,48 +1626,12 @@ object Hdf5 {
         .map((off, _))
     }
     s.createDataset(tagged)
-      .repartition(math.max(1, math.min(math.max(1, tagged.size),
-        s.sparkContext.defaultParallelism)))
       .flatMap { case (off, r) =>
         readChunk(r).map { case (x, y, _, t, v) => (x, y, off + t, v) }
       }
       .toDF("cell_x", "cell_y", "epoch", "value")
       .join(broadcast(labels.toDF("epoch", "t_ts")), Seq("epoch"))
       .select(col("epoch"), col("t_ts"), col("cell_x"), col("cell_y"), col("value"))
-  }
-
-  /** RANK-4 CF TIME decode (r18 — the r17 verdict's missing #4: the
-    * standard pressure-level (t, level, y, x) shape could scan via
-    * scan_netcdf4_4d but could not get real timestamps or
-    * timestamp-windowed pruning; scanNetcdf4Time required rank 3): the
-    * time coordinate decodes through the same shared grammar (units +
-    * calendar), the LEVEL axis is surfaced alongside the labels, and a
-    * timestamp window prunes the rank-4 CHUNK MANIFEST on the t axis
-    * before any data read.
-    * Output: `(epoch, t_ts, level, cell_x, cell_y, value)`.
-    */
-  def scanNetcdf4Time4d(s: SparkSession, path: String, varName: String,
-      timeVar: String = "t",
-      window: Option[(java.sql.Timestamp, java.sql.Timestamp)] = None): DataFrame = {
-    import s.implicits._
-    val (raw, scale) = h5TimeAxis(path, timeVar)
-    val m = readMeta(path, varName)
-    require(m.levels > 0,
-      s"$path: '$varName' is not a rank-4 (t, level, y, x) cube — " +
-        "use scanNetcdf4Time for rank 3")
-    require(m.epochs == raw.length,
-      s"$path: time axis has ${raw.length} values but $varName has ${m.epochs} epochs")
-    val kept = Netcdf.cfEpochLabels(raw, scale, window, s"$path:$timeVar")
-    val labels = kept.map { case (i, u) => (i, Netcdf.microsTimestamp(u)) }
-      .toDF("epoch", "t_ts")
-    val keep = kept.map(_._1).toSet
-    val refs = chunkRefs(path, m).filter(r =>
-      (r.ot until math.min(r.ot + r.chunkT, m.epochs)).exists(keep))
-    scanRefs(s, refs)
-      .toDF("cell_x", "cell_y", "level", "epoch", "value")
-      .join(broadcast(labels), Seq("epoch"))
-      .select(col("epoch"), col("t_ts"), col("level"),
-        col("cell_x"), col("cell_y"), col("value"))
   }
 
   /** Read a FIXED-LENGTH STRING dataset (r16 — HDF5 datatype class 3:
@@ -1758,7 +1662,7 @@ object Hdf5 {
       val dclass = dt(0) & 0x0f
       require(dclass == 3,
         s"$path: '$varName' datatype class $dclass is not STRING (3) — " +
-          "numeric variables scan via scanNetcdf4")
+          "numeric variables scan via graft.zonal.Hdf5Source")
       val padClass = dt(1) & 0x0f
       require(padClass <= 2,
         s"$path: string pad class $padClass unsupported (0/1/2)")
@@ -1803,7 +1707,7 @@ object Hdf5 {
     import s.implicits._
     val m = readMeta(path, varName)
     require(m.epochs == 0,
-      s"$path: '$varName' is rank-3 — scan it with scanNetcdf4Epochs")
+      s"$path: '$varName' is rank-3 — scan it through graft.zonal.Hdf5Source")
     require(m.hasFill,
       s"$path: '$varName' declares no fill value — nothing to mask")
     val fillV = m.fill
@@ -1828,7 +1732,7 @@ object Hdf5 {
     require(m.epochs == 0, s"$path: '$varName' is rank-3/4 — unpack the 2-D face")
     val scale = m.attrs.getOrElse("scale_factor", sys.error(
       s"$path: '$varName' declares no scale_factor attribute — not a " +
-        "packed variable (scan it with scanNetcdf4)"))
+        "packed variable (scan it through graft.zonal.Hdf5Source)"))
     val offset = m.attrs.getOrElse("add_offset", 0.0)
     val (hasFill, fillV) = (m.hasFill, m.fill)
     val raw = scanRefs(s, chunkRefs(path, m))
@@ -1839,88 +1743,6 @@ object Hdf5 {
       .toDF("cell_x", "cell_y", "value")
       .select(col("cell_x"), col("cell_y"),
         (col("value") * lit(scale) + lit(offset)).as("value"))
-  }
-
-  /** NATIVE rank-3 scan (r12): the whole (t, y, x) variable as ONE
-    * DataFrame `(cell_x, cell_y, epoch, value)`, one task per chunk
-    * (or per (t, stripe) when contiguous) — no upstream slicing.
-    */
-  def scanNetcdf4Epochs(s: SparkSession, path: String, varName: String): DataFrame = {
-    import s.implicits._
-    val m = readMeta(path, varName)
-    require(m.epochs > 0,
-      s"$path: '$varName' is rank-2 — scan it with scanNetcdf4")
-    require(m.levels == 0,
-      s"$path: '$varName' is rank-4 — scan it with scanNetcdf4Cube4d")
-    scanRefs(s, chunkRefs(path, m))
-      .map { case (x, y, _, t, v) => (x, y, t, v) }
-      .toDF("cell_x", "cell_y", "epoch", "value")
-  }
-
-  /** NATIVE rank-4 scan (r13): the whole (t, level, y, x) variable as
-    * ONE DataFrame `(cell_x, cell_y, level, epoch, value)`, one task
-    * per chunk (or per (t, level, stripe) when contiguous) — no
-    * upstream slicing.
-    */
-  def scanNetcdf4Cube4d(s: SparkSession, path: String, varName: String): DataFrame = {
-    val m = readMeta(path, varName)
-    require(m.levels > 0,
-      s"$path: '$varName' is rank-${if (m.epochs > 0) 3 else 2} — scan " +
-        "it with " + (if (m.epochs > 0) "scanNetcdf4Epochs" else "scanNetcdf4"))
-    scanRefs(s, chunkRefs(path, m))
-      .toDF("cell_x", "cell_y", "level", "epoch", "value")
-  }
-
-  /** TIME + LEVEL + spatial window over the rank-4 variable (the
-    * xarray `cube.sel(time=, level=, x=, y=)` query on HDF5): the
-    * chunk manifest prunes in ALL FOUR axes before any byte is read;
-    * a residual filter trims boundary chunks exactly.
-    */
-  def scanNetcdf4Cube4dWindow(s: SparkSession, path: String, varName: String,
-      t0: Int, t1: Int, l0: Int, l1: Int,
-      x0: Int, x1: Int, y0: Int, y1: Int): DataFrame = {
-    val m = readMeta(path, varName)
-    require(m.levels > 0, s"$path: '$varName' is not rank-4 — use scanNetcdf4Window")
-    scanRefs(s, windowRefs4d(path, m, t0, t1, l0, l1, x0, x1, y0, y1))
-      .toDF("cell_x", "cell_y", "level", "epoch", "value")
-      .filter(col("cell_x").between(x0, x1) && col("cell_y").between(y0, y1) &&
-        col("level").between(l0, l1) && col("epoch").between(t0, t1))
-  }
-
-  /** The 4-axis pruned manifest (exposed for Hdf5Spec's count assert). */
-  private[graft] def windowRefs4d(path: String, m: H5Meta,
-      t0: Int, t1: Int, l0: Int, l1: Int,
-      x0: Int, x1: Int, y0: Int, y1: Int): Seq[H5ChunkRef] = {
-    require(!m.contiguous,
-      s"$path: 4-axis window scans need a chunked dataset")
-    chunkRefs(path, m).filter(r =>
-      r.ot <= t1 && r.ot + r.chunkT > t0 && r.ol <= l1 && r.ol + r.chunkL > l0 &&
-      r.ox <= x1 && r.ox + r.cols > x0 && r.oy <= y1 && r.oy + r.rows > y0)
-  }
-
-  /** WINDOW scan of a chunked 2-D variable: the chunk manifest prunes
-    * to chunks overlapping the pixel window BEFORE any byte is read
-    * (the COG-window pattern on HDF5); a residual filter trims
-    * boundary chunks exactly.
-    */
-  def scanNetcdf4Window(s: SparkSession, path: String, varName: String,
-      x0: Int, x1: Int, y0: Int, y1: Int): DataFrame = {
-    import s.implicits._
-    val m = readMeta(path, varName)
-    require(m.epochs == 0, s"$path: '$varName' is rank-3/4 — window the 2-D face")
-    scanRefs(s, windowRefs(path, m, x0, x1, y0, y1))
-      .map { case (x, y, _, _, v) => (x, y, v) }
-      .toDF("cell_x", "cell_y", "value")
-      .filter(col("cell_x").between(x0, x1) && col("cell_y").between(y0, y1))
-  }
-
-  /** The pruned window manifest (exposed for Hdf5Spec's count assert). */
-  private[graft] def windowRefs(path: String, m: H5Meta,
-      x0: Int, x1: Int, y0: Int, y1: Int): Seq[H5ChunkRef] = {
-    require(!m.contiguous,
-      s"$path: window scans need a chunked dataset (contiguous prunes by stripe)")
-    chunkRefs(path, m).filter(r =>
-      r.ox <= x1 && r.ox + r.cols > x0 && r.oy <= y1 && r.oy + r.rows > y0)
   }
 
   // ---- writer (fixtures + the sink direction) ----
@@ -3880,7 +3702,7 @@ object Hdf5 {
     "scan_netcdf4" -> Q(
       s"""SELECT cell_x, cell_y, value FROM ($H5CellsSql)
          |ORDER BY cell_x, cell_y""".stripMargin) { (s, _) =>
-      scanNetcdf4(s, fixturePath(), "v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixturePath())
         .select(col("cell_x"), col("cell_y"), col("value"))
         .orderBy("cell_x", "cell_y")
     },
@@ -3896,7 +3718,7 @@ object Hdf5 {
     "scan_netcdf4_latest" -> Q(
       s"""SELECT cell_x, cell_y, value FROM ($H5CellsSql)
          |ORDER BY cell_x, cell_y""".stripMargin) { (s, _) =>
-      scanNetcdf4(s, fixtureV2Path(), "v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixtureV2Path())
         .select(col("cell_x"), col("cell_y"), col("value"))
         .orderBy("cell_x", "cell_y")
     },
@@ -3912,7 +3734,7 @@ object Hdf5 {
     "scan_netcdf4_earray" -> Q(
       s"""SELECT cell_x, cell_y, value FROM ($H5CellsSql)
          |ORDER BY cell_x, cell_y""".stripMargin) { (s, _) =>
-      scanNetcdf4(s, fixtureEaPath(), "v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixtureEaPath())
         .select(col("cell_x"), col("cell_y"), col("value"))
         .orderBy("cell_x", "cell_y")
     },
@@ -3940,7 +3762,7 @@ object Hdf5 {
     "scan_netcdf4_fletcher" -> Q(
       s"""SELECT cell_x, cell_y, value FROM ($H5CellsSql)
          |ORDER BY cell_x, cell_y""".stripMargin) { (s, _) =>
-      scanNetcdf4(s, fixtureFletcherPath(), "v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixtureFletcherPath())
         .select(col("cell_x"), col("cell_y"), col("value"))
         .orderBy("cell_x", "cell_y")
     },
@@ -3954,7 +3776,7 @@ object Hdf5 {
     "scan_netcdf4_softlink" -> Q(
       s"""SELECT cell_x, cell_y, value FROM ($H5CellsSql)
          |ORDER BY cell_x, cell_y""".stripMargin) { (s, _) =>
-      scanNetcdf4(s, fixtureSoftPath(), "v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixtureSoftPath())
         .select(col("cell_x"), col("cell_y"), col("value"))
         .orderBy("cell_x", "cell_y")
     },
@@ -3968,7 +3790,7 @@ object Hdf5 {
     "scan_netcdf4_btree2" -> Q(
       s"""SELECT cell_x, cell_y, value FROM ($H5CellsSql)
          |ORDER BY cell_x, cell_y""".stripMargin) { (s, _) =>
-      scanNetcdf4(s, fixtureBt2Path(), "v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixtureBt2Path())
         .select(col("cell_x"), col("cell_y"), col("value"))
         .orderBy("cell_x", "cell_y")
     },
@@ -3996,7 +3818,8 @@ object Hdf5 {
          |  CAST(40.0 + 0.25 * cell_y AS DOUBLE) AS y_coord,
          |  value FROM ($H5CellsSql)
          |ORDER BY cell_x, cell_y""".stripMargin) { (s, _) =>
-      scanNetcdf4Coords(s, fixtureCoordsPath(), "v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").option("coords", "x,y")
+        .load(fixtureCoordsPath())
         .select(col("cell_x"), col("cell_y"),
           col("x_coord"), col("y_coord"), col("value"))
         .orderBy("cell_x", "cell_y")
@@ -4041,7 +3864,7 @@ object Hdf5 {
     "scan_netcdf4_dense" -> Q(
       s"""SELECT cell_x, cell_y, value FROM ($H5CellsSql)
          |ORDER BY cell_x, cell_y""".stripMargin) { (s, _) =>
-      scanNetcdf4(s, fixtureDensePath(), "v105")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v105").load(fixtureDensePath())
         .select(col("cell_x"), col("cell_y"), col("value"))
         .orderBy("cell_x", "cell_y")
     },
@@ -4064,7 +3887,7 @@ object Hdf5 {
     "scan_netcdf4_group" -> Q(
       s"""SELECT cell_x, cell_y, value FROM ($H5CellsSql)
          |ORDER BY cell_x, cell_y""".stripMargin) { (s, _) =>
-      scanNetcdf4(s, fixtureGroupPath(), "g/v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "g/v").load(fixtureGroupPath())
         .select(col("cell_x"), col("cell_y"), col("value"))
         .orderBy("cell_x", "cell_y")
     },
@@ -4116,7 +3939,10 @@ object Hdf5 {
          |ORDER BY epoch, cell_x, cell_y""".stripMargin) { (s, _) =>
       val win = (java.sql.Timestamp.from(java.time.Instant.parse("2020-03-01T16:00:00Z")),
         java.sql.Timestamp.from(java.time.Instant.parse("2020-03-02T06:00:00Z")))
-      scanNetcdf4Time(s, fixtureTimePath(), "v", "t", Some(win))
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").option("time", "t")
+        .load(fixtureTimePath())
+        .filter(col("t_ts").between(win._1, win._2))
+        .select(col("epoch"), col("t_ts"), col("cell_x"), col("cell_y"), col("value"))
         .orderBy("epoch", "cell_x", "cell_y")
     },
 
@@ -4220,7 +4046,11 @@ object Hdf5 {
          |ORDER BY epoch, level, cell_x, cell_y""".stripMargin) { (s, _) =>
       val win = (java.sql.Timestamp.from(java.time.Instant.parse("2020-03-01T16:00:00Z")),
         java.sql.Timestamp.from(java.time.Instant.parse("2020-03-01T23:00:00Z")))
-      scanNetcdf4Time4d(s, fixtureTime4dPath(), "v", "t", Some(win))
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").option("time", "t")
+        .load(fixtureTime4dPath())
+        .filter(col("t_ts").between(win._1, win._2))
+        .select(col("epoch"), col("t_ts"), col("level"),
+          col("cell_x"), col("cell_y"), col("value"))
         .orderBy("epoch", "level", "cell_x", "cell_y")
     },
 
@@ -4365,7 +4195,10 @@ object Hdf5 {
       val win = (java.sql.Timestamp.from(java.time.Instant.parse("2020-03-01T16:00:00Z")),
         java.sql.Timestamp.from(java.time.Instant.parse("2020-03-02T06:00:00Z")))
       Cube.rasterize(
-          scanNetcdf4Time(s, fixtureTimePath(), "v", "t", Some(win)),
+          s.read.format("graft.zonal.Hdf5Source").option("var", "v").option("time", "t")
+            .load(fixtureTimePath())
+            .filter(col("t_ts").between(win._1, win._2))
+            .select(col("epoch"), col("t_ts"), col("cell_x"), col("cell_y"), col("value")),
           Cube.zones(s, d))
         .groupBy(col("zone_id"), col("epoch"), col("t_ts"))
         .agg(count(lit(1)).as("n_cells"),
@@ -4397,26 +4230,26 @@ object Hdf5 {
     },
 
     // NATIVE rank-3 scan (r12): a (t, y, x) netCDF-4 variable as ONE
-    // DataFrame, one task per chunk, t-major plane decode, pad clipped
+    // DataFrame through the DSv2 face, t-major plane decode, pad clipped
     // in all three axes (the 5 % 2 = 1 edge t-chunk proves the t-clip)
     "scan_netcdf4_epochs" -> Q(
       s"""SELECT cell_x, cell_y, epoch, value FROM ($H5CubeCellsSql)
          |ORDER BY cell_x, cell_y, epoch""".stripMargin) { (s, _) =>
-      scanNetcdf4Epochs(s, fixtureCubePath(), "v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixtureCubePath())
         .select(col("cell_x"), col("cell_y"), col("epoch"), col("value"))
         .orderBy("cell_x", "cell_y", "epoch")
     },
 
     // NATIVE rank-4 scan (r14 — the r13 verdict's top ask: the reader
     // shipped in r13 but was unregistered dead code): a (t, level, y,
-    // x) netCDF-4 variable as ONE DataFrame, one task per chunk,
+    // x) netCDF-4 variable as ONE DataFrame through the DSv2 face,
     // C-order (t, level)-plane decode, pad clipped in all FOUR axes
     // (edge chunks along t (3 % 2) AND level (4 % 3) prove the
     // leading-axis clips)
     "scan_netcdf4_4d" -> Q(
       s"""SELECT cell_x, cell_y, level, epoch, value FROM ($H5Cube4dCellsSql)
          |ORDER BY cell_x, cell_y, level, epoch""".stripMargin) { (s, _) =>
-      scanNetcdf4Cube4d(s, fixtureCube4dPath(), "v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixtureCube4dPath())
         .select(col("cell_x"), col("cell_y"), col("level"), col("epoch"), col("value"))
         .orderBy("cell_x", "cell_y", "level", "epoch")
     },
@@ -4429,16 +4262,18 @@ object Hdf5 {
          |WHERE cell_x BETWEEN 10 AND 50 AND cell_y BETWEEN 8 AND 40
          |  AND level BETWEEN 1 AND 2 AND epoch BETWEEN 2 AND 2
          |ORDER BY cell_x, cell_y, level, epoch""".stripMargin) { (s, _) =>
-      scanNetcdf4Cube4dWindow(s, fixtureCube4dPath(), "v", 2, 2, 1, 2, 10, 50, 8, 40)
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixtureCube4dPath())
+        .filter(col("cell_x").between(10, 50) && col("cell_y").between(8, 40) &&
+          col("level").between(1, 2) && col("epoch") === 2)
         .select(col("cell_x"), col("cell_y"), col("level"), col("epoch"), col("value"))
         .orderBy("cell_x", "cell_y", "level", "epoch")
     },
 
     // DSv2 face of the HDF5 reader (r18 — completing the trio next to
-    // TiffSource and ZarrSource): one InputPartition per chunk straight
-    // from the B-tree manifest, zero shuffle, rank-inferred schema; the
-    // pushed window prunes the chunk manifest at planning time
-    // (PlanShapeSpec pins 8-of-27 partitions and the decode-free count)
+    // TiffSource and ZarrSource): the B-tree chunk manifest packed into
+    // at most defaultParallelism partitions, zero shuffle, rank-inferred
+    // schema; the pushed window prunes the chunk manifest at planning
+    // time (PlanShapeSpec pins 8-of-27 chunks and the decode-free count)
     "scan_hdf5_source" -> Q(
       s"""SELECT cell_x, cell_y, epoch, value FROM ($H5CubeCellsSql)
          |WHERE cell_x BETWEEN 10 AND 40 AND cell_y BETWEEN 5 AND 35
@@ -4480,7 +4315,9 @@ object Hdf5 {
          |  min(value) AS min_v, max(value) AS max_v
          |${Cube.RasterizeJoinSql}
          |GROUP BY zone_id, epoch, level ORDER BY zone_id, epoch, level""".stripMargin) { (s, d) =>
-      Cube.rasterize(scanNetcdf4Cube4d(s, fixtureCube4dPath(), "v"), Cube.zones(s, d))
+      Cube.rasterize(
+          s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixtureCube4dPath()),
+          Cube.zones(s, d))
         .groupBy(col("zone_id"), col("epoch"), col("level"))
         .agg(count(lit(1)).as("n_cells"),
           sum(col("value").cast("long")).as("sum_v"),
@@ -4495,7 +4332,8 @@ object Hdf5 {
       s"""SELECT cell_x, cell_y, value FROM ($H5CellsSql)
          |WHERE cell_x BETWEEN 10 AND 50 AND cell_y BETWEEN 8 AND 40
          |ORDER BY cell_x, cell_y""".stripMargin) { (s, _) =>
-      scanNetcdf4Window(s, fixturePath(), "v", 10, 50, 8, 40)
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixturePath())
+        .filter(col("cell_x").between(10, 50) && col("cell_y").between(8, 40))
         .select(col("cell_x"), col("cell_y"), col("value"))
         .orderBy("cell_x", "cell_y")
     },
@@ -4505,7 +4343,7 @@ object Hdf5 {
     "scan_netcdf4_contiguous" -> Q(
       s"""SELECT cell_x, cell_y, value FROM ($H5CellsSql)
          |ORDER BY cell_x, cell_y""".stripMargin) { (s, _) =>
-      scanNetcdf4(s, fixtureContiguousPath(), "v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixtureContiguousPath())
         .select(col("cell_x"), col("cell_y"), col("value"))
         .orderBy("cell_x", "cell_y")
     },
@@ -4651,7 +4489,7 @@ object Hdf5 {
           } finally in.close()
         }
       } finally out.close()
-      scanNetcdf4(s, outPath, "v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(outPath)
         .filter(col("value") =!= 0.0)
         .groupBy(expr(s"CAST(cell_x div $cs AS BIGINT)").as("chunk_x"),
           expr(s"CAST(cell_y div $cs AS BIGINT)").as("chunk_y"))
@@ -4736,7 +4574,7 @@ object Hdf5 {
           } finally in.close()
         }
       } finally out.close()
-      scanNetcdf4Cube4d(s, outPath, "v")
+      s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(outPath)
         .filter(col("value") =!= 0.0)
         .groupBy(expr(s"CAST(cell_x div $cs AS BIGINT)").as("chunk_x"),
           expr(s"CAST(cell_y div $cs AS BIGINT)").as("chunk_y"),
@@ -4762,7 +4600,9 @@ object Hdf5 {
          |  min(value) AS min_v, max(value) AS max_v
          |${Cube.RasterizeJoinSql}
          |GROUP BY zone_id ORDER BY zone_id""".stripMargin) { (s, d) =>
-      Cube.rasterize(scanNetcdf4(s, fixturePath(), "v"), Cube.zones(s, d))
+      Cube.rasterize(
+          s.read.format("graft.zonal.Hdf5Source").option("var", "v").load(fixturePath()),
+          Cube.zones(s, d))
         .groupBy(col("zone_id"))
         .agg(count(lit(1)).as("n_cells"),
           sum(col("value").cast("long")).as("sum_v"),

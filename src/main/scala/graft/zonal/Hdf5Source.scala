@@ -14,10 +14,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the DSv2 trio next to [[TiffSource]] and [[ZarrSource]]):
   *
   *  - `spark.read.format("graft.zonal.Hdf5Source").option("var", name)
-  *    .load(path)` plans ONE `InputPartition` per chunk straight from
-  *    the driver-side B-tree manifest — zero shuffle anywhere in the
-  *    scan (the Dataset paths pay a `createDataset(refs).repartition`
-  *    round; this face does not);
+  *    .load(path)` is the one scan path for a netCDF-4/HDF5 variable:
+  *    it prunes the driver-side B-tree chunk manifest and packs the
+  *    kept chunks into at most `defaultParallelism` partitions
+  *    ([[ChunkPlan]]) — zero shuffle anywhere in the scan;
   *  - the schema infers from the variable's RANK: rank-2 reads
   *    `(cell_x, cell_y, value)`, rank-3 (t, y, x) adds `epoch`,
   *    rank-4 (t, level, y, x) adds `level` and `epoch` — so the xarray
@@ -280,6 +280,8 @@ final class Hdf5Scan(path: String, varName: String, timeVar: String,
     extends Scan with Batch with SupportsRuntimeFiltering
     with SupportsReportStatistics {
 
+  private val plan = new ChunkPlan(limit)
+
   // EXACT statistics from geometry (r18): rows = in-bounds cells of the
   // pruned manifest (capped by a pushed limit)
   override def estimateStatistics(): Statistics = {
@@ -288,7 +290,7 @@ final class Hdf5Scan(path: String, varName: String, timeVar: String,
     // capped at the limit lets EliminateLimits drop Spark's GlobalLimit
     // while multiple prefix partitions each LocalLimit-truncate, which
     // over-delivers (the r18 scan_source_limit_prune red row)
-    val rows = limitPrefix(plannedWithCells()).map(_._2).sum
+    val rows = plan.prefix(plannedWithCells()).map(_._2).sum
     GeomStats(rows, math.max(1, required.fields.map(_.dataType.defaultSize).sum))
   }
 
@@ -313,30 +315,15 @@ final class Hdf5Scan(path: String, varName: String, timeVar: String,
   private def rtKeep(c: String, lo: Int, n: Int): Boolean =
     rt.get(c).forall(vs => vs.exists(v => v >= lo && v < lo + n))
 
-  // shortest prefix of partitions covering a pushed LIMIT
-  private def limitPrefix[P](ps: Seq[(P, Long)]): Seq[(P, Long)] =
-    if (limit < 0) ps
-    else {
-      // r19: keep ONE partition of slack past the covering prefix —
-      // pruning-only insurance (never a correctness lever) against any
-      // geometry-count drift on an exact-boundary prefix
-      var acc = 0L
-      var slack = 1
-      ps.takeWhile { case (_, n) =>
-        val keep = acc < limit || { val k = slack > 0; slack -= 1; k }
-        acc += n; keep
-      }
-    }
-
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-hdf5 $path#$varName window=[$x0..$x1]x[$y0..$y1] " +
       s"t=[$t0..$t1] level=[$l0..$l1] t_ts=[$u0..$u1] " +
-      s"cols=${required.fieldNames.mkString(",")}"
+      s"cols=${required.fieldNames.mkString(",")}$plan"
 
   override def planInputPartitions(): Array[InputPartition] =
-    limitPrefix(plannedWithCells()).map(_._1).toArray
+    plan.partitions(plannedWithCells())
 
   private def plannedWithCells(): Seq[(InputPartition, Long)] = {
     val m = Hdf5.readMeta(path, varName)
@@ -396,7 +383,7 @@ final class Hdf5Scan(path: String, varName: String, timeVar: String,
       }
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new Hdf5ReaderFactory(required.fieldNames)
+    new PackedReaderFactory(new Hdf5ReaderFactory(required.fieldNames))
 }
 
 final case class Hdf5InputPartition(ref: Hdf5.H5ChunkRef,

@@ -15,8 +15,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * [[ZarrSource]] and [[Hdf5Source]]):
   *
   *  - `spark.read.format("graft.zonal.NetcdfSource").option("var",
-  *    name).load(path)` plans ONE `InputPartition` per row stripe
-  *    straight from the driver-side header — zero shuffle anywhere;
+  *    name).load(path)` prunes the row-stripe manifest read from the
+  *    driver-side header and packs the kept stripes into at most
+  *    `defaultParallelism` partitions ([[ChunkPlan]]) — zero shuffle
+  *    anywhere;
   *  - the schema infers from the variable's RANK: rank-2 `(y, x)`
   *    reads `(cell_x, cell_y, value)`, rank-3 `(t, y, x)` — record or
   *    fixed leading dim — adds `epoch`, rank-4 `(t, level, y, x)`
@@ -282,6 +284,8 @@ final class NetcdfScan(path: String, varName: String, timeVar: String,
     extends Scan with Batch with SupportsRuntimeFiltering
     with SupportsReportStatistics {
 
+  private val plan = new ChunkPlan(limit)
+
   // EXACT statistics from geometry (r18): rows = in-bounds cells of the
   // pruned manifest (capped by a pushed limit)
   override def estimateStatistics(): Statistics = {
@@ -290,7 +294,7 @@ final class NetcdfScan(path: String, varName: String, timeVar: String,
     // capped at the limit lets EliminateLimits drop Spark's GlobalLimit
     // while multiple prefix partitions each LocalLimit-truncate, which
     // over-delivers (the r18 scan_source_limit_prune red row)
-    val rows = limitPrefix(plannedWithCells()).map(_._2).sum
+    val rows = plan.prefix(plannedWithCells()).map(_._2).sum
     GeomStats(rows, math.max(1, required.fields.map(_.dataType.defaultSize).sum))
   }
 
@@ -316,29 +320,14 @@ final class NetcdfScan(path: String, varName: String, timeVar: String,
   private def rtKeep(c: String, lo: Int, n: Int): Boolean =
     rt.get(c).forall(vs => vs.exists(v => v >= lo && v < lo + n))
 
-  // shortest prefix of stripes covering a pushed LIMIT
-  private def limitPrefix[P](ps: Seq[(P, Long)]): Seq[(P, Long)] =
-    if (limit < 0) ps
-    else {
-      // r19: keep ONE partition of slack past the covering prefix —
-      // pruning-only insurance (never a correctness lever) against any
-      // geometry-count drift on an exact-boundary prefix
-      var acc = 0L
-      var slack = 1
-      ps.takeWhile { case (_, n) =>
-        val keep = acc < limit || { val k = slack > 0; slack -= 1; k }
-        acc += n; keep
-      }
-    }
-
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-netcdf $path#$varName y=[$y0..$y1] t=[$t0..$t1] " +
-      s"level=[$l0..$l1] t_ts=[$u0..$u1] cols=${required.fieldNames.mkString(",")}"
+      s"level=[$l0..$l1] t_ts=[$u0..$u1] cols=${required.fieldNames.mkString(",")}$plan"
 
   override def planInputPartitions(): Array[InputPartition] =
-    limitPrefix(plannedWithCells()).map(_._1).toArray
+    plan.partitions(plannedWithCells())
 
   private def plannedWithCells(): Seq[(InputPartition, Long)] = {
     val m = Netcdf.readMeta(path)
@@ -389,7 +378,7 @@ final class NetcdfScan(path: String, varName: String, timeVar: String,
         r.rows.toLong * r.width))
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new NetcdfReaderFactory(required.fieldNames)
+    new PackedReaderFactory(new NetcdfReaderFactory(required.fieldNames))
 }
 
 final case class NetcdfInputPartition(ref: Netcdf.StripeRef,

@@ -568,11 +568,9 @@ object Raster {
 
   private def scanRefs(s: SparkSession, refs: Seq[TileRef]): DataFrame = {
     import s.implicits._
-    // one tile per task up to the session's parallelism: the manifest is
-    // tiny, the data reads happen in the tasks
+    // the tiny local manifest splits into at most the session's leaf
+    // parallelism partitions; the data reads happen in the tasks
     s.createDataset(refs)
-      .repartition(math.max(1, math.min(refs.size,
-        s.sparkContext.defaultParallelism)))
       .flatMap { t =>
         val p = new org.apache.hadoop.fs.Path(t.path)
         val fs = Fs.fs(p)
@@ -638,8 +636,6 @@ object Raster {
       tileRefs(m, p).map(t => (e, t))
     }
     s.createDataset(refs)
-      .repartition(math.max(1, math.min(refs.size,
-        s.sparkContext.defaultParallelism)))
       .flatMap { case (e, t) =>
         val p = new org.apache.hadoop.fs.Path(t.path)
         val fs = Fs.fs(p)
@@ -670,8 +666,6 @@ object Raster {
   private def scanRefsBands(s: SparkSession, refs: Seq[TileRef]): DataFrame = {
     import s.implicits._
     s.createDataset(refs)
-      .repartition(math.max(1, math.min(refs.size,
-        s.sparkContext.defaultParallelism)))
       .flatMap { t =>
         val p = new org.apache.hadoop.fs.Path(t.path)
         val fs = Fs.fs(p)
@@ -3076,10 +3070,10 @@ object Raster {
         .orderBy("cell_x", "cell_y")
     },
 
-    // the DataSource V2 face of the reader: one InputPartition per tile
-    // straight from the manifest (ZERO shuffle — not even the Dataset
-    // path's manifest repartition), cell_x/cell_y filters pushed into
-    // the scan prune tiles at planning time, column pruning reaches the
+    // the DataSource V2 face of the reader: the tile manifest packed
+    // into at most defaultParallelism partitions (ZERO shuffle),
+    // cell_x/cell_y filters pushed into the scan prune tiles at
+    // planning time, column pruning reaches the
     // decoder. The same COG window as scan_raster_window, now as a plain
     // .filter over a first-class BatchScan.
     "scan_raster_source" -> Q(

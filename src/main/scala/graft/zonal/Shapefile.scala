@@ -242,8 +242,6 @@ object Shapefile {
       implicit enc: org.apache.spark.sql.Encoder[T]): org.apache.spark.sql.Dataset[T] = {
     import s.implicits._
     s.createDataset(refs)
-      .repartition(math.max(1, math.min(refs.size,
-        s.sparkContext.defaultParallelism)))
       .mapPartitions { it =>
         it.toArray.groupBy(_.path).iterator.flatMap { case (p, rs) =>
           val hp = new org.apache.hadoop.fs.Path(p)
@@ -500,7 +498,6 @@ object Shapefile {
     }.filter(_.numRecs > 0)
     val fields = h.fields // serializable capture, not the whole header
     val raw = s.createDataset(slices)
-      .repartition(math.max(1, slices.size))
       .flatMap { sl =>
         val p = new org.apache.hadoop.fs.Path(sl.path)
         val fs = Fs.fs(p)

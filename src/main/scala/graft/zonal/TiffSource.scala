@@ -15,9 +15,9 @@ import graft.core.Fs
   * Spark-idiomatic architecture for a raster scan, where the ad-hoc
   * `scanTiff` Dataset path becomes a first-class `BatchScan`:
   *
-  *  - `spark.read.format("graft.zonal.TiffSource").load(path)` plans ONE
-  *    `InputPartition` per tile straight from the driver-side manifest —
-  *    no `createDataset(refs).repartition(...)` round and therefore ZERO
+  *  - `spark.read.format("graft.zonal.TiffSource").load(path)` prunes
+  *    the driver-side tile manifest and packs the kept tiles into at
+  *    most `defaultParallelism` partitions ([[ChunkPlan]]) — ZERO
   *    shuffle anywhere in the scan;
   *  - cell_x/cell_y comparison filters PUSH DOWN into the scan and prune
   *    the tile manifest at planning time (the COG window query becomes a
@@ -103,13 +103,14 @@ object TiffMosaic {
 }
 
 /** MOSAIC face (r19): a tile-collection directory with the
-  * `_tile_stats` sidecar — the COG-catalog shape. One partition per
-  * tile block across all member files; MIN/MAX(value) aggregations
-  * push down COMPLETELY to the sidecar (per-file min/max are exact),
-  * so `SELECT min(value), max(value) FROM mosaic` opens ZERO data
-  * files — the raster analogue of parquet footer statistics. Anything
-  * the sidecar cannot answer exactly (a filter, a grouping, any other
-  * aggregate) falls back to the real scan — never approximated.
+  * `_tile_stats` sidecar — the COG-catalog shape. The tile blocks of
+  * all member files pack into one plan ([[ChunkPlan]]); MIN/MAX(value)
+  * aggregations push down COMPLETELY to the sidecar (per-file min/max
+  * are exact), so `SELECT min(value), max(value) FROM mosaic` opens
+  * ZERO data files — the raster analogue of parquet footer statistics.
+  * Anything the sidecar cannot answer exactly (a filter, a grouping,
+  * any other aggregate) falls back to the real scan — never
+  * approximated.
   */
 final class TiffMosaicTable(dir: String, geom: Option[TiffGeom] = None,
     clusterWrite: Boolean = false)
@@ -213,12 +214,13 @@ final class TiffMosaicScanBuilder(dir: String)
 }
 
 /** The real mosaic scan: headers read once per file in EXECUTOR tasks
-  * (the mosaicMetas fan-out), one partition per tile block, window
-  * pruned at planning, zero shuffle.
+  * (the mosaicMetas fan-out), tile blocks window-pruned at planning and
+  * packed by [[ChunkPlan]], zero shuffle.
   */
 final class TiffMosaicScan(dir: String, required: StructType,
     x0: Int, x1: Int, y0: Int, y1: Int)
     extends Scan with Batch with SupportsReportStatistics {
+  private val plan = new ChunkPlan(-1)
   override def estimateStatistics(): Statistics = {
     val rows = plannedWithCells().map(_._2).sum
     GeomStats(rows, math.max(1, required.fields.map(_.dataType.defaultSize).sum))
@@ -227,9 +229,9 @@ final class TiffMosaicScan(dir: String, required: StructType,
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-tiff-mosaic $dir window=[$x0..$x1]x[$y0..$y1] " +
-      s"cols=${required.fieldNames.mkString(",")}"
+      s"cols=${required.fieldNames.mkString(",")}$plan"
   override def planInputPartitions(): Array[InputPartition] =
-    plannedWithCells().map(_._1).toArray
+    plan.partitions(plannedWithCells())
   private def plannedWithCells(): Seq[(InputPartition, Long)] = {
     val st = Raster.readStatsManifest(dir)
     val metas = Raster.mosaicMetas(org.apache.spark.sql.SparkSession.active,
@@ -249,7 +251,7 @@ final class TiffMosaicScan(dir: String, required: StructType,
       }
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new TiffReaderFactory(required.fieldNames)
+    new PackedReaderFactory(new TiffReaderFactory(required.fieldNames))
 }
 
 final class TiffTable(path: String) extends Table with SupportsRead {
@@ -343,6 +345,8 @@ final class TiffScan(path: String, required: StructType,
     extends Scan with Batch with SupportsRuntimeFiltering
     with SupportsReportStatistics {
 
+  private val plan = new ChunkPlan(limit)
+
   // EXACT statistics from geometry (r18): rows = in-bounds cells of the
   // pruned manifest (capped by a pushed limit)
   override def estimateStatistics(): Statistics = {
@@ -351,7 +355,7 @@ final class TiffScan(path: String, required: StructType,
     // capped at the limit lets EliminateLimits drop Spark's GlobalLimit
     // while multiple prefix partitions each LocalLimit-truncate, which
     // over-delivers (the r18 scan_source_limit_prune red row)
-    val rows = limitPrefix(plannedWithCells()).map(_._2).sum
+    val rows = plan.prefix(plannedWithCells()).map(_._2).sum
     GeomStats(rows, math.max(1, required.fields.map(_.dataType.defaultSize).sum))
   }
 
@@ -376,29 +380,14 @@ final class TiffScan(path: String, required: StructType,
   private def rtKeep(c: String, lo: Int, n: Int): Boolean =
     rt.get(c).forall(vs => vs.exists(v => v >= lo && v < lo + n))
 
-  // shortest prefix of blocks covering a pushed LIMIT
-  private def limitPrefix[P](ps: Seq[(P, Long)]): Seq[(P, Long)] =
-    if (limit < 0) ps
-    else {
-      // r19: keep ONE partition of slack past the covering prefix —
-      // pruning-only insurance (never a correctness lever) against any
-      // geometry-count drift on an exact-boundary prefix
-      var acc = 0L
-      var slack = 1
-      ps.takeWhile { case (_, n) =>
-        val keep = acc < limit || { val k = slack > 0; slack -= 1; k }
-        acc += n; keep
-      }
-    }
-
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-tiff $path window=[$x0..$x1]x[$y0..$y1] bands=[$b0..$b1] " +
-      s"cols=${required.fieldNames.mkString(",")}"
+      s"cols=${required.fieldNames.mkString(",")}$plan"
 
   override def planInputPartitions(): Array[InputPartition] =
-    limitPrefix(plannedWithCells()).map(_._1).toArray
+    plan.partitions(plannedWithCells())
 
   private def plannedWithCells(): Seq[(InputPartition, Long)] = {
     val m = Raster.readMeta(path)
@@ -423,7 +412,7 @@ final class TiffScan(path: String, required: StructType,
       }
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new TiffReaderFactory(required.fieldNames)
+    new PackedReaderFactory(new TiffReaderFactory(required.fieldNames))
 }
 
 final case class TiffInputPartition(ref: Raster.TileRef) extends InputPartition

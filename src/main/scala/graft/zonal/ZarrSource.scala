@@ -14,10 +14,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * [[TiffSource]], the Spark-idiomatic architecture for an array-store
   * scan):
   *
-  *  - `spark.read.format("graft.zonal.ZarrSource").load(dir)` plans ONE
-  *    `InputPartition` per chunk straight from the driver-side manifest
-  *    — no `createDataset(refs).repartition(...)` round and ZERO
-  *    shuffle anywhere in the scan;
+  *  - `spark.read.format("graft.zonal.ZarrSource").load(dir)` is the
+  *    one scan path for a Zarr array: it prunes the driver-side chunk
+  *    manifest and packs the kept chunks into at most
+  *    `defaultParallelism` partitions ([[ChunkPlan]]) — ZERO shuffle
+  *    anywhere in the scan;
   *  - the schema is inferred from the store's RANK: a 2-D array reads
   *    `(cell_x, cell_y, value)`, a rank-3 (t, y, x) cube
   *    `(cell_x, cell_y, epoch, value)` — so the xarray
@@ -466,6 +467,8 @@ final class ZarrScan(path: String, timeName: String, coords: String,
     extends Scan with Batch
     with SupportsRuntimeFiltering with SupportsReportStatistics {
 
+  private val plan = new ChunkPlan(limit)
+
   /** The cube TAIL (r20): readStream over the store emits landed
     * epochs per micro-batch — see [[ZarrTail]].
     */
@@ -484,7 +487,7 @@ final class ZarrScan(path: String, timeName: String, coords: String,
     // capped at the limit lets EliminateLimits drop Spark's GlobalLimit
     // while multiple prefix partitions each LocalLimit-truncate, which
     // over-delivers (the r18 scan_source_limit_prune red row)
-    val rows = limitPrefix(plannedWithCells()).map(_._2).sum
+    val rows = plan.prefix(plannedWithCells()).map(_._2).sum
     GeomStats(rows, math.max(1, required.fields.map(_.dataType.defaultSize).sum))
   }
 
@@ -525,38 +528,22 @@ final class ZarrScan(path: String, timeName: String, coords: String,
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-zarr $path window=[$x0..$x1]x[$y0..$y1] t=[$t0..$t1] " +
-      s"t_ts=[$u0..$u1] cols=${required.fieldNames.mkString(",")}"
+      s"t_ts=[$u0..$u1] cols=${required.fieldNames.mkString(",")}$plan"
 
   // the runtime In/EqualTo sets prune at CHUNK granularity too: a
   // chunk survives iff any kept value falls in its axis range
   private def rtKeep(set: Option[Set[Int]], lo: Int, n: Int): Boolean =
     set.forall(vs => vs.exists(v => v >= lo && v < lo + n))
 
-  // shortest prefix of partitions whose in-bounds cell count covers a
-  // pushed LIMIT — geometry is exact, so LIMIT k plans O(k) cells
-  private def limitPrefix[P](ps: Seq[(P, Long)]): Seq[(P, Long)] =
-    if (limit < 0) ps
-    else {
-      // r19: keep ONE partition of slack past the covering prefix —
-      // pruning-only insurance (never a correctness lever) against any
-      // geometry-count drift on an exact-boundary prefix
-      var acc = 0L
-      var slack = 1
-      ps.takeWhile { case (_, n) =>
-        val keep = acc < limit || { val k = slack > 0; slack -= 1; k }
-        acc += n; keep
-      }
-    }
-
   override def planInputPartitions(): Array[InputPartition] =
-    limitPrefix(plannedWithCells()).map(_._1).toArray
+    plan.partitions(plannedWithCells())
 
   private def plannedWithCells(): Seq[(InputPartition, Long)] = {
     val m = Zarr.readMeta(path)
     if (m.rank4) {
-      // r19: the rank-4 index face — one partition per (t, l, y, x)
-      // chunk from the existing chunkRefs4 manifest, all four axes
-      // pruning at planning AND runtime (the scanZarr4d semantics
+      // r19: the rank-4 index face — one chunk per (t, l, y, x) grid
+      // cell from the existing chunkRefs4 manifest, all four axes
+      // pruning at planning AND runtime (the rank-4 window semantics
       // behind pushdown)
       Zarr.chunkRefs4(m, path)
         .filter(r =>
@@ -677,7 +664,7 @@ final class ZarrScan(path: String, timeName: String, coords: String,
     }
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new ZarrReaderFactory(required.fieldNames)
+    new PackedReaderFactory(new ZarrReaderFactory(required.fieldNames))
 }
 
 final case class Zarr2InputPartition(ref: Zarr.ChunkRef,

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
 import graft.zonal.Hdf5
 
 /** netCDF-4/HDF5 reader gates: dtype × layout × filter roundtrips,
@@ -29,6 +31,18 @@ class Hdf5Spec extends SparkSuite {
 
   private def f(x: Int, y: Int): Double = ((5 * x + 11 * y) % 97).toDouble
 
+  /** One variable through the netCDF-4/HDF5 DSv2 face. */
+  private def h5(p: String, v: String) =
+    spark.read.format("graft.zonal.Hdf5Source").option("var", v).load(p)
+
+  /** Variable `v` with CF time labels from dataset `t`. */
+  private def h5t(p: String, t: String) =
+    spark.read.format("graft.zonal.Hdf5Source").option("var", "v").option("time", t).load(p)
+
+  /** Variable `v` with axis labels from datasets `x` and `y`. */
+  private def h5c(p: String) =
+    spark.read.format("graft.zonal.Hdf5Source").option("var", "v").option("coords", "x,y").load(p)
+
   test("dtype × layout × filter roundtrips equal the formula") {
     val cases = Seq(
       ("<f8", true, true, false), ("<f4", true, false, false),
@@ -39,7 +53,7 @@ class Hdf5Spec extends SparkSuite {
       val p = tmp(s"rt$k")
       Hdf5.writeHdf5(p, "data", 10, 13, 4, 5, dtype = dt,
         deflate = defl, shuffle = shuf, contiguous = contig)(f)
-      val got = Hdf5.scanNetcdf4(spark, p, "data").collect()
+      val got = h5(p, "data").collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
       assert(got.size == 130, s"$dt defl=$defl shuf=$shuf contig=$contig: ${got.size}")
       for (y <- 0 until 10; x <- 0 until 13)
@@ -52,7 +66,7 @@ class Hdf5Spec extends SparkSuite {
     val p = tmp("pad")
     Hdf5.writeHdf5(p, "v", 10, 13, 4, 5, dtype = "<f8",
       deflate = true, fill = Some(999.0))(f)
-    val vals = Hdf5.scanNetcdf4(spark, p, "v").collect().map(_.getDouble(2))
+    val vals = h5(p, "v").collect().map(_.getDouble(2))
     assert(vals.length == 130 && !vals.contains(999.0))
   }
 
@@ -60,7 +74,7 @@ class Hdf5Spec extends SparkSuite {
     val p = tmp("hole")
     Hdf5.writeHdf5(p, "v", 10, 13, 4, 5, dtype = "<f4",
       fill = Some(7.5), omit = Set((1, 1)))(f)
-    val got = Hdf5.scanNetcdf4(spark, p, "v").collect()
+    val got = h5(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 130)
     // chunk (1,1) covers y 4-7, x 5-9 → fill; everything else formula
@@ -72,7 +86,7 @@ class Hdf5Spec extends SparkSuite {
     Hdf5.writeHdf5(p2, "v", 10, 13, 4, 5, dtype = "<f4",
       fill = None, omit = Set((0, 0)))(f)
     assert(msgs(intercept[Throwable](
-      Hdf5.scanNetcdf4(spark, p2, "v").count())).contains("no fill value"))
+      h5(p2, "v").collect())).contains("no fill value"))
   }
 
   test("named loud refusals: magic, superblock version, OHDR, filter, variable") {
@@ -113,7 +127,7 @@ class Hdf5Spec extends SparkSuite {
     java.nio.file.Files.write(java.nio.file.Paths.get(p),
       java.util.Arrays.copyOfRange(b, 0, 300))
     assert(msgs(intercept[Throwable](
-      Hdf5.scanNetcdf4(spark, p, "v").count())).contains("past EOF"))
+      h5(p, "v").collect())).contains("past EOF"))
   }
 
   test("chunk B-tree walk recurses through internal nodes") {
@@ -158,7 +172,7 @@ class Hdf5Spec extends SparkSuite {
     // prefix 16 + dataspace 32 + datatype 32 + fill 24 + layout msg
     // header 8 + ver/class/dim 3 = 395)
     patch(p, 395, le64(aRoot))
-    val got = Hdf5.scanNetcdf4(spark, p, "v").collect()
+    val got = h5(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 64)
     for (y <- 0 until 8; x <- 0 until 8) assert(got((x, y)) == f(x, y), s"($x,$y)")
@@ -170,7 +184,7 @@ class Hdf5Spec extends SparkSuite {
     val p = tmp("cube")
     Hdf5.writeHdf5Cube(p, "v", 3, 6, 8, 2, 4, 5, dtype = "<f8",
       deflate = true, fill = Some(9.5), omit = Set((0, 1, 1)))(f3)
-    val got = Hdf5.scanNetcdf4Epochs(spark, p, "v").collect()
+    val got = h5(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
     assert(got.size == 3 * 6 * 8)
     for (t <- 0 until 3; y <- 0 until 6; x <- 0 until 8) {
@@ -182,14 +196,13 @@ class Hdf5Spec extends SparkSuite {
     val pc = tmp("cubec")
     Hdf5.writeHdf5Cube(pc, "v", 3, 6, 8, 1, 0, 0, dtype = ">i2",
       deflate = false, contiguous = true)(f3)
-    val gc = Hdf5.scanNetcdf4Epochs(spark, pc, "v").collect()
+    val gc = h5(pc, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
     assert(gc.size == 3 * 6 * 8)
     for (t <- 0 until 3; y <- 0 until 6; x <- 0 until 8)
       assert(gc((x, y, t)) == f3(x, y, t), s"contig ($x,$y,$t)")
-    // the 2-D entry point refuses a rank-3 variable by name
-    assert(msgs(intercept[Throwable](
-      Hdf5.scanNetcdf4(spark, p, "v"))).contains("scanNetcdf4Epochs"))
+    // the face reads the rank from the variable: rank 3 adds `epoch`
+    assert(h5(p, "v").columns.toSeq == Seq("cell_x", "cell_y", "epoch", "value"))
   }
 
   test("rank-4 cube: roundtrip, omitted-chunk fill, pad clip in all four axes") {
@@ -200,7 +213,7 @@ class Hdf5Spec extends SparkSuite {
     val p = tmp("cube4")
     Hdf5.writeHdf5Cube4d(p, "v", 3, 4, 6, 8, 2, 3, 4, 5, dtype = "<f8",
       deflate = true, fill = Some(9.5), omit = Set((0, 1, 1, 1)))(f4)
-    val got = Hdf5.scanNetcdf4Cube4d(spark, p, "v").collect()
+    val got = h5(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) -> r.getDouble(4))
       .toMap
     assert(got.size == 3 * 4 * 6 * 8)
@@ -209,17 +222,16 @@ class Hdf5Spec extends SparkSuite {
       val want = if (t < 2 && l >= 3 && y >= 4 && x >= 5) 9.5 else f4(x, y, l, t)
       assert(got((x, y, l, t)) == want, s"($x,$y,$l,$t)")
     }
-    // rank mismatches are loud in both directions
-    assert(msgs(intercept[Throwable](
-      Hdf5.scanNetcdf4Epochs(spark, p, "v"))).contains("scanNetcdf4Cube4d"))
-    assert(msgs(intercept[Throwable](
-      Hdf5.scanNetcdf4Cube4d(spark, Hdf5.fixturePath(), "v"))).contains("scanNetcdf4"))
+    // the face reads the rank from the variable in both directions
+    assert(h5(p, "v").columns.toSeq ==
+      Seq("cell_x", "cell_y", "level", "epoch", "value"))
+    assert(h5(Hdf5.fixturePath(), "v").columns.toSeq == Seq("cell_x", "cell_y", "value"))
     // contiguous rank-4 stripes (r14 — gates the reader's per-(t,
     // level, stripe) contiguous manifest)
     val pc = tmp("cube4c")
     Hdf5.writeHdf5Cube4d(pc, "v", 3, 4, 6, 8, 1, 1, 0, 0, dtype = ">i2",
       deflate = false, contiguous = true)(f4)
-    val gc = Hdf5.scanNetcdf4Cube4d(spark, pc, "v").collect()
+    val gc = h5(pc, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) -> r.getDouble(4))
       .toMap
     assert(gc.size == 3 * 4 * 6 * 8)
@@ -235,7 +247,7 @@ class Hdf5Spec extends SparkSuite {
     val p = tmp("ea")
     Hdf5.writeHdf5V2Ea(p, "v", 10, 8, 2, 4, dtype = "<f8", deflate = true,
       fill = 7.5, omit = Set((1, 0), (4, 1)))(fe)
-    val got = Hdf5.scanNetcdf4(spark, p, "v").collect()
+    val got = h5(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 80)
     for (y <- 0 until 10; x <- 0 until 8) {
@@ -247,7 +259,7 @@ class Hdf5Spec extends SparkSuite {
     val p2 = tmp("ea2")
     Hdf5.writeHdf5V2Ea(p2, "v", 10, 8, 2, 4, dtype = "<f8", deflate = true,
       fill = 7.5, omit = Set((2, 0), (2, 1), (3, 0), (3, 1)))(fe)
-    val g2 = Hdf5.scanNetcdf4(spark, p2, "v").collect()
+    val g2 = h5(p2, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     for (y <- 0 until 10; x <- 0 until 8) {
       val omitted = y / 2 == 2 || y / 2 == 3
@@ -260,7 +272,7 @@ class Hdf5Spec extends SparkSuite {
     val aEaib = aEahd + 72
     patch(p2, aEaib + 6, Array.fill[Byte](8)(0x22))
     assert(msgs(intercept[Throwable](
-      Hdf5.scanNetcdf4(spark, p2, "v").collect())).contains("EAIB"))
+      h5(p2, "v").collect())).contains("EAIB"))
   }
 
   test("extensible-array SUPER blocks: unpaged + paged data blocks, uninit pages, absences") {
@@ -277,7 +289,7 @@ class Hdf5Spec extends SparkSuite {
     Hdf5.writeHdf5V2Ea(p, "v", 16, 9, 1, 1, dtype = "<f8", deflate = true,
       fill = 9.25, omit = omitK.map(omitCell),
       pageBits = 4)(fe)
-    val got = Hdf5.scanNetcdf4(spark, p, "v").collect()
+    val got = h5(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 144)
     for (k <- 0 until 144) {
@@ -326,7 +338,7 @@ class Hdf5Spec extends SparkSuite {
     b(sbAt) = 'X'
     java.nio.file.Files.write(java.nio.file.Paths.get(pc), b)
     assert(msgs(intercept[Throwable](
-      Hdf5.scanNetcdf4(spark, pc, "v").collect())).contains("EASB"))
+      h5(pc, "v").collect())).contains("EASB"))
   }
 
   test("v2 B-tree chunk index: roundtrips, recordless-chunk fill, depth refusal") {
@@ -335,7 +347,7 @@ class Hdf5Spec extends SparkSuite {
     val p = tmp("bt2")
     Hdf5.writeHdf5V2Bt2(p, "v", 10, 8, 4, 4, dtype = "<f8", deflate = true,
       fill = 6.5, omit = Set((1, 1)))(fb)
-    val got = Hdf5.scanNetcdf4(spark, p, "v").collect()
+    val got = h5(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 80)
     for (y <- 0 until 10; x <- 0 until 8) {
@@ -345,7 +357,7 @@ class Hdf5Spec extends SparkSuite {
     // non-filtered type-10 records
     val p2 = tmp("bt2raw")
     Hdf5.writeHdf5V2Bt2(p2, "v", 6, 6, 3, 3, dtype = "<f8", deflate = false)(fb)
-    val g2 = Hdf5.scanNetcdf4(spark, p2, "v").collect()
+    val g2 = h5(p2, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     for (y <- 0 until 6; x <- 0 until 6) assert(g2((x, y)) == fb(x, y), s"raw ($x,$y)")
     // surgery: a lying depth field is loud (the claimed BTIN at the
@@ -371,7 +383,7 @@ class Hdf5Spec extends SparkSuite {
       val p = tmp(s"btin$depth")
       Hdf5.writeHdf5V2Bt2(p, "v", 9, 8, 1, 1, dtype = "<f8", deflate = true,
         fill = 3.25, omit = Set((2, 3), (7, 1)), btDepth = depth)(fb)
-      val got = Hdf5.scanNetcdf4(spark, p, "v").collect()
+      val got = h5(p, "v").collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
       assert(got.size == 72, s"depth $depth")
       for (y <- 0 until 9; x <- 0 until 8) {
@@ -389,7 +401,7 @@ class Hdf5Spec extends SparkSuite {
     val p2 = tmp("btinraw")
     Hdf5.writeHdf5V2Bt2(p2, "v", 9, 8, 1, 1, dtype = "<f8", deflate = false,
       btDepth = 1)(fb)
-    val g2 = Hdf5.scanNetcdf4(spark, p2, "v").collect()
+    val g2 = h5(p2, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     for (y <- 0 until 9; x <- 0 until 8) assert(g2((x, y)) == fb(x, y), s"raw ($x,$y)")
   }
@@ -399,7 +411,7 @@ class Hdf5Spec extends SparkSuite {
     val p = tmp("fl")
     Hdf5.writeHdf5(p, "v", 10, 8, 4, 4, dtype = "<f8",
       deflate = false, shuffle = false, fletcher = true)(ff)
-    val got = Hdf5.scanNetcdf4(spark, p, "v").collect()
+    val got = h5(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 80)
     for (y <- 0 until 10; x <- 0 until 8) assert(got((x, y)) == ff(x, y), s"($x,$y)")
@@ -407,7 +419,7 @@ class Hdf5Spec extends SparkSuite {
     val p2 = tmp("fl2")
     Hdf5.writeHdf5(p2, "v", 10, 8, 4, 4, dtype = "<f4",
       deflate = true, shuffle = true, fletcher = true)(ff)
-    val g2 = Hdf5.scanNetcdf4(spark, p2, "v").collect()
+    val g2 = h5(p2, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     for (y <- 0 until 10; x <- 0 until 8) assert(g2((x, y)) == ff(x, y), s"p2 ($x,$y)")
     // flip ONE raw data byte (no compression → data sits at the file
@@ -417,7 +429,7 @@ class Hdf5Spec extends SparkSuite {
     val pc = tmp("flbad")
     java.nio.file.Files.write(java.nio.file.Paths.get(pc), b)
     assert(msgs(intercept[Throwable](
-      Hdf5.scanNetcdf4(spark, pc, "v").collect())).contains("fletcher32"))
+      h5(pc, "v").collect())).contains("fletcher32"))
     // the published algorithm's structure: known tiny vectors — a
     // one-word buffer checks sum1 = the BE word, sum2 = sum1
     val one = Array[Byte](0x12, 0x34)
@@ -436,7 +448,7 @@ class Hdf5Spec extends SparkSuite {
     val p = tmp("flv2")
     Hdf5.writeHdf5V2(p, "v", 10, 8, 4, 4, dtype = "<f4",
       deflate = false, fletcher = true)(ff)
-    val got = Hdf5.scanNetcdf4(spark, p, "v").collect()
+    val got = h5(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 80)
     for (y <- 0 until 10; x <- 0 until 8) assert(got((x, y)) == ff(x, y), s"($x,$y)")
@@ -446,12 +458,12 @@ class Hdf5Spec extends SparkSuite {
     val pc = tmp("flv2bad")
     java.nio.file.Files.write(java.nio.file.Paths.get(pc), b)
     assert(msgs(intercept[Throwable](
-      Hdf5.scanNetcdf4(spark, pc, "v").collect())).contains("fletcher32"))
+      h5(pc, "v").collect())).contains("fletcher32"))
     // fletcher + deflate through the same v2 pipeline message
     val p2 = tmp("flv2both")
     Hdf5.writeHdf5V2(p2, "v", 10, 8, 4, 4, dtype = "<f4",
       deflate = true, fletcher = true)(ff)
-    val g2 = Hdf5.scanNetcdf4(spark, p2, "v").collect()
+    val g2 = h5(p2, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     for (y <- 0 until 10; x <- 0 until 8) assert(g2((x, y)) == ff(x, y), s"p2 ($x,$y)")
   }
@@ -503,7 +515,7 @@ class Hdf5Spec extends SparkSuite {
       softAliases = Seq(("abs", "/data"), ("rel", "data"),
         ("hop", "/abs"), ("loop", "/loop")))(f)
     for (nm <- Seq("data", "abs", "rel", "hop")) {
-      val got = Hdf5.scanNetcdf4(spark, p, nm).collect()
+      val got = h5(p, nm).collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
       assert(got.size == 64, nm)
       for (y <- 0 until 8; x <- 0 until 8) assert(got((x, y)) == f(x, y), s"$nm ($x,$y)")
@@ -536,17 +548,17 @@ class Hdf5Spec extends SparkSuite {
     // the registry fixture is 3x4x70x80 at 2x3x32x32 → 2x2x3x3 = 36
     // chunks; the (t 2-2, level 1-2, x 10-50, y 8-40) window overlaps
     // exactly 1x1x2x2 = 4 of them
-    val m = Hdf5.readMeta(Hdf5.fixtureCube4dPath(), "v")
-    val refs = Hdf5.windowRefs4d(Hdf5.fixtureCube4dPath(), m,
-      2, 2, 1, 2, 10, 50, 8, 40)
-    assert(refs.size == 4, s"want 4 of 36 chunks, got ${refs.size}")
+    val n = plannedChunks(h5(Hdf5.fixtureCube4dPath(), "v").filter(
+      col("epoch") === 2 && col("level").between(1, 2) &&
+        col("cell_x").between(10, 50) && col("cell_y").between(8, 40)))
+    assert(n == 4, s"want 4 of 36 chunks, got $n")
   }
 
   test("group paths: g/v resolves through the nested symbol table; misses are loud") {
     val p = tmp("grp")
     Hdf5.writeHdf5Cube(p, "outer/data", 0, 6, 8, 1, 4, 5, dtype = "<f4",
       deflate = true)((x, y, _) => f(x, y))
-    val got = Hdf5.scanNetcdf4(spark, p, "outer/data").collect()
+    val got = h5(p, "outer/data").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 48)
     for (y <- 0 until 6; x <- 0 until 8) assert(got((x, y)) == f(x, y))
@@ -576,7 +588,7 @@ class Hdf5Spec extends SparkSuite {
       val p = tmp(s"v2rt$k")
       Hdf5.writeHdf5V2(p, "d", 10, 13, 4, 5, dtype = dt,
         deflate = defl, fill = 7.0, omit = Set((1, 1)))(f)
-      val got = Hdf5.scanNetcdf4(spark, p, "d").collect()
+      val got = h5(p, "d").collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
       assert(got.size == 130, s"$dt defl=$defl")
       for (y <- 0 until 10; x <- 0 until 13) {
@@ -592,7 +604,7 @@ class Hdf5Spec extends SparkSuite {
     val p = tmp("v2grp")
     Hdf5.writeHdf5V2(p, "outer/data", 6, 8, 3, 4, dtype = "<f8",
       deflate = true)(f)
-    val got = Hdf5.scanNetcdf4(spark, p, "outer/data").collect()
+    val got = h5(p, "outer/data").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 48)
     for (y <- 0 until 6; x <- 0 until 8) assert(got((x, y)) == f(x, y), s"($x,$y)")
@@ -608,7 +620,7 @@ class Hdf5Spec extends SparkSuite {
     val page1 = Set((1, 1), (1, 2), (2, 0), (2, 1))
     Hdf5.writeHdf5V2(p, "d", 10, 13, 4, 5, dtype = "<f8",
       deflate = true, fill = 7.0, omit = page1, pageBits = 2)(f)
-    val got = Hdf5.scanNetcdf4(spark, p, "d").collect()
+    val got = h5(p, "d").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 130)
     for (y <- 0 until 10; x <- 0 until 13) {
@@ -647,7 +659,7 @@ class Hdf5Spec extends SparkSuite {
       10, 8, 4, 4, dtype = "<f8", deflate = true)(fd)
     // every alias resolves to the same lattice through the dense walk
     for (nm <- Seq("alpha", "kappa", "epsilon")) {
-      val got = Hdf5.scanNetcdf4(spark, p, nm).collect()
+      val got = h5(p, nm).collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
       assert(got.size == 80, nm)
       for (y <- 0 until 10; x <- 0 until 8)
@@ -655,7 +667,7 @@ class Hdf5Spec extends SparkSuite {
     }
     // a missing name lists what IS there
     assert(msgs(intercept[Throwable](
-      Hdf5.scanNetcdf4(spark, p, "nope"))).contains("alpha"))
+      h5(p, "nope"))).contains("alpha"))
     // r16: an INDIRECT root walks for real — 150 links spill into 5
     // direct blocks (rows 0-1 of the doubling table) under an FHIB
     // root with Undef slots in row 1; resolving ANY name parses every
@@ -665,7 +677,7 @@ class Hdf5Spec extends SparkSuite {
     Hdf5.writeHdf5V2Dense(pi, many, 10, 8, 4, 4, dtype = "<f8",
       deflate = true)(fd)
     for (nm <- Seq("v000", "v074", "v149")) {
-      val got = Hdf5.scanNetcdf4(spark, pi, nm).collect()
+      val got = h5(pi, nm).collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
       assert(got.size == 80, nm)
       for (y <- 0 until 10; x <- 0 until 8)
@@ -737,12 +749,12 @@ class Hdf5Spec extends SparkSuite {
       memberStrAttrs = Map(
         "x" -> Seq(("units", "degrees_east"), ("axis", "X")),
         "grid" -> Seq(("long_name", "test grid"))))
-    val cube = Hdf5.scanNetcdf4Epochs(spark, p, "cube").collect()
+    val cube = h5(p, "cube").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
     assert(cube.size == 30)
     for (t <- 0 until 2; y <- 0 until 3; x <- 0 until 5)
       assert(cube((x, y, t)) == f3(x, y, t))
-    val grid = Hdf5.scanNetcdf4(spark, p, "grid").collect()
+    val grid = h5(p, "grid").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(grid.size == 15 && grid((4, 2)) == f2(4, 2))
     val xs = Hdf5.scanNetcdf4Coord(spark, p, "x").collect()
@@ -765,11 +777,11 @@ class Hdf5Spec extends SparkSuite {
     val tm = Hdf5.readMeta(p, "t")
     assert(tm.strAttrs.get("units").contains(Hdf5.H5TimeUnits))
     assert(tm.strAttrs.get("calendar").contains("standard"))
-    val all = Hdf5.scanNetcdf4Time(spark, p, "v", "t", None)
+    val all = h5t(p, "t")
     assert(all.count() == 5L * 70 * 80)
     val win = (java.sql.Timestamp.from(java.time.Instant.parse("2020-03-01T16:00:00Z")),
       java.sql.Timestamp.from(java.time.Instant.parse("2020-03-02T06:00:00Z")))
-    val got = Hdf5.scanNetcdf4Time(spark, p, "v", "t", Some(win))
+    val got = all.filter(col("t_ts").between(win._1, win._2))
       .select("epoch").distinct().collect().map(_.getInt(0)).toSet
     assert(got == Set(1, 2, 3), s"kept epochs $got")
     // a coordinate without a units attribute refuses loudly
@@ -777,23 +789,21 @@ class Hdf5Spec extends SparkSuite {
     Hdf5.writeHdf5Multi(p2, Seq(
       ("v", Seq(2, 3, 4), "<f8", Array.tabulate(24)(_.toDouble)),
       ("t", Seq(2), "<f8", Array.tabulate(2)(_.toDouble))))
-    val e = intercept[Exception](
-      Hdf5.scanNetcdf4Time(spark, p2, "v", "t", None).collect())
+    val e = intercept[Exception](h5t(p2, "t").collect())
     assert(e.getMessage.contains("units"))
   }
 
   test("rank-4 CF time: level rides through, window prunes data reads, rank refusals both ways (r18)") {
-    // refusals: rank-3 fixture into the 4d scan and vice versa
-    val e3 = intercept[IllegalArgumentException](
-      Hdf5.scanNetcdf4Time4d(spark, Hdf5.fixtureTimePath(), "v").count())
-    assert(e3.getMessage.contains("rank-4"), e3.getMessage)
-    val e4 = intercept[IllegalArgumentException](
-      Hdf5.scanNetcdf4Time(spark, Hdf5.fixtureTime4dPath(), "v").count())
-    assert(e4.getMessage.contains("scanNetcdf4Time4d"), e4.getMessage)
+    // the face reads the rank from the variable: the rank-3 fixture has
+    // no level axis, the rank-4 one carries it next to the labels
+    assert(!h5t(Hdf5.fixtureTimePath(), "t").columns.contains("level"))
+    assert(h5t(Hdf5.fixtureTime4dPath(), "t").columns.toSeq ==
+      Seq("cell_x", "cell_y", "level", "epoch", "t_ts", "value"))
     // labels + level axis on the shared fixture
     val win = (java.sql.Timestamp.from(java.time.Instant.parse("2020-03-01T16:00:00Z")),
       java.sql.Timestamp.from(java.time.Instant.parse("2020-03-01T23:00:00Z")))
-    val got = Hdf5.scanNetcdf4Time4d(spark, Hdf5.fixtureTime4dPath(), "v", "t", Some(win))
+    val got = h5t(Hdf5.fixtureTime4dPath(), "t").filter(col("t_ts").between(win._1, win._2))
+      .select("epoch", "t_ts", "level", "cell_x", "cell_y", "value")
     val eps = got.select("epoch").distinct().collect().map(_.getInt(0)).toSet
     assert(eps == Set(1, 2), s"kept epochs $eps")
     assert(got.select("level").distinct().count() == Hdf5.H54L.toLong)
@@ -815,10 +825,10 @@ class Hdf5Spec extends SparkSuite {
       java.util.Arrays.copyOf(raw, raw.length - 2 * 4 * 5 * 8))
     val win2 = (java.sql.Timestamp.from(java.time.Instant.parse("2020-03-01T06:00:00Z")),
       java.sql.Timestamp.from(java.time.Instant.parse("2020-03-01T17:00:00Z")))
-    assert(Hdf5.scanNetcdf4Time4d(spark, p, "v", "tc", Some(win2)).count()
-      == 2L * 2 * 4 * 5)
-    intercept[Exception](
-      Hdf5.scanNetcdf4Time4d(spark, p, "v", "tc", None).count())
+    // values are read (the face counts from geometry, reading no bytes)
+    assert(h5t(p, "tc").filter(col("t_ts").between(win2._1, win2._2))
+      .select("value").collect().length == 2L * 2 * 4 * 5)
+    intercept[Exception](h5t(p, "tc").select("value").collect())
   }
 
   test("multi-file concat (HDF5): global axis, file-level prune via truncation, refusals (r18)") {
@@ -885,7 +895,7 @@ class Hdf5Spec extends SparkSuite {
       ("v", Seq(4, 6), "<f8", Array.tabulate(24)(i => fv(i % 6, i / 6))),
       ("x", Seq(6), "<f4", Array.tabulate(6)(x => -10.0 + 0.5 * x)),
       ("y", Seq(4), "<f4", Array.tabulate(4)(y => 2.0 + 0.25 * y))))
-    val got = Hdf5.scanNetcdf4Coords(spark, p, "v").collect()
+    val got = h5c(p).collect()
       .map(r => (r.getInt(0), r.getInt(1)) ->
         ((r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
     assert(got.size == 24)
@@ -902,7 +912,7 @@ class Hdf5Spec extends SparkSuite {
     // retired in r17: CHUNKED rank-1 coordinate vectors read through
     // the 1×c chunk grid (partial edge chunk included) and join onto
     // the cube exactly like contiguous ones
-    val g2 = Hdf5.scanNetcdf4(spark, Hdf5.fixturePath(), "v").count()
+    val g2 = h5(Hdf5.fixturePath(), "v").count()
     assert(g2 == 80 * 70)
     val pc = tmp("chunkedcoord")
     Hdf5.writeHdf5Multi(pc, Seq(
@@ -914,7 +924,7 @@ class Hdf5Spec extends SparkSuite {
       .map(r => r.getInt(0) -> r.getDouble(1)).toMap
     assert(cx == (0 until 7).map(x => x -> (-10.0 + 0.5 * x)).toMap,
       s"chunked coordinate mangled: $cx")
-    val cj = Hdf5.scanNetcdf4Coords(spark, pc, "v").collect()
+    val cj = h5c(pc).collect()
     assert(cj.length == 28)
     cj.foreach { r =>
       val (x, y) = (r.getInt(0), r.getInt(1))
@@ -932,7 +942,7 @@ class Hdf5Spec extends SparkSuite {
     val ns = Hdf5.scanNetcdf4Strings(spark, p2, "names").collect()
       .map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(ns == Map(0 -> "alpha", 1 -> "b", 2 -> "gamma-long"))
-    val vb = Hdf5.scanNetcdf4(spark, p2, "v").collect()
+    val vb = h5(p2, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(vb.size == 6 && vb((2, 1)) == 5.0)
     val e2 = intercept[Exception](Hdf5.scanNetcdf4Strings(spark, p2, "v"))
@@ -940,7 +950,7 @@ class Hdf5Spec extends SparkSuite {
     // a NUMERIC 1-D vector is not a string table either
     val e2b = intercept[Exception](Hdf5.scanNetcdf4Strings(spark, p2, "x2"))
     assert(e2b.getMessage.contains("not STRING"))
-    val e3 = intercept[Exception](Hdf5.scanNetcdf4(spark, p2, "names"))
+    val e3 = intercept[Exception](h5(p2, "names"))
     assert(e3.getMessage.contains("scanNetcdf4Strings"))
   }
 
@@ -958,9 +968,9 @@ class Hdf5Spec extends SparkSuite {
   test("window scan prunes the chunk manifest before any byte is read") {
     // the registry fixture is 80x70 at 32x32 → 3x3 chunks; the window
     // overlaps exactly 4 of 9
-    val m = Hdf5.readMeta(Hdf5.fixturePath(), "v")
-    val refs = Hdf5.windowRefs(Hdf5.fixturePath(), m, 10, 50, 8, 40)
-    assert(refs.size == 4, s"want 4 of 9 chunks, got ${refs.size}")
+    val n = plannedChunks(h5(Hdf5.fixturePath(), "v")
+      .filter(col("cell_x").between(10, 50) && col("cell_y").between(8, 40)))
+    assert(n == 4, s"want 4 of 9 chunks, got $n")
   }
 
   test("registry: scan_netcdf4 matches the formula; zonal stats cover all zones") {

@@ -54,10 +54,16 @@ class PlanShapeSpec extends SparkSuite {
       assert(!p.contains("SortMergeJoin"), s"$nm: cube side shuffled into a sort-merge join\n$p")
     }
     // coordinate decode: two broadcast index joins, plan otherwise flat
-    for (nm <- Seq("scan_zarr_v3_coords", "scan_netcdf4_coords")) {
+    for (nm <- Seq("scan_zarr_v3_coords")) {
       val p = plan(nm)
       assert(p.contains("BroadcastHashJoin"), s"$nm: labels not broadcast\n$p")
       assert(!p.contains("SortMergeJoin"), s"$nm: label join shuffled\n$p")
+    }
+    // through the DSv2 face the labels are columns of the scan: no join
+    for (nm <- Seq("scan_netcdf4_coords")) {
+      val p = plan(nm)
+      assert(p.contains("BatchScan") && !p.contains("Join"),
+        s"$nm: labels not read in the scan\n$p")
     }
   }
 
@@ -298,10 +304,12 @@ class PlanShapeSpec extends SparkSuite {
     assert(p.contains("BatchScan"), s"not a DSv2 scan:\n${p.take(2000)}")
     assert(!p.contains("Exchange"), s"DSv2 zarr scan grew a shuffle:\n${p.take(2000)}")
     // planning pruned the 3x3x3 chunk grid to 2x2x2 overlapping chunks
-    assert(df.rdd.getNumPartitions == 8,
-      s"expected 8 pruned chunk partitions, got ${df.rdd.getNumPartitions}")
+    assert(plannedChunks(df) == 8,
+      s"expected 8 pruned chunks, got ${plannedChunks(df)}")
     val full = spark.read.format("graft.zonal.ZarrSource").load(dir)
-    assert(full.rdd.getNumPartitions == 27)
+    assert(plannedChunks(full) == 27)
+    assert(full.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism,
+      "27 chunks pack into at most defaultParallelism partitions")
     assert(full.count() ==
       graft.zonal.Zarr.Zarr3T.toLong * graft.zonal.Zarr.ZarrH * graft.zonal.Zarr.ZarrW)
     // pruned decode reads ZERO chunk bytes: corrupt one chunk of a small
@@ -321,6 +329,37 @@ class PlanShapeSpec extends SparkSuite {
       && sm.schema.fieldNames.toSeq == Seq("cell_x", "cell_y", "value"))
   }
 
+  test("packed partitions: a corrupt chunk packed with clean ones keeps count(*) exact, fails a value read") {
+    import org.apache.spark.sql.functions.col
+    // 16x16 at 4x4 = 16 chunks, more than the session's parallelism, so
+    // the corrupt chunk 0.0 shares its packed partition with clean ones
+    val dir = java.nio.file.Files.createTempDirectory("zpack").toString
+    graft.zonal.Zarr.writeZarr(s"$dir/v", 16, 16, 4, 4, compressor = "zlib")(
+      (x, y) => (x + y).toDouble)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/v/0.0"), Array[Byte](1, 2, 3))
+    val sm = spark.read.format("graft.zonal.ZarrSource").load(s"$dir/v")
+    val parts = sm.queryExecution.sparkPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.inputPartitions
+    }.get
+    assert(plannedChunks(parts) == 16)
+    assert(parts.length <= spark.sparkContext.defaultParallelism)
+    val mates = parts.collectFirst {
+      case p: graft.zonal.PackedPartition if p.chunks.exists {
+        case z: graft.zonal.Zarr2InputPartition => z.ref.ci == 0 && z.ref.cj == 0
+        case _ => false
+      } => p.chunks.length
+    }
+    assert(mates.exists(_ > 1), s"chunk 0.0 must share its partition: $mates")
+    assert(sm.count() == 256)
+    assert(sm.filter(col("cell_x") >= 0).count() == 256,
+      "a geometry count over packed partitions must not decode the corrupt chunk")
+    assert(sm.select("cell_x", "cell_y").collect().length == 256)
+    intercept[Exception](sm.select("value").collect())
+    // its clean partition-mate still decodes on its own
+    assert(sm.filter(col("cell_y") < 4 && col("cell_x").between(4, 7))
+      .select("value").collect().length == 16)
+  }
+
   test("r18 DSv2 hdf5 source: 4-axis chunk pruning, zero scan shuffle, pruned decode reads no bytes") {
     import org.apache.spark.sql.functions.col
     // rank-3: 3x3x3 chunk grid pruned to 2x2x2 by the pushed window
@@ -336,19 +375,21 @@ class PlanShapeSpec extends SparkSuite {
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("BatchScan"), s"not a DSv2 scan:\n${p.take(2000)}")
     assert(!p.contains("Exchange"), s"DSv2 hdf5 scan grew a shuffle:\n${p.take(2000)}")
-    assert(df.rdd.getNumPartitions == 8,
-      s"expected 8 pruned chunk partitions, got ${df.rdd.getNumPartitions}")
+    assert(plannedChunks(df) == 8,
+      s"expected 8 pruned chunks, got ${plannedChunks(df)}")
     // rank-4: level + epoch prune their chunk axes too (2x2x3x3 grid →
     // level=1 keeps 1 of 2 level-chunks, x window 2 of 3 → 12)
     val d4 = spark.read.format("graft.zonal.Hdf5Source").option("var", "v")
       .load(graft.zonal.Hdf5.fixtureCube4dPath())
     assert(d4.schema.fieldNames.toSeq ==
       Seq("cell_x", "cell_y", "level", "epoch", "value"))
-    assert(d4.rdd.getNumPartitions == 36)
+    assert(plannedChunks(d4) == 36)
+    assert(d4.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism,
+      "36 chunks pack into at most defaultParallelism partitions")
     val w4 = d4.filter(col("cell_x").between(16, 47) && col("level") === 1
       && col("epoch") >= 1)
-    assert(w4.rdd.getNumPartitions == 12,
-      s"expected 12 pruned chunk partitions, got ${w4.rdd.getNumPartitions}")
+    assert(plannedChunks(w4) == 12,
+      s"expected 12 pruned chunks, got ${plannedChunks(w4)}")
     assert(w4.collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) -> r.getDouble(4))
       .toMap.apply((16, 0, 1, 2)) == graft.zonal.Hdf5.h5Cube4dValue(16, 0, 1, 2))
     // pruned decode reads ZERO chunk bytes: corrupt one chunk of a
@@ -373,13 +414,13 @@ class PlanShapeSpec extends SparkSuite {
       .load(graft.zonal.Hdf5.fixtureTimePath())
     assert(tdf.schema.fieldNames.toSeq ==
       Seq("cell_x", "cell_y", "epoch", "t_ts", "value"))
-    val nT = tdf.rdd.getNumPartitions
+    val nT = plannedChunks(tdf)
     assert(nT % graft.zonal.Hdf5.H5T == 0)
     val tw = tdf.filter(col("t_ts").between(
       org.apache.spark.sql.functions.lit("2020-03-01 16:00:00").cast("timestamp"),
       org.apache.spark.sql.functions.lit("2020-03-02 06:00:00").cast("timestamp")))
-    assert(tw.rdd.getNumPartitions == nT / graft.zonal.Hdf5.H5T * 3,
-      s"timestamp window must prune per-epoch stripe sets: $nT → ${tw.rdd.getNumPartitions}")
+    assert(plannedChunks(tw) == nT / graft.zonal.Hdf5.H5T * 3,
+      s"timestamp window must prune per-epoch stripe sets: $nT → ${plannedChunks(tw)}")
     assert(tw.select("epoch").distinct().collect().map(_.getInt(0)).toSet == Set(1, 2, 3))
   }
 
@@ -444,25 +485,25 @@ class PlanShapeSpec extends SparkSuite {
     assert(sc.isDefined, limPlan.take(1000))
     assert(cube.limit(100).select("cell_x").collect().length == 100)
     // partitions: rdd materializes the pushed-limit scan
-    assert(spark.read.format("graft.zonal.ZarrSource")
-      .load(graft.zonal.Zarr.fixture3dDir()).limit(100).rdd.getNumPartitions <= 2,
+    assert(plannedChunks(spark.read.format("graft.zonal.ZarrSource")
+      .load(graft.zonal.Zarr.fixture3dDir()).limit(100)) <= 2,
       "LIMIT 100 must plan a chunk prefix, not all 27 chunks")
     // RUNTIME filtering contract, pinned directly on the Scan: an
     // In(epoch, ...) arriving after planning re-prunes the manifest
     val b = new graft.zonal.ZarrScanBuilder(graft.zonal.Zarr.fixture3dDir())
     val scan = b.build().asInstanceOf[graft.zonal.ZarrScan]
-    assert(scan.planInputPartitions().length == 27)
+    assert(plannedChunks(scan.planInputPartitions()) == 27)
     assert(scan.filterAttributes().map(_.describe()).toSet ==
       Set("cell_x", "cell_y", "epoch"))
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("epoch", Array(4))))
     // epoch 4 lives in the last t-chunk [4,5) → 1x3x3 = 9 partitions
-    assert(scan.planInputPartitions().length == 9,
-      s"runtime epoch filter must re-prune: got ${scan.planInputPartitions().length}")
+    assert(plannedChunks(scan.planInputPartitions()) == 9,
+      s"runtime epoch filter must re-prune: got ${plannedChunks(scan.planInputPartitions())}")
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.EqualTo("cell_x", 40)))
     // x=40 lives in x-chunk [32,64) → 1x3x1 = 3
-    assert(scan.planInputPartitions().length == 3)
+    assert(plannedChunks(scan.planInputPartitions()) == 3)
     // end-to-end: a broadcast join on epoch with DPP enabled stays
     // exact whether or not the optimizer injects the runtime filter
     val dim = spark.range(0, 5).toDF("e").filter(col("e") % 2 === 1)
@@ -475,30 +516,30 @@ class PlanShapeSpec extends SparkSuite {
     val hb = new graft.zonal.Hdf5ScanBuilder(
       graft.zonal.Hdf5.fixtureCubePath(), "v")
     val hs = hb.build().asInstanceOf[graft.zonal.Hdf5Scan]
-    assert(hs.planInputPartitions().length == 27)
+    assert(plannedChunks(hs.planInputPartitions()) == 27)
     hs.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.EqualTo("epoch", 4)))
-    assert(hs.planInputPartitions().length == 9)
+    assert(plannedChunks(hs.planInputPartitions()) == 9)
     // netcdf: per-epoch stripe sets — epoch In(Seq(0)) keeps 1 of 3 sets
     val nb = new graft.zonal.NetcdfScanBuilder(
       graft.zonal.Netcdf.epochsFixturePath(), "t2m", null)
     val ns = nb.build().asInstanceOf[graft.zonal.NetcdfScan]
-    val nAll = ns.planInputPartitions().length
+    val nAll = plannedChunks(ns.planInputPartitions())
     ns.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("epoch", Array(0))))
-    assert(ns.planInputPartitions().length * graft.zonal.Netcdf.NcEpochs == nAll)
+    assert(plannedChunks(ns.planInputPartitions()) * graft.zonal.Netcdf.NcEpochs == nAll)
     // tiff planar: band EqualTo(0) halves the block set at runtime
     val tb = new graft.zonal.TiffScanBuilder(graft.zonal.Raster.planarFixturePath())
     val ts = tb.build().asInstanceOf[graft.zonal.TiffScan]
-    assert(ts.planInputPartitions().length == 8)
+    assert(plannedChunks(ts.planInputPartitions()) == 8)
     ts.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.EqualTo("band", 0)))
-    assert(ts.planInputPartitions().length == 4)
+    assert(plannedChunks(ts.planInputPartitions()) == 4)
     // STATIC IN-list pushdown: epoch IN (0, 4) is non-contiguous — a
     // min/max window keeps all 3 t-chunks, the set prunes to 2 (18)
     val inDf = cube.filter(col("epoch").isin(0, 4))
-    assert(inDf.rdd.getNumPartitions == 18,
-      s"static IN must prune t-chunks: got ${inDf.rdd.getNumPartitions}")
+    assert(plannedChunks(inDf) == 18,
+      s"static IN must prune t-chunks: got ${plannedChunks(inDf)}")
     assert(inDf.select("epoch").distinct().collect().map(_.getInt(0)).toSet
       == Set(0, 4))
     // limit prefixes on the other sources: a small limit plans few
@@ -511,7 +552,7 @@ class PlanShapeSpec extends SparkSuite {
         "tiff" -> spark.read.format("graft.zonal.TiffSource")
           .load(graft.zonal.Raster.fixturePath()))) {
       val lim = df.limit(50)
-      assert(lim.rdd.getNumPartitions <= 2, s"$label LIMIT must plan a prefix")
+      assert(plannedChunks(lim) <= 2, s"$label LIMIT must plan a prefix")
       assert(lim.count() == 50, label)
     }
   }
@@ -528,8 +569,8 @@ class PlanShapeSpec extends SparkSuite {
     // x in [8,40] -> 2 of 3, y >= 35 -> 2 of 3, epoch 2 -> 1 of 3 => 4
     val scanDesc = q.queryExecution.executedPlan.collectLeaves().mkString
     assert(scanDesc.contains("graft-zarr"), scanDesc.take(500))
-    assert(q.rdd.getNumPartitions == 4,
-      s"catalog-path window must prune 4 of 27 chunks, got ${q.rdd.getNumPartitions}")
+    assert(plannedChunks(q) == 4,
+      s"catalog-path window must prune 4 of 27 chunks, got ${plannedChunks(q)}")
     assert(q.count() == 33L * 35)
     val pushed = q.queryExecution.optimizedPlan.toString
     assert(pushed.contains("PushedFilters") || scanDesc.contains("window=[8..40]"),
@@ -577,8 +618,8 @@ class PlanShapeSpec extends SparkSuite {
       .filter(col("x_coord").between(-115.0, -105.0)
         && col("y_coord") >= 50.0
         && col("t_ts") <= lit("2020-03-01 16:00:00").cast("timestamp"))
-    assert(sel3.rdd.getNumPartitions == 4,
-      s"zarr sel3 must plan 4 of 27 chunks, got ${sel3.rdd.getNumPartitions}")
+    assert(plannedChunks(sel3) == 4,
+      s"zarr sel3 must plan 4 of 27 chunks, got ${plannedChunks(sel3)}")
     assert(sel3.count() == 41L * 30 * 2, sel3.count().toString)
     // hdf5 twin: the sel3 fixture's cube is CONTIGUOUS (row stripes
     // span the width), so the y window and the time window prune while
@@ -590,7 +631,7 @@ class PlanShapeSpec extends SparkSuite {
       .filter(col("x_coord").between(-115.0, -105.0)
         && col("y_coord") >= 50.0
         && col("t_ts") <= lit("2020-03-01 16:00:00").cast("timestamp"))
-    val (h5N, h5AllN) = (h5.rdd.getNumPartitions, h5All.rdd.getNumPartitions)
+    val (h5N, h5AllN) = (plannedChunks(h5), plannedChunks(h5All))
     assert(h5N < h5AllN && h5N >= 1,
       s"hdf5 sel3 must prune the stripe manifest: $h5N of $h5AllN")
     assert(h5.count() == 41L * 30 * 2)
@@ -600,8 +641,8 @@ class PlanShapeSpec extends SparkSuite {
     val c4 = spark.read.format("graft.zonal.ZarrSource")
       .load(graft.zonal.Zarr.fixture4dDir())
       .filter(col("level") === 2 && col("epoch").between(1, 2) && col("cell_x") < 40)
-    assert(c4.rdd.getNumPartitions == 12,
-      s"zarr 4d window must plan 12 of 36 chunks, got ${c4.rdd.getNumPartitions}")
+    assert(plannedChunks(c4) == 12,
+      s"zarr 4d window must plan 12 of 36 chunks, got ${plannedChunks(c4)}")
     assert(c4.count() == 40L * 70 * 2)
     // rank-4 count(*) answers from metadata: w*h*levels*epochs
     val cnt = spark.read.format("graft.zonal.ZarrSource")
@@ -619,10 +660,11 @@ class PlanShapeSpec extends SparkSuite {
     // 3x3x3 on chunkT=2 → epoch 2 keeps the middle t-shard: 9)
     val sh = spark.read.format("graft.zonal.ZarrSource")
       .load(graft.zonal.Zarr.fixtureSharded3dDir())
-    assert(sh.rdd.getNumPartitions == 27)
+    assert(plannedChunks(sh) == 27)
+    assert(sh.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism)
     val e2 = sh.filter(col("epoch") === 2)
-    assert(e2.rdd.getNumPartitions == 9,
-      s"epoch pushdown must prune shard columns: got ${e2.rdd.getNumPartitions}")
+    assert(plannedChunks(e2) == 9,
+      s"epoch pushdown must prune shard columns: got ${plannedChunks(e2)}")
     assert(e2.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(3))
       .toMap.apply((10, 5)) == graft.zonal.Zarr.zarr3dValue(10, 5, 2))
     // zonal-over-DSv2: the whole stack stays one declarative plan —
@@ -658,20 +700,20 @@ class PlanShapeSpec extends SparkSuite {
       .load(arr)
     assert(df.schema.fieldNames.toSeq ==
       Seq("cell_x", "cell_y", "x_coord", "y_coord", "value"))
-    assert(df.rdd.getNumPartitions == 9)
+    assert(plannedChunks(df) == 9)
     // sel(x=[-115,-105], y>=50): x index [20,60] → 2 of 3 x-chunks,
     // y index [40,69] → 2 of 3 y-chunks → 4 planned partitions
     val sel = df.filter(col("x_coord").between(-115.0, -105.0)
       && col("y_coord") >= 50.0)
-    assert(sel.rdd.getNumPartitions == 4,
-      s"label window must prune chunks: 9 → ${sel.rdd.getNumPartitions}")
+    assert(plannedChunks(sel) == 4,
+      s"label window must prune chunks: 9 → ${plannedChunks(sel)}")
     val got = sel.collect()
     assert(got.length == 41 * 30, got.length) // x 20..60, y 40..69
     assert(got.forall(r => r.getDouble(2) >= -115.0 && r.getDouble(2) <= -105.0
       && r.getDouble(3) >= 50.0))
     assert(!sel.queryExecution.executedPlan.toString.contains("Exchange"))
     // an empty label window plans ZERO chunks
-    assert(df.filter(col("x_coord") > 1e9).rdd.getNumPartitions == 0)
+    assert(plannedChunks(df.filter(col("x_coord") > 1e9)) == 0)
     // classic twin: the y label window prunes STRIPES (x stays
     // residual — row-major stripes span the width)
     val nc = spark.read.format("graft.zonal.NetcdfSource")
@@ -679,10 +721,10 @@ class PlanShapeSpec extends SparkSuite {
       .load(graft.zonal.Netcdf.coordsFixturePath())
     assert(nc.schema.fieldNames.toSeq ==
       Seq("cell_x", "cell_y", "x_coord", "y_coord", "value"))
-    val nFullNc = nc.rdd.getNumPartitions
+    val nFullNc = plannedChunks(nc)
     val selNc = nc.filter(col("y_coord") >= 50.0) // y index >= 40 of 70
-    assert(selNc.rdd.getNumPartitions < nFullNc,
-      s"y label window must prune stripes: $nFullNc → ${selNc.rdd.getNumPartitions}")
+    assert(plannedChunks(selNc) < nFullNc,
+      s"y label window must prune stripes: $nFullNc → ${plannedChunks(selNc)}")
     val gotNc = selNc.collect()
     assert(gotNc.length == 80 * 30)
     assert(gotNc.forall(_.getDouble(3) >= 50.0))
@@ -697,7 +739,7 @@ class PlanShapeSpec extends SparkSuite {
     val selH5 = h5.filter(col("x_coord").between(-115.0, -105.0)
       && col("y_coord") >= 50.0)
     assert(selH5.count() == 41L * 30)
-    assert(h5.filter(col("y_coord") > 1e9).rdd.getNumPartitions == 0,
+    assert(plannedChunks(h5.filter(col("y_coord") > 1e9)) == 0,
       "an empty hdf5 label window must plan zero chunks")
     // a non-monotonic axis refuses loudly
     val bad = java.nio.file.Files.createTempDirectory("zsel").toString
@@ -784,15 +826,15 @@ class PlanShapeSpec extends SparkSuite {
       .load(s"${graft.zonal.Zarr.fixtureTimeDir()}/v")
     assert(tdf.schema.fieldNames.toSeq ==
       Seq("cell_x", "cell_y", "epoch", "t_ts", "value"))
-    assert(tdf.rdd.getNumPartitions == 27)
+    assert(plannedChunks(tdf) == 27)
     // window keeps epochs 1..3; chunkT=2 → t-chunks [0,2) and [2,4)
     // survive, [4,5) prunes → 18 planned partitions; epoch 0 rides in
     // a kept chunk and MUST be trimmed by the residual t_ts filter
     val tw = tdf.filter(col("t_ts").between(
       lit("2020-03-01 16:00:00").cast("timestamp"),
       lit("2020-03-02 06:00:00").cast("timestamp")))
-    assert(tw.rdd.getNumPartitions == 18,
-      s"timestamp window must prune t-chunks: 27 → ${tw.rdd.getNumPartitions}")
+    assert(plannedChunks(tw) == 18,
+      s"timestamp window must prune t-chunks: 27 → ${plannedChunks(tw)}")
     val lab = tw.select("epoch", "t_ts").distinct().collect()
       .map(r => r.getInt(0) -> r.getTimestamp(1).toInstant).toMap
     assert(lab.keySet == Set(1, 2, 3), lab.toString)
@@ -810,15 +852,15 @@ class PlanShapeSpec extends SparkSuite {
     // heuristic, the per-epoch stripe count is not)
     val full = spark.read.format("graft.zonal.NetcdfSource").option("var", "t2m")
       .load(graft.zonal.Netcdf.epochsFixturePath())
-    val nFull = full.rdd.getNumPartitions
+    val nFull = plannedChunks(full)
     assert(nFull % graft.zonal.Netcdf.NcEpochs == 0)
     val byEpoch = full.filter(col("epoch") >= 1)
-    assert(byEpoch.rdd.getNumPartitions ==
+    assert(plannedChunks(byEpoch) ==
       nFull / graft.zonal.Netcdf.NcEpochs * (graft.zonal.Netcdf.NcEpochs - 1),
-      s"epoch predicate must prune per-epoch stripe sets: $nFull → ${byEpoch.rdd.getNumPartitions}")
+      s"epoch predicate must prune per-epoch stripe sets: $nFull → ${plannedChunks(byEpoch)}")
     // y window prunes within a plane; values exact through the decode
     val w = full.filter(col("cell_y").between(8, 40) && col("epoch") >= 1)
-    assert(w.rdd.getNumPartitions < byEpoch.rdd.getNumPartitions)
+    assert(plannedChunks(w) < plannedChunks(byEpoch))
     val got = w.collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
     assert(got.size == 80 * 33 * 2)
@@ -832,8 +874,8 @@ class PlanShapeSpec extends SparkSuite {
       .load(graft.zonal.Netcdf.cube4dFixturePath())
     assert(d4.schema.fieldNames.toSeq ==
       Seq("cell_x", "cell_y", "level", "epoch", "value"))
-    val n4 = d4.rdd.getNumPartitions
-    assert(d4.filter(col("level") === 1).rdd.getNumPartitions * graft.zonal.Netcdf.Nc4L == n4)
+    val n4 = plannedChunks(d4)
+    assert(plannedChunks(d4.filter(col("level") === 1)) * graft.zonal.Netcdf.Nc4L == n4)
     // decode-free positions: count(*) and positions-only projections
     // read no data bytes — truncate a copy's tail so any value read
     // fails loudly while geometry stays exact
@@ -857,13 +899,13 @@ class PlanShapeSpec extends SparkSuite {
       .load(graft.zonal.Netcdf.timeFixturePath())
     assert(tdf.schema.fieldNames.toSeq ==
       Seq("cell_x", "cell_y", "epoch", "t_ts", "value"))
-    val nT = tdf.rdd.getNumPartitions
+    val nT = plannedChunks(tdf)
     assert(nT % graft.zonal.Netcdf.NcTimeEpochs == 0)
     val tw = tdf.filter(col("t_ts").between(
       org.apache.spark.sql.functions.lit("2020-03-01 16:00:00").cast("timestamp"),
       org.apache.spark.sql.functions.lit("2020-03-02 06:00:00").cast("timestamp")))
-    assert(tw.rdd.getNumPartitions == nT / graft.zonal.Netcdf.NcTimeEpochs * 3,
-      s"timestamp window must prune per-epoch stripe sets: $nT → ${tw.rdd.getNumPartitions}")
+    assert(plannedChunks(tw) == nT / graft.zonal.Netcdf.NcTimeEpochs * 3,
+      s"timestamp window must prune per-epoch stripe sets: $nT → ${plannedChunks(tw)}")
     val lab = tw.select("epoch", "t_ts").distinct().collect()
       .map(r => r.getInt(0) -> r.getTimestamp(1).toInstant).toMap
     assert(lab.keySet == Set(1, 2, 3))
@@ -886,10 +928,10 @@ class PlanShapeSpec extends SparkSuite {
     // through the per-plane predictor-3 decode
     val pl = spark.read.format("graft.zonal.TiffSource")
       .load(graft.zonal.Raster.planarFixturePath())
-    assert(pl.rdd.getNumPartitions == 8)
+    assert(plannedChunks(pl) == 8)
     val plB1 = pl.filter(col("band") === 1)
-    assert(plB1.rdd.getNumPartitions == 4,
-      s"planar band predicate must prune blocks, got ${plB1.rdd.getNumPartitions}")
+    assert(plannedChunks(plB1) == 4,
+      s"planar band predicate must prune blocks, got ${plannedChunks(plB1)}")
     val gotP = plB1.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(3)).toMap
     assert(gotP.size == 48 * 40 && gotP((7, 9)) == graft.zonal.Raster.mbValue(7, 9, 1))
     assert(!plB1.queryExecution.executedPlan.toString.contains("Exchange"))
@@ -904,11 +946,18 @@ class PlanShapeSpec extends SparkSuite {
 
   test("r18 multi-file concat scans: label join broadcasts, manifest repartition the only data shuffle") {
     // the mf scans at 100 TB: thousands of member files → the chunk
-    // manifests must be the only roundrobin shuffle, the global label
-    // table (axis-sized) must BROADCAST onto the cells, and nothing may
-    // sort-merge the cube side
+    // manifests split as local Seqs with no roundrobin shuffle, the
+    // global label table (axis-sized) must BROADCAST onto the cells, and
+    // nothing may sort-merge the cube side
+    // (scan_netcdf4_4d_time reads through the DSv2 face: its labels are
+    // a column of the scan, so its plan has no join and no roundrobin)
+    val face = q("scan_netcdf4_4d_time")
+    face.collect()
+    val fp = face.queryExecution.executedPlan.toString
+    assert(fp.contains("BatchScan") && !fp.contains("Join") && !fp.contains("roundrobin"),
+      s"scan_netcdf4_4d_time: labels not read in the scan:\n${fp.take(3000)}")
     Seq("scan_netcdf_mf", "scan_zarr_mf", "scan_netcdf4_mf",
-        "scan_netcdf_time_noleap", "scan_netcdf4_4d_time", "scan_zarr_4d_time")
+        "scan_netcdf_time_noleap", "scan_zarr_4d_time")
       .foreach { n =>
         val df = q(n)
         df.collect()
@@ -919,8 +968,7 @@ class PlanShapeSpec extends SparkSuite {
           s"$n shuffles the cube side for the label join:\n${p.take(3000)}")
         val exchanges = "Exchange [a-z]+".r.findAllIn(p).toList
           .map(_.stripPrefix("Exchange "))
-        assert(exchanges.count(_ == "roundrobin") <= 1
-          && exchanges.forall(e => e == "roundrobin" || e == "rangepartitioning"),
+        assert(exchanges.forall(_ == "rangepartitioning"),
           s"$n has unexpected exchanges $exchanges:\n${p.take(3000)}")
       }
   }
@@ -984,11 +1032,10 @@ class PlanShapeSpec extends SparkSuite {
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("Join"), s"$n grew a join:\n${p.take(2000)}")
-      // exchanges: exactly the round-robin manifest repartition (plus
-      // the orderBy's range exchange for the deterministic dump)
+      // exchanges: only the orderBy's range exchange for the
+      // deterministic dump — the tile manifest splits as a local Seq
       val exchanges = "Exchange [a-z]+".r.findAllIn(p).toList.map(_.stripPrefix("Exchange "))
-      assert(exchanges.count(_ == "roundrobin") <= 1
-        && exchanges.forall(e => e == "roundrobin" || e == "rangepartitioning"),
+      assert(exchanges.forall(_ == "rangepartitioning"),
         s"$n has unexpected exchanges $exchanges:\n${p.take(3000)}")
     }
   }
@@ -1008,11 +1055,11 @@ class PlanShapeSpec extends SparkSuite {
     assert(p.contains("BatchScan"), s"not a DSv2 scan:\n${p.take(2000)}")
     assert(!p.contains("Exchange"), s"DSv2 raster scan grew a shuffle:\n${p.take(2000)}")
     // planning pruned the 3x3 manifest to the 4 overlapping tiles
-    assert(df.rdd.getNumPartitions == 4,
-      s"expected 4 pruned tile partitions, got ${df.rdd.getNumPartitions}")
+    assert(plannedChunks(df) == 4,
+      s"expected 4 pruned tiles, got ${plannedChunks(df)}")
     // unfiltered: all 9 tiles, all cells
     val full = spark.read.format("graft.zonal.TiffSource").load(path)
-    assert(full.rdd.getNumPartitions == 9)
+    assert(plannedChunks(full) == 9)
     assert(full.count() == graft.zonal.Raster.FixW.toLong * graft.zonal.Raster.FixH)
     // column pruning reaches the decoder: positions-only projection and
     // count(*) both work without the value column
@@ -1174,24 +1221,25 @@ class PlanShapeSpec extends SparkSuite {
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("Join"), s"$n grew a join:\n${p.take(2000)}")
+      // no manifest round-robin: the face packs its chunks, a local
+      // Seq of refs splits without an exchange
       val exchanges = "Exchange [a-z]+".r.findAllIn(p).toList.map(_.stripPrefix("Exchange "))
-      assert(exchanges.count(_ == "roundrobin") <= 1
-        && exchanges.forall(e => e == "roundrobin" || e == "rangepartitioning"),
+      assert(exchanges.forall(_ == "rangepartitioning"),
         s"$n has unexpected exchanges $exchanges:\n${p.take(3000)}")
     }
   }
 
   test("reprojection: pure map-side projection, degree-zone join broadcasts") {
-    // the Krüger inverse must not add any exchange beyond the manifest
-    // repartition + the dump's range sort — at 100 TB the cell side of
-    // a reprojection NEVER shuffles
+    // the Krüger inverse must not add any exchange beyond the dump's
+    // range sort — at 100 TB the cell side of a reprojection NEVER
+    // shuffles
     Seq("raster_reproject_wgs84", "raster_reproject_utm").foreach { n =>
       val df = q(n)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("Join"), s"$n grew a join:\n${p.take(2000)}")
       val exchanges = "Exchange [a-z]+".r.findAllIn(p).toList.map(_.stripPrefix("Exchange "))
-      assert(exchanges.forall(e => e == "roundrobin" || e == "rangepartitioning"),
+      assert(exchanges.forall(_ == "rangepartitioning"),
         s"$n has unexpected exchanges $exchanges")
     }
     // degree-space zonal: zones broadcast, cells stay put

@@ -202,7 +202,7 @@ object Props extends Properties("graft") {
       graft.core.Fs.rmTree(dir)
       graft.zonal.Zarr.writeZarrV3Sharded(dir, h, w, sh, sw, ih, iw)(
         (x, y) => (x * 31 + y * 7) % 100)
-      val got = graft.zonal.Zarr.scanZarr(spark, dir).collect()
+      val got = spark.read.format("graft.zonal.ZarrSource").load(dir).collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
       got.size == h * w && got.forall { case ((x, y), v) =>
         v == ((x * 31 + y * 7) % 100).toDouble
@@ -233,6 +233,10 @@ object Props extends Properties("graft") {
     es <- Gen.nonEmptyListOf(Gen.choose(0, 4))
   } yield (x0, x0 + dx, y0, dy + y0, t0, es)
 
+  /** `df` behind an RDD boundary: no filter reaches its scan. */
+  private def unpruned(df: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(df.rdd, df.schema)
+
   property("DSv2 zarr pruning ≡ unpruned scan under random windows and IN sets") =
     forAll(winGen) { case (x0, x1, y0, y1, t0, es) =>
       import org.apache.spark.sql.functions.col
@@ -243,11 +247,12 @@ object Props extends Properties("graft") {
       val viaDsv2 = spark.read.format("graft.zonal.ZarrSource").load(dir)
         .filter(pred).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3))).sorted
-      // the unpruned reference: the Dataset scan with the same predicate
-      val viaDataset = graft.zonal.Zarr.scanZarr3d(spark, dir)
+      // the unpruned reference: the same scan behind an RDD boundary,
+      // where no filter pushes down, with the same predicate
+      val viaUnpruned = unpruned(spark.read.format("graft.zonal.ZarrSource").load(dir))
         .filter(pred).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3))).sorted
-      viaDsv2.sameElements(viaDataset)
+      viaDsv2.sameElements(viaUnpruned)
     }
 
   property("DSv2 hdf5 pruning ≡ unpruned scan under random 4-axis windows") =
@@ -261,11 +266,11 @@ object Props extends Properties("graft") {
       val viaDsv2 = spark.read.format("graft.zonal.Hdf5Source")
         .option("var", "v").load(p).filter(pred).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getDouble(4))).sorted
-      val viaDataset = graft.zonal.Hdf5.scanNetcdf4Cube4d(spark, p, "v")
-        .select("cell_x", "cell_y", "level", "epoch", "value")
+      val viaUnpruned = unpruned(spark.read.format("graft.zonal.Hdf5Source")
+        .option("var", "v").load(p))
         .filter(pred).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getDouble(4))).sorted
-      viaDsv2.sameElements(viaDataset)
+      viaDsv2.sameElements(viaUnpruned)
     }
 
   property("DSv2 netcdf stripe pruning ≡ unpruned scan under random windows") =

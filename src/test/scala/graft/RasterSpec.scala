@@ -639,8 +639,8 @@ class RasterSpec extends SparkSuite {
     // ONE scan: no per-file Union in the plan
     assert(!df.queryExecution.executedPlan.toString.contains("Union"),
       "mosaic planned as a union of per-file scans")
-    // 36 tiles across the collection, one task each (manifest repartition
-    // caps at parallelism)
+    // 36 tiles across the collection; the local manifest splits into at
+    // most the session's leaf parallelism tasks
     // files disagreeing on sample type are refused
     val i32 = s"${java.nio.file.Files.createTempDirectory("graft_raster")}/i32.tif"
     Raster.writeTiffOpts(i32, 8, 8, 8, 8,

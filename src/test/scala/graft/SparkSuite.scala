@@ -26,4 +26,17 @@ trait SparkSuite extends AnyFunSuite {
   val sf: String = "/root/testdata/sf0.001"
 
   def q(name: String) = SparkEntry.queries(name)(spark, sf)
+
+  /** Chunks planned by the chunked DSv2 faces under `df`'s physical plan:
+    * the faces pack their pruned chunks into at most `defaultParallelism`
+    * partitions, so a pruning check counts chunks, not partitions.
+    */
+  def plannedChunks(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        plannedChunks(b.inputPartitions)
+    }.sum
+
+  def plannedChunks(parts: Seq[org.apache.spark.sql.connector.read.InputPartition]): Int =
+    parts.collect { case p: graft.zonal.PackedPartition => p.chunks.length }.sum
 }

@@ -34,8 +34,8 @@ class SqlWriteSpec extends SparkSuite {
     // above prunes to ONE of the 1x2 chunk columns
     val plan = back.queryExecution.executedPlan.toString
     assert(plan.contains("BatchScan") || plan.contains("graft"), plan.take(400))
-    val parts = back.rdd.getNumPartitions
-    assert(parts == 1, s"chunk pruning through the catalog: want 1 partition, got $parts")
+    val parts = plannedChunks(back)
+    assert(parts == 1, s"chunk pruning through the catalog: want 1 chunk, got $parts")
   }
 
   test("r20 MERGE INTO a cube table: matched cells update, others keep values; one equi-join plan; DELETE refuses") {

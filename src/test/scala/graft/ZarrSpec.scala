@@ -10,6 +10,13 @@ import graft.zonal.Zarr
   */
 class ZarrSpec extends SparkSuite {
 
+  /** A store through the Zarr DSv2 face. */
+  private def zarr(dir: String) = spark.read.format("graft.zonal.ZarrSource").load(dir)
+
+  /** Hierarchy member `v` with CF time labels from its sibling `t`. */
+  private def zarrTime(dir: String) =
+    spark.read.format("graft.zonal.ZarrSource").option("time", "t").load(s"$dir/v")
+
   private def tmpDir(name: String): java.io.File = {
     val d = new java.io.File(
       s"${System.getProperty("java.io.tmpdir")}/graft_io/zarrspec_$name")
@@ -49,7 +56,7 @@ class ZarrSpec extends SparkSuite {
     put(d, "0.1", chunk(0, 1))
     put(d, "1.0", chunk(1, 0))
     // 1.1 deliberately absent -> fill 7 for its in-bounds cells
-    val got = Zarr.scanZarr(spark, d.getPath).collect()
+    val got = zarr(d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 20, s"want 5x4 = 20 cells, got ${got.size}")
     for (y <- 0 until 5; x <- 0 until 4) {
@@ -74,7 +81,7 @@ class ZarrSpec extends SparkSuite {
     }
     put(d, "0/0", chunk(0))
     put(d, "0/1", chunk(1))
-    val got = Zarr.scanZarr(spark, d.getPath).collect()
+    val got = zarr(d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 6)
     for (y <- 0 until 2; x <- 0 until 3)
@@ -86,7 +93,7 @@ class ZarrSpec extends SparkSuite {
         ("zlib", "<i2"), ("raw", "|u1"), ("blosc", "<f8"), ("blosc", ">i2"))) {
       val d = tmpDir(s"rt_${comp}_${dtype.replace("<", "l").replace(">", "b").replace("|", "n")}")
       Zarr.writeZarr(d.getPath, 10, 13, 4, 5, comp, dtype)((x, y) => ((3 * x + 7 * y) % 120).toDouble)
-      val got = Zarr.scanZarr(spark, d.getPath).collect()
+      val got = zarr(d.getPath).collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
       assert(got.size == 130, s"$comp/$dtype: ${got.size} cells")
       for (y <- 0 until 10; x <- 0 until 13)
@@ -99,7 +106,8 @@ class ZarrSpec extends SparkSuite {
     // dataset must carry exactly 9 work units
     val m = Zarr.readMeta(Zarr.fixtureDir())
     assert(m.chunksAcross == 3 && m.chunksDown == 3)
-    assert(Zarr.scanZarr(spark, Zarr.fixtureDir()).count() == 80L * 70L)
+    assert(plannedChunks(zarr(Zarr.fixtureDir())) == 9)
+    assert(zarr(Zarr.fixtureDir()).count() == 80L * 70L)
   }
 
   private def msgs(t: Throwable): String =
@@ -123,13 +131,13 @@ class ZarrSpec extends SparkSuite {
       .put(2.toByte).put(1.toByte).put((0x02 | (1 << 5)).toByte).put(4.toByte)
       .putInt(16).putInt(16).putInt(32).put(payload).array()
     put(d, "0.0", f)
-    val got = Zarr.scanZarr(spark, d.getPath).collect()
+    val got = zarr(d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got == Map((0, 0) -> 11.0, (1, 0) -> 22.0, (0, 1) -> 33.0, (1, 1) -> 44.0))
     // truncating the chunk fails loudly through the scan path too
     put(d, "0.0", f.take(31))
     assert(msgs(intercept[Throwable](
-      Zarr.scanZarr(spark, d.getPath).count())).contains("truncated"))
+      zarr(d.getPath).collect())).contains("truncated"))
   }
 
   test("hand-built v3 TRANSPOSE store: column-major chunks remap exactly") {
@@ -148,7 +156,7 @@ class ZarrSpec extends SparkSuite {
     val b = java.nio.ByteBuffer.allocate(24).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     for (x <- 0 until 3; y <- 0 until 2) b.putInt(100 * y + x) // column-major
     put(d, "c/0/0", b.array())
-    val got = Zarr.scanZarr(spark, d.getPath).collect()
+    val got = zarr(d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 6)
     for (y <- 0 until 2; x <- 0 until 3)
@@ -186,7 +194,7 @@ class ZarrSpec extends SparkSuite {
     for (ck <- 0 until 2; ci <- 0 until 2; cj <- 0 until 2
          if (ck, ci, cj) != ((1, 1, 1)))
       put(d, s"$ck.$ci.$cj", chunk(ck, ci, cj))
-    val got = Zarr.scanZarr3d(spark, d.getPath).collect()
+    val got = zarr(d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
     assert(got.size == 3 * 3 * 4)
     for (t <- 0 until 3; y <- 0 until 3; x <- 0 until 4) {
@@ -210,7 +218,7 @@ class ZarrSpec extends SparkSuite {
     def ff3(x: Int, y: Int, t: Int): Double = 100 * t + 10 * y + x
     Zarr.writeZarr3d(f3d.getPath, 3, 4, 5, 2, 2, 3, compressor = "zlib",
       fOrder = true)(ff3)
-    val g3 = Zarr.scanZarr3d(spark, f3d.getPath).collect()
+    val g3 = zarr(f3d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
     assert(g3.size == 3 * 4 * 5)
     for (t <- 0 until 3; y <- 0 until 4; x <- 0 until 5)
@@ -229,13 +237,13 @@ class ZarrSpec extends SparkSuite {
     val threeD = store("threed",
       """{"zarr_format": 2, "shape": [4, 4, 4], "chunks": [2, 2, 2], "dtype": "<f8",
         |"compressor": null, "fill_value": 0, "order": "C", "filters": null}""".stripMargin)
-    assert(msgs(intercept[Throwable](Zarr.scanZarr(spark, threeD))).contains("scanZarr3d"))
+    // the face reads the rank from the store: rank 3 adds `epoch`
+    assert(zarr(threeD).columns.toSeq == Seq("cell_x", "cell_y", "epoch", "value"))
     val fourD = store("fourd",
       """{"zarr_format": 2, "shape": [2, 2, 4, 4], "chunks": [1, 1, 2, 2], "dtype": "<f8",
         |"compressor": null, "fill_value": 0, "order": "C", "filters": null}""".stripMargin)
-    assert(msgs(intercept[Throwable](Zarr.scanZarr(spark, fourD))).contains("scanZarr4d"))
-    // ...and the rank-3 scan refuses a rank-4 store by name
-    assert(msgs(intercept[Throwable](Zarr.scanZarr3d(spark, fourD))).contains("scanZarr4d"))
+    // ...and rank 4 adds `level` too
+    assert(zarr(fourD).columns.toSeq == Seq("cell_x", "cell_y", "level", "epoch", "value"))
     // rank-4 F (r16) roundtrips through the writer+reader pair — a
     // non-uniform lattice so any axis mixup in the remap mismatches
     val f4d = tmpDir("forder4rt")
@@ -243,7 +251,7 @@ class ZarrSpec extends SparkSuite {
       1000 * t + 100 * l + 10 * y + x
     Zarr.writeZarr4d(f4d.getPath, 3, 2, 4, 5, 2, 1, 2, 3, compressor = "zlib",
       fOrder = true)(ff4)
-    val g4 = Zarr.scanZarr4d(spark, f4d.getPath).collect()
+    val g4 = zarr(f4d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) -> r.getDouble(4)).toMap
     assert(g4.size == 3 * 2 * 4 * 5)
     for (t <- 0 until 3; l <- 0 until 2; y <- 0 until 4; x <- 0 until 5)
@@ -254,7 +262,7 @@ class ZarrSpec extends SparkSuite {
       """{"zarr_format": 2, "shape": [2, 2], "chunks": [2, 2], "dtype": "<f8",
         |"compressor": null, "fill_value": null, "order": "C", "filters": null}""".stripMargin)
     assert(msgs(intercept[Throwable](
-      Zarr.scanZarr(spark, noFill).count())).contains("fill_value"))
+      zarr(noFill).collect())).contains("fill_value"))
 
     // a v3 GROUP document has no chunks — named refusal, not a misread
     val v3g = tmpDir("v3group")
@@ -314,7 +322,7 @@ class ZarrSpec extends SparkSuite {
     body.write(java.nio.ByteBuffer.allocate(4)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(crc.getValue.toInt).array())
     put(d, "c/0/0", body.toByteArray)
-    val got = Zarr.scanZarr(spark, d.getPath).collect()
+    val got = zarr(d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 16)
     for (y <- 0 until 4; x <- 0 until 4) {
@@ -326,7 +334,7 @@ class ZarrSpec extends SparkSuite {
     val corrupted = java.nio.file.Files.readAllBytes(fb.toPath)
     corrupted(corrupted.length - 12) = (corrupted(corrupted.length - 12) ^ 0x5a).toByte
     java.nio.file.Files.write(fb.toPath, corrupted)
-    val e = intercept[Throwable] { Zarr.scanZarr(spark, d.getPath).collect() }
+    val e = intercept[Throwable] { zarr(d.getPath).collect() }
     assert(msgs(e).contains("crc32c"), msgs(e))
     // windowed scan over a shard PRUNES inner chunks before decode:
     // rebuild the shard with inner (1,1) POISONED (valid index entry,
@@ -352,8 +360,9 @@ class ZarrSpec extends SparkSuite {
     body2.write(java.nio.ByteBuffer.allocate(4)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(crc2.getValue.toInt).array())
     put(d2, "c/0/0", body2.toByteArray)
-    intercept[Throwable] { Zarr.scanZarr(spark, d2.getPath).collect() }
-    val win = Zarr.scanZarrWindow(spark, d2.getPath, 0, 1, 0, 1).collect()
+    intercept[Throwable] { zarr(d2.getPath).collect() }
+    val win = zarr(d2.getPath).filter(col("cell_x").between(0, 1) && col("cell_y").between(0, 1))
+      .collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(win == Map((0, 0) -> 0.0, (1, 0) -> 1.0, (0, 1) -> 100.0, (1, 1) -> 101.0))
     // the DSv2 face threads its pushed window into the ref the same
@@ -404,7 +413,7 @@ class ZarrSpec extends SparkSuite {
     put(d, "c/0/0", chunk(0, 0))
     put(d, "c/0/1", chunk(0, 1))
     put(d, "c/1/0", chunk(1, 0))
-    val got = Zarr.scanZarr(spark, d.getPath).collect()
+    val got = zarr(d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 20)
     for (y <- 0 until 5; x <- 0 until 4) {
@@ -423,7 +432,7 @@ class ZarrSpec extends SparkSuite {
     val b2 = java.nio.ByteBuffer.allocate(4 * 8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     Seq(1.0, 2.0, 3.0, 4.0).foreach(b2.putDouble)
     put(d2, "0.0", b2.array())
-    val got2 = Zarr.scanZarr(spark, d2.getPath).collect()
+    val got2 = zarr(d2.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got2 == Map((0, 0) -> 1.0, (1, 0) -> 2.0, (0, 1) -> 3.0, (1, 1) -> 4.0))
     // registry twin: the v3 fixture replays the same formula
@@ -548,7 +557,7 @@ class ZarrSpec extends SparkSuite {
     for (ck <- 0 until 2; cl <- 0 until 2; ci <- 0 until 2; cj <- 0 until 2
          if (ck, cl, ci, cj) != ((1, 1, 1, 1)))
       put(d, s"$ck.$cl.$ci.$cj", chunk(ck, cl, ci, cj))
-    val got = Zarr.scanZarr4d(spark, d.getPath).collect()
+    val got = zarr(d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) -> r.getDouble(4)).toMap
     assert(got.size == 3 * 2 * 3 * 4)
     for (t <- 0 until 3; l <- 0 until 2; y <- 0 until 3; x <- 0 until 4) {
@@ -581,7 +590,7 @@ class ZarrSpec extends SparkSuite {
       f.getParentFile.mkdirs()
       java.nio.file.Files.write(f.toPath, b.array())
     }
-    val got = Zarr.scanZarr4d(spark, d.getPath).collect()
+    val got = zarr(d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) -> r.getDouble(4)).toMap
     assert(got.size == 2 * 2 * 2 * 3)
     for (t <- 0 until 2; l <- 0 until 2; y <- 0 until 2; x <- 0 until 3)
@@ -592,18 +601,20 @@ class ZarrSpec extends SparkSuite {
     // fixture grid: 2 (t: 3/2) × 2 (level: 4/3) × 3 × 3 = 36 chunks;
     // the window (t 2-2, l 1-2, x 10-50, y 8-40) overlaps
     // 1 (t-chunk 1) × 1 (level-chunk 0) × 2 × 2 = 4 chunks of 36
-    val m = Zarr.readMeta(Zarr.fixture4dDir())
-    val refs = Zarr.windowRefs4(m, Zarr.fixture4dDir(), 2, 2, 1, 2, 10, 50, 8, 40)
-    assert(refs.size == 4, s"want 4 of 36 chunks, got ${refs.size}")
+    val n = plannedChunks(zarr(Zarr.fixture4dDir()).filter(
+      col("epoch") === 2 && col("level").between(1, 2) &&
+        col("cell_x").between(10, 50) && col("cell_y").between(8, 40)))
+    assert(n == 4, s"want 4 of 36 chunks, got $n")
   }
 
   test("rank-3 window prunes the manifest in all three axes") {
     // fixture grid: 3 t-chunks? 5/2 = 3 along, 3x3 spatial; the window
     // (t 2-4, x 10-50, y 8-40) overlaps 2 (along) x 2 x 2 = 8 chunks
     // of 27
-    val m = Zarr.readMeta(Zarr.fixture3dDir())
-    val refs = Zarr.windowRefs3(m, Zarr.fixture3dDir(), 2, 4, 10, 50, 8, 40)
-    assert(refs.size == 8, s"want 8 of 27 chunks, got ${refs.size}")
+    val n = plannedChunks(zarr(Zarr.fixture3dDir()).filter(
+      col("epoch").between(2, 4) &&
+        col("cell_x").between(10, 50) && col("cell_y").between(8, 40)))
+    assert(n == 8, s"want 8 of 27 chunks, got $n")
   }
 
   test("hand-built RANK-3 shard: C-order inner grid with leading axis, absent inner fill") {
@@ -646,7 +657,7 @@ class ZarrSpec extends SparkSuite {
     body.write(java.nio.ByteBuffer.allocate(4)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(crc.getValue.toInt).array())
     put(d, "c/0/0/0", body.toByteArray)
-    val got = Zarr.scanZarr3d(spark, d.getPath).collect()
+    val got = zarr(d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
     assert(got.size == 32)
     for (t <- 0 until 2; y <- 0 until 4; x <- 0 until 4) {
@@ -657,7 +668,7 @@ class ZarrSpec extends SparkSuite {
     // edge shard in every axis
     val d2 = tmpDir("v3s3rt")
     Zarr.writeZarr3dSharded(d2.getPath, 3, 5, 7, 2, 4, 4, 1, 2, 2)(f3)
-    val rt = Zarr.scanZarr3d(spark, d2.getPath).collect()
+    val rt = zarr(d2.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
     assert(rt.size == 3 * 5 * 7)
     for (t <- 0 until 3; y <- 0 until 5; x <- 0 until 7)
@@ -668,7 +679,7 @@ class ZarrSpec extends SparkSuite {
       10000 * t + 1000 * l + 100 * y + x
     val d4 = tmpDir("v3s4rt")
     Zarr.writeZarr4dSharded(d4.getPath, 3, 2, 5, 7, 2, 1, 4, 4, 1, 1, 2, 2)(f4)
-    val rt4 = Zarr.scanZarr4d(spark, d4.getPath).collect()
+    val rt4 = zarr(d4.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) -> r.getDouble(4))
       .toMap
     assert(rt4.size == 3 * 2 * 5 * 7)
@@ -680,7 +691,7 @@ class ZarrSpec extends SparkSuite {
     val d = tmpDir("shardblosc")
     Zarr.writeZarrV3Sharded(d.getPath, 20, 26, 16, 16, 8, 8,
       compressor = "blosc-zlib")((x, y) => ((7 * x + 3 * y) % 97).toDouble)
-    val got = Zarr.scanZarr(spark, d.getPath).collect()
+    val got = zarr(d.getPath).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 20 * 26)
     for (y <- 0 until 20; x <- 0 until 26)
@@ -696,7 +707,8 @@ class ZarrSpec extends SparkSuite {
       r.cj * m.chunkW <= 50 && (r.cj + 1) * m.chunkW > 10 &&
       r.ci * m.chunkH <= 40 && (r.ci + 1) * m.chunkH > 8)
     assert(all.size == 9 && kept.size == 4, s"${all.size} -> ${kept.size}")
-    val rows = Zarr.scanZarrWindow(spark, Zarr.fixtureDir(), 10, 50, 8, 40).count()
+    val rows = zarr(Zarr.fixtureDir())
+      .filter(col("cell_x").between(10, 50) && col("cell_y").between(8, 40)).count()
     assert(rows == 41L * 33L, s"window rows $rows")
   }
 
@@ -744,12 +756,12 @@ class ZarrSpec extends SparkSuite {
   test("CF time decode: window keeps exactly the in-range epochs; missing units refuses") {
     val dir = Zarr.fixtureTimeDir()
     // unwindowed: every epoch labelled, count conserved
-    val all = Zarr.scanZarrTime(spark, dir, "v", "t", None)
+    val all = zarrTime(dir)
     assert(all.count() == 5L * 70 * 80)
     // windowed: inclusive lower bound keeps epoch 1 (16:00 exactly)
     val win = (java.sql.Timestamp.from(java.time.Instant.parse("2020-03-01T16:00:00Z")),
       java.sql.Timestamp.from(java.time.Instant.parse("2020-03-02T06:00:00Z")))
-    val got = Zarr.scanZarrTime(spark, dir, "v", "t", Some(win))
+    val got = all.filter(col("t_ts").between(win._1, win._2))
       .select("epoch").distinct().collect().map(_.getInt(0)).toSet
     assert(got == Set(1, 2, 3), s"kept epochs $got")
     // a coordinate without units refuses loudly
@@ -757,8 +769,7 @@ class ZarrSpec extends SparkSuite {
     Zarr.writeZarr3d(s"$bare/v", 2, 4, 4, 1, 4, 4, compressor = "raw")(
       (x, y, t) => (x + y + t).toDouble)
     Zarr.writeZarrCoord(s"$bare/t", 2, 2, compressor = "raw")(_.toDouble)
-    val e = intercept[Exception](
-      Zarr.scanZarrTime(spark, bare, "v", "t", None).collect())
+    val e = intercept[Exception](zarrTime(bare).collect())
     assert(e.getMessage.contains("units"))
   }
 
@@ -774,11 +785,12 @@ class ZarrSpec extends SparkSuite {
       Array[Byte](1, 2, 3, 4, 5))
     val win = (java.sql.Timestamp.from(java.time.Instant.parse("2020-03-01T16:00:00Z")),
       java.sql.Timestamp.from(java.time.Instant.parse("2020-03-02T06:00:00Z")))
-    // windowed (epochs 1-3): the poisoned chunk costs zero bytes
-    val got = Zarr.scanZarrTime(spark, dir, "v", "t", Some(win))
-    assert(got.count() == 3L * 64)
+    // windowed (epochs 1-3): the poisoned chunk costs zero bytes (values
+    // are read: the face counts from geometry without reading chunks)
+    val got = zarrTime(dir).filter(col("t_ts").between(win._1, win._2))
+    assert(got.select("value").collect().length == 3L * 64)
     // unwindowed: the poisoned chunk IS read and fails loudly
-    val e = intercept[Exception](Zarr.scanZarrTime(spark, dir, "v", "t", None).count())
+    val e = intercept[Exception](zarrTime(dir).select("value").collect())
     assert(e != null)
   }
 
@@ -918,7 +930,7 @@ class ZarrSpec extends SparkSuite {
       Zarr.scanZarrTime4d(spark, Zarr.fixtureTimeDir(), "v").count())
     assert(e3.getMessage.contains("rank-4"), e3.getMessage)
     val e4 = intercept[IllegalArgumentException](
-      Zarr.scanZarrTime(spark, Zarr.fixtureTime4dDir(), "v").count())
+      zarrTime(Zarr.fixtureTime4dDir()).count())
     assert(e4.getMessage.contains("rank-3") || e4.getMessage.contains("rank-4"),
       e4.getMessage)
   }
