@@ -708,7 +708,8 @@ object GridMapping {
 
   /** Per-cell lon/lat of a grid-mapped classic-NetCDF cube, dispatching
     * on the FILE's declared grid_mapping_name (the zonal_raster_crs_auto
-    * posture): a pure map-side projection over the stripe scan.
+    * posture): a pure map-side projection over the DSv2 face, whose
+    * `coords` option reads the file's x/y coordinate variables.
     */
   def cellsLonLat(s: SparkSession, path: String, varName: String): DataFrame = {
     val m = Netcdf.readMeta(path)
@@ -716,7 +717,9 @@ object GridMapping {
       s"$path: $varName declares no grid_mapping — refusing to assume a projection"))
     val name = gm.attrs.find(_.name == "grid_mapping_name").map(_.text.trim)
       .getOrElse(sys.error(s"$path: ${gm.name} has no grid_mapping_name"))
-    LevelChain(Netcdf.scanNetcdfCoords(s, path, varName),
+    LevelChain(
+      s.read.format("graft.zonal.NetcdfSource")
+        .option("var", varName).option("coords", "x,y").load(path),
       levelsFor(gmAttrsOf(path, gm)))
   }
 

@@ -1405,25 +1405,6 @@ object Hdf5 {
     }
   }
 
-  private def scanRefs(s: SparkSession, refs: Seq[H5ChunkRef]) = {
-    import s.implicits._
-    s.createDataset(refs)
-      .flatMap(readChunk _)
-  }
-
-  /** Scan a 1-D COORDINATE dataset (r16 — the axis-label vectors a
-    * netCDF-4/HDF5 file carries next to its data variables): the
-    * rank-1 contiguous read surfaces as `(idx, coord)`.
-    */
-  def scanNetcdf4Coord(s: SparkSession, path: String, name: String): DataFrame = {
-    val m = readMeta(path, name)
-    require(m.height == 1 && m.epochs == 0,
-      s"$path: '$name' is ${m.height}×${m.width} — not a 1-D coordinate vector")
-    import s.implicits._
-    scanRefs(s, chunkRefs(path, m)).map { case (x, _, _, _, v) => (x, v) }
-      .toDF("idx", "coord")
-  }
-
   /** Enumerate every RANK-2 NUMERIC dataset under the root group
     * (r17 — the member walk behind [[scanNetcdf4Dataset]]): groups
     * recurse depth-capped through old-style symbol tables, compact
@@ -1514,22 +1495,8 @@ object Hdf5 {
       .toDF("cell_x", "cell_y", "epoch", "var_name", "value")
   }
 
-  /** CF TIME decode + timestamp-window chunk pruning over netCDF-4
-    * (r17 — the HDF5 twin of [[Netcdf.scanNetcdfTime]], completing
-    * the time story across all three cube formats): the time
-    * coordinate's `units` STRING attribute (a real v1/v3 attribute
-    * message, class-3 scalar) parses to exact BIGINT micros, the
-    * axis values become a real `TimestampType` column, and an
-    * optional window prunes the rank-3 CHUNK MANIFEST before any
-    * data read. The axis vector reads DRIVER-SIDE through the same
-    * chunk machinery the executors use (axis-sized = header-scale
-    * metadata, the readMeta posture).
-    * Output: `(epoch, t_ts, cell_x, cell_y, value)`.
-    */
-  /** Read + CF-decode the file's 1-D time coordinate (shared by the
-    * rank-3 and rank-4 time scans): `(raw axis values, scale)`. */
   /** Driver-side raw read of a 1-D coordinate dataset — axis-sized. */
-  private[zonal] def h5CoordAxis(path: String, name: String): IndexedSeq[Double] = {
+  private[graft] def h5CoordAxis(path: String, name: String): IndexedSeq[Double] = {
     val tm = readMeta(path, name)
     require(tm.height == 1 && tm.epochs == 0,
       s"$path: '$name' is ${tm.height}×${tm.width} — not a 1-D coordinate")
@@ -1538,6 +1505,10 @@ object Hdf5 {
       .sortBy(_._1).map(_._2).toIndexedSeq
   }
 
+  /** Read + CF-decode the file's 1-D time coordinate (the face's
+    * `time` option and the multi-file concat): `(raw axis values,
+    * scale)`.
+    */
   private[zonal] def h5TimeAxis(path: String,
       timeVar: String): (Seq[Double], Netcdf.CfTimeScale) = {
     val tm = readMeta(path, timeVar)
@@ -1698,51 +1669,38 @@ object Hdf5 {
   }
 
   /** CF-convention fill masking (the scan_netcdf_fill analogue, r12):
-    * cells carrying the dataset's fill value are dropped INSIDE the
-    * scan tasks before any shuffle; loud when the dataset declares no
-    * fill. NaN fills compare by isNaN (NaN != NaN would silently mask
-    * nothing).
+    * the face's raw cells — absent chunks surface as fill values —
+    * through one residual filter; loud when the dataset declares no
+    * fill. NaN fills compare by isnan ([[Netcdf.notFill]]).
     */
   def scanNetcdf4Fill(s: SparkSession, path: String, varName: String): DataFrame = {
-    import s.implicits._
     val m = readMeta(path, varName)
     require(m.epochs == 0,
       s"$path: '$varName' is rank-3 — scan it through graft.zonal.Hdf5Source")
     require(m.hasFill,
       s"$path: '$varName' declares no fill value — nothing to mask")
-    val fillV = m.fill
-    scanRefs(s, chunkRefs(path, m))
-      .filter(c => if (fillV.isNaN) !c._5.isNaN else c._5 != fillV)
-      .map { case (x, y, _, _, v) => (x, y, v) }
-      .toDF("cell_x", "cell_y", "value")
+    s.read.format("graft.zonal.Hdf5Source").option("var", varName).load(path)
+      .filter(Netcdf.notFill(m.fill))
   }
 
   /** CF PACKED-variable scan on netCDF-4 (r14 — scale_factor/
     * add_offset attributes parsed from the dataset's HDF5 attribute
     * messages): the unpack rides INSIDE the plan as one projection
-    * over the chunk scan; loud when no scale_factor is declared,
-    * missing add_offset defaults to 0 per CF. Per CF, a declared fill
-    * applies to the PACKED raw samples — raw==fill cells are dropped
-    * inside the scan tasks BEFORE the unpack, never scaled into
-    * plausible physical values.
+    * over the face; loud when no scale_factor is declared, missing
+    * add_offset defaults to 0 per CF. Per CF, a declared fill applies
+    * to the PACKED raw samples — raw==fill cells are dropped BEFORE
+    * the unpack, never scaled into plausible physical values.
     */
   def scanNetcdf4Packed(s: SparkSession, path: String, varName: String): DataFrame = {
-    import s.implicits._
     val m = readMeta(path, varName)
     require(m.epochs == 0, s"$path: '$varName' is rank-3/4 — unpack the 2-D face")
     val scale = m.attrs.getOrElse("scale_factor", sys.error(
       s"$path: '$varName' declares no scale_factor attribute — not a " +
         "packed variable (scan it through graft.zonal.Hdf5Source)"))
-    val offset = m.attrs.getOrElse("add_offset", 0.0)
-    val (hasFill, fillV) = (m.hasFill, m.fill)
-    val raw = scanRefs(s, chunkRefs(path, m))
-    val masked =
-      if (!hasFill) raw
-      else raw.filter(c => if (fillV.isNaN) !c._5.isNaN else c._5 != fillV)
-    masked.map { case (x, y, _, _, v) => (x, y, v) }
-      .toDF("cell_x", "cell_y", "value")
+    val face = s.read.format("graft.zonal.Hdf5Source").option("var", varName).load(path)
+    (if (m.hasFill) face.filter(Netcdf.notFill(m.fill)) else face)
       .select(col("cell_x"), col("cell_y"),
-        (col("value") * lit(scale) + lit(offset)).as("value"))
+        Netcdf.unpacked(scale, m.attrs.getOrElse("add_offset", 0.0)))
   }
 
   // ---- writer (fixtures + the sink direction) ----

@@ -31,8 +31,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - column pruning reaches the decoder: positions-only / `count(*)`
   *    projections compute cells from stripe geometry and read ZERO
   *    data bytes. Values surface RAW (`_FillValue` is data here; the
-  *    fill-masking face is [[Netcdf.scanNetcdfFill]]), which is what
-  *    makes the geometry shortcut exact;
+  *    CF ops [[Netcdf.scanNetcdfFill]], [[Netcdf.scanNetcdfPacked]] and
+  *    [[Netcdf.scanNetcdfValid]] mask and unpack on top of this face),
+  *    which is what makes the geometry shortcut exact;
   *  - `.option("time", <coord name>)` on a rank-3 or rank-4 variable
   *    adds a real `t_ts` TIMESTAMP column, CF-decoded (units +
   *    calendar) from the coordinate driver-side — and a pushed `t_ts`
@@ -53,8 +54,12 @@ class NetcdfSource extends TableProvider {
     // see [[NetcdfMembersTable]]
     else if (path != null && path.nonEmpty && NetcdfMembersTable.isMemberDir(path))
       NetcdfMembersTable.Schema
-    else NetcdfSource.schemaFor(path, options.get("var"), options.get("time"),
-      options.get("coords"))
+    else {
+      val varName = options.get("var")
+      NetcdfSource.schemaFor(path, varName,
+        NetcdfSource.rankOf(path, Netcdf.readMeta(path), varName),
+        options.get("time"), options.get("coords"))
+    }
   }
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
@@ -75,20 +80,51 @@ class NetcdfSource extends TableProvider {
 }
 
 object NetcdfSource {
-  private[zonal] def rankOf(path: String, varName: String): Int = {
+  /** What one `load()` reads from the file, once: the header, the
+    * variable, its schema, and the axes its `time` / `coords` options
+    * name. Every refusal of a bad variable or axis (char data, rank,
+    * missing units, a non-CF calendar, fractional time offsets, a
+    * missing coordinate) fires here, at `load()` — so a `count()` the
+    * header answers never skips one. Scans and metadata counts of the
+    * same DataFrame reuse it instead of re-reading the header, so a
+    * file rewritten under a live DataFrame needs a fresh `load()` (as
+    * with Spark's own file tables).
+    *
+    * @param labels per-epoch CF time labels (micros), or empty
+    * @param axes   the (x, y) coordinate values, or null
+    */
+  private[graft] final case class Resolved(path: String, varName: String,
+      timeVar: String, coords: String, m: Netcdf.NcMeta, v: Netcdf.NcVar,
+      schema: StructType, labels: Map[Int, Long],
+      axes: (IndexedSeq[Double], IndexedSeq[Double]))
+
+  private[graft] def resolve(path: String, varName: String, timeVar: String,
+      coords: String): Resolved = {
+    val m = Netcdf.readMeta(path)
+    val schema = schemaFor(path, varName, rankOf(path, m, varName), timeVar, coords)
+    val labels =
+      if (timeVar == null) Map.empty[Int, Long]
+      else {
+        val (raw, scale) = Netcdf.readTimeAxis(path, m, timeVar)
+        Netcdf.cfEpochLabels(raw, scale, None, s"$path:$timeVar").toMap
+      }
+    Resolved(path, varName, timeVar, coords, m, m.variable(varName), schema, labels,
+      if (coords == null) null else coordAxes(path, m, coords))
+  }
+
+  private[zonal] def rankOf(path: String, m: Netcdf.NcMeta, varName: String): Int = {
     require(path != null && path.nonEmpty,
       "graft.zonal.NetcdfSource: a load(path) is required")
     require(varName != null && varName.nonEmpty,
       "graft.zonal.NetcdfSource: .option(\"var\", <variable name>) is required")
-    val v = Netcdf.readMeta(path).variable(varName)
-    val r = v.dimIds.length
+    // a char variable refuses here, at load(), by name
+    val r = Netcdf.dataVar(path, m, varName).dimIds.length
     require(r >= 2 && r <= 4,
       s"$path: '$varName' is rank $r — the DSv2 source reads rank 2/3/4")
     r
   }
-  private[zonal] def schemaFor(path: String, varName: String,
-      timeVar: String, coords: String = null): StructType = {
-    val r = rankOf(path, varName)
+  private[zonal] def schemaFor(path: String, varName: String, r: Int,
+      timeVar: String, coords: String): StructType = {
     require(timeVar == null || r >= 3,
       s"$path: .option(\"time\", ...) needs a time axis " +
         s"('$varName' is rank 2)")
@@ -108,25 +144,27 @@ object NetcdfSource {
   }
 
   /** The `coords` option names the file's own 1-D coordinate
-    * VARIABLES ("x,y" order): strictly monotonic, read driver-side
-    * (axis-scale). NOTE: classic stripes span the full width, so the
-    * x axis ships whole per partition — the broadcast-join face
-    * ([[Netcdf.scanNetcdfCoords]]) is the form for extreme widths.
+    * VARIABLES ("x,y" order), read driver-side (axis-scale). Classic
+    * stripes span the full width, so the x axis ships whole with every
+    * stripe (axis-sized, like the stripe's own row buffer).
     */
-  private[zonal] def coordAxes(path: String, m: Netcdf.NcMeta,
+  private def coordAxes(path: String, m: Netcdf.NcMeta,
       coords: String): (IndexedSeq[Double], IndexedSeq[Double]) = {
     val parts = coords.split(",").map(_.trim)
     require(parts.length == 2,
       s"$path: .option(\"coords\", \"x,y\") wants exactly two variable names")
-    def axis(n: String): IndexedSeq[Double] = {
-      val vs = Netcdf.readCoordAxis(path, m, n)
-      val inc = vs.sliding(2).forall(w => w.length < 2 || w(0) < w(1))
-      val dec = vs.sliding(2).forall(w => w.length < 2 || w(0) > w(1))
-      require(inc || dec, s"$path/$n: coordinate axis must be strictly " +
-        "monotonic for label-based selection")
-      vs
-    }
-    (axis(parts(0)), axis(parts(1)))
+    (Netcdf.readCoordAxis(path, m, parts(0)), Netcdf.readCoordAxis(path, m, parts(1)))
+  }
+
+  /** An axis a pushed coordinate-VALUE window selects on must be
+    * strictly monotonic; an unwindowed axis is only labels.
+    */
+  private[zonal] def requireMonotonic(path: String, name: String,
+      vs: IndexedSeq[Double]): Unit = {
+    val inc = vs.sliding(2).forall(w => w.length < 2 || w(0) < w(1))
+    val dec = vs.sliding(2).forall(w => w.length < 2 || w(0) > w(1))
+    require(inc || dec, s"$path/$name: coordinate axis must be strictly " +
+      "monotonic for label-based selection")
   }
 }
 
@@ -134,17 +172,19 @@ final class NetcdfTable(path: String, varName: String, timeVar: String,
     coords: String = null, geom: Option[NcWGeom] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
+  // read faces only; Spark asks for schema() as load() builds the
+  // relation, so every refusal in resolve fires there
+  private lazy val res = NetcdfSource.resolve(path, varName, timeVar, coords)
   override def name(): String = s"netcdf:$path#$varName"
   override def schema(): StructType =
-    if (geom.isDefined) NetcdfWrite.WriteSchema
-    else NetcdfSource.schemaFor(path, varName, timeVar, coords)
+    if (geom.isDefined) NetcdfWrite.WriteSchema else res.schema
   override def capabilities(): java.util.Set[TableCapability] =
     if (geom.isDefined)
       java.util.EnumSet.of(TableCapability.BATCH_READ,
         TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
     else java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new NetcdfScanBuilder(path, varName, timeVar, coords)
+    new NetcdfScanBuilder(res)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -159,8 +199,7 @@ final class NetcdfTable(path: String, varName: String, timeVar: String,
   * pruned column set; `build()` freezes both into the scan. `cell_x`
   * deliberately does NOT clamp (row-major stripes span the width).
   */
-final class NetcdfScanBuilder(path: String, varName: String, timeVar: String,
-    coords: String = null)
+final class NetcdfScanBuilder(res: NetcdfSource.Resolved)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates
     with SupportsPushDownLimit {
@@ -173,8 +212,7 @@ final class NetcdfScanBuilder(path: String, varName: String, timeVar: String,
   private var vy0 = Double.NegativeInfinity; private var vy1 = Double.PositiveInfinity
   private var inSets = Map.empty[String, Set[Int]] // static IN lists
   private var pushed: Array[Filter] = Array.empty
-  private var required: StructType =
-    NetcdfSource.schemaFor(path, varName, timeVar, coords)
+  private var required: StructType = res.schema
 
   // a pushed timestamp arrives as java.sql.Timestamp (or Instant under
   // the java8 datetime API) — either way an exact micros instant
@@ -247,7 +285,8 @@ final class NetcdfScanBuilder(path: String, varName: String, timeVar: String,
   override def isPartiallyPushed(): Boolean = true
 
   // COUNT(*) from metadata (r18): dimension product straight from the
-  // header (record epochs via numRecs), zero stripes planned.
+  // header (record epochs via numRecs), zero stripes planned. The
+  // time / coords axes were decoded (and any refusal raised) at load.
   private var countPushed = false
   private def canPushCount(agg: Aggregation): Boolean =
     agg.groupByExpressions.isEmpty &&
@@ -264,19 +303,18 @@ final class NetcdfScanBuilder(path: String, varName: String, timeVar: String,
 
   override def build(): Scan =
     if (countPushed) {
-      val m = Netcdf.readMeta(path)
-      val v = m.variable(varName)
-      val n = v.dimIds.map { d =>
+      val m = res.m
+      val n = res.v.dimIds.map { d =>
         val len = m.dims(d).length
         (if (len == 0) m.numRecs else len).toLong
       }.product
-      new MetaCountScan(n, s"netcdf:$path#$varName")
-    } else new NetcdfScan(path, varName, timeVar, coords, required,
+      new MetaCountScan(n, s"netcdf:${res.path}#${res.varName}")
+    } else new NetcdfScan(res, required,
       y0, y1, t0, t1, l0, l1, u0, u1, limit, inSets, vx0, vx1, vy0, vy1)
 }
 
-final class NetcdfScan(path: String, varName: String, timeVar: String,
-    coords: String, required: StructType, y0: Int, y1: Int, t0: Int, t1: Int,
+final class NetcdfScan(res: NetcdfSource.Resolved,
+    required: StructType, y0: Int, y1: Int, t0: Int, t1: Int,
     l0: Int, l1: Int, u0: Long, u1: Long,
     limit: Int = -1, inSets: Map[String, Set[Int]] = Map.empty,
     vx0: Double = Double.NegativeInfinity, vx1: Double = Double.PositiveInfinity,
@@ -285,6 +323,8 @@ final class NetcdfScan(path: String, varName: String, timeVar: String,
     with SupportsReportStatistics {
 
   private val plan = new ChunkPlan(limit)
+  private val path = res.path
+  private val varName = res.varName
 
   // EXACT statistics from geometry (r18): rows = in-bounds cells of the
   // pruned manifest (capped by a pushed limit)
@@ -329,54 +369,58 @@ final class NetcdfScan(path: String, varName: String, timeVar: String,
   override def planInputPartitions(): Array[InputPartition] =
     plan.partitions(plannedWithCells())
 
-  private def plannedWithCells(): Seq[(InputPartition, Long)] = {
-    val m = Netcdf.readMeta(path)
-    val v = m.variable(varName)
+  /** The stripes the pushed windows keep, with their partitions —
+    * fixed once built, so statistics and planning share one pass;
+    * runtime filters only re-select from it.
+    */
+  private lazy val staticPlan: Seq[(Netcdf.StripeRef, InputPartition)] = {
+    val m = res.m
     // label-based selection (r18): invert the pushed coordinate-VALUE
     // windows to INDEX windows driver-side; the y window prunes
     // stripes, the x window stays residual (stripes span the width)
-    val (axes, ey0, ey1) =
-      if (coords == null)
-        (null: (IndexedSeq[Double], IndexedSeq[Double]), y0, y1)
+    val axes = res.axes
+    val (ey0, ey1) =
+      if (axes == null) (y0, y1)
       else {
-        val a = NetcdfSource.coordAxes(path, m, coords)
-        val (iy0, iy1) = ZarrSource.valueWindowToIndex(a._2, vy0, vy1)
-        (a, math.max(y0, iy0), math.min(y1, iy1))
+        val Array(xn, yn) = res.coords.split(",").map(_.trim)
+        if (vx0 > Double.NegativeInfinity || vx1 < Double.PositiveInfinity)
+          NetcdfSource.requireMonotonic(path, xn, axes._1)
+        if (vy0 > Double.NegativeInfinity || vy1 < Double.PositiveInfinity)
+          NetcdfSource.requireMonotonic(path, yn, axes._2)
+        val (iy0, iy1) = ZarrSource.valueWindowToIndex(axes._2, vy0, vy1)
+        (math.max(y0, iy0), math.min(y1, iy1))
       }
     val hint = org.apache.spark.sql.SparkSession.active
       .sparkContext.defaultParallelism
-    // with a time coordinate declared, CF-decode the axis (units +
-    // calendar) driver-side — header-scale — and intersect the pushed
-    // TIMESTAMP window with the labels: epochs outside it vanish from
-    // the stripe manifest before any data read (the xarray
+    // with a time coordinate declared, the CF-decoded labels (read at
+    // load) meet the pushed TIMESTAMP window: epochs outside it vanish
+    // from the stripe manifest before any data read (the xarray
     // `sel(time=slice(...))` posture, as a plain SQL WHERE)
-    val labels: Map[Int, Long] =
-      if (timeVar == null) Map.empty
-      else {
-        val (raw, scale) = Netcdf.readTimeAxis(path, m, timeVar)
-        Netcdf.cfEpochLabels(raw, scale, None, s"$path:$timeVar")
-          .filter { case (_, u) => u >= u0 && u <= u1 }.toMap
-      }
-    val refs = v.dimIds.length match {
-      case 2 => Netcdf.stripes2d(path, m, v, hint, dropFill = false)
-      case 3 => Netcdf.stripes3d(path, m, v, hint)
-      case 4 => Netcdf.stripes4d(path, m, v, hint)
+    val labels = res.labels.filter { case (_, u) => u >= u0 && u <= u1 }
+    val refs = res.v.dimIds.length match {
+      case 2 => Netcdf.stripes2d(path, m, res.v, hint)
+      case 3 => Netcdf.stripes3d(path, m, res.v, hint)
+      case 4 => Netcdf.stripes4d(path, m, res.v, hint)
       case r => sys.error(s"$path: '$varName' is rank $r — want 2/3/4")
     }
+    val timed = res.timeVar != null
     // a stripe covers rows [y0, y0+rows) of ONE (epoch, level) plane
     refs.filter(r =>
         r.y0 <= ey1 && r.y0 + r.rows > ey0 &&
         r.epoch >= t0 && r.epoch <= t1 &&
         r.level >= l0 && r.level <= l1 &&
-        rtKeep("cell_y", r.y0, r.rows) &&
-        rtKeep("epoch", r.epoch, 1) && rtKeep("level", r.level, 1) &&
-        (timeVar == null || labels.contains(r.epoch)))
-      .map(r => (NetcdfInputPartition(r,
-        if (timeVar == null) 0L else labels(r.epoch),
+        (!timed || labels.contains(r.epoch)))
+      .map(r => (r, NetcdfInputPartition(r,
+        if (timed) labels(r.epoch) else 0L,
         if (axes == null) null
-        else (axes._1.toArray, r.y0, axes._2.slice(r.y0, r.y0 + r.rows).toArray)): InputPartition,
-        r.rows.toLong * r.width))
+        else (axes._1.toArray, r.y0, axes._2.slice(r.y0, r.y0 + r.rows).toArray)): InputPartition))
   }
+
+  private def plannedWithCells(): Seq[(InputPartition, Long)] =
+    staticPlan.filter { case (r, _) =>
+        rtKeep("cell_y", r.y0, r.rows) &&
+        rtKeep("epoch", r.epoch, 1) && rtKeep("level", r.level, 1) }
+      .map { case (r, p) => (p, r.rows.toLong * r.width) }
   override def createReaderFactory(): PartitionReaderFactory =
     new PackedReaderFactory(new NetcdfReaderFactory(required.fieldNames))
 }

@@ -80,11 +80,11 @@ object NetcdfMembersTable {
     names.flatMap { case (name, epoch) =>
       val file = s"$path/$name"
       val m = Netcdf.readMeta(file)
-      val v = m.variable(varName)
+      val v = Netcdf.dataVar(file, m, varName)
       require(v.dimIds.length == 2,
         s"$file: member variables must be rank-2 (y, x) — one epoch per file" +
           s" ('$varName' is rank ${v.dimIds.length})")
-      Netcdf.stripes2d(file, m, v, 8, dropFill = false)
+      Netcdf.stripes2d(file, m, v, 8)
         .map(r => NetcdfMemberPartition(r, epoch): InputPartition)
     }.toArray
 }

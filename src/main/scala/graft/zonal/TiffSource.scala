@@ -222,7 +222,7 @@ final class TiffMosaicScan(dir: String, required: StructType,
     extends Scan with Batch with SupportsReportStatistics {
   private val plan = new ChunkPlan(-1)
   override def estimateStatistics(): Statistics = {
-    val rows = plannedWithCells().map(_._2).sum
+    val rows = plannedWithCells.map(_._2).sum
     GeomStats(rows, math.max(1, required.fields.map(_.dataType.defaultSize).sum))
   }
   override def readSchema(): StructType = required
@@ -231,8 +231,10 @@ final class TiffMosaicScan(dir: String, required: StructType,
     s"graft-tiff-mosaic $dir window=[$x0..$x1]x[$y0..$y1] " +
       s"cols=${required.fieldNames.mkString(",")}$plan"
   override def planInputPartitions(): Array[InputPartition] =
-    plan.partitions(plannedWithCells())
-  private def plannedWithCells(): Seq[(InputPartition, Long)] = {
+    plan.partitions(plannedWithCells)
+  // the window is frozen at build() and there is no runtime filter, so
+  // the headers' mosaicMetas job runs once per scan, not per call
+  private lazy val plannedWithCells: Seq[(InputPartition, Long)] = {
     val st = Raster.readStatsManifest(dir)
     val metas = Raster.mosaicMetas(org.apache.spark.sql.SparkSession.active,
       st.map(t => (t.path, t.ox, t.oy)))

@@ -897,7 +897,7 @@ object Zarr {
   }
 
   /** Driver-side coordinate read — axis-sized by construction, the
-    * header-scale-metadata posture of [[Netcdf.scanNetcdfTime]]'s axis
+    * header-scale-metadata posture of [[Netcdf.readTimeAxis]]'s axis
     * read (the time decode needs the values BEFORE building the chunk
     * manifest, so pruned epochs cost zero data bytes).
     */

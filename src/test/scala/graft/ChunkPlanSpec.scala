@@ -101,4 +101,28 @@ class ChunkPlanSpec extends SparkSuite {
       "a local Seq already splits into leafNodeDefaultParallelism partitions, and the " +
         "chunked faces plan through ChunkPlan:\n", "\n", ""))
   }
+
+  test("source guard: the classic-NetCDF Dataset-API scan twins stay deleted from src/main") {
+    // single-variable classic reads go through graft.zonal.NetcdfSource;
+    // the CF ops mask and unpack on top of it, so a stripe carries no fill
+    val gone = Seq("scanNetcdf", "scanNetcdfEpochs", "scanNetcdfCube4d", "scanNetcdfWindow",
+      "scanNetcdfCoords", "scanNetcdfCoord", "scanNetcdfTime", "scanStripes4", "scanStripes",
+      "scanNetcdf4Coord", "dropFill")
+    val word = ("\\b(" + gone.mkString("|") + ")\\b").r
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
+    import scala.jdk.CollectionConverters._
+    val hits = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val rel = s"src/main/scala/${root.relativize(f)}"
+      val classic = f.getFileName.toString.startsWith("Netcdf")
+      Files.readAllLines(f).asScala.zipWithIndex.flatMap { case (l, i) =>
+        word.findFirstIn(l).orElse(if (classic) "\\bhasFill\\b".r.findFirstIn(l) else None)
+          .map(n => s"$rel:${i + 1}: $n: ${l.trim}")
+      }
+    }.toList
+    assert(hits.isEmpty, hits.mkString(
+      "read classic NetCDF through graft.zonal.NetcdfSource (+ .filter / .option(\"time\" | " +
+        "\"coords\")), coordinates through Netcdf.readCoordAxis / Hdf5.h5CoordAxis, and mask " +
+        "fill with Netcdf.notFill:\n", "\n", ""))
+  }
 }

@@ -757,9 +757,7 @@ class Hdf5Spec extends SparkSuite {
     val grid = h5(p, "grid").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(grid.size == 15 && grid((4, 2)) == f2(4, 2))
-    val xs = Hdf5.scanNetcdf4Coord(spark, p, "x").collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    assert(xs == (0 until 5).map(x => x -> 1.5 * x).toMap)
+    assert(Hdf5.h5CoordAxis(p, "x") == (0 until 5).map(x => 1.5 * x))
     val ns = Hdf5.scanNetcdf4Strings(spark, p, "names").collect()
       .map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(ns == Map(0 -> "a", 1 -> "bb", 2 -> "ccc"))
@@ -901,11 +899,9 @@ class Hdf5Spec extends SparkSuite {
     assert(got.size == 24)
     for (y <- 0 until 4; x <- 0 until 6)
       assert(got((x, y)) == ((-10.0 + 0.5 * x, 2.0 + 0.25 * y, fv(x, y))))
-    // the bare coordinate scan, and a 2-D variable is not a coordinate
-    val xs = Hdf5.scanNetcdf4Coord(spark, p, "x").collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    assert(xs == (0 until 6).map(x => x -> (-10.0 + 0.5 * x)).toMap)
-    val e1 = intercept[Exception](Hdf5.scanNetcdf4Coord(spark, p, "v"))
+    // the bare coordinate read, and a 2-D variable is not a coordinate
+    assert(Hdf5.h5CoordAxis(p, "x") == (0 until 6).map(x => -10.0 + 0.5 * x))
+    val e1 = intercept[Exception](Hdf5.h5CoordAxis(p, "v"))
     assert(e1.getMessage.contains("not a 1-D coordinate"))
     // CHUNKED rank-1 refuses by name: graft a rank-1 dataspace onto a
     // chunked dataset via byte surgery is fragile — the refusal was
@@ -920,9 +916,8 @@ class Hdf5Spec extends SparkSuite {
       ("y", Seq(4), "<f4", Array.tabulate(4)(y => 2.0 + 0.25 * y))),
       chunkedCoords = Seq(
         ("x", "<f4", Array.tabulate(7)(x => -10.0 + 0.5 * x), 3)))
-    val cx = Hdf5.scanNetcdf4Coord(spark, pc, "x").collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    assert(cx == (0 until 7).map(x => x -> (-10.0 + 0.5 * x)).toMap,
+    val cx = Hdf5.h5CoordAxis(pc, "x")
+    assert(cx == (0 until 7).map(x => -10.0 + 0.5 * x),
       s"chunked coordinate mangled: $cx")
     val cj = h5c(pc).collect()
     assert(cj.length == 28)

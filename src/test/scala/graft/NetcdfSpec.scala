@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
 import graft.zonal.Netcdf
 
 /** NetCDF-3 classic reader gates: a hand-assembled CDF-1 file (bytes
@@ -10,6 +12,18 @@ import graft.zonal.Netcdf
   * loud refusals.
   */
 class NetcdfSpec extends SparkSuite {
+
+  /** One variable through the classic DSv2 face. */
+  private def nc(p: String, v: String) =
+    spark.read.format("graft.zonal.NetcdfSource").option("var", v).load(p)
+
+  /** Variable `v` with CF time labels from coordinate `t`. */
+  private def nct(p: String, v: String, t: String = "t") =
+    spark.read.format("graft.zonal.NetcdfSource").option("var", v).option("time", t).load(p)
+
+  /** Variable `v` with axis labels from coordinates `x` and `y`. */
+  private def ncc(p: String, v: String) =
+    spark.read.format("graft.zonal.NetcdfSource").option("var", v).option("coords", "x,y").load(p)
 
   private def tmpFile(name: String): String = {
     val f = new java.io.File(
@@ -48,7 +62,7 @@ class NetcdfSpec extends SparkSuite {
 
   test("hand-built CDF-1: exact cells from explicit bytes") {
     val p = handBuilt()
-    val got = Netcdf.scanNetcdf(spark, p, "v").collect()
+    val got = nc(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 6)
     for (y <- 0 until 3; x <- 0 until 2)
@@ -60,7 +74,7 @@ class NetcdfSpec extends SparkSuite {
       val p = tmpFile(s"rt_$t.nc")
       // values stay in int8 range so every type round-trips exactly
       Netcdf.writeNetcdf(p, "v", 5, 7, tag)((x, y, _) => ((3 * x + 5 * y) % 120).toDouble)
-      val got = Netcdf.scanNetcdf(spark, p, "v").collect()
+      val got = nc(p, "v").collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
       assert(got.size == 35, s"$t: ${got.size} cells")
       for (y <- 0 until 5; x <- 0 until 7)
@@ -79,7 +93,7 @@ class NetcdfSpec extends SparkSuite {
     val m = Netcdf.readMeta(p)
     assert(m.numRecs == 4)
     assert(m.recSize == 30, s"stride ${m.recSize}, want unpadded 30")
-    val got = Netcdf.scanNetcdfEpochs(spark, p, "v").collect()
+    val got = nc(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
     assert(got.size == 60)
     for (t <- 0 until 4; y <- 0 until 5; x <- 0 until 3)
@@ -111,7 +125,7 @@ class NetcdfSpec extends SparkSuite {
     for (t <- 0 until 2; y <- 0 until 3; x <- 0 until 2)
       o.writeDouble(100 * t + 10 * y + x)
     java.nio.file.Files.write(new java.io.File(p).toPath, bo.toByteArray)
-    val got = Netcdf.scanNetcdfEpochs(spark, p, "v").collect()
+    val got = nc(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
     assert(got.size == 12)
     for (t <- 0 until 2; y <- 0 until 3; x <- 0 until 2)
@@ -129,7 +143,7 @@ class NetcdfSpec extends SparkSuite {
       else assert(got((x, y)) == (x + 10 * y).toDouble, s"($x,$y)")
     }
     // unmasked scan keeps the fill cells verbatim
-    val raw = Netcdf.scanNetcdf(spark, p, "v").collect()
+    val raw = nc(p, "v").collect()
     assert(raw.length == 36)
     // masking a variable with no declared fill is a loud error
     val p2 = tmpFile("nofill.nc")
@@ -171,7 +185,7 @@ class NetcdfSpec extends SparkSuite {
     val b2 = bo.toByteArray
     b2(3) = 2 // CDF-2 magic
     java.nio.file.Files.write(new java.io.File(p2).toPath, b2)
-    val got = Netcdf.scanNetcdf(spark, p2, "v").collect()
+    val got = nc(p2, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 12)
     for (y <- 0 until 3; x <- 0 until 4)
@@ -222,7 +236,7 @@ class NetcdfSpec extends SparkSuite {
     java.nio.file.Files.write(new java.io.File(p).toPath, bo.toByteArray)
     val m = Netcdf.readMeta(p)
     assert(m.version == 5 && m.variable("v").begin == begin)
-    val got = Netcdf.scanNetcdf(spark, p, "v").collect()
+    val got = nc(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 6)
     for (y <- 0 until 3; x <- 0 until 2)
@@ -236,7 +250,7 @@ class NetcdfSpec extends SparkSuite {
     Netcdf.writeNetcdf(p, "v", 6, 8, 6, version = 5)(
       (x, y, _) => (3 * x + 7 * y).toDouble)
     assert(Netcdf.readMeta(p).version == 5)
-    val got = Netcdf.scanNetcdf(spark, p, "v").collect()
+    val got = nc(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 48)
     for (y <- 0 until 6; x <- 0 until 8)
@@ -244,7 +258,7 @@ class NetcdfSpec extends SparkSuite {
     val pr = tmpFile("cdf5_rec.nc")
     Netcdf.writeNetcdf(pr, "v", 4, 6, 5, epochs = 3,
       version = 5)((x, y, t) => (x + 10 * y + 100 * t).toDouble)
-    val gr = Netcdf.scanNetcdfEpochs(spark, pr, "v").collect()
+    val gr = nc(pr, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
     assert(gr.size == 3 * 4 * 6)
     for (t <- 0 until 3; y <- 0 until 4; x <- 0 until 6)
@@ -262,7 +276,7 @@ class NetcdfSpec extends SparkSuite {
     // record t (the sole-record-variable stride) ...
     val p = tmpFile("cube4r.nc")
     Netcdf.writeNetcdf4d(p, "v", 3, 2, 4, 5, 6, record = true)(f4)
-    val got = Netcdf.scanNetcdfCube4d(spark, p, "v").collect()
+    val got = nc(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) -> r.getDouble(4))
       .toMap
     assert(got.size == 3 * 2 * 4 * 5)
@@ -271,18 +285,15 @@ class NetcdfSpec extends SparkSuite {
     // ... and fixed t (contiguous slabs)
     val pf = tmpFile("cube4f.nc")
     Netcdf.writeNetcdf4d(pf, "v", 3, 2, 4, 5, 6, record = false)(f4)
-    val gf = Netcdf.scanNetcdfCube4d(spark, pf, "v").collect()
+    val gf = nc(pf, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)) -> r.getDouble(4))
       .toMap
     assert(gf.size == 3 * 2 * 4 * 5)
     for (t <- 0 until 3; l <- 0 until 2; y <- 0 until 4; x <- 0 until 5)
       assert(gf((x, y, l, t)) == f4(x, y, l, t), s"fix ($x,$y,$l,$t)")
-    // the 2-D and rank-4 entry points reject each other's ranks
-    val e1 = intercept[Exception] { Netcdf.scanNetcdf(spark, p, "v") }
-    assert(e1.getMessage.contains("want 2"))
-    val e2 = intercept[Exception] {
-      Netcdf.scanNetcdfCube4d(spark, Netcdf.fixturePath(), "t2m") }
-    assert(e2.getMessage.contains("rank 2"))
+    // the face reads ranks 2 to 4; a 1-D coordinate is no cube
+    val e1 = intercept[Exception] { nc(Netcdf.fixturePath(), "x") }
+    assert(e1.getMessage.contains("rank 1"), e1.getMessage)
   }
 
   test("CF packed variables: unpack arithmetic, no-scale refusal") {
@@ -318,7 +329,7 @@ class NetcdfSpec extends SparkSuite {
     val t2m = m.variable("t2m")
     val yv = m.variable("y")
     assert(t2m.begin > yv.begin)
-    val got = Netcdf.scanNetcdf(spark, p, "t2m")
+    val got = nc(p, "t2m")
       .filter("cell_x = 79 AND cell_y = 69").collect()
     assert(got.length == 1)
     assert(got(0).getDouble(2) == Netcdf.ncValue(79, 69))
@@ -336,13 +347,14 @@ class NetcdfSpec extends SparkSuite {
     val p2 = tmpFile("win_cut.nc")
     java.nio.file.Files.write(new java.io.File(p2).toPath,
       full.take(begin.toInt + 10 * 4 * 8))
-    val got = Netcdf.scanNetcdfWindow(spark, p2, "v", 1, 2, 3, 9).collect()
+    val got = nc(p2, "v")
+      .filter(col("cell_x").between(1, 2) && col("cell_y").between(3, 9)).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 2 * 7, s"${got.size} cells")
     for (y <- 3 to 9; x <- 1 to 2)
       assert(got((x, y)) == (x + 10 * y).toDouble, s"cell ($x,$y)")
     // the unpruned scan DOES need those bytes — truncation is loud
-    intercept[Throwable] { Netcdf.scanNetcdf(spark, p2, "v").collect() }
+    intercept[Throwable] { nc(p2, "v").collect() }
   }
 
   test("CF packed + _FillValue: raw fill cells drop BEFORE the unpack") {
@@ -403,23 +415,32 @@ class NetcdfSpec extends SparkSuite {
     Netcdf.writeNetcdf(p, "v", 3, 4, 6,
       coordY = y => 40.0 + 0.25 * y,
       coordX = x => -120.0 + 0.25 * x)((x, y, _) => (10 * y + x).toDouble)
-    val got = Netcdf.scanNetcdfCoords(spark, p, "v").collect()
+    val got = ncc(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) ->
         ((r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
     assert(got.size == 12)
     for (y <- 0 until 3; x <- 0 until 4)
       assert(got((x, y)) == ((-120.0 + 0.25 * x, 40.0 + 0.25 * y, (10 * y + x).toDouble)))
-    // the bare coordinate scan: (idx, coord) in axis order
-    val xs = Netcdf.scanNetcdfCoord(spark, p, "x").collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    assert(xs == (0 until 4).map(x => x -> (-120.0 + 0.25 * x)).toMap)
+    // the bare coordinate read: values in axis order
+    val m = Netcdf.readMeta(p)
+    assert(Netcdf.readCoordAxis(p, m, "x") == (0 until 4).map(x => -120.0 + 0.25 * x))
     // a 2-D variable is not a coordinate; missing coords are loud
-    val e1 = intercept[Exception] { Netcdf.scanNetcdfCoord(spark, p, "v") }
+    val e1 = intercept[Exception] { Netcdf.readCoordAxis(p, m, "v") }
     assert(e1.getMessage.contains("rank"))
     val p2 = tmpFile("nocoords.nc")
     Netcdf.writeNetcdf(p2, "v", 3, 4, 6, coordVars = false)((x, y, _) => 1.0)
-    val e2 = intercept[Exception] { Netcdf.scanNetcdfCoords(spark, p2, "v") }
+    val e2 = intercept[Exception] { ncc(p2, "v") }
     assert(e2.getMessage.contains("not in file"))
+    // a non-monotonic axis still labels cells; only a value window on
+    // it refuses
+    val p3 = tmpFile("coords_wrap.nc")
+    Netcdf.writeNetcdf(p3, "v", 3, 4, 6,
+      coordY = y => 40.0 + 0.25 * y,
+      coordX = x => if (x == 2) -200.0 else -120.0 + 0.25 * x)((x, y, _) => (10 * y + x).toDouble)
+    assert(ncc(p3, "v").collect().length == 12)
+    assert(ncc(p3, "v").filter(col("y_coord") >= 40.25).count() == 2L * 4)
+    val e3 = intercept[Exception](ncc(p3, "v").filter(col("x_coord") >= -119.0).collect())
+    assert(e3.getMessage.contains("monotonic"), e3.getMessage)
   }
 
   test("char members tolerated: numeric cube scans, char var itself refuses") {
@@ -427,11 +448,11 @@ class NetcdfSpec extends SparkSuite {
     Netcdf.writeNetcdf(p, "v", 3, 4, 6,
       charVar = Some(("station_name", Seq("alpha", "b", "gamma-long"))))(
       (x, y, _) => (10 * y + x).toDouble)
-    val got = Netcdf.scanNetcdf(spark, p, "v").collect()
+    val got = nc(p, "v").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(got.size == 12)
     for (y <- 0 until 3; x <- 0 until 4) assert(got((x, y)) == (10 * y + x).toDouble)
-    val e = intercept[Exception] { Netcdf.scanNetcdf(spark, p, "station_name") }
+    val e = intercept[Exception] { nc(p, "station_name") }
     assert(e.getMessage.contains("char"))
   }
 
@@ -469,10 +490,9 @@ class NetcdfSpec extends SparkSuite {
       java.util.Arrays.copyOf(full, full.length - 4 * 4 * 8 + 8))
     val win = (java.sql.Timestamp.from(java.time.Instant.parse("2020-03-01T16:00:00Z")),
       java.sql.Timestamp.from(java.time.Instant.parse("2020-03-02T06:00:00Z")))
-    val got = Netcdf.scanNetcdfTime(spark, p, "v", "t", Some(win))
+    val got = nct(p, "v").filter(col("t_ts").between(win._1, win._2))
     assert(got.count() == 3L * 16)
-    val e = intercept[Exception](
-      Netcdf.scanNetcdfTime(spark, p, "v", "t", None).count())
+    val e = intercept[Exception](nct(p, "v").collect())
     assert(e != null)
   }
 
@@ -542,8 +562,7 @@ class NetcdfSpec extends SparkSuite {
     assert(labs(0) == ((2000, 2, 29)) && labs(2) == ((2000, 3, 1))
       && labs(3) == ((2001, 1, 1)), labs.toString)
     // the timestamp path refuses this file by name...
-    val e1 = intercept[RuntimeException](
-      Netcdf.scanNetcdfTime(spark, p, "t2m").count())
+    val e1 = intercept[RuntimeException](nct(p, "t2m").count())
     assert(e1.getMessage.contains("360_day"), e1.getMessage)
     // ...and this op refuses a Gregorian-family file
     val e2 = intercept[IllegalArgumentException](
@@ -562,8 +581,7 @@ class NetcdfSpec extends SparkSuite {
       && labs(2) == ((2000, 3, 1)) && labs(3) == ((2000, 12, 31))
       && labs(4) == ((2001, 1, 1)), labs.toString)
     // the timestamp path refuses this file by name...
-    val e1 = intercept[RuntimeException](
-      Netcdf.scanNetcdfTime(spark, p, "t2m").count())
+    val e1 = intercept[RuntimeException](nct(p, "t2m").count())
     assert(e1.getMessage.contains("all_leap"), e1.getMessage)
     // ...this op refuses Gregorian AND 360_day files (the nominal
     // arithmetics disagree too)
@@ -660,11 +678,10 @@ class NetcdfSpec extends SparkSuite {
     Netcdf.writeNetcdf(p360, "v", 4, 4, 5,
       timeAxis = Some((2, i => i.toDouble, "days since 2000-01-01")),
       timeCalendar = Some("360_day"))((x, y, t) => (x + y + t).toDouble)
-    val e = intercept[RuntimeException](
-      Netcdf.scanNetcdfTime(spark, p360, "v", "t").count())
+    val e = intercept[RuntimeException](nct(p360, "v").count())
     assert(e.getMessage.contains("360_day") && e.getMessage.contains("unsupported"))
     // the noleap registry fixture end-to-end: day 59 labels March 1
-    val labels = Netcdf.scanNetcdfTime(spark, Netcdf.noleapFixturePath(), "t2m")
+    val labels = nct(Netcdf.noleapFixturePath(), "t2m")
       .select("epoch", "t_ts").distinct().collect()
       .map(r => (r.getInt(0), r.getTimestamp(1).toInstant)).toMap
     assert(labels(2) == java.time.Instant.parse("2000-03-01T00:00:00Z"),
@@ -689,7 +706,7 @@ class NetcdfSpec extends SparkSuite {
     }
     // full decode: no window → all 5 epochs with exact timestamps
     val p = Netcdf.timeFixturePath()
-    val all = Netcdf.scanNetcdfTime(spark, p, "t2m").select("epoch", "t_ts")
+    val all = nct(p, "t2m").select("epoch", "t_ts")
       .distinct().collect().map(r => (r.getInt(0), r.getTimestamp(1))).toMap
     assert(all.size == Netcdf.NcTimeEpochs)
     val b = java.time.Instant.parse("2020-03-01T06:00:00Z")
@@ -699,7 +716,7 @@ class NetcdfSpec extends SparkSuite {
     // EQUALS epoch 1's timestamp (inclusive), 0 and 4 cost zero reads
     val win = (java.sql.Timestamp.from(b.plusSeconds(10 * 3600)),
       java.sql.Timestamp.from(b.plusSeconds(24 * 3600)))
-    val kept = Netcdf.scanNetcdfTime(spark, p, "t2m", "t", Some(win))
+    val kept = nct(p, "t2m").filter(col("t_ts").between(win._1, win._2))
       .select("epoch").distinct().collect().map(_.getInt(0)).toSet
     assert(kept == Set(1, 2, 3), kept.toString)
     // fractional time value refuses loudly (no silent rounding)
@@ -707,13 +724,13 @@ class NetcdfSpec extends SparkSuite {
     Netcdf.writeNetcdf(pf, "v", 3, 3, 6, coordVars = false,
       timeAxis = Some((2, i => i + 0.5, "hours since 2020-01-01")))(
       (x, y, _) => (x + y).toDouble)
-    val ef = intercept[IllegalArgumentException](Netcdf.scanNetcdfTime(spark, pf, "v"))
+    val ef = intercept[IllegalArgumentException](nct(pf, "v"))
     assert(ef.getMessage.contains("integral"), ef.getMessage)
     // missing units attribute refuses loudly
     val pn = tmpFile("time_nounits.nc")
     Netcdf.writeNetcdf(pn, "v", 3, 3, 6, coordVars = false, epochs = 2)(
       (x, y, t) => (x + y + t).toDouble)
-    val en = intercept[RuntimeException](Netcdf.scanNetcdfTime(spark, pn, "v", "v"))
+    val en = intercept[RuntimeException](nct(pn, "v", "v"))
     assert(en.getMessage.contains("units") || en.getMessage.contains("rank"), en.getMessage)
   }
 
@@ -724,7 +741,7 @@ class NetcdfSpec extends SparkSuite {
     val longName = "v" + ("_x" * 5000)
     Netcdf.writeNetcdf(p, longName, 3, 3, 6, coordVars = false)(
       (x, y, _) => (x + y).toDouble)
-    val got = Netcdf.scanNetcdf(spark, p, longName).collect()
+    val got = nc(p, longName).collect()
     assert(got.length == 9)
   }
 }

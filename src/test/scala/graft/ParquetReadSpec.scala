@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.Tables
 
@@ -27,34 +26,6 @@ class ParquetReadSpec extends SparkSuite {
     assert(outputAttrs(got) == outputAttrs(want), s"$path: optimized-plan output")
   }
 
-  /** Jobs started on this thread while `body` runs. Listener events arrive
-    * asynchronously but in order, so a marker job closes the window.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"parquet-read-spec-${System.nanoTime}"
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(descs.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobDescription(tag)
-      body
-      sc.setJobDescription(s"$tag-marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (!descs.contains(s"$tag-marker") && System.nanoTime < deadline) Thread.sleep(10)
-      assert(descs.contains(s"$tag-marker"), "the listener never saw the marker job")
-      descs.toArray.count(_ == tag)
-    } finally {
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("same schema and optimized-plan output as Spark's inference: tables, partitioned and _SUCCESS dirs") {
     Tables.names.foreach(n => assertSameAsInferred(spark, s"$sf/$n.parquet"))
     val part = tmp("partitioned")
@@ -69,10 +40,10 @@ class ParquetReadSpec extends SparkSuite {
 
   test("resolving the ten tables in a fresh session runs no Spark job") {
     val fresh = spark.newSession()
-    assert(jobsDuring(Tables.names.foreach(n => Tables.load(fresh, sf, n))) == 0)
+    assert(jobStagesDuring(Tables.names.foreach(n => Tables.load(fresh, sf, n))).isEmpty)
     // the listener does see schema inference when it happens
     val other = spark.newSession()
-    assert(jobsDuring(other.read.parquet(s"$sf/region.parquet")) >= 1)
+    assert(jobStagesDuring(other.read.parquet(s"$sf/region.parquet")).nonEmpty)
   }
 
   test("no data file: the same error class as Spark's read") {

@@ -60,7 +60,7 @@ class PlanShapeSpec extends SparkSuite {
       assert(!p.contains("SortMergeJoin"), s"$nm: label join shuffled\n$p")
     }
     // through the DSv2 face the labels are columns of the scan: no join
-    for (nm <- Seq("scan_netcdf4_coords")) {
+    for (nm <- Seq("scan_netcdf4_coords", "scan_netcdf_coords")) {
       val p = plan(nm)
       assert(p.contains("BatchScan") && !p.contains("Join"),
         s"$nm: labels not read in the scan\n$p")
@@ -521,8 +521,8 @@ class PlanShapeSpec extends SparkSuite {
       org.apache.spark.sql.sources.EqualTo("epoch", 4)))
     assert(plannedChunks(hs.planInputPartitions()) == 9)
     // netcdf: per-epoch stripe sets — epoch In(Seq(0)) keeps 1 of 3 sets
-    val nb = new graft.zonal.NetcdfScanBuilder(
-      graft.zonal.Netcdf.epochsFixturePath(), "t2m", null)
+    val nb = new graft.zonal.NetcdfScanBuilder(graft.zonal.NetcdfSource.resolve(
+      graft.zonal.Netcdf.epochsFixturePath(), "t2m", null, null))
     val ns = nb.build().asInstanceOf[graft.zonal.NetcdfScan]
     val nAll = plannedChunks(ns.planInputPartitions())
     ns.filter(Array[org.apache.spark.sql.sources.Filter](
@@ -949,15 +949,18 @@ class PlanShapeSpec extends SparkSuite {
     // manifests split as local Seqs with no roundrobin shuffle, the
     // global label table (axis-sized) must BROADCAST onto the cells, and
     // nothing may sort-merge the cube side
-    // (scan_netcdf4_4d_time reads through the DSv2 face: its labels are
-    // a column of the scan, so its plan has no join and no roundrobin)
-    val face = q("scan_netcdf4_4d_time")
-    face.collect()
-    val fp = face.queryExecution.executedPlan.toString
-    assert(fp.contains("BatchScan") && !fp.contains("Join") && !fp.contains("roundrobin"),
-      s"scan_netcdf4_4d_time: labels not read in the scan:\n${fp.take(3000)}")
-    Seq("scan_netcdf_mf", "scan_zarr_mf", "scan_netcdf4_mf",
-        "scan_netcdf_time_noleap", "scan_zarr_4d_time")
+    // (the single-file time and coordinate reads go through the DSv2
+    // faces: their labels are columns of the scan, so their plans have
+    // no join and no roundrobin)
+    Seq("scan_netcdf4_4d_time", "scan_netcdf_time_noleap", "scan_netcdf_time",
+        "scan_netcdf_coords").foreach { n =>
+      val face = q(n)
+      face.collect()
+      val fp = face.queryExecution.executedPlan.toString
+      assert(fp.contains("BatchScan") && !fp.contains("Join") && !fp.contains("roundrobin"),
+        s"$n: labels not read in the scan:\n${fp.take(3000)}")
+    }
+    Seq("scan_netcdf_mf", "scan_zarr_mf", "scan_netcdf4_mf", "scan_zarr_4d_time")
       .foreach { n =>
         val df = q(n)
         df.collect()

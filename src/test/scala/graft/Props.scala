@@ -215,7 +215,8 @@ object Props extends Properties("graft") {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
       graft.zonal.Netcdf.writeNetcdf(p, "v", h, w, t)(
         (x, y, _) => ((x * 13 + y * 17) % 120).toDouble)
-      val got = graft.zonal.Netcdf.scanNetcdf(spark, p, "v").collect()
+      val got = spark.read.format("graft.zonal.NetcdfSource").option("var", "v")
+        .load(p).collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
       got.size == h * w && got.forall { case ((x, y), v) =>
         v == ((x * 13 + y * 17) % 120).toDouble
@@ -282,11 +283,11 @@ object Props extends Properties("graft") {
       val viaDsv2 = spark.read.format("graft.zonal.NetcdfSource")
         .option("var", "t2m").load(p).filter(pred).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3))).sorted
-      val viaDataset = graft.zonal.Netcdf.scanNetcdfEpochs(spark, p, "t2m")
-        .select("cell_x", "cell_y", "epoch", "value")
+      val viaUnpruned = unpruned(spark.read.format("graft.zonal.NetcdfSource")
+        .option("var", "t2m").load(p))
         .filter(pred).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3))).sorted
-      viaDsv2.sameElements(viaDataset)
+      viaDsv2.sameElements(viaUnpruned)
     }
 
   property("cell_cover: per-cell clipped areas sum EXACTLY to the polygon area") =

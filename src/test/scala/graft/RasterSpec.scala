@@ -687,6 +687,23 @@ class RasterSpec extends SparkSuite {
     assert(e.getMessage.contains("pruned"))
   }
 
+  test("mosaic face reads its members' headers once per query") {
+    import org.apache.spark.sql.functions.{col, min}
+    // the min/max query's scan fallback (a filter blocks the sidecar
+    // answer): statistics and partition planning share one pruned tile
+    // list, so the mosaicMetas header fan-out runs once, not twice
+    val dir = Raster.gradTilesDir()
+    for (round <- 1 to 2) {
+      val stages = jobStagesDuring {
+        val q = spark.read.format("graft.zonal.TiffSource").load(dir)
+          .filter(col("value") >= 120.0).agg(min(col("value")))
+        assert(q.head().getDouble(0) == 120.0)
+      }
+      val headerJobs = stages.count(_.exists(_.startsWith("collect at Raster.scala:")))
+      assert(headerJobs == 1, s"round $round: $headerJobs mosaicMetas jobs in $stages")
+    }
+  }
+
   test("scale shape: a 1024-tile raster scans with one task per tile and exact sums") {
     // 1024x1024 px at 32x32 tiles -> 1024 tiles (the thousand-partition
     // shape a real COG hits); value = (x + 2y) mod 251 keeps sums exact

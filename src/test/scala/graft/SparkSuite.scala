@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -39,4 +41,34 @@ trait SparkSuite extends AnyFunSuite {
 
   def plannedChunks(parts: Seq[org.apache.spark.sql.connector.read.InputPartition]): Int =
     parts.collect { case p: graft.zonal.PackedPartition => p.chunks.length }.sum
+
+  /** Stage names of each job started on this thread while `body` runs.
+    * Listener events arrive asynchronously but in order, so a marker job
+    * closes the window.
+    */
+  def jobStagesDuring(body: => Unit): Seq[Seq[String]] = {
+    val sc = spark.sparkContext
+    val tag = s"spark-suite-${System.nanoTime}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(d => jobs.add((d, e.stageInfos.map(_.name))))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription(tag)
+      body
+      sc.setJobDescription(s"$tag-marker")
+      sc.parallelize(Seq(1), 1).count()
+      def seen(d: String) = jobs.iterator.asScala.filter(_._1 == d).map(_._2).toList
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (seen(s"$tag-marker").isEmpty && System.nanoTime < deadline) Thread.sleep(10)
+      assert(seen(s"$tag-marker").nonEmpty, "the listener never saw the marker job")
+      seen(tag)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
